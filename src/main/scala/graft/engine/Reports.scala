@@ -31,22 +31,31 @@ object Reports {
 
   /** ETS report JSON column per validated record (`ets.py:78-114`). */
   def etsReportJson(runDatetime: String): Column =
+    etsReportJson(lit(runDatetime))
+
+  /** [[etsReportJson]] stamped with a datetime column (one clock per row,
+    * e.g. per service request). */
+  def etsReportJson(runDatetime: Column): Column =
     to_json(struct(
       reportId("ets").as("id"),
       lit("ets").as("report_type"),
       col("ets_summary").as("summary"),
       col("ets_tests").as("tests"),
-      lit(runDatetime).as("datetime"),
+      runDatetime.as("datetime"),
       get_json_object(col("content"), "$.id").as("metadata_id"),
       lit(GeneratedBy).as("generated_by")), Map("ignoreNullFields" -> "true"))
 
   /** KPI report JSON column per validated record (`kpi.py:521-557`). */
   def kpiReportJson(runDatetime: String): Column =
+    kpiReportJson(lit(runDatetime))
+
+  /** [[kpiReportJson]] stamped with a datetime column. */
+  def kpiReportJson(runDatetime: Column): Column =
     to_json(struct(
       reportId("kpi").as("id"),
       lit("kpi").as("report_type"),
       get_json_object(col("content"), "$.id").as("metadata_id"),
-      lit(runDatetime).as("datetime"),
+      runDatetime.as("datetime"),
       lit(GeneratedBy).as("generated_by"),
       col("kpi_tests").as("tests"),
       col("kpi_summary").as("summary")), Map("ignoreNullFields" -> "true"))
@@ -107,6 +116,13 @@ object Reports {
         when(col("parse_ok"), KpiRules.summaryOf(col("kpi_tests"))))
   }
 
+  /** The record identity a single-record call validates under (the report
+    * ids derive from it). */
+  val AdhocRepo = "adhoc"
+  val AdhocPath = "record.json"
+  val AdhocCommit: String = "0" * 40
+  val AdhocLang = "und"
+
   /** Single-record entry point — the analog of the reference's pygeoapi
     * processors and per-file CLI (`/root/reference/pywcmp/
     * pygeoapi_plugin.py:207-258`, `ets.py:53-84`): validate ONE WCMP2
@@ -138,19 +154,31 @@ object Reports {
                   failOnEts: Boolean = true,
                   kpi: Option[String] = None): (String, Option[String], Int) = {
     import spark.implicits._
-    val df = Seq(("adhoc", "record.json", "0" * 40, "und", json))
+    val df = Seq((AdhocRepo, AdhocPath, AdhocCommit, AdhocLang, json))
       .toDF("repo", "path", "commit", "lang", "content")
-    val gated = withEtsGate(Validator.validate(df, probe), failOnEts)
+    val row = answers(df, runDatetime, probe, failOnEts, kpi).head()
+    if (!row.getAs[Boolean]("parse_ok"))
+      throw new IllegalArgumentException(
+        "Encoding error: record is not valid JSON")
+    (row.getAs[String]("ets"), Option(row.getAs[String]("kpi")),
+      row.getAs[Int]("failed"))
+  }
+
+  /** [[validateOneWithCode]]'s answers for every record of a table:
+    * `(content, parse_ok, ets, kpi, failed)`, with `kpi` null where
+    * [[validateOne]] returns `None`. */
+  def answers(records: DataFrame,
+              runDatetime: String = "1970-01-01T00:00:00Z",
+              probe: graft.catalog.LinkProbe = graft.catalog.OfflineLinkProbe,
+              failOnEts: Boolean = true,
+              kpi: Option[String] = None): DataFrame = {
+    val gated = withEtsGate(Validator.validate(records, probe), failOnEts)
     val selected = kpi.map(selectKpi(gated, _)).getOrElse(gated)
-    val row = selected.select(col("parse_ok"),
+    selected.select(col("content"), col("parse_ok"),
       etsReportJson(runDatetime).as("ets"),
       when(col("kpi_summary").isNotNull, kpiReportJson(runDatetime))
         .as("kpi"),
-      coalesce(col("ets_summary.FAILED"), lit(0)).as("failed")).head()
-    if (!row.getBoolean(0))
-      throw new IllegalArgumentException(
-        "Encoding error: record is not valid JSON")
-    (row.getString(1), Option(row.getString(2)), row.getInt(3))
+      coalesce(col("ets_summary.FAILED"), lit(0)).as("failed"))
   }
 
   /** Driver exit code semantics: the reference CLI exits with the FAILED

@@ -271,36 +271,39 @@ object Dedup {
                  threshold: Double = 0.7, shingleN: Int = 3,
                  maxBucket: Int = 200): DataFrame = {
     val bandRows = bandRows0.persist(StorageLevel.MEMORY_AND_DISK)
-    // eager cache fill — see hammingDedup: concurrent AQE stages would
-    // otherwise race the cache and re-run the banding scan per reference
-    bandRows.count()
-    val candidates = boundedBucketMembers(bandRows,
-        Seq("band", "band_hash"), col("id"), maxBucket)
-      .select(bucketPairs(col("members"),
-        (x, y) => struct(x.as("id_a"), y.as("id_b"))).as("p"))
-      .select(col("p.id_a"), col("p.id_b"))
-      .dropDuplicates("id_a", "id_b")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val (jac, sh) = verifiedJaccard(df, candidates, textCol, idCol, shingleN)
-    val verified = owned(jac
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard"))
-    // ONE materialization barrier: every reference to bandRows/candidates/
-    // sh in the plan is the same persisted instance (one shared
-    // InMemoryRelation each), so this single job computes each exactly
-    // once and fills its cache in passing — the round-3 shape (an eager
-    // count() per intermediate) serialized formerly-overlapping stages
-    // and doubled fixed job latency at toy scale (q_minhash_pairs
-    // 2.3s -> 4.7s). After the barrier the result cache is full, so the
-    // intermediates release safely; finally-released so a failed job
-    // can't strand them either (the registry only owns `verified`).
-    try verified.count()
-    finally {
-      bandRows.unpersist()
-      candidates.unpersist()
-      sh.unpersist()
-    }
-    verified
+    // every intermediate is finally-released so a failed job can't strand
+    // it (the registry only owns `verified`)
+    try {
+      // eager cache fill — see hammingDedup: concurrent AQE stages would
+      // otherwise race the cache and re-run the banding scan per reference
+      bandRows.count()
+      val candidates = boundedBucketMembers(bandRows,
+          Seq("band", "band_hash"), col("id"), maxBucket)
+        .select(bucketPairs(col("members"),
+          (x, y) => struct(x.as("id_a"), y.as("id_b"))).as("p"))
+        .select(col("p.id_a"), col("p.id_b"))
+        .dropDuplicates("id_a", "id_b")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val (jac, sh) =
+          verifiedJaccard(df, candidates, textCol, idCol, shingleN)
+        try {
+          val verified = owned(jac
+            .where(col("jaccard") >= threshold)
+            .select("id_a", "id_b", "jaccard"))
+          // ONE materialization barrier: every reference to bandRows/
+          // candidates/sh in the plan is the same persisted instance (one
+          // shared InMemoryRelation each), so this single job computes
+          // each exactly once and fills its cache in passing — the
+          // round-3 shape (an eager count() per intermediate) serialized
+          // formerly-overlapping stages and doubled fixed job latency at
+          // toy scale (q_minhash_pairs 2.3s -> 4.7s). After the barrier
+          // the result cache is full, so the intermediates release safely.
+          verified.count()
+          verified
+        } finally sh.unpersist()
+      } finally candidates.unpersist()
+    } finally bandRows.unpersist()
   }
 
   /** [[minhashLsh]]'s bucket-cap diagnostics (one row): how many buckets
@@ -392,67 +395,72 @@ object Dedup {
   private[graft] def hammingDedup(sigRows0: DataFrame, maxHamming: Int,
                            maxBucket: Int): DataFrame = {
     val sigRows = sigRows0.persist(StorageLevel.MEMORY_AND_DISK)
-    // Materialize the signature cache EAGERLY: the downstream plan
-    // references it from several AQE-materialized shuffle stages that
-    // start CONCURRENTLY, and cache population is per-partition — racing
-    // stages each recompute the signature projection until blocks land
-    // (measured on q_image_neardup: two full ~7.7 CPU-s decode passes in
-    // one "single-scan" run). One count() fills the cache once, so the
-    // expensive per-row signature work truly runs once — the single-scan
-    // contract this module documents. Cost: one extra job over the
-    // already-cached narrow rows.
-    sigRows.count()
-    // Identical signatures collapse BEFORE the pigeonhole. Mass
-    // duplication — the common case in web corpora, and exactly what a
-    // near-dup corpus looks like — would otherwise park every member of
-    // a duplicate cluster in every chunk bucket, making the in-bucket
-    // explode quadratic in CLUSTER size (measured: 25 s at sf0.1 vs
-    // 2 s with the collapse; at 100 TB it is the difference between
-    // output-sized work and a job that never finishes). Within-group
-    // pairs come from an output-sized equi-join on the signature — no
-    // aggregation buffer ever holds a cluster — and the chunk machinery
-    // only ever sees DISTINCT signatures, so `maxBucket` bounds
-    // distinct-signature density, not duplication.
-    val within = sigRows.select(col("id").as("id_a"), col("sig"))
-      .join(sigRows.select(col("id").as("id_b"), col("sig")), "sig")
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), lit(0).as("hamming"))
-    val distinctSigs = sigRows.select(col("sig")).distinct()
-    val chunkRows = hammingChunkRows(
-        distinctSigs.select(col("sig").as("id"), col("sig")),
-        hammingChunks(maxHamming))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // pair DISTINCT signatures (two distinct sigs always have
-    // hamming >= 1, so these are disjoint from `within` by construction).
-    // Native in-bucket pair generation ([[graft.expressions
-    // .HammingPairs]]): members collect per bounded bucket (the cap
-    // bounds both the buffer and the m^2/2 scan) and a precompiled
-    // xor+popcount loop emits ONLY the surviving pairs — the join-shaped
-    // r5 formulation streamed every candidate pair through SMJ row
-    // machinery (measured at sf0.1: 10.4M joined rows to keep 964,
-    // 200 CPU-s on a cold run); the kernel does the same scan at ~5 ns
-    // per candidate, so even a full maxBucket bucket is milliseconds on
-    // one task, not a straggler.
-    val keys = Seq("chunk", "chunk_val")
-    val sigPairs = boundedBucketMembers(chunkRows, keys, col("sig"),
-        maxBucket)
-      .select(explode(graft.expressions.HammingPairs.hammingPairs(
-        col("members"), maxHamming)).as("p"))
-      .select(col("p.sig_a"), col("p.sig_b"), col("p.hamming"))
-      .dropDuplicates("sig_a", "sig_b")
-    // expand sig pairs to member pairs: two output-sized equi-joins
-    val cross = sigPairs
-      .join(sigRows.select(col("id").as("ia"), col("sig").as("sig_a")),
-        "sig_a")
-      .join(sigRows.select(col("id").as("ib"), col("sig").as("sig_b")),
-        "sig_b")
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"), col("hamming"))
-    val pairs = owned(within.unionAll(cross))
-    // materialize so the caches can be freed (finally: a failed job must
-    // not strand the non-registry-owned intermediates)
-    try pairs.count() finally { chunkRows.unpersist(); sigRows.unpersist() }
-    pairs
+    // finally: a failed job must not strand the non-registry-owned
+    // intermediates
+    try {
+      // Materialize the signature cache EAGERLY: the downstream plan
+      // references it from several AQE-materialized shuffle stages that
+      // start CONCURRENTLY, and cache population is per-partition — racing
+      // stages each recompute the signature projection until blocks land
+      // (measured on q_image_neardup: two full ~7.7 CPU-s decode passes in
+      // one "single-scan" run). One count() fills the cache once, so the
+      // expensive per-row signature work truly runs once — the single-scan
+      // contract this module documents. Cost: one extra job over the
+      // already-cached narrow rows.
+      sigRows.count()
+      // Identical signatures collapse BEFORE the pigeonhole. Mass
+      // duplication — the common case in web corpora, and exactly what a
+      // near-dup corpus looks like — would otherwise park every member of
+      // a duplicate cluster in every chunk bucket, making the in-bucket
+      // explode quadratic in CLUSTER size (measured: 25 s at sf0.1 vs
+      // 2 s with the collapse; at 100 TB it is the difference between
+      // output-sized work and a job that never finishes). Within-group
+      // pairs come from an output-sized equi-join on the signature — no
+      // aggregation buffer ever holds a cluster — and the chunk machinery
+      // only ever sees DISTINCT signatures, so `maxBucket` bounds
+      // distinct-signature density, not duplication.
+      val within = sigRows.select(col("id").as("id_a"), col("sig"))
+        .join(sigRows.select(col("id").as("id_b"), col("sig")), "sig")
+        .where(col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b"), lit(0).as("hamming"))
+      val distinctSigs = sigRows.select(col("sig")).distinct()
+      val chunkRows = hammingChunkRows(
+          distinctSigs.select(col("sig").as("id"), col("sig")),
+          hammingChunks(maxHamming))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        // pair DISTINCT signatures (two distinct sigs always have
+        // hamming >= 1, so these are disjoint from `within` by construction).
+        // Native in-bucket pair generation ([[graft.expressions
+        // .HammingPairs]]): members collect per bounded bucket (the cap
+        // bounds both the buffer and the m^2/2 scan) and a precompiled
+        // xor+popcount loop emits ONLY the surviving pairs — the join-shaped
+        // r5 formulation streamed every candidate pair through SMJ row
+        // machinery (measured at sf0.1: 10.4M joined rows to keep 964,
+        // 200 CPU-s on a cold run); the kernel does the same scan at ~5 ns
+        // per candidate, so even a full maxBucket bucket is milliseconds on
+        // one task, not a straggler.
+        val keys = Seq("chunk", "chunk_val")
+        val sigPairs = boundedBucketMembers(chunkRows, keys, col("sig"),
+            maxBucket)
+          .select(explode(graft.expressions.HammingPairs.hammingPairs(
+            col("members"), maxHamming)).as("p"))
+          .select(col("p.sig_a"), col("p.sig_b"), col("p.hamming"))
+          .dropDuplicates("sig_a", "sig_b")
+        // expand sig pairs to member pairs: two output-sized equi-joins
+        val cross = sigPairs
+          .join(sigRows.select(col("id").as("ia"), col("sig").as("sig_a")),
+            "sig_a")
+          .join(sigRows.select(col("id").as("ib"), col("sig").as("sig_b")),
+            "sig_b")
+          .select(least(col("ia"), col("ib")).as("id_a"),
+            greatest(col("ia"), col("ib")).as("id_b"), col("hamming"))
+        val pairs = owned(within.unionAll(cross))
+        // materialize so the caches can be freed
+        pairs.count()
+        pairs
+      } finally chunkRows.unpersist()
+    } finally sigRows.unpersist()
   }
 
   /** SimHash near-dup: docs are candidates when any of the
@@ -620,21 +628,24 @@ object Dedup {
                        threshold: Double,
                        maxBucket: Int): DataFrame = {
     val sigRows = sigRows0.persist(StorageLevel.MEMORY_AND_DISK)
-    // eager cache fill — see hammingDedup: concurrent AQE stages would
-    // otherwise race the cache and re-run the sketch scan per reference
-    sigRows.count()
-    // native in-bucket pair generation + threshold filter in one kernel
-    // call per bucket (CosinePairs) — the bucketPairs HOF this replaces
-    // re-entered the expression interpreter per pair; the declarative
-    // form remains the parity reference (OptimizationParitySpec)
-    val pairs = owned(boundedBucketMembers(sigRows, Seq("bucket"),
-        struct(col("id"), col("norm"), col("vec")), maxBucket)
-      .select(explode(graft.expressions.CosinePairs.cosinePairs(
-        col("members"), threshold)).as("p"))
-      .select(col("p.id_a"), col("p.id_b"), col("p.cosine").as("cosine")))
-    // materialize so the sig cache can be freed (finally: error-safe)
-    try pairs.count() finally sigRows.unpersist()
-    pairs
+    // finally: a failed fill or pairing job must not strand the sig cache
+    try {
+      // eager cache fill — see hammingDedup: concurrent AQE stages would
+      // otherwise race the cache and re-run the sketch scan per reference
+      sigRows.count()
+      // native in-bucket pair generation + threshold filter in one kernel
+      // call per bucket (CosinePairs) — the bucketPairs HOF this replaces
+      // re-entered the expression interpreter per pair; the declarative
+      // form remains the parity reference (OptimizationParitySpec)
+      val pairs = owned(boundedBucketMembers(sigRows, Seq("bucket"),
+          struct(col("id"), col("norm"), col("vec")), maxBucket)
+        .select(explode(graft.expressions.CosinePairs.cosinePairs(
+          col("members"), threshold)).as("p"))
+        .select(col("p.id_a"), col("p.id_b"), col("p.cosine").as("cosine")))
+      // materialize so the sig cache can be freed
+      pairs.count()
+      pairs
+    } finally sigRows.unpersist()
   }
 
   /** Connected components over a near-dup pair table `(id_a, id_b)`:

@@ -6,10 +6,9 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.Executors
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
-import graft.engine.{Reports, Validator}
+import graft.engine.CompiledCatalog
 
 /** HTTP service surface — the analog of the reference's pygeoapi process
   * plugin (`/root/reference/pywcmp/pygeoapi_plugin.py:193-261`), which
@@ -31,7 +30,8 @@ import graft.engine.{Reports, Validator}
   *   - `pywcmp-wis2-wcmp2-kpi` (`pygeoapi_plugin.py:243-258`): input
   *     `record` only. NOTE the reference plugin calls `kpis.evaluate()`
   *     directly — the KPI process is NOT ETS-gated (unlike the KPI CLI,
-  *     `kpi.py:81-87`); reproduced here by skipping [[Reports.withEtsGate]].
+  *     `kpi.py:81-87`); reproduced here by skipping
+  *     [[graft.engine.Reports.withEtsGate]].
   *   - a missing `record` input raises ProcessorExecuteError "Missing
   *     record" (`pygeoapi_plugin.py:214-217,249-252`) → 400 here.
   *
@@ -39,12 +39,14 @@ import graft.engine.{Reports, Validator}
   * reference delegates them to pygeoapi — but every message string a
   * client can observe comes from the reference.
   *
-  * Execution runs the exact table catalog on a 1-row frame (same code
-  * path as [[Reports.validateOne]]), so service answers are identical to
-  * batch answers at any scale. The embedded server is the JDK's
-  * `com.sun.net.httpserver` on a small worker pool; Spark schedules the
-  * per-request jobs concurrently (FAIR-safe: each request is one tiny
-  * local job).
+  * Execution evaluates a [[CompiledCatalog]], planned and compiled once
+  * when the service starts: each POST is one SQL execution that the
+  * optimizer folds on the driver (no Spark job, no per-request analysis of
+  * the catalog plan). The catalog is the exact [[graft.engine.Validator]]
+  * table catalog, so answers are byte-identical to
+  * [[graft.engine.Reports.validateOne]] and to batch answers at any scale.
+  * The embedded server is the JDK's `com.sun.net.httpserver` on a 4-thread
+  * pool; requests plan concurrently and evaluate one at a time.
   */
 object Wcmp2Service {
 
@@ -57,42 +59,40 @@ object Wcmp2Service {
 
   // ---------------------------------------------------------------- descr
 
-  /** Process description JSON (compact mirror of PROCESS_WCMP2_ETS /
-    * PROCESS_WCMP2_KPI, `pygeoapi_plugin.py:80-190`; output report
-    * schemas are referenced by id rather than inlined). */
-  private def describe(id: String): String = {
-    val (title, desc, extraInput) = id match {
-      case EtsProcessId =>
-        ("WCMP2 ETS validator", "Validate a WCMP2 document against the ETS",
-          ""","fail_on_schema_validation":{
-            |"title":"Fail on schema validation",
-            |"description":"Stop the ETS on failing schema validation",
-            |"schema":{"type":"boolean","default":true},
-            |"minOccurs":0,"maxOccurs":1}""".stripMargin.replace("\n", ""))
-      case KpiProcessId =>
-        ("WCMP2 KPI evaluator",
-          "Validate a WCMP2 document against the KPI suite", "")
-      case other => throw new NoSuchElementException(other)
-    }
-    val kw = if (id == EtsProcessId) """"wis2","wcmp2","ets","test suite","metadata""""
-             else """"wis2","wcmp2","kpi","test suite","metadata""""
-    s"""{"version":"0.1.0","id":"$id","title":{"en":"$title"},""" +
-      s""""description":{"en":"$desc"},"keywords":[$kw],""" +
-      """"links":[{"type":"text/html","rel":"about","title":"information",""" +
-      """"href":"https://wmo-im.github.io/wcmp2","hreflang":"en-US"}],""" +
-      """"jobControlOptions":["sync-execute"],""" +
-      """"inputs":{"record":{"title":"WCMP2 record",""" +
-      """"description":"WCMP2 record","schema":{"type":"string"},""" +
-      s""""minOccurs":1,"maxOccurs":1}$extraInput},""" +
-      """"outputs":{"result":{"title":"Report of results",""" +
-      """"schema":{"contentMediaType":"application/json"}}}}"""
+  /** Process description JSON by process id (compact mirror of
+    * PROCESS_WCMP2_ETS / PROCESS_WCMP2_KPI, `pygeoapi_plugin.py:80-190`;
+    * output report schemas are referenced by id rather than inlined). */
+  private val describe: Map[String, String] = {
+    def description(id: String, suite: String, title: String, desc: String,
+                    extraInput: String): String =
+      s"""{"version":"0.1.0","id":"$id","title":{"en":"$title"},""" +
+        s""""description":{"en":"$desc"},""" +
+        s""""keywords":["wis2","wcmp2","$suite","test suite","metadata"],""" +
+        """"links":[{"type":"text/html","rel":"about","title":"information",""" +
+        """"href":"https://wmo-im.github.io/wcmp2","hreflang":"en-US"}],""" +
+        """"jobControlOptions":["sync-execute"],""" +
+        """"inputs":{"record":{"title":"WCMP2 record",""" +
+        """"description":"WCMP2 record","schema":{"type":"string"},""" +
+        s""""minOccurs":1,"maxOccurs":1}$extraInput},""" +
+        """"outputs":{"result":{"title":"Report of results",""" +
+        """"schema":{"contentMediaType":"application/json"}}}}"""
+    Map(
+      EtsProcessId -> description(EtsProcessId, "ets", "WCMP2 ETS validator",
+        "Validate a WCMP2 document against the ETS",
+        ""","fail_on_schema_validation":{
+          |"title":"Fail on schema validation",
+          |"description":"Stop the ETS on failing schema validation",
+          |"schema":{"type":"boolean","default":true},
+          |"minOccurs":0,"maxOccurs":1}""".stripMargin.replace("\n", "")),
+      KpiProcessId -> description(KpiProcessId, "kpi", "WCMP2 KPI evaluator",
+        "Validate a WCMP2 document against the KPI suite", ""))
   }
 
-  private def processList: String =
+  private val processList: String =
     s"""{"processes":[${describe(EtsProcessId)},${describe(KpiProcessId)}],""" +
       """"links":[]}"""
 
-  private def landing: String =
+  private val landing: String =
     """{"title":"graft-wcmp2spark validation service",""" +
       """"description":"WCMP2 ETS validation and KPI evaluation """ +
       """(OGC API - Processes shaped)",""" +
@@ -116,48 +116,12 @@ object Wcmp2Service {
     else Some(mapper.writeValueAsString(node))
   }
 
-  private def oneRowTable(spark: SparkSession, json: String): DataFrame = {
-    import spark.implicits._
-    Seq(("adhoc", "record.json", "0" * 40, "und", json))
-      .toDF("repo", "path", "commit", "lang", "content")
-  }
-
-  /** ETS execution (`pygeoapi_plugin.py:207-223`). */
-  def executeEts(spark: SparkSession, record: String,
-                 failOnSchemaValidation: Boolean,
-                 runDatetime: String): Response = {
-    val validated = Validator.validate(oneRowTable(spark, record))
-    val row = validated.select(
-      col("parse_ok"),
-      coalesce(col("validation.code"), lit("PASSED")).as("gate"),
-      concat_ws(", ", col("validation.errors")).as("gate_errors"),
-      Reports.etsReportJson(runDatetime).as("ets")).head()
-    if (!row.getBoolean(0))
-      error(400, "InvalidParameterValue",
-        "Encoding error: record is not valid JSON")
-    else if (failOnSchemaValidation && row.getString(1) == "FAILED")
-      // the reference raises ValueError here (`wcmp2/ets.py:96-101`)
-      error(500, "ProcessorExecuteError",
-        "Record fails WCMP2 validation. Stopping ETS " +
-          s"errors: [${row.getString(2)}]")
-    else Response(200, row.getString(3))
-  }
-
-  /** KPI execution (`pygeoapi_plugin.py:243-258`) — ungated by design. */
-  def executeKpi(spark: SparkSession, record: String,
-                 runDatetime: String): Response = {
-    val validated = Validator.validate(oneRowTable(spark, record))
-    val row = validated.select(
-      col("parse_ok"),
-      Reports.kpiReportJson(runDatetime).as("kpi")).head()
-    if (!row.getBoolean(0))
-      error(400, "InvalidParameterValue",
-        "Encoding error: record is not valid JSON")
-    else Response(200, row.getString(1))
-  }
-
-  private def execute(spark: SparkSession, processId: String,
-                      body: String, runDatetime: String): Response = {
+  /** ETS (`pygeoapi_plugin.py:207-223`) or ungated KPI
+    * (`pygeoapi_plugin.py:243-258`) execution: one evaluation of the
+    * compiled catalog answers either process. */
+  private def execute(catalog: CompiledCatalog, spark: SparkSession,
+                      processId: String, body: String,
+                      runDatetime: String): Response = {
     val root =
       try mapper.readTree(body)
       catch { case _: Exception =>
@@ -166,30 +130,39 @@ object Wcmp2Service {
     val inputs = root.path("inputs")
     recordInput(inputs) match {
       case None => error(400, "MissingParameterValue", "Missing record")
-      case Some(record) => processId match {
-        case EtsProcessId =>
-          val flag = inputs.path("fail_on_schema_validation").asBoolean(true)
-          executeEts(spark, record, flag, runDatetime)
-        case KpiProcessId => executeKpi(spark, record, runDatetime)
-        case other => error(404, "NoSuchProcess", s"No such process: $other")
-      }
+      case Some(_) if !describe.contains(processId) =>
+        error(404, "NoSuchProcess", s"No such process: $processId")
+      case Some(record) =>
+        val r = catalog.run(spark, record, runDatetime)
+        if (!r.parseOk)
+          error(400, "InvalidParameterValue",
+            "Encoding error: record is not valid JSON")
+        else if (processId == KpiProcessId) Response(200, r.kpi)
+        else if (r.gate == "FAILED" &&
+                 inputs.path("fail_on_schema_validation").asBoolean(true))
+          // the reference raises ValueError here (`wcmp2/ets.py:96-101`)
+          error(500, "ProcessorExecuteError",
+            "Record fails WCMP2 validation. Stopping ETS " +
+              s"errors: [${r.gateErrors}]")
+        else Response(200, r.ets)
     }
   }
 
   // ---------------------------------------------------------------- http
 
-  /** Start the service. `port` 0 binds an ephemeral port (tests); read the
-    * bound port from `server.getAddress.getPort`. `runDatetime` empty =
-    * stamp reports with the wall clock per request (production); a fixed
-    * value makes responses fully deterministic (tests). */
-  def start(spark: SparkSession, port: Int,
+  /** Start the service over a built `catalog`. `port` 0 binds an
+    * ephemeral port (tests); read the bound port from
+    * `server.getAddress.getPort`. `runDatetime` empty = stamp reports with
+    * the wall clock per request (production); a fixed value makes
+    * responses fully deterministic (tests). */
+  def start(spark: SparkSession, port: Int, catalog: CompiledCatalog,
             runDatetime: String = ""): HttpServer = {
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     server.setExecutor(Executors.newFixedThreadPool(4))
     server.createContext("/", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         val resp =
-          try route(spark, ex, runDatetime)
+          try route(catalog, spark, ex, runDatetime)
           catch { case e: Exception =>
             error(500, "ProcessorExecuteError", String.valueOf(e.getMessage)) }
         val bytes = resp.body.getBytes(UTF_8)
@@ -203,19 +176,19 @@ object Wcmp2Service {
     server
   }
 
-  private def route(spark: SparkSession, ex: HttpExchange,
-                    runDatetime: String): Response = {
+  private val execRe = "/processes/([^/]+)/execution".r
+
+  private def route(catalog: CompiledCatalog, spark: SparkSession,
+                    ex: HttpExchange, runDatetime: String): Response = {
     val path = ex.getRequestURI.getPath.stripSuffix("/") match {
       case "" => "/"
       case p => p
     }
     val method = ex.getRequestMethod
-    val execRe = "/processes/([^/]+)/execution".r
     (method, path) match {
       case ("GET", "/") => Response(200, landing)
       case ("GET", "/processes") => Response(200, processList)
-      case ("GET", s"/processes/$id")
-          if id == EtsProcessId || id == KpiProcessId =>
+      case ("GET", s"/processes/$id") if describe.contains(id) =>
         Response(200, describe(id))
       case ("GET", s"/processes/$id") =>
         error(404, "NoSuchProcess", s"No such process: $id")
@@ -223,7 +196,7 @@ object Wcmp2Service {
         val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
         val dt = if (runDatetime.nonEmpty) runDatetime
                  else java.time.Instant.now().toString
-        execute(spark, id, body, dt)
+        execute(catalog, spark, id, body, dt)
       case ("POST", _) => error(404, "NotFound", s"No such endpoint: $path")
       case (_, _) =>
         error(405, "MethodNotAllowed", s"$method not allowed on $path")
@@ -244,11 +217,8 @@ object Wcmp2Service {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // warm the catalog codegen so the first request isn't a cold start
-    executeEts(spark,
-      graft.sources.RecordTable.fixtureContent("wcmp2-passing.json"),
-      failOnSchemaValidation = false, runDatetime = "1970-01-01T00:00:00Z")
-    val server = start(spark, port)
+    // plans and compiles the catalog before the port opens
+    val server = start(spark, port, CompiledCatalog.build(spark))
     println(s"[graft] wcmp2 service listening on " +
       s"http://localhost:${server.getAddress.getPort}/processes")
     new java.util.concurrent.CountDownLatch(1).await()

@@ -751,6 +751,27 @@ class OperatorsSpec extends SparkSpec {
     assert(after == before, s"leaked persistent RDDs: ${after -- before}")
   }
 
+  test("LSH pairing: a failing eager cache fill releases the persisted " +
+       "signature / band rows (hamming, embedding, minhash)") {
+    Dedup.releaseCaches()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // ANSI division by zero poisons the first (eager) fill of each
+    val ids = spark.range(8).toDF("i")
+    val boom = (col("i") / (col("i") - col("i"))).cast("long")
+    val sigRows = ids.select(col("i").as("id"), boom.as("sig"))
+    val vecRows = ids.select(col("i").as("id"), array(lit(1.0)).as("vec"),
+      lit(1.0).as("norm"), boom.as("bucket"))
+    val bandRows = ids.select(col("i").as("id"), lit(0).as("band"),
+      boom.as("band_hash"))
+    intercept[Exception] { Dedup.hammingDedup(sigRows, 3, 200) }
+    intercept[Exception] { Dedup.embeddingNearDupFromSigs(vecRows, 0.9, 100) }
+    intercept[Exception] { Dedup.minhashLshFromBands(docs, bandRows) }
+    for (f <- Seq(sigRows, vecRows, bandRows))
+      assert(f.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    val after = spark.sparkContext.getPersistentRDDs.keySet
+    assert(after == before, s"leaked persistent RDDs: ${after -- before}")
+  }
+
   test("stale oracle-dump dirs are reaped only when the owner is dead " +
        "AND the dir is old; fresh dumps survive for the post-mortem pass") {
     val stale = new java.io.File("/tmp/graft_oracle_tables_999999999")

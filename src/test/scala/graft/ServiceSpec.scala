@@ -2,21 +2,39 @@ package graft
 
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets.UTF_8
+import java.time.Instant
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.sun.net.httpserver.HttpServer
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{LocalTableScanExec, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.BeforeAndAfterAll
 
 import graft.service.Wcmp2Service
 import graft.sources.RecordTable
 
 /** End-to-end drive of the OGC API - Processes-shaped service
   * (`pygeoapi_plugin.py` analog) over a real HTTP socket. */
-class ServiceSpec extends SparkSpec {
+class ServiceSpec extends SparkSpec with BeforeAndAfterAll {
 
-  private lazy val server =
-    Wcmp2Service.start(spark, port = 0, runDatetime = "2026-08-16T00:00:00Z")
+  private val started = scala.collection.mutable.ArrayBuffer.empty[HttpServer]
+  private def serve(runDatetime: String): HttpServer = {
+    val s = Wcmp2Service.start(spark, port = 0, TestCatalog.compiled,
+      runDatetime)
+    started += s
+    s
+  }
+  override def afterAll(): Unit = started.foreach(_.stop(0))
+
+  private lazy val server = serve("2026-08-16T00:00:00Z")
   private def base = s"http://localhost:${server.getAddress.getPort}"
 
-  private def http(method: String, path: String,
-                   body: String = null): (Int, String) = {
-    val conn = URI.create(base + path).toURL
+  private def http(method: String, path: String, body: String = null,
+                   at: String = base): (Int, String) = {
+    val conn = URI.create(at + path).toURL
       .openConnection().asInstanceOf[HttpURLConnection]
     conn.setRequestMethod(method)
     if (body != null) {
@@ -120,5 +138,100 @@ class ServiceSpec extends SparkSpec {
     val (ec, eb) = http("POST", "/processes/pywcmp-wis2-wcmp2-kpi/execution",
       """{"inputs":{"record":"definitely not json"}}""")
     assert(ec == 400 && eb.contains("Encoding error"))
+  }
+
+  private val EtsPath = "/processes/pywcmp-wis2-wcmp2-ets/execution"
+  private val KpiPath = "/processes/pywcmp-wis2-wcmp2-kpi/execution"
+
+  test("run datetime \"\" stamps each request with its own clock, in both " +
+       "reports") {
+    val live = s"http://localhost:${serve("").getAddress.getPort}"
+    val mapper = new ObjectMapper()
+    def stamped(path: String): (Instant, Instant, Instant) = {
+      val before = Instant.now()
+      val (code, body) = http("POST", path, execBody("wcmp2-passing.json"),
+        at = live)
+      val after = Instant.now()
+      assert(code == 200)
+      (before, Instant.parse(mapper.readTree(body).get("datetime").asText),
+        after)
+    }
+    val (b1, d1, a1) = stamped(EtsPath)
+    Thread.sleep(5)
+    val (b2, d2, a2) = stamped(KpiPath)
+    assert(!d1.isBefore(b1) && !d1.isAfter(a1), s"$b1 <= $d1 <= $a1")
+    assert(!d2.isBefore(b2) && !d2.isAfter(a2), s"$b2 <= $d2 <= $a2")
+    assert(d2.isAfter(d1))
+  }
+
+  /** Every fixture through every process variant. */
+  private lazy val requests: Seq[(String, String)] =
+    Seq("wcmp2-passing.json", "wcmp2-passing-test-centre-id.json",
+      "wcmp2-failing.json", "wcmp2-failing-created-none.json",
+      "wcmp2-failing-invalid-centre-id.json",
+      "wcmp2-failing-invalid-geometry-range.json",
+      "wcmp2-failing-invalid-identifier-empty.json",
+      "wcmp2-failing-invalid-identifier-space.json",
+      "wcmp2-failing-invalid-link-channel-wis2-topic.json").flatMap(f => Seq(
+      EtsPath -> execBody(f),
+      EtsPath -> execBody(f, ""","fail_on_schema_validation":false"""),
+      KpiPath -> execBody(f))) :+
+      (EtsPath -> """{"inputs":{"record":"definitely not json"}}""")
+
+  test("4 concurrent clients x 500 POSTs return exactly the sequential " +
+       "answers (the evaluator's shared buffers are locked)") {
+    val sequential = requests.map { case (p, b) => http("POST", p, b) }
+    assert(sequential.map(_._1).toSet == Set(200, 400, 500))
+    val perClient = 500
+    val right = new AtomicInteger
+    val threads = (0 until 4).map { t =>
+      new Thread(() => for (i <- 0 until perClient) {
+        val k = (i * 7 + t * 3) % requests.size
+        val (p, b) = requests(k)
+        if (http("POST", p, b) == sequential(k)) right.incrementAndGet()
+      })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(right.get == 4 * perClient)
+  }
+
+  test("each POST is exactly one SQL execution, planned to a local table " +
+       "scan, and runs no Spark job") {
+    server // started (and its catalog built) before listening
+    val executions = new ConcurrentLinkedQueue[QueryExecution]
+    val jobs = new AtomicInteger
+    val qeListener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        executions.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        executions.add(qe)
+    }
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.listenerManager.register(qeListener)
+    spark.sparkContext.addSparkListener(jobListener)
+    try {
+      val posts = requests.take(3) ++ requests.takeRight(1)
+      posts.foreach { case (p, b) => http("POST", p, b) }
+      // no catalog execution for these
+      http("GET", "/processes")
+      http("POST", EtsPath, """{"inputs":{}}""")
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (executions.size < posts.size && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      Thread.sleep(500)
+      assert(executions.size == posts.size)
+      executions.forEach { qe =>
+        assert(qe.executedPlan.isInstanceOf[LocalTableScanExec],
+          qe.executedPlan.treeString)
+      }
+      assert(jobs.get == 0)
+    } finally {
+      spark.listenerManager.unregister(qeListener)
+      spark.sparkContext.removeSparkListener(jobListener)
+    }
   }
 }
