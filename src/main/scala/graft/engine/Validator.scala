@@ -23,10 +23,12 @@ import graft.catalog.{EtsRules, KpiRules, LinkProbe, OfflineLinkProbe, RecordCol
   */
 object Validator {
 
-  /** Per-record evaluation: adds sha256, parse status, ETS results +
-    * summary, KPI results + summary + grade. Pure narrow projection. */
-  def validate(records: DataFrame,
-               probe: LinkProbe = OfflineLinkProbe): DataFrame = {
+  /** The two Generate barriers every row-local rule reads through, and
+    * the [[RecordCols]] that point the catalog at them: `_p`, the parse
+    * products, and `_k`, the per-row kernels several rules share.
+    * [[validate]] builds on this frame; `graft.Probe rules` times each
+    * rule over the same one, so it measures the production expressions. */
+  private[graft] def withKernels(records: DataFrame): (DataFrame, RecordCols) = {
     // PLAN-SHAPE CRITICAL: the parse products are materialized behind an
     // `explode(array(struct(...)))` Generate barrier. CollapseProject
     // happily re-inlines expensive expressions into every downstream
@@ -71,7 +73,6 @@ object Validator {
         .as("previews"))
 
     val withParsed = records
-      .withColumn("sha256", sha2(col("content"), 256))
       .select(col("*"), explode(array(parsedStruct)).as("_p"))
       .select(col("*"), explode(array(kernels)).as("_k"))
 
@@ -87,6 +88,15 @@ object Validator {
         "title_has_bulletin" -> col("_k.title_kernel.has_bulletin"),
         "http_links" -> col("_k.http_links"),
         "previews" -> col("_k.previews")))
+    (withParsed, rc)
+  }
+
+  /** Per-record evaluation: adds sha256, parse status, ETS results +
+    * summary, KPI results + summary + grade. Pure narrow projection. */
+  def validate(records: DataFrame,
+               probe: LinkProbe = OfflineLinkProbe): DataFrame = {
+    val (withParsed, rc) =
+      withKernels(records.withColumn("sha256", sha2(col("content"), 256)))
 
     // `json.loads` failure => RuntimeError in the reference
     // (`/root/reference/pywcmp/util.py:203-219`); here: a parse_error row.

@@ -10,11 +10,13 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** Native in-bucket Hamming pair generator for the pigeonhole dedup
-  * ([[graft.operators.Dedup.hammingDedup]]): given one bucket's sorted
-  * distinct signature members, emit every pair with
-  * `bit_count(a ^ b) <= maxHamming` as `(sig_a, sig_b, hamming)` structs
-  * (sig_a < sig_b — the input is sorted ascending, so (i, j < i) pairs
-  * are already oriented).
+  * ([[graft.operators.Dedup.hammingDedup]]): given one bucket's
+  * signature members sorted ascending, emit every pair of DISTINCT
+  * members with `bit_count(a ^ b) <= maxHamming` as
+  * `(sig_a, sig_b, hamming)` structs (sig_a < sig_b — the input is sorted
+  * ascending, so (i, j < i) pairs are already oriented). Repeated members
+  * collapse to one, so a duplicate never yields an `(a, a, 0)` self-pair
+  * or a repeated pair.
   *
   * Why native: the join-shaped pair generation this replaces streamed
   * EVERY in-bucket pair through sort-merge-join row machinery — measured
@@ -59,8 +61,14 @@ case class HammingPairs(child: Expression, maxHamming: Int)
 
 object HammingPairs {
   def compute(members: ArrayData, maxHamming: Int): ArrayData = {
-    val m = members.numElements()
+    // compact equal neighbours in place: sorted input keeps them adjacent
     val sigs = members.toLongArray()
+    var m = 0
+    var k = 0
+    while (k < sigs.length) {
+      if (m == 0 || sigs(k) != sigs(m - 1)) { sigs(m) = sigs(k); m += 1 }
+      k += 1
+    }
     val out = new ArrayBuffer[Any](8)
     var i = 0
     while (i < m) {

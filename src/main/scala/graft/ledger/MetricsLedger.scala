@@ -1,7 +1,9 @@
 package graft.ledger
 
+import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import scala.jdk.CollectionConverters._
@@ -30,17 +32,26 @@ class MetricsLedger(dir: String) {
   private def fileFor(lang: String): Path =
     root.resolve(s"lang=${lang}.commit")
 
-  /** Atomically commit one partition's metrics (temp + rename). */
+  private val mapper = new ObjectMapper()
+
+  /** Atomically and durably commit one partition's metrics: write a temp
+    * file and fsync it, rename it over the entry, then fsync the directory
+    * so the rename itself survives a crash. */
   def commit(e: Entry): Unit = {
-    val tmp = Files.createTempFile(root, s".${e.lang}", ".tmp")
-    val payload =
-      s"""{"lang":"${e.lang}","records":${e.records},""" +
-      s""""failed_records":${e.failedRecords},""" +
-      s""""sha_fingerprint":${e.shaFingerprint},"verdict":"${e.verdict}"}"""
-    Files.write(tmp, payload.getBytes(StandardCharsets.UTF_8))
+    val payload = mapper.createObjectNode()
+      .put("lang", e.lang).put("records", e.records)
+      .put("failed_records", e.failedRecords)
+      .put("sha_fingerprint", e.shaFingerprint).put("verdict", e.verdict)
+    val tmp = Files.createTempFile(root, ".entry", ".tmp")
+    Files.write(tmp, mapper.writeValueAsBytes(payload))
+    fsync(tmp)
     Files.move(tmp, fileFor(e.lang), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
+    fsync(root)
   }
+
+  private def fsync(p: Path): Unit =
+    scala.util.Using.resource(FileChannel.open(p))(_.force(true))
 
   /** Langs already verified and committed. (`Files.list` streams must be
     * closed per its javadoc — `Using` guarantees it.) */

@@ -15,6 +15,13 @@ object shims {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Blocks until every event posted so far has reached every listener
+    * (`LiveListenerBus.waitUntilEmpty`, `private[spark]`), so a listener's
+    * totals read right after an action include all of that action's
+    * tasks and stages. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** DataFrame over an already-computed `InternalRow` RDD (the backbone of
     * iterative-algorithm lineage truncation: the returned frame's logical
     * plan is a flat `LogicalRDD`, however deep the plan that produced the

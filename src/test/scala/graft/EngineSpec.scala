@@ -147,4 +147,20 @@ class EngineSpec extends SparkSpec {
       assert(ledger.read(lang).get.contains(s""""sha_fingerprint":$fp"""))
     }
   }
+
+  test("metrics ledger: a lang with a quote and a backslash commits as " +
+       "valid JSON and reads back field for field") {
+    val ledger = new MetricsLedger(
+      Files.createTempDirectory("ledger").toString)
+    val lang = "x\"y\\z"
+    ledger.commit(ledger.Entry(lang, 12L, 3L, -42L, "FAIL"))
+    assert(ledger.committedLangs() == Set(lang))
+    val back = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(ledger.read(lang).get)
+    assert(back.get("lang").asText == lang)
+    assert(back.get("records").asLong == 12L)
+    assert(back.get("failed_records").asLong == 3L)
+    assert(back.get("sha_fingerprint").asLong == -42L)
+    assert(back.get("verdict").asText == "FAIL")
+  }
 }

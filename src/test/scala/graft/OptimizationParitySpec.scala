@@ -340,6 +340,17 @@ class OptimizationParitySpec extends SparkSpec {
     }
   }
 
+  test("HammingPairs kernel: duplicate members yield no self-pair and " +
+       "no repeated pair") {
+    val members = Seq(3L, 3L, 3L, 7L, 7L, 64L)
+    val pairs = Seq(members).toDF("m")
+      .select(explode(graft.expressions.HammingPairs.hammingPairs(
+        col("m"), 63)).as("p"))
+      .select("p.sig_a", "p.sig_b", "p.hamming")
+      .as[(Long, Long, Int)].collect().toSeq
+    assert(pairs.sorted == Seq((3L, 7L, 1), (3L, 64L, 3), (7L, 64L, 4)))
+  }
+
   test("CosinePairs kernel: survivor-set parity with the bucketPairs " +
        "HOF + where(cosine >= t) under ANSI (zero-norm vectors throw in both)") {
     import graft.operators.Dedup

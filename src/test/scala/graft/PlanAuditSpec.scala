@@ -13,7 +13,8 @@ import graft.sources.RecordTable
   *
   *  - single-parse: exactly one JsonFacts kernel, zero JsonToStructs on
   *    every validator output path (the round-1 33x-reparse regression,
-  *    mechanically guarded — the same check `graft.Profile` prints);
+  *    mechanically guarded; `graft.Probe validator` prints the same
+  *    plan's expression-tree sizes);
   *  - shuffle budget: exact dedup is ONE exchange (groupBy on the
   *    content hash; the operator's ranked-member window shares that
   *    partitioning);

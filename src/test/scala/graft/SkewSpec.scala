@@ -23,7 +23,7 @@ import graft.sources.RecordTable
   * with a task-metrics listener: the shuffle-read record total on a
   * 20k-row 90/10 corpus stays bounded by keys x mapTasks (hundreds),
   * not rows (20k). Scale-out numbers: BASELINE.md (skew section),
-  * produced by [[graft.tools.SkewBench]].
+  * produced by `graft.Probe skew ROWS`.
   */
 class SkewSpec extends SparkSpec {
 
