@@ -1,7 +1,6 @@
 package graft.cli
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
 import graft.engine.{DatasetRules, Reports, Validator}
 import graft.ledger.MetricsLedger
 
@@ -108,11 +107,15 @@ object Main {
     DatasetRules.langDrift(pending)
       .write.mode("append").parquet(s"$output/lang_drift")
 
+    // |langs| rows, aggregated once: written as one file, committed, and
+    // the exit code
     val verdicts = Validator.partitionVerdicts(validated)
-    verdicts.write.mode("append").parquet(s"$output/partition_verdicts")
-    ledger.commitVerdicts(verdicts)
+    val verdictRows = verdicts.collect()
+    spark.createDataFrame(java.util.List.of(verdictRows: _*), verdicts.schema)
+      .coalesce(1).write.mode("append").parquet(s"$output/partition_verdicts")
+    ledger.commitVerdicts(verdictRows)
 
-    val code = Reports.exitCode(validated)
+    val code = Reports.exitCode(verdictRows)
     validated.unpersist()
     println(s"[graft] done; ETS FAILED total (exit code) = $code")
     spark.stop()

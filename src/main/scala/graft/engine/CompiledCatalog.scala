@@ -1,17 +1,19 @@
 package graft.engine
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression,
-  GenericInternalRow, JoinedRow, UnsafeProjection}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, JoinedRow,
+  UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan,
   Project}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution,
+  SQLExecution}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shims
-import org.apache.spark.sql.types.{DataType, StringType, StructField,
-  StructType}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The row-local catalog planned ONCE: [[Validator.validate]] plus the
   * columns a single-record caller reads (parse status, schema-gate code
@@ -26,12 +28,13 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField,
   * parse/kernel generators over the placeholder leaf. Any other node is a
   * build-time error, never a per-request one.
   *
-  * The evaluator is exposed as a single [[CodegenFallback]] expression.
-  * Selected over a one-row local frame, the optimizer's
-  * `ConvertToLocalRelation` folds it on the driver: the query is still one
-  * SQL execution (visible to every Spark listener), but it plans one
-  * projection over a local relation instead of analysing the ~3.7k-node
-  * catalog plan, and it runs no job.
+  * [[run]] calls the evaluator directly on an `InternalRow` of
+  * `UTF8String`s: no per-request DataFrame, analysis, optimization or Row
+  * encoding. The call is still one SQL execution, visible to every Spark
+  * listener and the UI's SQL tab: it runs inside
+  * `SQLExecution.withNewExecutionId` over one tiny request query (an empty
+  * local relation of the output schema, planned to a `LocalTableScanExec`
+  * once per session and reused by every request), so no Spark job runs.
   *
   * The placeholder is a `LogicalRDD`, not an empty `LocalRelation`:
   * `PropagateEmptyRelation` would fold an empty local leaf (and the whole
@@ -56,18 +59,27 @@ final class CompiledCatalog private[graft] (plan: LogicalPlan) {
   private[engine] def evaluate(input: InternalRow): InternalRow =
     synchronized(root(input).next().copy())
 
-  /** One record through one SQL execution: the evaluator as one
-    * expression over a one-row local frame, under the same ad-hoc record
+  private val requestQes = new ConcurrentHashMap[SparkSession, QueryExecution]
+
+  /** The request query of `spark`, planned on first use. */
+  private def requestQe(spark: SparkSession): QueryExecution =
+    requestQes.computeIfAbsent(spark, s => {
+      val qe = s.createDataFrame(java.util.List.of[Row](), schema)
+        .queryExecution
+      qe.executedPlan
+      qe
+    })
+
+  /** One record through one SQL execution, under the same ad-hoc record
     * identity as [[Reports.validateOne]]. */
   def run(spark: SparkSession, content: String, runDatetime: String): Result = {
-    val input = Row(Reports.AdhocRepo, Reports.AdhocPath, Reports.AdhocCommit,
-      Reports.AdhocLang, content, runDatetime)
-    val r = spark.createDataFrame(java.util.List.of(input), InputSchema)
-      .select(shims.column(CatalogEval(this, InputSchema.fieldNames.toSeq
-        .map(c => shims.expression(col(c))))).as("compiled_catalog"))
-      .collect()(0).getStruct(0)
-    Result(r.getBoolean(0), r.getString(1), r.getString(2), r.getString(3),
-      r.getString(4))
+    val input = InternalRow.fromSeq(AdhocIdentity ++ Seq(
+      UTF8String.fromString(content), UTF8String.fromString(runDatetime)))
+    val r = SQLExecution.withNewExecutionId(requestQe(spark),
+      Some("compiled_catalog"))(evaluate(input))
+    def string(i: Int): String =
+      if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+    Result(r.getBoolean(0), string(1), string(2), string(3), string(4))
   }
 
   override def toString: String = s"CompiledCatalog(${schema.simpleString})"
@@ -84,6 +96,12 @@ object CompiledCatalog {
   private val InputSchema: StructType = StructType(
     Seq("repo", "path", "commit", "lang", "content", "run_datetime")
       .map(StructField(_, StringType)))
+
+  /** The input columns `(repo, path, commit, lang)` of
+    * [[Reports.validateOne]]'s ad-hoc record identity. */
+  private val AdhocIdentity: Seq[UTF8String] =
+    Seq(Reports.AdhocRepo, Reports.AdhocPath, Reports.AdhocCommit,
+      Reports.AdhocLang).map(UTF8String.fromString)
 
   /** Plan and compile the catalog (seconds: this is the whole per-request
     * planning cost of the DataFrame path, paid once). */
@@ -128,21 +146,4 @@ object CompiledCatalog {
         throw new IllegalStateException(
           s"compiled catalog: no evaluator for plan node ${other.nodeName}")
     }
-
-  /** The compiled catalog as a Catalyst expression (`children` are the six
-    * input columns). Interpreted by design: the optimizer folds it over a
-    * local relation, so no generated class ever references it. */
-  private[engine] final case class CatalogEval(catalog: CompiledCatalog,
-                                               children: Seq[Expression])
-      extends Expression with CodegenFallback {
-    override def nullable: Boolean = false
-    override def dataType: DataType = catalog.schema
-    override def prettyName: String = "compiled_catalog"
-    override def eval(input: InternalRow): Any =
-      catalog.evaluate(new GenericInternalRow(
-        children.map(_.eval(input)).toArray))
-    override protected def withNewChildrenInternal(
-        newChildren: IndexedSeq[Expression]): Expression =
-      copy(children = newChildren)
-  }
 }

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -186,13 +186,10 @@ object Reports {
     * parse ABORTS the reference run (`json.loads` raises through
     * `parse_wcmp`, `/root/reference/pywcmp/util.py:203-219` — there is no
     * "count it as one failure" path), so any parse error here maps to the
-    * abort code 255. Null-safe on empty input (exit 0). */
-  def exitCode(validated: DataFrame): Int = {
-    val row = validated.agg(
-      coalesce(sum(col("ets_summary.FAILED")), lit(0L)).as("failed"),
-      coalesce(sum(when(!col("parse_ok"), 1L).otherwise(0L)), lit(0L))
-        .as("parse_errors")).collect()(0)
-    if (row.getLong(1) > 0) 255
-    else math.min(row.getLong(0), 255L).toInt
-  }
+    * abort code 255. Read off the collected
+    * [[Validator.partitionVerdicts]] rows (`parse_errors`, `failed_tests`);
+    * no rows (empty input) exits 0. */
+  def exitCode(verdicts: Array[Row]): Int =
+    if (verdicts.exists(_.getAs[Long]("parse_errors") > 0)) 255
+    else math.min(verdicts.map(_.getAs[Long]("failed_tests")).sum, 255L).toInt
 }

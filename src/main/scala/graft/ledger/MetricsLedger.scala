@@ -1,5 +1,6 @@
 package graft.ledger
 
+import java.net.{URLDecoder, URLEncoder}
 import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -29,8 +30,12 @@ class MetricsLedger(dir: String) {
   case class Entry(lang: String, records: Long, failedRecords: Long,
                    shaFingerprint: Long, verdict: String)
 
-  private def fileFor(lang: String): Path =
-    root.resolve(s"lang=${lang}.commit")
+  /** The entry file of `lang`: the value is percent-encoded (UTF-8 bytes;
+    * letters, digits and `.-*_` stay as they are), so every lang maps to
+    * one ASCII-named file directly under the root, whatever the JVM's
+    * file-name encoding. */
+  private def fileFor(lang: String): Path = root.resolve(
+    s"lang=${URLEncoder.encode(lang, StandardCharsets.UTF_8)}.commit")
 
   private val mapper = new ObjectMapper()
 
@@ -60,7 +65,8 @@ class MetricsLedger(dir: String) {
       stream.iterator().asScala
         .map(_.getFileName.toString)
         .filter(_.endsWith(".commit"))
-        .map(_.stripPrefix("lang=").stripSuffix(".commit"))
+        .map(f => URLDecoder.decode(f.stripPrefix("lang=")
+          .stripSuffix(".commit"), StandardCharsets.UTF_8))
         .toSet
     }
 
@@ -81,11 +87,15 @@ class MetricsLedger(dir: String) {
   }
 
   /** Commit every partition verdict row (driver-side: |langs| rows). */
-  def commitVerdicts(verdicts: DataFrame): Unit = {
-    verdicts.select("lang", "records", "failed_records", "sha_fingerprint",
-      "verdict").collect().foreach { r: Row =>
-      commit(Entry(r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getString(4)))
-    }
+  def commitVerdicts(verdicts: DataFrame): Unit =
+    commitVerdicts(verdicts.select("lang", "records", "failed_records",
+      "sha_fingerprint", "verdict").collect())
+
+  /** Commit already collected [[graft.engine.Validator.partitionVerdicts]]
+    * rows. */
+  def commitVerdicts(verdicts: Array[Row]): Unit = verdicts.foreach { r =>
+    commit(Entry(r.getAs[String]("lang"), r.getAs[Long]("records"),
+      r.getAs[Long]("failed_records"), r.getAs[Long]("sha_fingerprint"),
+      r.getAs[String]("verdict")))
   }
 }

@@ -40,13 +40,14 @@ import graft.engine.CompiledCatalog
   * client can observe comes from the reference.
   *
   * Execution evaluates a [[CompiledCatalog]], planned and compiled once
-  * when the service starts: each POST is one SQL execution that the
-  * optimizer folds on the driver (no Spark job, no per-request analysis of
-  * the catalog plan). The catalog is the exact [[graft.engine.Validator]]
-  * table catalog, so answers are byte-identical to
-  * [[graft.engine.Reports.validateOne]] and to batch answers at any scale.
-  * The embedded server is the JDK's `com.sun.net.httpserver` on a 4-thread
-  * pool; requests plan concurrently and evaluate one at a time.
+  * when the service starts: each POST calls its evaluator directly inside
+  * one SQL execution of a reused, already planned request query (no Spark
+  * job, no per-request DataFrame or planning). The catalog is the exact
+  * [[graft.engine.Validator]] table catalog, so answers are byte-identical
+  * to [[graft.engine.Reports.validateOne]] and to batch answers at any
+  * scale. The embedded server is the JDK's `com.sun.net.httpserver` on a
+  * 4-thread pool; requests parse and answer concurrently and hold the
+  * evaluator's lock only while evaluating.
   */
 object Wcmp2Service {
 

@@ -1,11 +1,16 @@
 package graft
 
+import java.net.{HttpURLConnection, URI}
+import java.nio.charset.StandardCharsets.UTF_8
 import scala.util.{Failure, Success, Try}
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.{CompiledCatalog, Reports, Validator}
+import graft.service.Wcmp2Service
 import graft.sources.RecordTable
 
 /** One compiled catalog per test JVM (building it plans and compiles the
@@ -95,5 +100,46 @@ class CompiledCatalogSpec extends SparkSpec {
     val agg = spark.range(3).groupBy().count()
     intercept[IllegalStateException](
       new CompiledCatalog(agg.queryExecution.optimizedPlan))
+  }
+
+  test("non-ASCII and 4-byte UTF-8 text with escaped quotes and " +
+       "backslashes: byte-identical to validateOne through run and through " +
+       "a POST of the record as a JSON string") {
+    val mapper = new ObjectMapper()
+    val doc = mapper.readTree(RecordTable.fixtureContent("wcmp2-passing.json"))
+    val props = doc.get("properties").asInstanceOf[ObjectNode]
+    props.put("title", "地上気象観測 \"SYNOP\" 🌦 a\\b")
+    props.put("description", "Наблюдения 観測所 😀🌍 with \"quotes\", " +
+      "a \\backslash\\ and C:\\\\data, ação")
+    val record = mapper.writeValueAsString(doc)
+    assert(record.contains("\\\"") && record.contains("\\\\"))
+    val (ets, kpi) = Reports.validateOne(spark, record, Dt, failOnEts = false)
+    assert(kpi.exists(_.contains("地上気象観測")))
+
+    val got = catalog.run(spark, record, Dt)
+    assert(got.parseOk)
+    assert(got.ets == ets)
+    assert(kpi.contains(got.kpi))
+
+    val server = Wcmp2Service.start(spark, port = 0, catalog, Dt)
+    def post(process: String): (Int, String) = {
+      val inputs = mapper.createObjectNode().put("record", record)
+        .put("fail_on_schema_validation", false)
+      val body = mapper.createObjectNode().set[ObjectNode]("inputs", inputs)
+      val conn = URI.create(s"http://localhost:${server.getAddress.getPort}" +
+        s"/processes/$process/execution").toURL
+        .openConnection().asInstanceOf[HttpURLConnection]
+      conn.setRequestMethod("POST")
+      conn.setDoOutput(true)
+      val os = conn.getOutputStream
+      try os.write(mapper.writeValueAsBytes(body)) finally os.close()
+      val code = conn.getResponseCode
+      val in = if (code >= 400) conn.getErrorStream else conn.getInputStream
+      try (code, new String(in.readAllBytes(), UTF_8)) finally in.close()
+    }
+    try {
+      assert(post(Wcmp2Service.EtsProcessId) == ((200, ets)))
+      assert(post(Wcmp2Service.KpiProcessId) == ((200, kpi.get)))
+    } finally server.stop(0)
   }
 }

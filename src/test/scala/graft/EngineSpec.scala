@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.engine.{DatasetRules, Validator}
 import graft.ledger.MetricsLedger
@@ -162,5 +163,23 @@ class EngineSpec extends SparkSpec {
     assert(back.get("failed_records").asLong == 3L)
     assert(back.get("sha_fingerprint").asLong == -42L)
     assert(back.get("verdict").asText == "FAIL")
+  }
+
+  test("metrics ledger: langs with path separators, dots, spaces and " +
+       "non-ASCII letters round-trip and stay inside the ledger directory") {
+    val parent = Files.createTempDirectory("ledger-parent")
+    val root = parent.resolve("ledger")
+    val ledger = new MetricsLedger(root.toString)
+    val langs = Seq("a/b", "a/../../x", "x y", "\u00e9")
+    langs.foreach(l => ledger.commit(ledger.Entry(l, 5L, 1L, 7L, "FAIL")))
+    assert(ledger.committedLangs() == langs.toSet)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    langs.foreach { l =>
+      assert(mapper.readTree(ledger.read(l).get).get("lang").asText == l, l)
+    }
+    val files = scala.util.Using.resource(Files.walk(parent))(
+      _.iterator().asScala.filter(Files.isRegularFile(_)).toList)
+    assert(files.map(_.getParent).toSet == Set(root), files)
+    assert(files.size == langs.size, files)
   }
 }

@@ -111,12 +111,14 @@ class ReportsSpec extends SparkSpec {
 
   test("exit code = ETS FAILED count, like the reference CLI " +
        "(pywcmp/ets.py:83-84); parse errors abort (util.py:203-219)") {
+    def exitCode(records: org.apache.spark.sql.DataFrame): Int =
+      Reports.exitCode(Validator.partitionVerdicts(records).collect())
     // fixtures include a not-json record: the reference run would raise,
     // so the table run maps it to the abort code
-    assert(Reports.exitCode(validated) == 255)
+    assert(exitCode(validated) == 255)
     // without the parse-error record: 3 (failing) + 6 single-failure => 9
-    assert(Reports.exitCode(validated.where(col("parse_ok"))) == 9)
-    // empty input: exit 0 (no NPE on the null sum)
-    assert(Reports.exitCode(validated.where(lit(false))) == 0)
+    assert(exitCode(validated.where(col("parse_ok"))) == 9)
+    // empty input: no verdict rows, exit 0
+    assert(exitCode(validated.where(lit(false))) == 0)
   }
 }
