@@ -1,7 +1,5 @@
 package graft.engine
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BindReferences, JoinedRow,
@@ -34,7 +32,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * listener and the UI's SQL tab: it runs inside
   * `SQLExecution.withNewExecutionId` over one tiny request query (an empty
   * local relation of the output schema, planned to a `LocalTableScanExec`
-  * once per session and reused by every request), so no Spark job runs.
+  * by [[CompiledCatalog.build]] in the session it was given and reused by
+  * every request), so no Spark job runs.
   *
   * The placeholder is a `LogicalRDD`, not an empty `LocalRelation`:
   * `PropagateEmptyRelation` would fold an empty local leaf (and the whole
@@ -45,7 +44,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * serialized behind one lock. The evaluator is not serializable: a plan
   * that shipped it to a task would fail loudly instead of copying it.
   */
-final class CompiledCatalog private[graft] (plan: LogicalPlan) {
+final class CompiledCatalog private[graft] (plan: LogicalPlan,
+                                           spark: SparkSession) {
   import CompiledCatalog._
 
   /** `struct<parse_ok, gate, gate_errors, ets, kpi>` */
@@ -59,23 +59,20 @@ final class CompiledCatalog private[graft] (plan: LogicalPlan) {
   private[engine] def evaluate(input: InternalRow): InternalRow =
     synchronized(root(input).next().copy())
 
-  private val requestQes = new ConcurrentHashMap[SparkSession, QueryExecution]
-
-  /** The request query of `spark`, planned on first use. */
-  private def requestQe(spark: SparkSession): QueryExecution =
-    requestQes.computeIfAbsent(spark, s => {
-      val qe = s.createDataFrame(java.util.List.of[Row](), schema)
-        .queryExecution
-      qe.executedPlan
-      qe
-    })
+  /** The request query, planned once at build. */
+  private val request: QueryExecution = {
+    val qe = spark.createDataFrame(java.util.List.of[Row](), schema)
+      .queryExecution
+    qe.executedPlan
+    qe
+  }
 
   /** One record through one SQL execution, under the same ad-hoc record
     * identity as [[Reports.validateOne]]. */
-  def run(spark: SparkSession, content: String, runDatetime: String): Result = {
+  def run(content: String, runDatetime: String): Result = {
     val input = InternalRow.fromSeq(AdhocIdentity ++ Seq(
       UTF8String.fromString(content), UTF8String.fromString(runDatetime)))
-    val r = SQLExecution.withNewExecutionId(requestQe(spark),
+    val r = SQLExecution.withNewExecutionId(request,
       Some("compiled_catalog"))(evaluate(input))
     def string(i: Int): String =
       if (r.isNullAt(i)) null else r.getUTF8String(i).toString
@@ -103,8 +100,9 @@ object CompiledCatalog {
     Seq(Reports.AdhocRepo, Reports.AdhocPath, Reports.AdhocCommit,
       Reports.AdhocLang).map(UTF8String.fromString)
 
-  /** Plan and compile the catalog (seconds: this is the whole per-request
-    * planning cost of the DataFrame path, paid once). */
+  /** Plan and compile the catalog, and plan the request query in `spark`
+    * (seconds: this is the whole per-request planning cost of the
+    * DataFrame path, paid once). */
   def build(spark: SparkSession): CompiledCatalog = {
     val leaf = shims.internalDf(spark,
       spark.sparkContext.emptyRDD[InternalRow], InputSchema)
@@ -115,7 +113,7 @@ object CompiledCatalog {
       concat_ws(", ", col("validation.errors")).as("gate_errors"),
       Reports.etsReportJson(dt).as("ets"),
       Reports.kpiReportJson(dt).as("kpi"))
-    new CompiledCatalog(selected.queryExecution.optimizedPlan)
+    new CompiledCatalog(selected.queryExecution.optimizedPlan, spark)
   }
 
   private def compile(plan: LogicalPlan): InternalRow => Iterator[InternalRow] =

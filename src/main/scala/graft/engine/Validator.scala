@@ -180,9 +180,24 @@ object Validator {
         col("_v.diagnostic").as("diagnostic"))
   }
 
+  /** Partition fingerprint: xor of each row's sha256 64-bit prefix (15
+    * hex chars, positive in signed 64). Chosen over crc32-of-sha because
+    * ANY engine can recompute it from the content column alone, so the
+    * north-rule sha256 invariant stays externally verifiable end-to-end
+    * (the DuckDB oracle does). Order-independent: the xor of per-window
+    * fingerprints equals the fingerprint of their union. */
+  private[graft] val shaFingerprint: Column =
+    bit_xor(conv(substring(col("sha256"), 1, 15), 16, 10)
+      .cast(LongType)).as("sha_fingerprint")
+
+  /** PASS iff the group has no failed record and no parse error. */
+  private[graft] val verdict: Column =
+    when(col("failed_records") + col("parse_errors") === 0, "PASS")
+      .otherwise("FAIL")
+
   /** Per-partition (lang) verdicts + the resumability fingerprint: row
-    * count and an order-independent XOR of per-row sha256 CRCs, carried to
-    * the metrics ledger (north rule: per-partition lineage + metrics). */
+    * count and [[shaFingerprint]], carried to the metrics ledger (north
+    * rule: per-partition lineage + metrics). */
   def partitionVerdicts(validated: DataFrame): DataFrame = {
     validated.groupBy(col("lang")).agg(
       count(lit(1)).as("records"),
@@ -193,16 +208,7 @@ object Validator {
         .otherwise(0)).as("failed_records"),
       sum(coalesce(col("ets_summary.FAILED"), lit(0))).as("failed_tests"),
       bround(avg(col("kpi_summary.percentage")), 3).as("mean_kpi_percentage"),
-      // partition fingerprint: xor of each row's sha256 64-bit prefix
-        // (15 hex chars, positive in signed 64). Chosen over crc32-of-
-        // sha because ANY engine can recompute it from the content
-        // column alone — the north-rule sha256 invariant stays
-        // externally verifiable end-to-end (the DuckDB oracle does)
-        bit_xor(conv(substring(col("sha256"), 1, 15), 16, 10)
-          .cast(org.apache.spark.sql.types.LongType))
-          .as("sha_fingerprint"))
-    .withColumn("verdict",
-      when(col("failed_records") + col("parse_errors") === 0, "PASS")
-        .otherwise("FAIL"))
+      shaFingerprint)
+    .withColumn("verdict", verdict)
   }
 }

@@ -92,7 +92,7 @@ object Dedup {
     * the scan has fewer splits than the session's parallelism, repartition
     * first — at real scale (splits >= cores) this is a no-op, so the
     * shuffle is only ever paid on inputs small enough not to care. */
-  private[operators] def parallelize(df: DataFrame): DataFrame = {
+  private def parallelize(df: DataFrame): DataFrame = {
     // a streaming frame can't be probed (no executable physical RDD);
     // micro-batch parallelism is the source's concern, not this guard's
     if (df.isStreaming) return df
@@ -152,16 +152,6 @@ object Dedup {
                           pairFn: (Column, Column) => Column): Column =
     explode(flatten(transform(members, (x, i) =>
       transform(slice(members, i + 2, size(members)), y => pairFn(x, y)))))
-
-  /** The pre-r6 HOF cosine-pair formulation over `struct(id, norm, vec)`
-    * members — kept ONLY as the parity reference for the native
-    * [[graft.expressions.CosinePairs]] kernel (OptimizationParitySpec). */
-  private[graft] def bucketPairsForTest(members: Column): Column =
-    bucketPairs(members, (x, y) => struct(
-      x.getField("id").as("id_a"), y.getField("id").as("id_b"),
-      (graft.expressions.VectorOps.dotProduct(
-          x.getField("vec"), y.getField("vec")) /
-        (x.getField("norm") * y.getField("norm"))).as("cosine")))
 
   /** Bucket-bounding stage shared by the LSH variants. `rows` is the
     * persisted signature frame; one count-only aggregate (map-side
@@ -633,15 +623,16 @@ object Dedup {
       // eager cache fill — see hammingDedup: concurrent AQE stages would
       // otherwise race the cache and re-run the sketch scan per reference
       sigRows.count()
-      // native in-bucket pair generation + threshold filter in one kernel
-      // call per bucket (CosinePairs) — the bucketPairs HOF this replaces
-      // re-entered the expression interpreter per pair; the declarative
-      // form remains the parity reference (OptimizationParitySpec)
+      // under ANSI a zero-norm member throws at the divide
       val pairs = owned(boundedBucketMembers(sigRows, Seq("bucket"),
           struct(col("id"), col("norm"), col("vec")), maxBucket)
-        .select(explode(graft.expressions.CosinePairs.cosinePairs(
-          col("members"), threshold)).as("p"))
-        .select(col("p.id_a"), col("p.id_b"), col("p.cosine").as("cosine")))
+        .select(bucketPairs(col("members"), (x, y) => struct(
+          x.getField("id").as("id_a"), y.getField("id").as("id_b"),
+          (graft.expressions.VectorOps.dotProduct(
+              x.getField("vec"), y.getField("vec")) /
+            (x.getField("norm") * y.getField("norm"))).as("cosine"))).as("p"))
+        .select(col("p.id_a"), col("p.id_b"), col("p.cosine").as("cosine"))
+        .where(col("cosine") >= threshold))
       // materialize so the sig cache can be freed
       pairs.count()
       pairs

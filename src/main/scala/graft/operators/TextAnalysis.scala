@@ -187,10 +187,9 @@ object TextAnalysis {
     // twin — tokens explode, shinglesFromTokens, transform(xxhash64) —
     // stays the parity-pinned reference in Dedup/OptimizationParitySpec)
     def gramRows(df: DataFrame, idAs: String): DataFrame =
-      Dedup.parallelize(
-          df.select(col(idCol).as(idAs), col(textCol).as("_text")))
-        .select(col(idAs), explode(graft.expressions.Ngrams.ngramHashes(
-          col("_text"), n)).as("gram"))
+      df.select(col(idCol).as(idAs),
+        explode(graft.expressions.Ngrams.ngramHashes(col(textCol), n))
+          .as("gram"))
     // benchmark corpora are test sets — small by construction — so the
     // distinct gram-hash set broadcasts: the corpus side then never
     // shuffles for the join (only the per-doc count aggregation does)
@@ -218,12 +217,8 @@ object TextAnalysis {
     * occurrence), `top_gram_frac` (most frequent gram's share). */
   def repetitionStats(docs: DataFrame, textCol: String = "text",
                       idCol: String = "doc_id", n: Int = 3): DataFrame = {
-    // small-input parallelism guard (the Dedup.parallelize contract): a
-    // one-split scan would run the per-row gram/line work on one task —
-    // measured 1.6 CPU-s serial for the 300-doc bench slice
-    val d = Dedup.parallelize(docs.select(col(idCol), col(textCol)))
     val id = col(idCol).as("id")
-    val lines = d.select(id, explode(filter(
+    val lines = docs.select(id, explode(filter(
         transform(split(col(textCol), "\n"), l => trim(l)),
         l => l =!= "")).as("line"))
       .groupBy("id", "line").agg(count(lit(1)).as("cnt"))
@@ -238,7 +233,7 @@ object TextAnalysis {
     // duplicates-kept native shingle kernel (ShinglesAll); the previous
     // interpreted tokens->transform(sequence, concat_ws(slice)) chain is
     // the parity-pinned reference (OptimizationParitySpec)
-    val grams = d
+    val grams = docs
       .select(id, explode(graft.expressions.Ngrams.shinglesAllCol(
         col(textCol), n)).as("gram"))
       .groupBy("id", "gram").agg(count(lit(1)).as("cnt"))
@@ -256,7 +251,7 @@ object TextAnalysis {
     * every signal derives from the attribute (tokenization would
     * otherwise be re-evaluated per referencing expression). */
   def analyze(docs: DataFrame, textCol: String = "text"): DataFrame =
-    Dedup.parallelize(docs)
+    docs
       .select(col("*"), explode(array(struct(
         tokens(col(textCol)).as("toks"),
         normalizedText(col(textCol)).as("norm")))).as("_t"))

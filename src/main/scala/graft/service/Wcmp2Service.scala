@@ -120,9 +120,8 @@ object Wcmp2Service {
   /** ETS (`pygeoapi_plugin.py:207-223`) or ungated KPI
     * (`pygeoapi_plugin.py:243-258`) execution: one evaluation of the
     * compiled catalog answers either process. */
-  private def execute(catalog: CompiledCatalog, spark: SparkSession,
-                      processId: String, body: String,
-                      runDatetime: String): Response = {
+  private def execute(catalog: CompiledCatalog, processId: String,
+                      body: String, runDatetime: String): Response = {
     val root =
       try mapper.readTree(body)
       catch { case _: Exception =>
@@ -134,7 +133,7 @@ object Wcmp2Service {
       case Some(_) if !describe.contains(processId) =>
         error(404, "NoSuchProcess", s"No such process: $processId")
       case Some(record) =>
-        val r = catalog.run(spark, record, runDatetime)
+        val r = catalog.run(record, runDatetime)
         if (!r.parseOk)
           error(400, "InvalidParameterValue",
             "Encoding error: record is not valid JSON")
@@ -156,14 +155,14 @@ object Wcmp2Service {
     * `server.getAddress.getPort`. `runDatetime` empty = stamp reports with
     * the wall clock per request (production); a fixed value makes
     * responses fully deterministic (tests). */
-  def start(spark: SparkSession, port: Int, catalog: CompiledCatalog,
+  def start(port: Int, catalog: CompiledCatalog,
             runDatetime: String = ""): HttpServer = {
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     server.setExecutor(Executors.newFixedThreadPool(4))
     server.createContext("/", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         val resp =
-          try route(catalog, spark, ex, runDatetime)
+          try route(catalog, ex, runDatetime)
           catch { case e: Exception =>
             error(500, "ProcessorExecuteError", String.valueOf(e.getMessage)) }
         val bytes = resp.body.getBytes(UTF_8)
@@ -179,8 +178,8 @@ object Wcmp2Service {
 
   private val execRe = "/processes/([^/]+)/execution".r
 
-  private def route(catalog: CompiledCatalog, spark: SparkSession,
-                    ex: HttpExchange, runDatetime: String): Response = {
+  private def route(catalog: CompiledCatalog, ex: HttpExchange,
+                    runDatetime: String): Response = {
     val path = ex.getRequestURI.getPath.stripSuffix("/") match {
       case "" => "/"
       case p => p
@@ -197,7 +196,7 @@ object Wcmp2Service {
         val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
         val dt = if (runDatetime.nonEmpty) runDatetime
                  else java.time.Instant.now().toString
-        execute(catalog, spark, id, body, dt)
+        execute(catalog, id, body, dt)
       case ("POST", _) => error(404, "NotFound", s"No such endpoint: $path")
       case (_, _) =>
         error(405, "MethodNotAllowed", s"$method not allowed on $path")
@@ -219,7 +218,7 @@ object Wcmp2Service {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // plans and compiles the catalog before the port opens
-    val server = start(spark, port, CompiledCatalog.build(spark))
+    val server = start(port, CompiledCatalog.build(spark))
     println(s"[graft] wcmp2 service listening on " +
       s"http://localhost:${server.getAddress.getPort}/processes")
     new java.util.concurrent.CountDownLatch(1).await()

@@ -65,17 +65,8 @@ object StreamingValidator {
         sum(when(!col("parse_ok"), 1).otherwise(0)).as("parse_errors"),
         sum(when(col("parse_ok") && col("ets_summary.FAILED") > 0, 1)
           .otherwise(0)).as("failed_records"),
-        // partition fingerprint: xor of each row's sha256 64-bit prefix
-        // (15 hex chars, positive in signed 64). Chosen over crc32-of-
-        // sha because ANY engine can recompute it from the content
-        // column alone — the north-rule sha256 invariant stays
-        // externally verifiable end-to-end (the DuckDB oracle does)
-        bit_xor(conv(substring(col("sha256"), 1, 15), 16, 10)
-          .cast(org.apache.spark.sql.types.LongType))
-          .as("sha_fingerprint"))
-      .withColumn("verdict",
-        when(col("failed_records") + col("parse_errors") === 0, "PASS")
-          .otherwise("FAIL"))
+        Validator.shaFingerprint)
+      .withColumn("verdict", Validator.verdict)
 
   /** Stateful per-repo quality tracking with explicit state:
     * consecutive-failure streaks per repo (the alerting primitive a

@@ -58,7 +58,7 @@ class CompiledCatalogSpec extends SparkSpec {
     import spark.implicits._
     val gate = gates(adhoc(contents.toDF("content")))
     val parsed = contents.zipWithIndex.map { case (content, i) =>
-      val got = catalog.run(spark, content, Dt)
+      val got = catalog.run(content, Dt)
       assert((got.gate, got.gateErrors) == gate(content), s"record $i")
       Try(Reports.validateOne(spark, content, Dt, failOnEts = false)) match {
         case Success((ets, kpi)) =>
@@ -88,7 +88,7 @@ class CompiledCatalogSpec extends SparkSpec {
     assert(gate.values.exists(_._1 == "FAILED"))
     for ((w, i) <- want.zipWithIndex) {
       val content = w.getAs[String]("content")
-      val got = catalog.run(spark, content, Dt)
+      val got = catalog.run(content, Dt)
       assert(got.parseOk == w.getAs[Boolean]("parse_ok"), s"record $i")
       assert(got.ets == w.getAs[String]("ets"), s"record $i")
       assert(got.kpi == w.getAs[String]("kpi"), s"record $i")
@@ -99,7 +99,7 @@ class CompiledCatalogSpec extends SparkSpec {
   test("a plan node the evaluator cannot compile fails the build") {
     val agg = spark.range(3).groupBy().count()
     intercept[IllegalStateException](
-      new CompiledCatalog(agg.queryExecution.optimizedPlan))
+      new CompiledCatalog(agg.queryExecution.optimizedPlan, spark))
   }
 
   test("non-ASCII and 4-byte UTF-8 text with escaped quotes and " +
@@ -116,12 +116,12 @@ class CompiledCatalogSpec extends SparkSpec {
     val (ets, kpi) = Reports.validateOne(spark, record, Dt, failOnEts = false)
     assert(kpi.exists(_.contains("地上気象観測")))
 
-    val got = catalog.run(spark, record, Dt)
+    val got = catalog.run(record, Dt)
     assert(got.parseOk)
     assert(got.ets == ets)
     assert(kpi.contains(got.kpi))
 
-    val server = Wcmp2Service.start(spark, port = 0, catalog, Dt)
+    val server = Wcmp2Service.start(port = 0, catalog, Dt)
     def post(process: String): (Int, String) = {
       val inputs = mapper.createObjectNode().put("record", record)
         .put("fail_on_schema_validation", false)

@@ -67,7 +67,7 @@ class EngineSpec extends SparkSpec {
     assert(q50 > 0 && q50 <= q95 && q95 <= q99)
   }
 
-  test("sketch column stats: mergeable HLL/t-digest profile per lang") {
+  test("sketch column stats: mergeable HLL/KLL profile per lang") {
     val rows = DatasetRules.columnStatsSketch(
       RecordTable.synthesize(spark, 2000)).collect()
       .map(r => r.getString(0) -> r).toMap

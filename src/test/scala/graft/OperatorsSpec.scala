@@ -738,6 +738,37 @@ class OperatorsSpec extends SparkSpec {
     assert(r2.getDouble(r2.fieldIndex("dup_gram_frac")) == 0.0)
   }
 
+  test("embedding near-dup over sig rows: in-bucket survivors are exactly " +
+       "the pairs with dot / (norm * norm) >= t; a zero-norm member throws " +
+       "under ANSI") {
+    val vecs: Seq[(Long, Seq[Double])] = Seq(
+      1L -> Seq(1.0, 0.0, 0.0), 2L -> Seq(0.9, 0.1, 0.0),
+      3L -> Seq(-1.0, 0.0, 0.0), 4L -> Seq(0.1, -0.9, 0.3),
+      5L -> Seq(0.5, 0.5, 0.5), 6L -> Seq(1.0, 1.0, 1.0))
+    def dot(a: Seq[Double], b: Seq[Double]) =
+      a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + x * y }
+    def sigRows(vs: Seq[(Long, Seq[Double])]) = vs.toDF("id", "vec")
+      .select(col("id"), col("vec"),
+        sqrt(graft.expressions.VectorOps.dotProduct(col("vec"), col("vec")))
+          .as("norm"), lit(0L).as("bucket"))
+    for (t <- Seq(0.2, 0.9, -2.0)) {
+      val got = Dedup.embeddingNearDupFromSigs(sigRows(vecs), t, 100)
+        .as[(Long, Long, Double)].collect()
+        .map { case (a, b, c) => (a, b, f"$c%.9f") }.toSet
+      val expected = (for {
+        (a, va) <- vecs; (b, vb) <- vecs if a < b
+        c = dot(va, vb) / (math.sqrt(dot(va, va)) * math.sqrt(dot(vb, vb)))
+        if c >= t
+      } yield (a, b, f"$c%.9f")).toSet
+      assert(got == expected, s"t=$t")
+    }
+    intercept[Exception] {
+      Dedup.embeddingNearDupFromSigs(
+        sigRows(vecs :+ (7L -> Seq(0.0, 0.0, 0.0))), 0.2, 100)
+    }
+    Dedup.releaseCaches()
+  }
+
   test("components: a failing job releases every intermediate cache " +
        "(error-path hygiene, not just the happy path)") {
     Dedup.releaseCaches()

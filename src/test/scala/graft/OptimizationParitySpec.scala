@@ -351,38 +351,6 @@ class OptimizationParitySpec extends SparkSpec {
     assert(pairs.sorted == Seq((3L, 7L, 1), (3L, 64L, 3), (7L, 64L, 4)))
   }
 
-  test("CosinePairs kernel: survivor-set parity with the bucketPairs " +
-       "HOF + where(cosine >= t) under ANSI (zero-norm vectors throw in both)") {
-    import graft.operators.Dedup
-    // members: ids with vectors engineered for near/far cosines plus a
-    // zero vector (0/0 = NaN, which Spark's ordering keeps)
-    val vecs: Seq[(Long, Seq[Double])] = Seq(
-      1L -> Seq(1.0, 0.0, 0.0), 2L -> Seq(0.9, 0.1, 0.0),
-      3L -> Seq(-1.0, 0.0, 0.0), 4L -> Seq(0.1, -0.9, 0.3),
-      5L -> Seq(0.5, 0.5, 0.5), 6L -> Seq(1.0, 1.0, 1.0))
-    val df = vecs.toDF("id", "vec")
-      .select(col("id"), col("vec"),
-        sqrt(graft.expressions.VectorOps.dotProduct(col("vec"), col("vec")))
-          .as("norm"))
-      .groupBy(lit(1))
-      .agg(sort_array(collect_list(struct(col("id"), col("norm"),
-        col("vec")))).as("members"))
-    for (t <- Seq(0.2, 0.9, -2.0)) {
-      val kernel = df.select(explode(
-          graft.expressions.CosinePairs.cosinePairs(col("members"), t))
-          .as("p"))
-        .select("p.id_a", "p.id_b", "p.cosine")
-        .as[(Long, Long, Double)].collect()
-        .map { case (a, b, c) => (a, b, f"$c%.9f") }.toSet
-      val hof = df.select(Dedup.bucketPairsForTest(col("members")).as("p"))
-        .select(col("p.id_a"), col("p.id_b"), col("p.cosine"))
-        .where(col("cosine") >= t)
-        .as[(Long, Long, Double)].collect()
-        .map { case (a, b, c) => (a, b, f"$c%.9f") }.toSet
-      assert(kernel == hof, s"cosine pair mismatch at t=$t")
-    }
-  }
-
   test("ShinglesAll kernel: window-for-window parity (duplicates kept) " +
        "with the declarative repetition-gram chain") {
     import graft.operators.{Dedup, TextAnalysis}

@@ -141,6 +141,12 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), p)
   }
 
+  test("text analysis scans its one-file documents input without a " +
+       "round-robin repartition") {
+    val p = formatted(q("q_text_quality"))
+    assert(!p.contains("RoundRobinPartitioning"), p)
+  }
+
   test("no accidental cartesian products in lazily-planned driver " +
        "queries; ANN's broadcast nested-loop is the one intended cross") {
     val lazyQueries = Seq("q_agg_summary", "q_broadcast_join", "q_semi_join",

@@ -22,7 +22,7 @@ class ServiceSpec extends SparkSpec with BeforeAndAfterAll {
 
   private val started = scala.collection.mutable.ArrayBuffer.empty[HttpServer]
   private def serve(runDatetime: String): HttpServer = {
-    val s = Wcmp2Service.start(spark, port = 0, TestCatalog.compiled,
+    val s = Wcmp2Service.start(port = 0, TestCatalog.compiled,
       runDatetime)
     started += s
     s

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import graft.engine.Validator
 import graft.sources.RecordTable
 import graft.streaming.StreamingValidator
 
@@ -61,6 +62,16 @@ class StreamingSpec extends SparkSpec {
       assert(total == 200)
       assert(rows.forall(r => r.getString(3) == "FAIL" ||
         r.getLong(2) == 0))
+      // the fingerprint is order-independent: per lang, the xor over the
+      // emitted windows equals the batch fingerprint of the same 200 rows
+      val streamedFp = spark.table("verdicts_stream").groupBy("lang")
+        .agg(bit_xor(col("sha_fingerprint"))).as[(String, Long)]
+        .collect().toMap
+      val batchFp = Validator.partitionVerdicts(
+          Validator.validate(RecordTable.synthesize(spark, 200)))
+        .select("lang", "sha_fingerprint").as[(String, Long)]
+        .collect().toMap
+      assert(streamedFp == batchFp)
     } finally q.stop()
   }
 
