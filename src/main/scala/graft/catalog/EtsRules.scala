@@ -6,29 +6,22 @@ import graft.dims.Dims
 import graft.functions.{GeoFunctions, Wcmp2Functions => F}
 
 /** Columns every row-local rule is built from. `rec` is the payload parsed
-  * once via `from_json(content, Wcmp2Schema.root)` and materialized behind
-  * a Generate barrier (see [[graft.engine.Validator.validate]]) so the
-  * optimizer can never re-inline the parse per reference; `geometry` is the
-  * raw `$.geometry` JSON (variable nesting depth, see [[GeoFunctions]]);
+  * once by the [[graft.expressions.JsonFacts]] kernel and materialized
+  * behind a Generate barrier (see [[graft.engine.Validator.withKernels]]) so
+  * the optimizer can never re-inline the parse per reference; `geometry` is
+  * the raw `$.geometry` JSON (variable nesting depth, see [[GeoFunctions]]);
   * `geoPositions` its pre-flattened coordinate list; `propsKeys` are the
   * top-level keys of the raw `$.properties` object — the presence-vs-null
-  * channel that `from_json` cannot provide (SURVEY.md §7.4-1). */
+  * channel that `from_json` cannot provide (SURVEY.md §7.4-1). The last
+  * five are per-row kernels that several rules share, materialized once
+  * behind a second barrier: the misspelled title and description tokens,
+  * the [[graft.expressions.TitleWords]] struct, the K5 http link pool and
+  * the K4 preview links. */
 case class RecordCols(content: Column, rec: Column, geometry: Column,
                       geoPositions: Column, propsKeys: Column,
-                      titleMisspelledOpt: Option[Column] = None,
-                      descMisspelledOpt: Option[Column] = None,
-                      pre: Map[String, Column] = Map.empty) {
-  import graft.functions.{Wcmp2Functions => WF}
-  /** Pre-materialized kernels (second Generate barrier in the Validator).
-    * Each fallback recomputes the expression per reference — correct but
-    * slower; the Validator always materializes them once per row. */
-  def titleMisspelled: Column = titleMisspelledOpt.getOrElse(
-    WF.misspelled(rec.getField("properties").getField("title")))
-  def descMisspelled: Column = descMisspelledOpt.getOrElse(
-    WF.misspelled(rec.getField("properties").getField("description")))
-  def preOr(key: String, fallback: => Column): Column =
-    pre.getOrElse(key, fallback)
-}
+                      titleMisspelled: Column, descMisspelled: Column,
+                      titleWords: Column, httpLinks: Column,
+                      previews: Column)
 
 /** One ETS conformance test compiled to Catalyst predicates.
   *

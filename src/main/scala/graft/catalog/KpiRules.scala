@@ -110,26 +110,19 @@ object KpiRules {
     when(coalesce(bad, lit(false)), msg)
 
   /** kpi_title — Good quality title, total 8 (`kpi.py:82-163`).
-    * The four scalar title facts (all-alnum words, sentence case, acronym
-    * count, bulletin header) read the pre-materialized TitleWords kernel
-    * fields when the Validator provides them — the declarative
-    * formulations below are the reference impls (r6 parity:
-    * OptimizationParitySpec) and the fallback for direct catalog use. */
+    * The title facts (words, all-alnum words, sentence case, acronym
+    * count, bulletin header) are fields of the TitleWords kernel struct;
+    * OptimizationParitySpec pins them to the declarative formulations in
+    * [[graft.functions.Wcmp2Functions]]. */
   def title(r: RecordCols): KpiRule = {
-    val acronymRe = "\\b([A-Z]{2,}\\d*)\\b"
-    val bulletinRe = "[A-Z]{4}\\d{2}[\\s_]*[A-Z]{4}"
     val t = prop(r, "title")
-    val words = r.preOr("title_words", F.pySplitWs(t))
-    val stripped = r.preOr("title_stripped",
-      F.pyStrip(regexp_replace(t, acronymRe, "")))
+    val words = r.titleWords.getField("words")
     val misspelled = r.titleMisspelled
-    val allAlnum = r.preOr("title_all_alnum", forall(words, F.pyIsAlnum))
-    val capOk = r.preOr("title_cap_ok",
-      F.pyCapitalize(stripped) === stripped)
-    val nAcronyms = r.preOr("title_n_acronyms",
-      size(regexp_extract_all(t, lit(acronymRe), lit(1))))
-    val hasBulletin = coalesce(
-      r.preOr("title_has_bulletin", t.rlike(bulletinRe)), lit(false))
+    val allAlnum = r.titleWords.getField("all_alnum")
+    val capOk = r.titleWords.getField("cap_ok")
+    val nAcronyms = r.titleWords.getField("n_acronyms")
+    val hasBulletin =
+      coalesce(r.titleWords.getField("has_bulletin"), lit(false))
     val p1 = point(t.isNotNull) // 'Title is present' (kpi.py:102-103)
     val p2 = point(size(words) >= 3)
     val p3 = point(length(t) <= 150)
@@ -224,8 +217,7 @@ object KpiRules {
   /** kpi_graphic_overview — total 3 per `rel == 'preview'` link
     * (`kpi.py:279-328`). */
   def graphicOverview(r: RecordCols, probe: LinkProbe): KpiRule = {
-    val previews = r.preOr("previews",
-      filter(r.rec.getField("links"), l => l.getField("rel") === "preview"))
+    val previews = r.previews
     def mimeOk(l: Column): Column = {
       val declared = coalesce(l.getField("type"), lit(""))
       declared.isInCollection(Dims.webImageMimes) &&
@@ -244,27 +236,27 @@ object KpiRules {
       lit("Graphic overview for metadata records"), total, score, comments)
   }
 
-  /** kpi_links_health — total 2 per http(s) URL in the pooled link set
-    * (`kpi.py:330-405`): record links, then per theme its concept `url`s
-    * and its scheme, then contact links. */
-  /** The pooled link set of kpi_links_health (`kpi.py:356-374`): record
-    * links, then per theme its concept urls and scheme, then contact
-    * links — filtered to http(s). Exposed so the Validator can
-    * materialize it once per row (it is referenced by total, score and
-    * comments). */
-  def httpLinkPool(r: RecordCols): Column = {
+  /** The pooled link set of kpi_links_health (`kpi.py:356-374`) of the
+    * parsed record `rec`: record links, then per theme its concept urls
+    * and scheme, then contact links — filtered to http(s). The declarative
+    * reference of the [[graft.expressions.LinkPoolExpr]] kernel the
+    * Validator materializes once per row (parity: OptimizationParitySpec),
+    * and the table-wide pool of
+    * [[graft.engine.DatasetRules.recordLinkUrls]]. */
+  def httpLinkPool(rec: Column): Column = {
     val hrefType = (href: Column, t: Column) =>
       struct(href.as("href"), t.as("type"))
-    val recordLinks = transform(r.rec.getField("links"),
+    val props = rec.getField("properties")
+    val recordLinks = transform(rec.getField("links"),
       l => hrefType(l.getField("href"), l.getField("type")))
-    val themeLinks = flatten(transform(prop(r, "themes"), t => concat(
+    val themeLinks = flatten(transform(props.getField("themes"), t => concat(
       transform(filter(t.getField("concepts"),
                        c => c.getField("url").isNotNull),
                 c => hrefType(c.getField("url"), lit(null).cast(StringType))),
       array(hrefType(t.getField("scheme"), lit(null).cast(StringType))))))
     val emptyContactLinks = array()
       .cast(ArrayType(graft.model.Wcmp2Schema.contactLink))
-    val contactLinks = flatten(transform(prop(r, "contacts"), c =>
+    val contactLinks = flatten(transform(props.getField("contacts"), c =>
       transform(coalesce(c.getField("links"), emptyContactLinks),
                 l => hrefType(l.getField("href"), lit(null).cast(StringType)))))
     val emptyPool = array().cast(ArrayType(StructType(Seq(
@@ -277,8 +269,11 @@ object KpiRules {
       p.getField("href").isNotNull && p.getField("href").startsWith("http"))
   }
 
+  /** kpi_links_health — total 2 per http(s) URL in the pooled link set
+    * (`kpi.py:330-405`): record links, then per theme its concept `url`s
+    * and its scheme, then contact links. */
   def linksHealth(r: RecordCols, probe: LinkProbe): KpiRule = {
-    val httpLinks = r.preOr("http_links", httpLinkPool(r))
+    val httpLinks = r.httpLinks
     def typeOk(p: Column): Column =
       probe.mime(p.getField("href"), p.getField("type"))
         .isInCollection(Dims.validMimes)

@@ -196,12 +196,11 @@ object DatasetRules {
     * (`pywcmp/util.py:149-200`). */
   def recordLinkUrls(records: DataFrame): org.apache.spark.sql.Dataset[String] = {
     import records.sparkSession.implicits._
-    val rc = graft.catalog.RecordCols(col("content"), col("rec"),
-      lit(null), lit(null), lit(null))
     records
       .select(explode(array(from_json(col("content"),
         graft.model.Wcmp2Schema.root))).as("rec"))
-      .select(explode(graft.catalog.KpiRules.httpLinkPool(rc)).as("p"))
+      .select(explode(graft.catalog.KpiRules.httpLinkPool(col("rec")))
+        .as("p"))
       .select(col("p.href")).where(col("href").isNotNull)
       .distinct().as[String]
   }

@@ -50,17 +50,14 @@ object Validator {
     // second barrier: per-row kernels that multiple rule expressions
     // reference (spellcheck x3 refs each, the K5 link pool x3, K1 title
     // words/stripped x4/x4, K4 previews x3) — materialized ONCE each.
-    val rc0 = RecordCols(col("content"), col("_p.rec"),
-      col("_p.geom_raw"),
-      col("_p.geo_positions"),
-      col("_p.props_keys"))
     val titleCol = col("_p.rec.properties.title")
     val kernels = struct(
       // native kernels (one JVM call each; the declarative formulations
       // in Wcmp2Functions / KpiRules.httpLinkPool are the documented
-      // reference impls, parity-tested in FunctionsSpec) — everything in
-      // this struct is evaluated interpreted inside the Generate barrier,
-      // so composite HOF/regex chains here are hot-path poison
+      // reference impls, parity-tested in OptimizationParitySpec) —
+      // everything in this struct is evaluated interpreted inside the
+      // Generate barrier, so composite HOF/regex chains here are hot-path
+      // poison
       graft.expressions.Misspelled.misspelled(titleCol).as("title_mis"),
       graft.expressions.Misspelled.misspelled(
         col("_p.rec.properties.description")).as("desc_mis"),
@@ -76,18 +73,13 @@ object Validator {
       .select(col("*"), explode(array(parsedStruct)).as("_p"))
       .select(col("*"), explode(array(kernels)).as("_k"))
 
-    val rc = rc0.copy(
-      titleMisspelledOpt = Some(col("_k.title_mis")),
-      descMisspelledOpt = Some(col("_k.desc_mis")),
-      pre = Map(
-        "title_words" -> col("_k.title_kernel.words"),
-        "title_stripped" -> col("_k.title_kernel.stripped"),
-        "title_all_alnum" -> col("_k.title_kernel.all_alnum"),
-        "title_cap_ok" -> col("_k.title_kernel.cap_ok"),
-        "title_n_acronyms" -> col("_k.title_kernel.n_acronyms"),
-        "title_has_bulletin" -> col("_k.title_kernel.has_bulletin"),
-        "http_links" -> col("_k.http_links"),
-        "previews" -> col("_k.previews")))
+    val rc = RecordCols(col("content"), col("_p.rec"), col("_p.geom_raw"),
+      col("_p.geo_positions"), col("_p.props_keys"),
+      titleMisspelled = col("_k.title_mis"),
+      descMisspelled = col("_k.desc_mis"),
+      titleWords = col("_k.title_kernel"),
+      httpLinks = col("_k.http_links"),
+      previews = col("_k.previews"))
     (withParsed, rc)
   }
 

@@ -2,10 +2,7 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
 /** Audio feature extraction over REAL decoded PCM samples — the audio
@@ -21,7 +18,7 @@ import org.apache.spark.sql.types._
   *    wave whose amplitude, length and prefix are pure seed arithmetic,
   *    so every feature below has a closed form an independent engine
   *    (the DuckDB oracle) can recompute from the seed alone.
-  *  - [[AudioFeatures]]: one pass over the PCM frames ->
+  *  - [[AudioOps.audioFeatures]]: one pass over the PCM frames ->
   *    `(n_frames, duration_ms, peak, rms, silence_ratio)`; peak/rms are
   *    normalized to full scale [0,1], silence is |x| below 1% full
   *    scale on every channel. These are the audio QC signals a corpus
@@ -901,92 +898,17 @@ object AudioOps {
     }
   }
 
-  def synthWav(seed: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(SynthWav(shims.expression(seed)))
-  }
-  def synthWavCodec(seed: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(SynthWavCodec(shims.expression(seed)))
-  }
-  def synthWavAdpcm(seed: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(SynthWavAdpcm(shims.expression(seed)))
-  }
-  def audioFeatures(media: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(AudioFeatures(shims.expression(media)))
-  }
-}
-
-/** (seed long) -> deterministic IMA ADPCM WAV bytes (see
-  * [[AudioOps.synthWavAdpcm]]). Codegen'd; never null. */
-case class SynthWavAdpcm(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.DataTypeMismatch(
-      errorSubClass = "UNEXPECTED_INPUT_TYPE",
-      messageParameters = Map("paramIndex" -> "1",
-        "requiredType" -> "\"BIGINT\"",
-        "inputSql" -> child.sql, "inputType" -> child.dataType.sql))
-  override def nullSafeEval(seed: Any): Any =
-    AudioOps.synthWavAdpcm(seed.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode) =
-    defineCodeGen(ctx, ev,
-      s => s"graft.expressions.AudioOps.synthWavAdpcm($s)")
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "synth_wav_adpcm"
-}
-
-/** seed long -> WAV bytes (codegen'd; never null). */
-case class SynthWav(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.DataTypeMismatch(
-      errorSubClass = "UNEXPECTED_INPUT_TYPE",
-      messageParameters = Map("paramIndex" -> "1",
-        "requiredType" -> "\"BIGINT\"",
-        "inputSql" -> child.sql, "inputType" -> child.dataType.sql))
-  override def nullSafeEval(seed: Any): Any =
-    AudioOps.synthWav(seed.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode) =
-    defineCodeGen(ctx, ev,
-      s => s"graft.expressions.AudioOps.synthWav($s)")
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "synth_wav"
-}
-
-/** seed long -> codec-coverage WAV bytes (codegen'd; never null). */
-case class SynthWavCodec(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.DataTypeMismatch(
-      errorSubClass = "UNEXPECTED_INPUT_TYPE",
-      messageParameters = Map("paramIndex" -> "1",
-        "requiredType" -> "\"BIGINT\"",
-        "inputSql" -> child.sql, "inputType" -> child.dataType.sql))
-  override def nullSafeEval(seed: Any): Any =
-    AudioOps.synthWavCodec(seed.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode) =
-    defineCodeGen(ctx, ev,
-      s => s"graft.expressions.AudioOps.synthWavCodec($s)")
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "synth_wav_codec"
-}
-
-/** WAV bytes -> PCM feature struct (null on non-PCM/undecodable). */
-case class AudioFeatures(child: Expression) extends MediaProbe {
-  override def dataType: DataType = AudioOps.featureType
-  protected val kernel = "graft.expressions.AudioOps.features"
-  override def nullSafeEval(input: Any): Any =
-    AudioOps.features(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "audio_features"
+  /** seed long -> WAV bytes; never null */
+  def synthWav(seed: Column): Column = synth("synthWav", seed)
+  /** seed long -> codec-coverage WAV bytes; never null */
+  def synthWavCodec(seed: Column): Column = synth("synthWavCodec", seed)
+  /** seed long -> deterministic IMA ADPCM WAV bytes; never null */
+  def synthWavAdpcm(seed: Column): Column = synth("synthWavAdpcm", seed)
+  private def synth(function: String, seed: Column): Column =
+    Kernel.call(this, function, BinaryType, Seq(seed -> LongType),
+      nullable = false)
+  /** WAV bytes -> PCM feature struct, null on non-PCM/undecodable */
+  def audioFeatures(media: Column): Column =
+    Kernel.call(this, "features", featureType, Seq(media -> BinaryType),
+      nullable = true)
 }

@@ -2,9 +2,8 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.BinaryType
 
 /** REAL pixel decode for uncompressed BMP (BITMAPINFOHEADER family,
   * `BI_RGB`) — like PNG ([[PngPixels]]), the format needs no codec
@@ -13,8 +12,8 @@ import org.apache.spark.sql.types.DataType
   * `(width, height, channels, pixels)` struct and raster layout as
   * [[PngPixels]] (top-down scanline-major, channel-interleaved RGB),
   * so every stage built on the raster — `ImageOps.grayResize`,
-  * `DHash64`, `Multimodal.featurizeImage` — is format-agnostic: the
-  * same image saved as PNG and as BMP hashes identically
+  * `ImageOps.dhash64`, `Multimodal.featurizeImage` — is format-agnostic:
+  * the same image saved as PNG and as BMP hashes identically
   * (cross-format near-dup, ImageSpec).
   *
   * Declared subset: bpp 8 (palette, emitted as RGB via the color
@@ -26,16 +25,6 @@ import org.apache.spark.sql.types.DataType
   * bomb caps before any allocation, Long arithmetic so forged u32/i32
   * header fields cannot wrap Int, bounds-checked reads, never throws.
   */
-case class BmpPixels(child: Expression) extends MediaProbe {
-  override def dataType: DataType = PngPixels.pixType
-  protected val kernel = "graft.expressions.BmpPixels.pixels"
-  override def nullSafeEval(input: Any): Any =
-    BmpPixels.pixels(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "bmp_pixels"
-}
-
 object BmpPixels {
   /** (byte[]) -> InternalRow(width, height, channels, raster) or null;
     * raster layout identical to [[PngPixels.pixels]]. */
@@ -150,8 +139,7 @@ object BmpPixels {
     out
   }
 
-  def bmpPixels(c: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(BmpPixels(shims.expression(c)))
-  }
+  def bmpPixels(c: Column): Column =
+    Kernel.call(this, "pixels", PngPixels.pixType, Seq(c -> BinaryType),
+      nullable = true)
 }

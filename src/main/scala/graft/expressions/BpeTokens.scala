@@ -6,13 +6,11 @@ import java.util.regex.Pattern
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Merges-based byte-level BPE tokenizer as native codegen'd expressions —
+/** Merges-based byte-level BPE tokenizer as native static kernels —
   * the real subword tokenizer behind token counting and token-budget
   * curation (replacing the round-4 regex pretokenizer approximation,
   * which survives as `TextAnalysis.tokenCountPretok`).
@@ -110,16 +108,14 @@ object Bpe {
   // ---- Column API ----
 
   /** exact subword token count under the vendored merges table */
-  def bpeTokenCount(text: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(BpeTokenCount(shims.expression(text)))
-  }
+  def bpeTokenCount(text: Column): Column =
+    Kernel.call(this, "count", IntegerType, Seq(text -> StringType),
+      nullable = false)
 
   /** token-id array (0..255 bytes, 256+i merge results) */
-  def bpeTokenIds(text: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(BpeTokenIds(shims.expression(text)))
-  }
+  def bpeTokenIds(text: Column): Column =
+    Kernel.call(this, "ids", ArrayType(IntegerType, containsNull = false),
+      Seq(text -> StringType), nullable = false)
 }
 
 /** A loaded BPE merge table + the encode/decode/count kernels. Thread-safe;
@@ -229,46 +225,4 @@ final class BpeCodec(merges: Seq[(String, String)]) {
     while (i < chars.length) { bytes(i) = Bpe.charToByte(chars.charAt(i)); i += 1 }
     new String(bytes, UTF_8)
   }
-}
-
-/** exact BPE token count, codegen'd (one static call per row) */
-case class BpeTokenCount(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def checkInputDataTypes() = {
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .DataTypeMismatch(errorSubClass = "UNEXPECTED_INPUT_TYPE",
-        messageParameters = Map("paramIndex" -> "1",
-          "requiredType" -> "\"STRING\"",
-          "inputSql" -> child.sql, "inputType" -> child.dataType.sql))
-  }
-  override def nullSafeEval(input: Any): Any =
-    Bpe.count(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.Bpe.count($c)")
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "bpe_token_count"
-}
-
-/** BPE token-id array, codegen'd */
-case class BpeTokenIds(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def checkInputDataTypes() = {
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .DataTypeMismatch(errorSubClass = "UNEXPECTED_INPUT_TYPE",
-        messageParameters = Map("paramIndex" -> "1",
-          "requiredType" -> "\"STRING\"",
-          "inputSql" -> child.sql, "inputType" -> child.dataType.sql))
-  }
-  override def nullSafeEval(input: Any): Any =
-    Bpe.ids(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.Bpe.ids($c)")
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "bpe_token_ids"
 }

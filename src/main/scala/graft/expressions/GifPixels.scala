@@ -2,9 +2,8 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.BinaryType
 
 /** REAL pixel decode for GIF (87a/89a) — the third image format fully
   * decodable without a codec library: GIF's only compression is LZW
@@ -14,7 +13,7 @@ import org.apache.spark.sql.types.DataType
   * (frame 1 of an animation) through the global/local color table to
   * the same `(width, height, channels=3, pixels)` struct as
   * [[PngPixels]]/[[BmpPixels]], so the raster pipeline
-  * (`ImageOps.grayResize`, `DHash64`, `Multimodal.featurizeImage`)
+  * (`ImageOps.grayResize`, `ImageOps.dhash64`, `Multimodal.featurizeImage`)
   * gains the format for free. Interlaced images are de-interlaced
   * (the 8/8/4/2 row passes of the spec).
   *
@@ -39,16 +38,6 @@ import org.apache.spark.sql.types.DataType
   * GIF and a twin flattened onto some page color other than the GIF's
   * own background can still hash differently.
   */
-case class GifPixels(child: Expression) extends MediaProbe {
-  override def dataType: DataType = PngPixels.pixType
-  protected val kernel = "graft.expressions.GifPixels.pixels"
-  override def nullSafeEval(input: Any): Any =
-    GifPixels.pixels(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "gif_pixels"
-}
-
 object GifPixels {
   /** (byte[]) -> InternalRow(width, height, 3, raster) or null; raster
     * layout identical to [[PngPixels.pixels]]. First frame only;
@@ -328,8 +317,7 @@ object GifPixels {
     out.toByteArray
   }
 
-  def gifPixels(c: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(GifPixels(shims.expression(c)))
-  }
+  def gifPixels(c: Column): Column =
+    Kernel.call(this, "pixels", PngPixels.pixType, Seq(c -> BinaryType),
+      nullable = true)
 }

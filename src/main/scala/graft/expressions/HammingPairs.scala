@@ -3,10 +3,9 @@ package graft.expressions
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** Native in-bucket Hamming pair generator for the pigeonhole dedup
@@ -34,31 +33,6 @@ import org.apache.spark.sql.types._
   * member buffer. Output identity with the join formulation is pinned in
   * OperatorsSpec/OptimizationParitySpec.
   */
-case class HammingPairs(child: Expression, maxHamming: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("sig_a", LongType, nullable = false),
-    StructField("sig_b", LongType, nullable = false),
-    StructField("hamming", IntegerType, nullable = false))),
-    containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.DataTypeMismatch(
-      errorSubClass = "UNEXPECTED_INPUT_TYPE",
-      messageParameters = Map("paramIndex" -> "1",
-        "requiredType" -> "\"ARRAY<BIGINT>\"",
-        "inputSql" -> child.sql, "inputType" -> child.dataType.sql))
-  }
-  override def nullSafeEval(input: Any): Any =
-    HammingPairs.compute(input.asInstanceOf[ArrayData], maxHamming)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.expressions.HammingPairs.compute($c, $maxHamming)")
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "hamming_pairs"
-}
-
 object HammingPairs {
   def compute(members: ArrayData, maxHamming: Int): ArrayData = {
     // compact equal neighbours in place: sorted input keeps them adjacent
@@ -90,8 +64,12 @@ object HammingPairs {
     new GenericArrayData(out.toArray)
   }
 
-  def hammingPairs(members: Column, maxHamming: Int): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(HammingPairs(shims.expression(members), maxHamming))
-  }
+  def hammingPairs(members: Column, maxHamming: Int): Column =
+    Kernel.call(this, "compute", ArrayType(StructType(Seq(
+        StructField("sig_a", LongType, nullable = false),
+        StructField("sig_b", LongType, nullable = false),
+        StructField("hamming", IntegerType, nullable = false))),
+        containsNull = false),
+      Seq(members -> ArrayType(LongType), lit(maxHamming) -> IntegerType),
+      nullable = false)
 }

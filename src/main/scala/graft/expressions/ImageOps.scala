@@ -3,9 +3,7 @@ package graft.expressions
 import java.util.zip.{CRC32, Deflater}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** Image feature extraction over REAL decoded pixels — the multimodal
@@ -13,18 +11,18 @@ import org.apache.spark.sql.types._
   * (resize / perceptual-hash / near-dup), implemented on the in-sandbox
   * PNG decoder ([[PngPixels]]; the JDK ships PNG's only codec):
   *
-  *  - [[SynthPng]]: a deterministic PNG ENCODER (IHDR/IDAT/IEND with
+  *  - [[synthPng]]: a deterministic PNG ENCODER (IHDR/IDAT/IEND with
   *    CRCs, `java.util.zip.Deflater`), seed -> bytes. Two uses: synthetic
   *    media corpora whose bytes differ per row (compression level + row
   *    filter vary) while the decoded image is a pure function of the
   *    seed — exactly the shape image dedup must be invariant to — and
   *    the test seam for crafting arbitrary rasters
   *    ([[ImageOps.encodePng]] is the public kernel).
-  *  - [[GrayResize]]: decode -> integer luma -> box-average pool to a
+  *  - [[grayThumbnail]]: decode -> integer luma -> box-average pool to a
   *    fixed thumbnail. The real "resize" stage: deterministic integer
   *    arithmetic, no floating point, so hashes built on it are stable
   *    across platforms.
-  *  - [[DHash64]]: the standard 64-bit difference hash (9x8 gray
+  *  - [[imageDHash]]: the standard 64-bit difference hash (9x8 gray
   *    thumbnail, bit = left<right per row) — invariant to re-encoding
   *    (any filter/compression of the same pixels) and to uniform
   *    brightness shift; small pixel edits flip few bits, so Hamming
@@ -241,163 +239,31 @@ object ImageOps {
     bits
   }
 
-  def synthPng(seed: Column, level: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(SynthPng(shims.expression(seed), shims.expression(level)))
-  }
-  def synthImage(seed: Column, variant: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(SynthImage(shims.expression(seed), shims.expression(variant)))
-  }
-  def synthMedia(seed: Column, variant: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(SynthMedia(shims.expression(seed), shims.expression(variant)))
-  }
+  /** (seed long, level int) -> PNG bytes; never null */
+  def synthPng(seed: Column, level: Column): Column =
+    synth("synthPng", seed, level)
+  /** (seed long, variant int) -> PNG or BMP bytes of the same seed-defined
+    * raster; never null */
+  def synthImage(seed: Column, variant: Column): Column =
+    synth("synthImage", seed, variant)
+  /** (seed long, variant int) -> PNG/BMP (seeds < 80) or baseline JPEG
+    * (seeds >= 80) bytes of a seed-defined raster; never null */
+  def synthMedia(seed: Column, variant: Column): Column =
+    synth("synthMedia", seed, variant)
+  private def synth(function: String, seed: Column, variant: Column): Column =
+    Kernel.call(this, function, BinaryType,
+      Seq(seed -> LongType, variant -> IntegerType), nullable = false)
+
+  /** image bytes (PNG/BMP/GIF/JPEG) -> `w x h` grayscale thumbnail bytes,
+    * null on decode failure — the resize stage */
   def grayThumbnail(media: Column, w: Int, h: Int): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(GrayResize(shims.expression(media), w, h))
+    require(w > 0 && h > 0)
+    Kernel.call(this, "grayResize", BinaryType,
+      Seq(media -> BinaryType, lit(w) -> IntegerType, lit(h) -> IntegerType),
+      nullable = true)
   }
-  def imageDHash(media: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(DHash64(shims.expression(media)))
-  }
-}
-
-/** (seed long, level int) -> PNG bytes. Codegen'd; never null. */
-case class SynthPng(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = BinaryType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.DataTypeMismatch(
-      errorSubClass = "UNEXPECTED_INPUT_TYPE",
-      messageParameters = Map("paramIndex" -> "1",
-        "requiredType" -> "(\"BIGINT\", \"INT\")",
-        "inputSql" -> s"${left.sql}, ${right.sql}",
-        "inputType" -> s"(${left.dataType.sql}, ${right.dataType.sql})"))
-  override def nullSafeEval(seed: Any, level: Any): Any =
-    ImageOps.synthPng(seed.asInstanceOf[Long], level.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode) =
-    defineCodeGen(ctx, ev,
-      (s, l) => s"graft.expressions.ImageOps.synthPng($s, $l)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-  override def prettyName: String = "synth_png"
-}
-
-/** (seed long, variant int) -> PNG or BMP bytes of the same seed-defined
-  * raster. Codegen'd; never null. */
-case class SynthImage(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = BinaryType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.DataTypeMismatch(
-      errorSubClass = "UNEXPECTED_INPUT_TYPE",
-      messageParameters = Map("paramIndex" -> "1",
-        "requiredType" -> "(\"BIGINT\", \"INT\")",
-        "inputSql" -> s"${left.sql}, ${right.sql}",
-        "inputType" -> s"(${left.dataType.sql}, ${right.dataType.sql})"))
-  override def nullSafeEval(seed: Any, variant: Any): Any =
-    ImageOps.synthImage(seed.asInstanceOf[Long], variant.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode) =
-    defineCodeGen(ctx, ev,
-      (s, v) => s"graft.expressions.ImageOps.synthImage($s, $v)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-  override def prettyName: String = "synth_image"
-}
-
-/** (seed long, variant int) -> PNG/BMP (seeds < 80) or baseline JPEG
-  * (seeds >= 80) bytes of a seed-defined raster. Codegen'd; never null. */
-case class SynthMedia(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = BinaryType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.DataTypeMismatch(
-      errorSubClass = "UNEXPECTED_INPUT_TYPE",
-      messageParameters = Map("paramIndex" -> "1",
-        "requiredType" -> "(\"BIGINT\", \"INT\")",
-        "inputSql" -> s"${left.sql}, ${right.sql}",
-        "inputType" -> s"(${left.dataType.sql}, ${right.dataType.sql})"))
-  override def nullSafeEval(seed: Any, variant: Any): Any =
-    ImageOps.synthMedia(seed.asInstanceOf[Long], variant.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode) =
-    defineCodeGen(ctx, ev,
-      (s, v) => s"graft.expressions.ImageOps.synthMedia($s, $v)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-  override def prettyName: String = "synth_media"
-}
-
-/** Image bytes (PNG/BMP) -> `w x h` grayscale thumbnail bytes (null on
-  * decode failure) — the codegen'd resize stage. */
-case class GrayResize(child: Expression, w: Int, h: Int)
-    extends UnaryExpression {
-  require(w > 0 && h > 0)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.DataTypeMismatch(
-      errorSubClass = "UNEXPECTED_INPUT_TYPE",
-      messageParameters = Map("paramIndex" -> "1",
-        "requiredType" -> "\"BINARY\"",
-        "inputSql" -> child.sql, "inputType" -> child.dataType.sql))
-  override def nullSafeEval(input: Any): Any =
-    ImageOps.grayResize(input.asInstanceOf[Array[Byte]], w, h)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${childGen.code}
-        byte[] ${ev.value} = null;
-        if (!${childGen.isNull}) {
-          ${ev.value} = graft.expressions.ImageOps.grayResize(
-            ${childGen.value}, $w, $h);
-        }
-        boolean ${ev.isNull} = ${ev.value} == null;
-      """)
-  }
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "gray_resize"
-}
-
-/** PNG bytes -> 64-bit difference hash (null on decode failure). */
-case class DHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.DataTypeMismatch(
-      errorSubClass = "UNEXPECTED_INPUT_TYPE",
-      messageParameters = Map("paramIndex" -> "1",
-        "requiredType" -> "\"BINARY\"",
-        "inputSql" -> child.sql, "inputType" -> child.dataType.sql))
-  override def nullSafeEval(input: Any): Any =
-    ImageOps.dhash64(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    val boxed = ctx.freshName("dhash")
-    ev.copy(code =
-      code"""
-        ${childGen.code}
-        java.lang.Long $boxed = null;
-        if (!${childGen.isNull}) {
-          $boxed = graft.expressions.ImageOps.dhash64(${childGen.value});
-        }
-        boolean ${ev.isNull} = $boxed == null;
-        long ${ev.value} = ${ev.isNull} ? -1L : $boxed.longValue();
-      """)
-  }
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "dhash64"
+  /** image bytes -> 64-bit difference hash, null on decode failure */
+  def imageDHash(media: Column): Column =
+    Kernel.call(this, "dhash64", LongType, Seq(media -> BinaryType),
+      nullable = true)
 }

@@ -1,9 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.types.{BinaryType, LongType}
 
 /** JPEG dimensions probe: walks the JFIF/EXIF marker segments to the first
   * SOF frame header and returns the pixel dimensions packed as
@@ -15,7 +13,7 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   * analog is any standards-based probe of `pywcmp`'s web-image mime family,
   * `/root/reference/pywcmp/wcmp2/kpi.py:291-299`), so unlike the PNG/GIF/
   * BMP fixed-offset parsers in [[graft.operators.Multimodal.decodeImage]]
-  * this needs a loop — implemented as a native expression so the walk runs
+  * this needs a loop — implemented as a static kernel so the walk runs
   * as a single static call inside whole-stage codegen instead of an
   * interpreted higher-order fold.
   *
@@ -26,48 +24,12 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   * and 01 carry no length; scan data (post-SOS) is skipped by searching
   * for the next FF-non-00 byte pair.
   */
-case class JpegDims(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes() = {
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .DataTypeMismatch(errorSubClass = "UNEXPECTED_INPUT_TYPE",
-        messageParameters = Map("paramIndex" -> "1",
-          "requiredType" -> "\"BINARY\"",
-          "inputSql" -> child.sql, "inputType" -> child.dataType.sql))
-  }
-  override def nullable: Boolean = true
-  override def nullSafeEval(input: Any): Any = {
-    val r = JpegDims.dims(input.asInstanceOf[Array[Byte]])
-    if (r < 0) null else java.lang.Long.valueOf(r)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${childGen.code}
-        boolean ${ev.isNull} = true;
-        long ${ev.value} = -1L;
-        if (!${childGen.isNull}) {
-          ${ev.value} = graft.expressions.JpegDims.dims(${childGen.value});
-          ${ev.isNull} = ${ev.value} < 0L;
-        }
-      """)
-  }
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "jpeg_dims"
-}
-
 object JpegDims {
-  /** Static kernel shared by interpreted eval and generated code.
-    * Returns `width << 16 | height`, or -1 when not a decodable JPEG. */
-  def dims(bytes: Array[Byte]): Long = {
+  /** `width << 16 | height`, or null when not a decodable JPEG. */
+  def dims(bytes: Array[Byte]): java.lang.Long = {
     val n = bytes.length
     def u8(i: Int): Int = bytes(i) & 0xFF
-    if (n < 4 || u8(0) != 0xFF || u8(1) != 0xD8) return -1L
+    if (n < 4 || u8(0) != 0xFF || u8(1) != 0xD8) return null
     var i = 2
     var guard = 0
     while (i + 3 < n && guard < 4096) {
@@ -86,29 +48,27 @@ object JpegDims {
                    (marker >= 0xD0 && marker <= 0xD7)) {
           i += 2 // standalone markers: no length field
         } else if (marker == 0xD9) {
-          return -1L // EOI before any SOF
+          return null // EOI before any SOF
         } else {
-          if (i + 3 >= n) return -1L
+          if (i + 3 >= n) return null
           val len = (u8(i + 2) << 8) | u8(i + 3)
-          if (len < 2) return -1L
+          if (len < 2) return null
           val isSof = marker >= 0xC0 && marker <= 0xCF &&
             marker != 0xC4 && marker != 0xC8 && marker != 0xCC
           if (isSof) {
-            if (i + 8 >= n) return -1L
+            if (i + 8 >= n) return null
             val h = (u8(i + 5) << 8) | u8(i + 6)
             val w = (u8(i + 7) << 8) | u8(i + 8)
-            if (w <= 0 || h <= 0) return -1L
+            if (w <= 0 || h <= 0) return null
             return (w.toLong << 16) | h.toLong
           }
           i += 2 + len
         }
       }
     }
-    -1L
+    null
   }
 
-  def jpegDims(c: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(JpegDims(shims.expression(c)))
-  }
+  def jpegDims(c: Column): Column =
+    Kernel.call(this, "dims", LongType, Seq(c -> BinaryType), nullable = true)
 }

@@ -1,15 +1,12 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType}
 
-/** Deterministic baseline-JPEG ENCODER ([[SynthJpeg]]) — the lossy-format
-  * member of the synthetic-media family ([[SynthPng]]/`encodeBmp`), built
-  * so that lossy rows can participate in the EXACT-arithmetic
-  * `q_image_neardup` oracle:
+/** Deterministic baseline-JPEG ENCODER ([[JpegOps.synthJpeg]]) — the
+  * lossy-format member of the synthetic-media family
+  * ([[ImageOps.synthPng]]/`encodeBmp`), built so that lossy rows can
+  * participate in the EXACT-arithmetic `q_image_neardup` oracle:
   *
   * JPEG decode is normally approximate, but a grayscale baseline file
   * whose 8x8 blocks each hold ONE constant sample value is DC-only, and
@@ -245,32 +242,9 @@ object JpegOps {
     out.toByteArray
   }
 
-  def synthJpeg(seed: Column, variant: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(SynthJpeg(shims.expression(seed), shims.expression(variant)))
-  }
-}
-
-/** (seed long, variant int) -> baseline grayscale JPEG bytes of the
-  * seed-defined block raster. Codegen'd; never null. */
-case class SynthJpeg(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = BinaryType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.DataTypeMismatch(
-      errorSubClass = "UNEXPECTED_INPUT_TYPE",
-      messageParameters = Map("paramIndex" -> "1",
-        "requiredType" -> "(\"BIGINT\", \"INT\")",
-        "inputSql" -> s"${left.sql}, ${right.sql}",
-        "inputType" -> s"(${left.dataType.sql}, ${right.dataType.sql})"))
-  override def nullSafeEval(seed: Any, variant: Any): Any =
-    JpegOps.synthJpeg(seed.asInstanceOf[Long], variant.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode) =
-    defineCodeGen(ctx, ev,
-      (s, v) => s"graft.expressions.JpegOps.synthJpeg($s, $v)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-  override def prettyName: String = "synth_jpeg"
+  /** (seed long, variant int) -> baseline grayscale JPEG bytes of the
+    * seed-defined block raster; never null */
+  def synthJpeg(seed: Column, variant: Column): Column =
+    Kernel.call(this, "synthJpeg", BinaryType,
+      Seq(seed -> LongType, variant -> IntegerType), nullable = false)
 }

@@ -2,9 +2,8 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.BinaryType
 
 /** REAL pixel decode for Huffman-coded JPEG (ITU-T T.81) — the
   * dominant web image format, previously the declared lossy-codec stub.
@@ -15,7 +14,7 @@ import org.apache.spark.sql.types.DataType
   * dequantization, zigzag reorder, 2-D separable IDCT, integer-factor
   * chroma upsampling (box), and JFIF YCbCr->RGB. Emits the SAME
   * `(width, height, channels, pixels)` struct and raster layout as the
-  * lossless decoders, so `ImageOps.grayResize` / `DHash64` /
+  * lossless decoders, so `ImageOps.grayResize` / `ImageOps.dhash64` /
   * `Multimodal.featurizeImage` are format-blind across all four formats.
   *
   * Declared subset: baseline (SOF0), extended-sequential (SOF1) AND
@@ -42,7 +41,7 @@ import org.apache.spark.sql.types.DataType
   * the decode state machine is large enough that a residual
   * out-of-bounds path must degrade to null, not a task failure.
   *
-  * [[SynthJpeg]] is the deterministic ENCODER twin (seed -> grayscale
+  * [[JpegOps.synthJpeg]] is the deterministic ENCODER twin (seed -> grayscale
   * baseline JPEG, Annex K Huffman tables, flat quantization): each 8x8
   * block carries a constant sample value, so the file is DC-only and
   * decodes BIT-EXACTLY (a DC-only block under q=1 reconstructs
@@ -51,16 +50,6 @@ import org.apache.spark.sql.types.DataType
   * `q_image_neardup` oracle: bytes differ per variant (COM padding,
   * restart intervals), pixels are a pure function of the seed.
   */
-case class JpegPixels(child: Expression) extends MediaProbe {
-  override def dataType: DataType = PngPixels.pixType
-  protected val kernel = "graft.expressions.JpegPixels.pixels"
-  override def nullSafeEval(input: Any): Any =
-    JpegPixels.pixels(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "jpeg_pixels"
-}
-
 object JpegPixels {
   /** decoded-raster bomb cap, shared with the lossless family */
   val MaxRaster: Long = PngPixels.MaxRaster
@@ -772,8 +761,7 @@ object JpegPixels {
   }
   // scalastyle:on method.length cyclomatic.complexity
 
-  def jpegPixels(media: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(JpegPixels(shims.expression(media)))
-  }
+  def jpegPixels(media: Column): Column =
+    Kernel.call(this, "pixels", PngPixels.pixType, Seq(media -> BinaryType),
+      nullable = true)
 }

@@ -6,8 +6,6 @@ import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
@@ -89,29 +87,6 @@ import graft.model.Wcmp2Schema
   *    `rec` (from_json's malformed-input convention) and null channels
   *    (the gate is only read behind the engine's `parse_ok` guard).
   */
-case class JsonFacts(child: Expression) extends StringInputExpr {
-  override def dataType: DataType = JsonFacts.schema
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(input: Any): Any =
-    JsonFacts.facts(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${childGen.code}
-        InternalRow ${ev.value} = null;
-        if (!${childGen.isNull}) {
-          ${ev.value} = graft.expressions.JsonFacts.facts(${childGen.value});
-        }
-        boolean ${ev.isNull} = ${ev.value} == null;
-      """)
-  }
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "json_facts"
-}
-
 object JsonFacts {
 
   val schema: StructType = StructType(Seq(
@@ -1092,8 +1067,6 @@ object JsonFacts {
     new GenericInternalRow(a)
   }
 
-  def jsonFacts(c: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(JsonFacts(shims.expression(c)))
-  }
+  def jsonFacts(c: Column): Column =
+    Kernel.call(this, "facts", schema, Seq(c -> StringType), nullable = false)
 }

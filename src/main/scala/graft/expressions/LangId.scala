@@ -1,10 +1,8 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.{coalesce, lit}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native kernel for the stopword-profile language-ID heuristic.
@@ -97,21 +95,7 @@ object LangId {
   /** Column form; NULL text yields 'und', matching the declarative
     * chain's null propagation (`size(filter(null)) = null` hits ->
     * `when(null > 0, ...)` falls through to 'und'). */
-  def languageId(c: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    coalesce(shims.column(LangIdPred(shims.expression(c))), lit("und"))
-  }
-}
-
-/** Predicted language string — see [[LangId]]. */
-case class LangIdPred(child: Expression) extends StringInputExpr {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(input: Any): Any =
-    LangId.predict(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.LangId.predict($c)")
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "langid_pred"
+  def languageId(c: Column): Column =
+    coalesce(Kernel.call(this, "predict", StringType, Seq(c -> StringType),
+      nullable = false), lit("und"))
 }

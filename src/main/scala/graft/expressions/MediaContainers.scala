@@ -2,12 +2,10 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.types._
 
-/** Audio/video CONTAINER metadata probes — the same class of pure-JVM,
+/* Audio/video CONTAINER metadata probes — the same class of pure-JVM,
   * public-format header walks as [[JpegDims]], extending the multimodal
   * decode seam (`operators/Multimodal`) beyond images. Sample/pixel DATA
   * decode still needs real codec libraries (absent in this container) and
@@ -18,35 +16,6 @@ import org.apache.spark.sql.types._
   * whole-stage codegen; callers never re-evaluate the walk per field) or
   * null when the payload is not the format.
   */
-abstract class MediaProbe extends UnaryExpression {
-  /** Fully-qualified static kernel, `(byte[]) -> InternalRow` or null. */
-  protected def kernel: String
-
-  override def checkInputDataTypes() = {
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .DataTypeMismatch(errorSubClass = "UNEXPECTED_INPUT_TYPE",
-        messageParameters = Map("paramIndex" -> "1",
-          "requiredType" -> "\"BINARY\"",
-          "inputSql" -> child.sql, "inputType" -> child.dataType.sql))
-  }
-  override def nullable: Boolean = true
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${childGen.code}
-        InternalRow ${ev.value} = null;
-        if (!${childGen.isNull}) {
-          ${ev.value} = $kernel(${childGen.value});
-        }
-        boolean ${ev.isNull} = ${ev.value} == null;
-      """)
-  }
-}
 
 /** WAV (RIFF) metadata: chunk walk to `fmt ` and `data`
   * (format facts: RIFF is `"RIFF" <u32le size> "WAVE"` then 8-byte-header
@@ -56,16 +25,6 @@ abstract class MediaProbe extends UnaryExpression {
   * Struct: (format='wav', channels, sample_rate, bits_per_sample,
   * n_samples, duration_ms); n_samples/duration are null when the `data`
   * chunk is absent. */
-case class WavMeta(child: Expression) extends MediaProbe {
-  override def dataType: DataType = WavMeta.metaType
-  protected val kernel = "graft.expressions.WavMeta.meta"
-  override def nullSafeEval(input: Any): Any =
-    WavMeta.meta(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "wav_meta"
-}
-
 object WavMeta {
   val metaType: StructType = StructType(Seq(
     StructField("format", StringType, nullable = false),
@@ -127,10 +86,8 @@ object WavMeta {
         Integer.valueOf(bits), nSamples, durMs))
   }
 
-  def wavMeta(c: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(WavMeta(shims.expression(c)))
-  }
+  def wavMeta(c: Column): Column =
+    Kernel.call(this, "meta", metaType, Seq(c -> BinaryType), nullable = true)
 }
 
 /** MP4/ISO-BMFF metadata: top-level box walk to `moov`, then `mvhd`
@@ -141,16 +98,6 @@ object WavMeta {
   * Struct: (format='mp4', width, height, duration_ms, n_tracks); width/
   * height are null for audio-only containers. Null result when the
   * payload has no `ftyp` leader or no `moov`/`mvhd`. */
-case class Mp4Meta(child: Expression) extends MediaProbe {
-  override def dataType: DataType = Mp4Meta.metaType
-  protected val kernel = "graft.expressions.Mp4Meta.meta"
-  override def nullSafeEval(input: Any): Any =
-    Mp4Meta.meta(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "mp4_meta"
-}
-
 object Mp4Meta {
   val metaType: StructType = StructType(Seq(
     StructField("format", StringType, nullable = false),
@@ -247,8 +194,6 @@ object Mp4Meta {
       Array[Any](UTF8String.fromString("mp4"), w, h, durMs,
         Integer.valueOf(tracks)))
 
-  def mp4Meta(c: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(Mp4Meta(shims.expression(c)))
-  }
+  def mp4Meta(c: Column): Column =
+    Kernel.call(this, "meta", metaType, Seq(c -> BinaryType), nullable = true)
 }

@@ -1,13 +1,10 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Native MinHash signature over a materialized shingle array — the
   * codegen'd replacement for
@@ -20,27 +17,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * `xxhash64(i, s)` = xxhash64 folds its arguments left-to-right from
   * seed 42, so hash = XXH64(s_bytes, seed = XXH64(int i, 42)).
   */
-case class MinHashSig(child: Expression, k: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.DataTypeMismatch(
-      errorSubClass = "UNEXPECTED_INPUT_TYPE",
-      messageParameters = Map("paramIndex" -> "1",
-        "requiredType" -> "\"ARRAY<STRING>\"",
-        "inputSql" -> child.sql, "inputType" -> child.dataType.sql))
-  }
-  override def nullSafeEval(input: Any): Any =
-    MinHashSig.compute(input.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.expressions.MinHashSig.compute($c, $k)")
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "minhash_sig"
-}
-
 object MinHashSig {
   def compute(shingles: ArrayData, k: Int): ArrayData = {
     val n = shingles.numElements()
@@ -68,8 +44,8 @@ object MinHashSig {
     new GenericArrayData(out)
   }
 
-  def minhashSig(c: Column, k: Int): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(MinHashSig(shims.expression(c), k))
-  }
+  def minhashSig(c: Column, k: Int): Column =
+    Kernel.call(this, "compute", ArrayType(LongType, containsNull = true),
+      Seq(c -> ArrayType(StringType), lit(k) -> IntegerType),
+      nullable = false)
 }

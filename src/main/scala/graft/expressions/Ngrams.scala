@@ -3,10 +3,9 @@ package graft.expressions
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -106,59 +105,21 @@ object Ngrams {
     new GenericArrayData(arr)
   }
 
-  def shinglesCol(text: Column, n: Int): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(Shingles(shims.expression(text), n))
-  }
+  private def call(function: String, element: DataType, text: Column,
+                   n: Int): Column =
+    Kernel.call(this, function, ArrayType(element, containsNull = false),
+      Seq(text -> StringType, lit(n) -> IntegerType), nullable = false)
 
-  def shinglesAllCol(text: Column, n: Int): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(ShinglesAll(shims.expression(text), n))
-  }
+  /** `array<string>` of distinct word n-gram shingles */
+  def shinglesCol(text: Column, n: Int): Column =
+    call("computeStrings", StringType, text, n)
 
-  def ngramHashes(text: Column, n: Int): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(NgramHashes(shims.expression(text), n))
-  }
-}
+  /** `array<string>` of ALL word n-gram windows (duplicates kept) — see
+    * [[computeAllStrings]] */
+  def shinglesAllCol(text: Column, n: Int): Column =
+    call("computeAllStrings", StringType, text, n)
 
-/** `array<string>` of distinct word n-gram shingles — see [[Ngrams]]. */
-case class Shingles(child: Expression, n: Int) extends StringInputExpr {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(input: Any): Any =
-    Ngrams.computeStrings(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.Ngrams.computeStrings($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "shingles"
-}
-
-/** `array<string>` of ALL word n-gram windows (duplicates kept) — see
-  * [[Ngrams.computeAllStrings]]. */
-case class ShinglesAll(child: Expression, n: Int) extends StringInputExpr {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(input: Any): Any =
-    Ngrams.computeAllStrings(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.expressions.Ngrams.computeAllStrings($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "shingles_all"
-}
-
-/** `array<bigint>` of xxhash64'd distinct shingles — see [[Ngrams]]. */
-case class NgramHashes(child: Expression, n: Int) extends StringInputExpr {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(input: Any): Any =
-    Ngrams.computeHashes(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.Ngrams.computeHashes($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "ngram_hashes"
+  /** `array<bigint>` of xxhash64'd distinct shingles */
+  def ngramHashes(text: Column, n: Int): Column =
+    call("computeHashes", LongType, text, n)
 }

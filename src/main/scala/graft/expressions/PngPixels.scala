@@ -2,7 +2,6 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
@@ -46,16 +45,6 @@ import org.apache.spark.sql.types._
   *    output) return null, never throw — one corrupt blob must not abort
   *    a 100 TB scan.
   */
-case class PngPixels(child: Expression) extends MediaProbe {
-  override def dataType: DataType = PngPixels.pixType
-  protected val kernel = "graft.expressions.PngPixels.pixels"
-  override def nullSafeEval(input: Any): Any =
-    PngPixels.pixels(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "png_pixels"
-}
-
 object PngPixels {
   /** decompression-bomb cap on the decoded raster (bytes) */
   val MaxRaster: Long = 64L * 1024 * 1024
@@ -274,8 +263,7 @@ object PngPixels {
     new GenericInternalRow(Array[Any](width, height, outCh, out))
   }
 
-  def pngPixels(c: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(PngPixels(shims.expression(c)))
-  }
+  def pngPixels(c: Column): Column =
+    Kernel.call(this, "pixels", pixType, Seq(c -> BinaryType),
+      nullable = true)
 }

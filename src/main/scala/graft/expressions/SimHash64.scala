@@ -1,9 +1,8 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for 64-bit SimHash — the codegen'd
@@ -18,27 +17,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * = Spark's `xxhash64` (seed 42), bit b set iff the +1/-1 vote sum over
   * token-hash bit b is positive.
   */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes() = {
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .DataTypeMismatch(errorSubClass = "UNEXPECTED_INPUT_TYPE",
-        messageParameters = Map("paramIndex" -> "1",
-          "requiredType" -> "\"STRING\"",
-          "inputSql" -> child.sql, "inputType" -> child.dataType.sql))
-  }
-  override def nullSafeEval(input: Any): Any =
-    SimHash64.compute(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.expressions.SimHash64.compute($c)")
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "simhash64"
-}
-
 object SimHash64 {
   /** static kernel shared by interpreted eval and generated code */
   def compute(text: UTF8String): Long = {
@@ -78,8 +56,7 @@ object SimHash64 {
     out
   }
 
-  def simhash64(c: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(SimHash64(shims.expression(c)))
-  }
+  def simhash64(c: Column): Column =
+    Kernel.call(this, "compute", LongType, Seq(c -> StringType),
+      nullable = false)
 }

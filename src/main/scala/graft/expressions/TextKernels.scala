@@ -6,8 +6,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -20,8 +19,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * CPU. Each kernel is one static JVM call with precompiled patterns and
   * a prebuilt hash set; semantics are IDENTICAL to the declarative
   * formulations in [[graft.functions.Wcmp2Functions]] (kept as the
-  * documented reference implementation and the [[graft.catalog.RecordCols]]
-  * fallback), asserted token-for-token by FunctionsSpec parity tests.
+  * documented reference implementation), asserted token-for-token by
+  * OptimizationParitySpec.
   */
 object TextKernels {
 
@@ -234,23 +233,17 @@ object TextKernels {
 }
 
 /** `array<string>` of misspelled tokens — see [[TextKernels]]. */
-case class Misspelled(child: Expression) extends StringInputExpr {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(input: Any): Any =
-    TextKernels.misspelledTokens(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.expressions.TextKernels.misspelledTokens($c)")
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "misspelled_tokens"
+object Misspelled {
+  def misspelled(c: Column): Column =
+    Kernel.call(TextKernels, "misspelledTokens",
+      ArrayType(StringType, containsNull = false), Seq(c -> StringType),
+      nullable = false)
 }
 
 /** struct(words array<string>, stripped string, all_alnum, cap_ok,
   * n_acronyms, has_bulletin) — see [[TextKernels]]. */
-case class TitleWords(child: Expression) extends StringInputExpr {
-  override def dataType: DataType = StructType(Seq(
+object TitleWords {
+  val dataType: StructType = StructType(Seq(
     StructField("words", ArrayType(StringType, containsNull = false),
       nullable = false),
     StructField("stripped", StringType, nullable = false),
@@ -258,27 +251,8 @@ case class TitleWords(child: Expression) extends StringInputExpr {
     StructField("cap_ok", BooleanType, nullable = false),
     StructField("n_acronyms", IntegerType, nullable = false),
     StructField("has_bulletin", BooleanType, nullable = false)))
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(input: Any): Any =
-    TextKernels.titleWords(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.expressions.TextKernels.titleWords($c)")
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "title_words"
-}
 
-object Misspelled {
-  def misspelled(c: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(Misspelled(shims.expression(c)))
-  }
-}
-
-object TitleWords {
-  def titleWords(c: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(TitleWords(shims.expression(c)))
-  }
+  def titleWords(c: Column): Column =
+    Kernel.call(TextKernels, "titleWords", dataType, Seq(c -> StringType),
+      nullable = false)
 }

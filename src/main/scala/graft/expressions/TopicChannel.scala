@@ -2,10 +2,10 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native kernel for the level-wise WIS2 topic-channel walk
@@ -28,7 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * never null (OptimizationParitySpec asserts this). The kernel is
   * therefore non-nullable with null input -> false. */
 case class TopicChannelValid(child: Expression,
-    subTable: Option[Set[String]]) extends StringInputExpr {
+    subTable: Option[Set[String]])
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = false
 

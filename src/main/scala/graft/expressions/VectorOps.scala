@@ -1,29 +1,18 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expressions for the embedding-vector kernels — the
-  * codegen'd replacements for the `aggregate`/`zip_with` higher-order
+/** Native kernels for the embedding vectors — the codegen'd
+  * replacements for the `aggregate`/`zip_with` higher-order
   * formulations (HOFs are CodegenFallback: the interpreted tree walks
   * per element dominate the ANN/near-dup profiles). Bit-identical to the
   * HOF reference implementations, asserted in OperatorsSpec.
   */
 object VectorOps {
-
-  private[expressions] def requireDoubleArray(e: Expression, idx: Int): TypeCheckResult =
-    e.dataType match {
-      case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.DataTypeMismatch(
-        errorSubClass = "UNEXPECTED_INPUT_TYPE",
-        messageParameters = Map("paramIndex" -> idx.toString,
-          "requiredType" -> "\"ARRAY<DOUBLE>\"",
-          "inputSql" -> e.sql, "inputType" -> other.sql))
-    }
 
   /** Σ a(i)*b(i), summed left-to-right like the HOF fold
     * `aggregate(zip_with(a, b, _*_), 0.0, _+_)`; null when lengths differ
@@ -87,11 +76,10 @@ object VectorOps {
     * Returns exactly `min(nprobe, 2^planes)` distinct cells. Null/empty
     * /null-element vectors return the single cell 0L (the [[signSketch]]
     * convention). */
-  def multiProbeCells(vec: ArrayData, planes: Int, nprobe: Int): org.apache.spark.sql.catalyst.util.GenericArrayData = {
+  def multiProbeCells(vec: ArrayData, planes: Int, nprobe: Int): GenericArrayData = {
     val maxCells = if (planes >= 31) Int.MaxValue else (1 << planes)
     val want = math.min(nprobe, maxCells)
-    def single(cell: Long) =
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(Array(cell))
+    def single(cell: Long) = new GenericArrayData(Array(cell))
     if (vec == null) return single(0L)
     val n = vec.numElements()
     var i = 0
@@ -146,84 +134,31 @@ object VectorOps {
           mask | (1L << (maxJ + 1)), maxJ + 1))
       }
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+    new GenericArrayData(
       if (filled == want) out else java.util.Arrays.copyOf(out, filled))
   }
 
-  def dotProduct(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(DotProduct(shims.expression(a), shims.expression(b)))
-  }
+  private val Vec = ArrayType(DoubleType)
 
+  /** See [[dot]]. */
+  def dotProduct(a: Column, b: Column): Column =
+    Kernel.call(this, "dot", DoubleType, Seq(a -> Vec, b -> Vec),
+      nullable = true)
+
+  /** See [[signSketch]]. */
   def signSketchCol(vec: Column, planes: Int): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(SignSketch(shims.expression(vec), planes))
+    require(planes >= 1 && planes <= 64, "planes must be in [1, 64]")
+    Kernel.call(this, "signSketch", LongType,
+      Seq(vec -> Vec, lit(planes) -> IntegerType), nullable = false)
   }
 
+  /** See [[multiProbeCells]]. */
   def multiProbeCellsCol(vec: Column, planes: Int, nprobe: Int): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(MultiProbeCells(shims.expression(vec), planes, nprobe))
+    require(planes >= 1 && planes <= 62, "planes must be in [1, 62]")
+    require(nprobe >= 1, "nprobe must be >= 1")
+    Kernel.call(this, "multiProbeCells",
+      ArrayType(LongType, containsNull = false),
+      Seq(vec -> Vec, lit(planes) -> IntegerType, lit(nprobe) -> IntegerType),
+      nullable = false)
   }
-}
-
-/** See [[VectorOps.multiProbeCells]]. */
-case class MultiProbeCells(child: Expression, planes: Int, nprobe: Int)
-    extends UnaryExpression {
-  require(planes >= 1 && planes <= 62, "planes must be in [1, 62]")
-  require(nprobe >= 1, "nprobe must be >= 1")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    VectorOps.requireDoubleArray(child, 1)
-  override def nullSafeEval(input: Any): Any =
-    VectorOps.multiProbeCells(input.asInstanceOf[ArrayData], planes, nprobe)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.expressions.VectorOps.multiProbeCells($c, $planes, $nprobe)")
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "multi_probe_cells"
-}
-
-/** See [[VectorOps.dot]]. */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    VectorOps.requireDoubleArray(left, 1) match {
-      case TypeCheckResult.TypeCheckSuccess =>
-        VectorOps.requireDoubleArray(right, 2)
-      case f => f
-    }
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("dot")
-      s"""
-         |java.lang.Double $r = graft.expressions.VectorOps.dot($a, $b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r.doubleValue(); }
-       """.stripMargin
-    })
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-  override def prettyName: String = "vec_dot"
-}
-
-/** See [[VectorOps.signSketch]]. */
-case class SignSketch(child: Expression, planes: Int)
-    extends UnaryExpression {
-  require(planes >= 1 && planes <= 64, "planes must be in [1, 64]")
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    VectorOps.requireDoubleArray(child, 1)
-  override def nullSafeEval(input: Any): Any =
-    VectorOps.signSketch(input.asInstanceOf[ArrayData], planes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.expressions.VectorOps.signSketch($c, $planes)")
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "sign_sketch"
 }

@@ -570,7 +570,7 @@ object Dedup {
 
   /** HOF reference implementation of the random-hyperplane sign sketch
     * (parity-tested against the native codegen'd
-    * [[graft.expressions.SignSketch]]). */
+    * [[graft.expressions.VectorOps.signSketchCol]]). */
   def signSketchHof(v: Column, planes: Int): Column =
     aggregate(sequence(lit(0), lit(planes - 1)), lit(0L),
       (acc, p) => {

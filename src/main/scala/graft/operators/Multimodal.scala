@@ -93,7 +93,7 @@ object Multimodal {
     *    so the probe emits abs(height); a non-positive width is corrupt
     *    and falls through to null.
     *  - JPEG (FFD8): SOF segment walk via the codegen'd
-    *    [[graft.expressions.JpegDims]] expression (dimensions live in a
+    *    [[graft.expressions.JpegDims]] kernel (dimensions live in a
     *    variable-offset SOF0-SOF15 marker segment — not a fixed layout).
     *
     * Returns null for any other payload (audio/video codec formats stay
@@ -134,10 +134,10 @@ object Multimodal {
   /** REAL pixel decode for PNG (the one raster format whose only codec
     * dependency — zlib inflate — ships in the JDK): IDAT inflate + full
     * scanline filter reconstruction via the codegen'd
-    * [[graft.expressions.PngPixels]] expression. Returns
+    * [[graft.expressions.PngPixels]] kernel. Returns
     * `(width, height, channels, pixels)` with the raw defiltered raster
     * bytes, or null for non-PNG / unsupported PNG variants (see the
-    * expression's declared subset) / decompression bombs. With this, the
+    * kernel's declared subset) / decompression bombs. With this, the
     * remaining multimodal stub is LOSSY codecs only (JPEG pixels, audio
     * samples, video frames). */
   def decodePngPixels(media: Column): Column =
@@ -145,7 +145,7 @@ object Multimodal {
 
   /** REAL audio-container decode: WAV/RIFF chunk walk (channels, sample
     * rate, bit depth, sample count, duration) via the codegen'd
-    * [[graft.expressions.WavMeta]] expression. Null for non-WAV. */
+    * [[graft.expressions.WavMeta]] kernel. Null for non-WAV. */
   def decodeWav(media: Column): Column =
     graft.expressions.WavMeta.wavMeta(media)
 
@@ -153,7 +153,7 @@ object Multimodal {
     * -> `(n_frames, duration_ms, peak, rms, silence_ratio)` — the audio
     * QC signals a corpus pipeline filters on (dead air, clipping-adjacent
     * peaks, loudness strata) — via the codegen'd
-    * [[graft.expressions.AudioFeatures]] expression. Null for
+    * [[graft.expressions.AudioOps.audioFeatures]] kernel. Null for
     * non-PCM/undecodable payloads (compressed audio stays behind the
     * stub). */
   def audioFeatures(media: Column): Column =
@@ -161,7 +161,7 @@ object Multimodal {
 
   /** REAL video-container decode: MP4/ISO-BMFF box walk (track pixel
     * dimensions, movie duration, track count) via the codegen'd
-    * [[graft.expressions.Mp4Meta]] expression. Null for non-MP4. */
+    * [[graft.expressions.Mp4Meta]] kernel. Null for non-MP4. */
   def decodeMp4(media: Column): Column =
     graft.expressions.Mp4Meta.mp4Meta(media)
 

@@ -230,7 +230,7 @@ object TextAnalysis {
           coalesce(sum(when(col("cnt") > 1, length(col("line")) * col("cnt"))),
             lit(0L)).cast(DoubleType) /
           sum(length(col("line")) * col("cnt")), 6).as("dup_line_char_frac"))
-    // duplicates-kept native shingle kernel (ShinglesAll); the previous
+    // duplicates-kept native shingle kernel (Ngrams.shinglesAllCol); the previous
     // interpreted tokens->transform(sequence, concat_ws(slice)) chain is
     // the parity-pinned reference (OptimizationParitySpec)
     val grams = docs

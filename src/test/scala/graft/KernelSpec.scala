@@ -1,0 +1,146 @@
+package graft
+
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.US_ASCII
+
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
+import graft.expressions._
+import graft.sources.RecordTable
+
+/** Every static-kernel Column factory (built on [[graft.expressions.Kernel]])
+  * evaluated over the same typed rows, nulls included, in both of Spark's
+  * evaluation modes: inside whole-stage codegen with no interpreted
+  * fallback, and fully interpreted (`StaticInvoke.eval` calls the kernel
+  * by reflection). `StaticInvoke` finds its method only when it executes,
+  * so a misspelt function name or an argument class that matches no
+  * overload fails here and nowhere earlier. */
+class KernelSpec extends SparkSpec {
+
+  private def be32(v: Int) = ByteBuffer.allocate(4).putInt(v).array()
+  private def box(typ: String, payload: Array[Byte]) =
+    be32(8 + payload.length) ++ typ.getBytes(US_ASCII) ++ payload
+
+  // 4 x 3 RGB raster with few enough colors for the GIF encoder
+  private val raster =
+    Array.tabulate[Byte](4 * 3 * 3)(i => ((i % 5) * 50).toByte)
+  private val mp4 = box("ftyp", "isom".getBytes(US_ASCII) ++ be32(0)) ++
+    box("moov", box("mvhd", Array[Byte](0, 0, 0, 0) ++ be32(0) ++ be32(0) ++
+      be32(1000) ++ be32(5000) ++ Array.fill[Byte](80)(0)))
+
+  private val schema = StructType(Seq(
+    StructField("text", StringType), StructField("seed", LongType),
+    StructField("variant", IntegerType), StructField("media", BinaryType),
+    StructField("vec", ArrayType(DoubleType)),
+    StructField("vec2", ArrayType(DoubleType)),
+    StructField("sigs", ArrayType(LongType)),
+    StructField("shingles", ArrayType(StringType))))
+
+  private val rows = Seq(
+    Row(RecordTable.fixtureContent("wcmp2-passing.json"), 3L, 1,
+      ImageOps.synthPng(3L, 6), Seq(0.5, -1.0, 2.0), Seq(1.0, 1.0, 1.0),
+      Seq(1L, 3L, 7L, 255L), Seq("a b", "b c")),
+    Row("Surface wether observations 30 days SYNOP WMO AAXX01 ABCD",
+      85L, 4, BmpPixels.encodeBmp(raster, 4, 3), Seq(1.0, 2.0),
+      Seq(1.0, 2.0, 3.0), Seq(0L, 0L, 1L), Seq("x", null)),
+    Row("le la les de et un une du des est", 90L, 11,
+      GifPixels.encodeGif(raster, 4, 3), Seq(-3.0, 0.25, 0.0, 4.0),
+      Seq(2.0, 2.0, 2.0, 2.0), Seq(5L, 6L, 1024L), Seq("le la", "la les")),
+    Row("", 0L, 0, JpegOps.synthJpeg(90L, 2), Seq.empty[Double],
+      Seq.empty[Double], Seq.empty[Long], Seq.empty[String]),
+    Row("{not json", -7L, 7, AudioOps.synthWav(7L), Seq(1.0, null),
+      Seq(1.0, 2.0), Seq(42L), Seq("only")),
+    Row("café naïve résumé", Long.MaxValue, 3, AudioOps.synthWavAdpcm(9L),
+      Seq(0.1), Seq(0.2), Seq(1L, 2L), Seq("a")),
+    Row("x", 12L, 5, mp4, Seq(1.0), Seq(1.0), Seq(9L), Seq("b")),
+    Row("y", 13L, 6, Array[Byte](1, 2, 3), Seq(1.0), Seq(1.0), Seq(9L),
+      Seq("c")),
+    Row(null, null, null, null, null, null, null, null))
+
+  /** One aliased column per converted factory. */
+  private def kernels: Seq[(String, Column)] = {
+    val (text, seed, variant, media) =
+      (col("text"), col("seed"), col("variant"), col("media"))
+    Seq(
+      "json_facts" -> JsonFacts.jsonFacts(text),
+      "misspelled" -> Misspelled.misspelled(text),
+      "title_words" -> TitleWords.titleWords(text),
+      "language_id" -> LangId.languageId(text),
+      "shingles" -> Ngrams.shinglesCol(text, 2),
+      "shingles_all" -> Ngrams.shinglesAllCol(text, 2),
+      "ngram_hashes" -> Ngrams.ngramHashes(text, 2),
+      "minhash_sig" -> MinHashSig.minhashSig(col("shingles"), 4),
+      "simhash64" -> SimHash64.simhash64(text),
+      "hamming_pairs" -> HammingPairs.hammingPairs(col("sigs"), 8),
+      "multi_probe_cells" -> VectorOps.multiProbeCellsCol(col("vec"), 6, 4),
+      "dot" -> VectorOps.dotProduct(col("vec"), col("vec2")),
+      "sign_sketch" -> VectorOps.signSketchCol(col("vec"), 16),
+      "bpe_count" -> Bpe.bpeTokenCount(text),
+      "bpe_ids" -> Bpe.bpeTokenIds(text),
+      "synth_png" -> ImageOps.synthPng(seed, variant),
+      "synth_image" -> ImageOps.synthImage(seed, variant),
+      "synth_media" -> ImageOps.synthMedia(seed, variant),
+      "thumbnail" -> ImageOps.grayThumbnail(media, 3, 2),
+      "dhash" -> ImageOps.imageDHash(media),
+      "synth_jpeg" -> JpegOps.synthJpeg(seed, variant),
+      "jpeg_dims" -> JpegDims.jpegDims(media),
+      "png_pixels" -> PngPixels.pngPixels(media),
+      "bmp_pixels" -> BmpPixels.bmpPixels(media),
+      "gif_pixels" -> GifPixels.gifPixels(media),
+      "jpeg_pixels" -> JpegPixels.jpegPixels(media),
+      "wav_meta" -> WavMeta.wavMeta(media),
+      "mp4_meta" -> Mp4Meta.mp4Meta(media),
+      "audio_features" -> AudioOps.audioFeatures(media),
+      "synth_wav" -> AudioOps.synthWav(seed),
+      "synth_wav_codec" -> AudioOps.synthWavCodec(seed),
+      "synth_wav_adpcm" -> AudioOps.synthWavAdpcm(seed))
+  }
+
+  /** (schema, rows, ran inside whole-stage codegen) of the kernel columns
+    * under the given SQL confs, restored afterwards. */
+  private def evaluate(conf: (String, String)*)
+      : (StructType, Seq[Row], Boolean) = {
+    val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+        schema).select(kernels.map { case (n, c) => c.as(n) }: _*)
+      val codegen = df.queryExecution.executedPlan
+        .exists(_.isInstanceOf[WholeStageCodegenExec])
+      (df.schema, df.collect().toSeq, codegen)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("every kernel factory gives equal results, types and nullability " +
+       "under whole-stage codegen and interpreted evaluation") {
+    val (genSchema, genRows, genCodegen) = evaluate(
+      "spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    val (intSchema, intRows, intCodegen) = evaluate(
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    assert(genCodegen && !intCodegen)
+    assert(genSchema == intSchema)
+    assert(genSchema.fieldNames.toSeq == kernels.map(_._1))
+    assert(genRows.size == rows.size && intRows.size == rows.size)
+    genRows.zip(intRows).zipWithIndex.foreach { case ((g, i), n) =>
+      assert(g == i, s"row $n differs:\ncodegen     $g\ninterpreted $i")
+    }
+    // every kernel ran on a real input: each column is non-null somewhere
+    kernels.indices.foreach { k =>
+      assert(genRows.exists(!_.isNullAt(k)), kernels(k)._1)
+    }
+    // a null input never reaches a kernel; only languageId coalesces
+    val nulls = genRows.last
+    kernels.indices.foreach { k =>
+      if (kernels(k)._1 == "language_id") assert(nulls.getString(k) == "und")
+      else assert(nulls.isNullAt(k), kernels(k)._1)
+    }
+  }
+}

@@ -2,6 +2,7 @@ package graft
 
 import java.util.regex.Pattern
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.functions.{Wcmp2Functions => F}
 import graft.sources.RecordTable
@@ -373,5 +374,67 @@ class OptimizationParitySpec extends SparkSpec {
           s"shingles-all mismatch n=$n on '${texts(i)}'")
       }
     }
+  }
+
+  /** `rec` of the reference fixtures plus five edge records for the link
+    * pool and the preview list: null links/themes/contacts, contacts
+    * without links, non-http hrefs, null array elements, null rel, a null
+    * theme and a theme without concepts (both empty the theme part). */
+  private def linkRecs = {
+    val edges = Seq(
+      """{"id":"e0","links":null,
+        |"properties":{"themes":null,"contacts":null}}""",
+      """{"id":"e1","properties":{"contacts":[{"organization":"o"},null]}}""",
+      """{"id":"e2","links":[null,{"rel":null,"href":"http://a/null-rel"},
+        |{"rel":"preview","href":"ftp://a/img.png","type":"image/png"},
+        |{"rel":"preview","href":"https://a/img.png","type":"image/png"},
+        |{"rel":"preview"},{"rel":"PREVIEW","href":"http://a/upper"},
+        |{"rel":"data","href":"mailto:x@y","type":"text/plain"}],
+        |"properties":{"themes":[{"concepts":[{"id":"c","url":"https://c"},
+        |{"id":"d"},null,{"id":"e","url":"urn:x"}],"scheme":"ftp://s"},
+        |{"concepts":[],"scheme":"https://s2"}],
+        |"contacts":[{"links":[null,{"href":"https://c1","rel":"about"},
+        |{"href":"file:///x"},{"rel":"about"}]}]}}""",
+      """{"id":"e3","links":[],"properties":{"themes":[null,
+        |{"concepts":[{"id":"c","url":"https://p"}],"scheme":"https://s"}]}}""",
+      """{"id":"e4","properties":{"themes":[{"scheme":"https://s"}]}}""")
+      .map(_.stripMargin.replace("\n", ""))
+    RecordTable.fixtures(spark).select("content")
+      .union(edges.toDF("content"))
+      .select(graft.expressions.JsonFacts.jsonFacts(col("content"))
+        .getField("rec").as("rec"))
+  }
+
+  test("link-pool kernel: parity with the declarative KpiRules.httpLinkPool") {
+    val out = linkRecs.select(col("rec.id"),
+      graft.expressions.LinkPoolExpr.linkPool(col("rec.links"),
+        col("rec.properties.themes"), col("rec.properties.contacts")),
+      graft.catalog.KpiRules.httpLinkPool(col("rec"))).collect()
+    assert(out.length == RecordTable.fixtureNames.size + 5)
+    out.foreach { r =>
+      assert(r.getSeq[Row](1) == r.getSeq[Row](2), s"id ${r.getString(0)}")
+    }
+    val hrefs = out.map(r => r.getString(0) ->
+      r.getSeq[Row](1).map(_.getString(0))).toMap
+    assert(hrefs("e2") == Seq("http://a/null-rel", "https://a/img.png",
+      "http://a/upper", "https://c", "https://s2", "https://c1"))
+    Seq("e0", "e1", "e3", "e4").foreach(id => assert(hrefs(id).isEmpty, id))
+    assert(out.count(_.getSeq[Row](1).nonEmpty) >= 9)
+  }
+
+  test("previews kernel: parity with filter(links, rel = 'preview')") {
+    val out = linkRecs.select(col("rec.id"),
+      graft.expressions.Previews.previews(col("rec.links")),
+      filter(col("rec.links"), l => l.getField("rel") === "preview"))
+      .collect()
+    assert(out.length == RecordTable.fixtureNames.size + 5)
+    out.foreach { r =>
+      val (kernel, decl) = (r.getSeq[Row](1), r.getSeq[Row](2))
+      assert(kernel == decl, s"id ${r.getString(0)}")
+    }
+    val byId = out.map(r => r.getString(0) -> r).toMap
+    assert(byId("e0").isNullAt(1) && byId("e0").isNullAt(2))
+    assert(byId("e2").getSeq[Row](1).map(_.getAs[String]("href")) ==
+      Seq("ftp://a/img.png", "https://a/img.png", null))
   }
 }

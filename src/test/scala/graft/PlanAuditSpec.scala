@@ -1,9 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.ExplainMode
 import graft.engine.Validator
+import graft.expressions.JsonFacts
 import graft.operators.Dedup
 import graft.sources.RecordTable
 
@@ -11,7 +13,7 @@ import graft.sources.RecordTable
   * 100 TB-credible, asserted on the PLANS (no execution) so a regression
   * is a red test, not a slow cluster:
   *
-  *  - single-parse: exactly one JsonFacts kernel, zero JsonToStructs on
+  *  - single-parse: exactly one `JsonFacts.facts` call, zero JsonToStructs on
   *    every validator output path (the round-1 33x-reparse regression,
   *    mechanically guarded; `graft.Probe validator` prints the same
   *    plan's expression-tree sizes);
@@ -38,7 +40,10 @@ class PlanAuditSpec extends SparkSpec {
     var facts = 0; var js = 0
     df.queryExecution.optimizedPlan.foreach { node =>
       node.expressions.foreach { e =>
-        facts += e.collect { case f: graft.expressions.JsonFacts => f }.size
+        facts += e.collect {
+          case f: StaticInvoke if f.staticObject == JsonFacts.getClass &&
+              f.functionName == "facts" => f
+        }.size
         js += e.collect {
           case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs => j
         }.size
@@ -127,8 +132,8 @@ class PlanAuditSpec extends SparkSpec {
     // row each, r6) — the pre-r6 shape needed two Generate barriers to
     // keep the interpreted HOF chain single-evaluation; the kernels make
     // the barrier question moot (each output is referenced once)
-    assert(p.contains("shingles("), p)
-    assert(p.contains("minhash_sig("), p)
+    assert(p.contains("Ngrams.computeStrings("), p)
+    assert(p.contains("MinHashSig.compute("), p)
   }
 
   test("decontamination joins the corpus against a BROADCAST benchmark " +

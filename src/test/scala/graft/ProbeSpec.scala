@@ -37,6 +37,14 @@ class ProbeSpec extends SparkSpec {
       assert(lines(out, s"[suite] $q").exists(_.split("\\s+")(2) == what),
         s"no $q $what line in:\n$out")
     assert(lines(out, "[stage] ").nonEmpty)
+    // queries that read no one-off dump request none; a dump reader
+    // requests only its own (asserted on the requests, not on files:
+    // another test may have written the dumps already)
+    assert(lines(out, "[dump]").isEmpty, out)
+    val (embOut, embErr) = probe("suite", "q_embedding_neardup")()
+    assert(!embErr.contains("FAILED"), embErr)
+    assert(lines(embOut, "[dump]") ==
+      Seq("[dump] emb_sigs for q_embedding_neardup"), embOut)
   }
 
   test("plans: one formatted plan file per query") {
@@ -106,7 +114,7 @@ class ProbeSpec extends SparkSpec {
        "on stderr and returns normally") {
     val missing = Files.createTempDirectory("probe-missing")
       .resolve("sf").toString
-    val (out, err) = probe("suite", queries)(missing)
+    val (out, err) = probe("suite", s"$queries,q_image_neardup")(missing)
     assert(lines(out, "[suite]").isEmpty)
     assert(err.contains("[probe] dump image_media FAILED"), err)
     for (q <- queries.split(','); what <- Seq("cold", "warm", "noop"))
