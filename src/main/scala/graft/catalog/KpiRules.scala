@@ -76,9 +76,9 @@ object MapLinkProbe {
 /** One KPI compiled to Catalyst expressions: unlike ETS there is no early
   * return — every sub-check always evaluates and contributes a point and/or
   * a comment (`/root/reference/pywcmp/wcmp2/kpi.py:82-490`). */
-case class KpiRule(name: String, kpiId: String, title: Column,
+case class KpiRule(name: String, title: Column,
                    total: Column, score: Column, comments: Column) {
-  def id: Column = lit(s"http://wis.wmo.int/spec/wcmp/2/kpi/core/$kpiId")
+  def id: Column = lit(KpiRules.idOf(name))
   /** per-test percentage: banker's rounding like Python `round`
     * (`kpi.py:535-538`, ROUND=3); null when total == 0. */
   def percentage: Column =
@@ -99,6 +99,22 @@ case class KpiRule(name: String, kpiId: String, title: Column,
   * record-title-overwrites-KPI-title quirk.
   */
 object KpiRules {
+
+  /** Each KPI's name (the reference's `kpi_*` method suffix,
+    * `kpi.py:502-517`) and the last segment of its test id, in the
+    * reference's execution order. */
+  val Ids: Seq[(String, String)] = Seq(
+    "contacts" -> "contacts",
+    "description" -> "good_quality_description",
+    "graphic_overview" -> "graphic_overview_for_metadata_records",
+    "links_health" -> "links_health",
+    "pids" -> "persistent_identifiers",
+    "time_intervals" -> "time_intervals",
+    "title" -> "good_quality_title")
+
+  /** the test id of the KPI named `name` */
+  def idOf(name: String): String =
+    "http://wis.wmo.int/spec/wcmp/2/kpi/core/" + Ids.toMap.apply(name)
 
   private def prop(r: RecordCols, field: String): Column =
     r.rec.getField("properties").getField(field)
@@ -144,8 +160,8 @@ object KpiRules {
                misspelled.cast(StringType)))))
     // quirk: the emitted `title` field is the RECORD's title — the local
     // variable is overwritten at kpi.py:100 before the return.
-    KpiRule("title", "good_quality_title", t,
-      lit(8), p1 + p2 + p3 + p4 + p5 + p6 + p7 + p8, comments)
+    KpiRule("title", t, lit(8), p1 + p2 + p3 + p4 + p5 + p6 + p7 + p8,
+      comments)
   }
 
   /** kpi_description — Good quality description, total 4
@@ -169,7 +185,7 @@ object KpiRules {
       commentIf(size(misspelled) > 0,
         concat(lit("Description contains spelling errors "),
                misspelled.cast(StringType)))))
-    KpiRule("description", "good_quality_description",
+    KpiRule("description",
       lit(": Good quality description"), lit(4), score, comments)
   }
 
@@ -210,8 +226,7 @@ object KpiRules {
           commentIf(ti.getField("resolution").isNull,
             lit("No temporal resolution found")))
       }))))
-    KpiRule("time_intervals", "time_intervals", lit("Time intervals"),
-      total, score, comments)
+    KpiRule("time_intervals", lit("Time intervals"), total, score, comments)
   }
 
   /** kpi_graphic_overview — total 3 per `rel == 'preview'` link
@@ -232,7 +247,7 @@ object KpiRules {
         coalesce(l.getField("type"), lit("")), lit(" not a web image"))),
       commentIf(!probe.accessible(l.getField("href")),
         concat(lit("URL not accessible: "), l.getField("href")))))))
-    KpiRule("graphic_overview", "graphic_overview_for_metadata_records",
+    KpiRule("graphic_overview",
       lit("Graphic overview for metadata records"), total, score, comments)
   }
 
@@ -286,8 +301,7 @@ object KpiRules {
       commentIf(!typeOk(p), concat(lit("invalid link type "),
         coalesce(probe.mime(p.getField("href"), p.getField("type")),
                  lit("None"))))))))
-    KpiRule("links_health", "links_health", lit("Links health"),
-      total, score, comments)
+    KpiRule("links_health", lit("Links health"), total, score, comments)
   }
 
   /** kpi_contacts — total 3 (`kpi.py:407-451`). Reference bug reproduced:
@@ -312,7 +326,7 @@ object KpiRules {
                 lit("No host contact instructions found")),
       commentIf(hostFound && !emailFound,
                 lit("No host contact email found"))))
-    KpiRule("contacts", "contacts", lit("Contacts"), lit(3), score, comments)
+    KpiRule("contacts", lit("Contacts"), lit(3), score, comments)
   }
 
   /** kpi_pids — Persistent identifiers (`kpi.py:453-490`). `externalIds`
@@ -330,8 +344,7 @@ object KpiRules {
       point(citeAs)
     val comments = array_compact(array(
       commentIf(present && !schemeOk, lit("No DOI/ARK/HDL schema found"))))
-    KpiRule("pids", "persistent_identifiers", lit("Persistent identifiers"),
-      total, score, comments)
+    KpiRule("pids", lit("Persistent identifiers"), total, score, comments)
   }
 
   /** All 7 KPIs in the reference's alphabetical execution order

@@ -35,8 +35,7 @@ object Main {
     val opts = args.filterNot(flagNames).grouped(2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
-    val runDt = opts.getOrElse("run-datetime",
-      java.time.Instant.now().toString)
+    val runDt = opts.getOrElse("run-datetime", Reports.stampNow())
     val failOnEts = !flags.contains("--no-fail-on-ets")
 
     // `pywcmp bundle sync` analog (no Spark session needed):

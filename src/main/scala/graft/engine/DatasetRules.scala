@@ -205,13 +205,6 @@ object DatasetRules {
       .distinct().as[String]
   }
 
-  /** One-call production probe path: pool URLs -> partitioned HEAD probe
-    * -> `(href, accessible, mime)` dimension. */
-  def buildProbeTable(records: DataFrame,
-      prober: graft.sources.UrlSource.UrlProber =
-        graft.sources.UrlSource.JavaNetProber()): DataFrame =
-    graft.sources.UrlSource.probeTable(recordLinkUrls(records), prober)
-
   /** K4/K5 at scale with a REAL probe table: explode all links once, join
     * the probe dimension on href (broadcast when small, SMJ otherwise),
     * aggregate health per record. This is the production path that

@@ -19,6 +19,18 @@ object Reports {
   val GeneratedBy =
     "graft-wcmp2spark 0.1.0 (Spark-native WCMP2 validation engine)"
 
+  private val stampFormat = java.time.format.DateTimeFormatter
+    .ofPattern("uuuu-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
+    .withZone(java.time.ZoneOffset.UTC)
+
+  /** `t` as an ISO-8601 UTC stamp with exactly 6 fractional digits, so
+    * every report stamp has the same width (`Instant.toString` drops
+    * trailing zero groups). */
+  def stamp(t: java.time.Instant): String = stampFormat.format(t)
+
+  /** the wall-clock run datetime of a report emitted now */
+  def stampNow(): String = stamp(java.time.Instant.now())
+
   private def reportId(suite: String): Column =
     // deterministic uuid-shaped id from the record identity + suite
     concat(
@@ -85,17 +97,7 @@ object Reports {
 
   /** KPI names accepted by [[selectKpi]] — the reference's `kpi_*` method
     * suffixes (`/root/reference/pywcmp/wcmp2/kpi.py:502-517`). */
-  val KpiNames: Seq[String] = Seq("contacts", "description",
-    "graphic_overview", "links_health", "pids", "time_intervals", "title")
-
-  private val kpiIdSuffix: Map[String, String] = Map(
-    "contacts" -> "contacts",
-    "description" -> "good_quality_description",
-    "graphic_overview" -> "graphic_overview_for_metadata_records",
-    "links_health" -> "links_health",
-    "pids" -> "persistent_identifiers",
-    "time_intervals" -> "time_intervals",
-    "title" -> "good_quality_title")
+  val KpiNames: Seq[String] = graft.catalog.KpiRules.Ids.map(_._1)
 
   /** KPI single-selection (the `--kpi` flag, `kpi.py:510-517`): keep only
     * the named KPI in `kpi_tests` and recompute `kpi_summary` over that
@@ -106,9 +108,8 @@ object Reports {
       throw new IllegalArgumentException(
         s"Invalid KPI number: kpi_$kpi is not in " +
           KpiNames.map("kpi_" + _).mkString("[", ", ", "]"))
-    val targetId =
-      s"http://wis.wmo.int/spec/wcmp/2/kpi/core/${kpiIdSuffix(kpi)}"
     import graft.catalog.KpiRules
+    val targetId = KpiRules.idOf(kpi)
     validated
       .withColumn("kpi_tests",
         filter(col("kpi_tests"), t => t.getField("id") === targetId))

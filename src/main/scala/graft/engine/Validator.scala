@@ -48,8 +48,9 @@ object Validator {
     val parsedStruct =
       graft.expressions.JsonFacts.jsonFacts(col("content"))
     // second barrier: per-row kernels that multiple rule expressions
-    // reference (spellcheck x3 refs each, the K5 link pool x3, K1 title
-    // words/stripped x4/x4, K4 previews x3) — materialized ONCE each.
+    // reference (spellcheck x3 refs each, the K5 link pool x3, the K1
+    // title facts words/all_alnum/cap_ok/n_acronyms x2 each, K4 previews
+    // x3) — materialized ONCE each, and only the fields a rule reads.
     val titleCol = col("_p.rec.properties.title")
     val kernels = struct(
       // native kernels (one JVM call each; the declarative formulations

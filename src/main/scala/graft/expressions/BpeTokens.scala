@@ -150,8 +150,6 @@ final class BpeCodec(merges: Seq[(String, String)]) {
     mergeTo.put((ai.longValue() << 32) | bi.longValue(), id)
   }
 
-  def vocabSize: Int = symbolStrings.length
-
   /** pretoken string -> token ids, memoized (corpora repeat pretokens
     * heavily; the cache is bounded — beyond the cap entries are computed
     * but not inserted, results are identical either way). */

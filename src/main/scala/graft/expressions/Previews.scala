@@ -3,48 +3,27 @@ package graft.expressions
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.ArrayType
 import org.apache.spark.unsafe.types.UTF8String
+import graft.model.Wcmp2Schema
 
 /** `filter(links, _.rel === "preview")` as one native walk — the K4
   * graphic-overview preview list, previously an interpreted ArrayFilter
   * inside the Generate barrier. Null elements drop out (their `rel` is
   * null, so the declarative predicate is null). Output element type ==
-  * input element type. */
-case class Previews(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = child.dataType match {
-    case ArrayType(et, _) => ArrayType(et, containsNull = false)
-    case dt => dt
-  }
-  override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(st: StructType, _) if st.fieldNames.contains("rel") =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case _ => org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .DataTypeMismatch(errorSubClass = "UNEXPECTED_INPUT_TYPE",
-        messageParameters = Map("paramIndex" -> "1",
-          "requiredType" -> "\"ARRAY<STRUCT<...rel...>>\"",
-          "inputSql" -> child.sql, "inputType" -> child.dataType.sql))
-  }
-  private lazy val st =
-    child.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
-  private lazy val relIdx = st.fieldIndex("rel")
-  private lazy val arity = st.size
+  * input element type, [[graft.model.Wcmp2Schema.link]]. */
+object Previews {
+  private val PREVIEW = UTF8String.fromString("preview")
+  private val rel = Wcmp2Schema.link.fieldIndex("rel")
 
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(input: Any): Any = keep(input.asInstanceOf[ArrayData])
-
-  /** shared by interpreted eval and generated code */
   def keep(links: ArrayData): ArrayData = {
     val out = new ArrayBuffer[Any](2)
     var i = 0
     while (i < links.numElements()) {
       if (!links.isNullAt(i)) {
-        val l = links.getStruct(i, arity)
-        if (!l.isNullAt(relIdx) &&
-            l.getUTF8String(relIdx) == Previews.PREVIEW)
+        val l = links.getStruct(i, Wcmp2Schema.link.size)
+        if (!l.isNullAt(rel) && l.getUTF8String(rel) == PREVIEW)
           out += l.copy()
       }
       i += 1
@@ -52,20 +31,8 @@ case class Previews(child: Expression) extends UnaryExpression {
     new GenericArrayData(out.toArray)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val refTerm = ctx.addReferenceObj("previewsExpr", this,
-      classOf[Previews].getName)
-    defineCodeGen(ctx, ev, c => s"$refTerm.keep($c)")
-  }
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "preview_links"
-}
-
-object Previews {
-  private[expressions] val PREVIEW = UTF8String.fromString("preview")
-  def previews(c: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(Previews(shims.expression(c)))
-  }
+  /** null links give null */
+  def previews(c: Column): Column =
+    Kernel.call(this, "keep", ArrayType(Wcmp2Schema.link, containsNull = false),
+      Seq(c -> ArrayType(Wcmp2Schema.link)), nullable = false)
 }

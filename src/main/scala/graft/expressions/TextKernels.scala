@@ -145,7 +145,7 @@ object TextKernels {
     c == ' ' || (c >= '\t' && c <= '\r') // \t \n \x0B \f \r
 
   /** `^\s+` / `\s+$` strip without regex (same \s class). */
-  private def pyStrip(s: String): String = {
+  private[graft] def pyStrip(s: String): String = {
     var a = 0; var b = s.length
     while (a < b && isWsCh(s.charAt(a))) a += 1
     while (b > a && isWsCh(s.charAt(b - 1))) b -= 1
@@ -187,16 +187,16 @@ object TextKernels {
 
   private val bulletinRe = Pattern.compile("[A-Z]{4}\\d{2}[\\s_]*[A-Z]{4}")
 
-  /** struct(words, stripped, all_alnum, cap_ok, n_acronyms, has_bulletin)
-    * for the K1 title checks: `title.split()` (Python no-arg split:
-    * strip, split on whitespace runs, no empties), the acronym-stripped
-    * title (`pyStrip(regexp_replace(title, acronymRe, ""))`), and the
-    * four scalar title facts the KPI rule previously recomputed with
-    * per-word interpreted regexes (forall+rlike) and duplicated
-    * regexp_extract_all/rlike trees — one kernel call materializes all
-    * of them (r6: per-word regex in the forall lambda and the duplicate
-    * acronym scans showed in the hot-path samples; the tree shrink also
-    * cuts per-query planning). The ws-run splitter is a char scan;
+  /** struct(words, all_alnum, cap_ok, n_acronyms, has_bulletin) for the
+    * K1 title checks: `title.split()` (Python no-arg split: strip, split
+    * on whitespace runs, no empties) and the four scalar title facts
+    * (`cap_ok` over the acronym-stripped title,
+    * `pyStrip(regexp_replace(title, acronymRe, ""))`) the KPI rule
+    * previously recomputed with per-word interpreted regexes
+    * (forall+rlike) and duplicated regexp_extract_all/rlike trees —
+    * one kernel call materializes all of them (r6: per-word regex in the
+    * forall lambda and the duplicate acronym scans showed in the
+    * hot-path samples; the tree shrink also cuts per-query planning). The ws-run splitter is a char scan;
     * \s-class and per-fact parity with the declarative reference impls
     * are pinned in FunctionsSpec/OptimizationParitySpec. */
   def titleWords(title: UTF8String): InternalRow = {
@@ -216,18 +216,17 @@ object TextKernels {
         words += UTF8String.fromString(w)
       }
     }
-    val strippedAcr = pyStrip(acronymRe.matcher(s).replaceAll(""))
+    val strippedAcr =
+      UTF8String.fromString(pyStrip(acronymRe.matcher(s).replaceAll("")))
     var nAcronyms = 0
     val am = acronymRe.matcher(s)
     while (am.find()) nAcronyms += 1
-    val a = new Array[Any](6)
+    val a = new Array[Any](5)
     a(0) = new GenericArrayData(words.toArray)
-    a(1) = UTF8String.fromString(strippedAcr)
-    a(2) = java.lang.Boolean.valueOf(allAlnum)
-    a(3) = java.lang.Boolean.valueOf(
-      isCapitalized(UTF8String.fromString(strippedAcr)))
-    a(4) = java.lang.Integer.valueOf(nAcronyms)
-    a(5) = java.lang.Boolean.valueOf(bulletinRe.matcher(s).find())
+    a(1) = java.lang.Boolean.valueOf(allAlnum)
+    a(2) = java.lang.Boolean.valueOf(isCapitalized(strippedAcr))
+    a(3) = java.lang.Integer.valueOf(nAcronyms)
+    a(4) = java.lang.Boolean.valueOf(bulletinRe.matcher(s).find())
     new GenericInternalRow(a)
   }
 }
@@ -240,13 +239,12 @@ object Misspelled {
       nullable = false)
 }
 
-/** struct(words array<string>, stripped string, all_alnum, cap_ok,
-  * n_acronyms, has_bulletin) — see [[TextKernels]]. */
+/** struct(words array<string>, all_alnum, cap_ok, n_acronyms,
+  * has_bulletin) — see [[TextKernels]]. */
 object TitleWords {
   val dataType: StructType = StructType(Seq(
     StructField("words", ArrayType(StringType, containsNull = false),
       nullable = false),
-    StructField("stripped", StringType, nullable = false),
     StructField("all_alnum", BooleanType, nullable = false),
     StructField("cap_ok", BooleanType, nullable = false),
     StructField("n_acronyms", IntegerType, nullable = false),

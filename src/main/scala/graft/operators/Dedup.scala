@@ -86,25 +86,6 @@ object Dedup {
   def shingles(text: Column, n: Int = 3): Column =
     shinglesFromTokens(tokens(text), n)
 
-  /** Local-parallelism guard for the expensive narrow signature stages: a
-    * small parquet input (one file, one row group) arrives as a single
-    * scan split, serializing per-row signature work onto one core. When
-    * the scan has fewer splits than the session's parallelism, repartition
-    * first — at real scale (splits >= cores) this is a no-op, so the
-    * shuffle is only ever paid on inputs small enough not to care. */
-  private def parallelize(df: DataFrame): DataFrame = {
-    // a streaming frame can't be probed (no executable physical RDD);
-    // micro-batch parallelism is the source's concern, not this guard's
-    if (df.isStreaming) return df
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    // split count read off the internal physical RDD: `df.rdd` would
-    // additionally plan a row-deserializing conversion DAG per call just
-    // to read a partition count
-    if (df.queryExecution.toRdd.getNumPartitions < target)
-      df.repartition(target)
-    else df
-  }
-
   /** Exact dedup via hash-groupBy: one shuffle on the 256-bit content
     * hash; keeps the smallest id per duplicate group and a BOUNDED member
     * sample (first `memberCap` ids). An unbounded `collect_list` would
@@ -137,11 +118,6 @@ object Dedup {
   def minhashSignatureFromShingles(sh: Column, k: Int = 64): Column =
     transform(sequence(lit(0), lit(k - 1)),
       i => array_min(transform(sh, s => xxhash64(i, s))))
-
-  /** Convenience text->signature form (tests); production paths hoist the
-    * shingle array first — see [[minhashLsh]]. */
-  def minhashSignature(text: Column, k: Int = 64, shingleN: Int = 3): Column =
-    minhashSignatureFromShingles(shingles(text, shingleN), k)
 
   /** All unordered in-bucket pairs from a collected (sorted) members
     * array: for each element x at 0-based index i, pair it with every
@@ -210,9 +186,8 @@ object Dedup {
     // output is referenced exactly once, so CollapseProject inlining is
     // harmless); the declarative tokens->shinglesFromTokens chain stays
     // as the parity-pinned reference implementation
-    parallelize(df.select(col(idCol).as("id"), col(textCol).as("text")))
-      .select(col("id"),
-        graft.expressions.Ngrams.shinglesCol(col("text"), shingleN).as("sh"))
+    df.select(col(idCol).as("id"),
+        graft.expressions.Ngrams.shinglesCol(col(textCol), shingleN).as("sh"))
       // native codegen'd signature (bit-identical to
       // minhashSignatureFromShingles, the HOF reference impl)
       .select(col("id"),
@@ -464,9 +439,8 @@ object Dedup {
                    idCol: String = "doc_id",
                    maxHamming: Int = 3, maxBucket: Int = 200): DataFrame =
     hammingDedup(
-      parallelize(df.select(col(idCol).as("id"), col(textCol).as("text")))
-        .select(col("id"),
-          graft.expressions.SimHash64.simhash64(col("text")).as("sig")),
+      df.select(col(idCol).as("id"),
+        graft.expressions.SimHash64.simhash64(col(textCol)).as("sig")),
       maxHamming, maxBucket)
 
   /** Image near-dup over REAL decoded pixels: 64-bit difference hash
@@ -486,9 +460,8 @@ object Dedup {
                  idCol: String = "doc_id",
                  maxHamming: Int = 0, maxBucket: Int = 200): DataFrame =
     hammingDedup(
-      parallelize(df.select(col(idCol).as("id"), col(mediaCol).as("m")))
-        .select(col("id"),
-          graft.expressions.ImageOps.imageDHash(col("m")).as("sig"))
+      df.select(col(idCol).as("id"),
+        graft.expressions.ImageOps.imageDHash(col(mediaCol)).as("sig"))
         .where(col("sig").isNotNull),
       maxHamming, maxBucket)
 
@@ -513,8 +486,7 @@ object Dedup {
                          idCol: String = "doc_id",
                          maxHamming: Int = 3, maxBucket: Int = 200): DataFrame =
     bucketStatsOf(hammingChunkRows(
-      parallelize(df.select(col(textCol).as("text")))
-        .select(graft.expressions.SimHash64.simhash64(col("text")).as("sig"))
+      df.select(graft.expressions.SimHash64.simhash64(col(textCol)).as("sig"))
         .distinct() // buckets hold DISTINCT sigs, like the pairing
         .select(col("sig").as("id"), col("sig")),
       hammingChunks(maxHamming)),
@@ -589,8 +561,8 @@ object Dedup {
   private[graft] def embeddingSigRows(df: DataFrame, vecCol: String,
                                idCol: String, planes: Int): DataFrame = {
     import graft.expressions.VectorOps
-    parallelize(df.select(col(idCol).as("id"),
-        col(vecCol).cast(ArrayType(DoubleType)).as("vec")))
+    df.select(col(idCol).as("id"),
+        col(vecCol).cast(ArrayType(DoubleType)).as("vec"))
       .withColumn("norm", sqrt(VectorOps.dotProduct(col("vec"), col("vec"))))
       .withColumn("bucket", VectorOps.signSketchCol(col("vec"), planes))
   }

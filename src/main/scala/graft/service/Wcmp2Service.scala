@@ -8,7 +8,7 @@ import java.util.concurrent.Executors
 
 import org.apache.spark.sql.SparkSession
 
-import graft.engine.CompiledCatalog
+import graft.engine.{CompiledCatalog, Reports}
 
 /** HTTP service surface — the analog of the reference's pygeoapi process
   * plugin (`/root/reference/pywcmp/pygeoapi_plugin.py:193-261`), which
@@ -195,7 +195,7 @@ object Wcmp2Service {
       case ("POST", execRe(id)) =>
         val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
         val dt = if (runDatetime.nonEmpty) runDatetime
-                 else java.time.Instant.now().toString
+                 else Reports.stampNow()
         execute(catalog, id, body, dt)
       case ("POST", _) => error(404, "NotFound", s"No such endpoint: $path")
       case (_, _) =>

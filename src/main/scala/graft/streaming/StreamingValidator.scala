@@ -2,9 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.Row
 import graft.engine.Validator
 
 /** Structured-Streaming face of the engine.
@@ -16,7 +15,7 @@ import graft.engine.Validator
   * [[Validator.validate]] is a pure narrow projection, the IDENTICAL plan
   * runs under `readStream` with zero code change — this object adds the
   * streaming-specific pieces: event-time windowed verdicts behind a
-  * watermark, and an alerting sink shape.
+  * watermark, and failure-streak alerts.
   *
   * Scale design: the row-local catalog keeps streaming micro-batches
   * shuffle-free; the only stateful operator is the windowed verdict
@@ -96,15 +95,4 @@ object StreamingValidator {
           alerts.iterator
       }.toDF()
   }
-
-  /** Alert sink: violations to parquet with checkpointing (at-least-once
-    * with idempotent file sink = effectively exactly-once). */
-  def startViolationSink(violations: DataFrame, outDir: String,
-                         checkpointDir: String): DataStreamWriter[Row] =
-    violations.writeStream
-      .outputMode(OutputMode.Append)
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime("10 seconds"))
 }

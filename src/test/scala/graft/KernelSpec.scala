@@ -63,8 +63,13 @@ class KernelSpec extends SparkSpec {
   private def kernels: Seq[(String, Column)] = {
     val (text, seed, variant, media) =
       (col("text"), col("seed"), col("variant"), col("media"))
+    val rec = JsonFacts.jsonFacts(text).getField("rec")
+    val props = rec.getField("properties")
     Seq(
       "json_facts" -> JsonFacts.jsonFacts(text),
+      "link_pool" -> LinkPoolExpr.linkPool(rec.getField("links"),
+        props.getField("themes"), props.getField("contacts")),
+      "previews" -> Previews.previews(rec.getField("links")),
       "misspelled" -> Misspelled.misspelled(text),
       "title_words" -> TitleWords.titleWords(text),
       "language_id" -> LangId.languageId(text),
@@ -136,11 +141,19 @@ class KernelSpec extends SparkSpec {
     kernels.indices.foreach { k =>
       assert(genRows.exists(!_.isNullAt(k)), kernels(k)._1)
     }
-    // a null input never reaches a kernel; only languageId coalesces
+    // a null input never reaches a kernel; only languageId and linkPool
+    // coalesce, linkPool each null array to an empty one
     val nulls = genRows.last
     kernels.indices.foreach { k =>
-      if (kernels(k)._1 == "language_id") assert(nulls.getString(k) == "und")
-      else assert(nulls.isNullAt(k), kernels(k)._1)
+      kernels(k)._1 match {
+        case "language_id" => assert(nulls.getString(k) == "und")
+        case "link_pool" => assert(nulls.getSeq[Row](k).isEmpty)
+        case name => assert(nulls.isNullAt(k), name)
+      }
     }
+    // the passing fixture's links reach the link-pool kernel
+    val linkPool = kernels.indexWhere(_._1 == "link_pool")
+    assert(genRows.head.getSeq[Row](linkPool).nonEmpty)
+    assert(!genSchema(linkPool).nullable)
   }
 }

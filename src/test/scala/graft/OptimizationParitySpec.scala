@@ -254,14 +254,16 @@ class OptimizationParitySpec extends SparkSpec {
       trailWs.matcher(leadWs.matcher(s).replaceAll("")).replaceAll("")
     val got = titles.toDF("s")
       .select(graft.expressions.TitleWords.titleWords(col("s")).as("t"))
-      .select("t.words", "t.stripped")
-      .as[(Seq[String], String)].collect()
-    titles.zip(got).foreach { case (s, (words, stripped)) =>
+      .select("t.words")
+      .as[Seq[String]].collect()
+    titles.zip(got).foreach { case (s, words) =>
       val refStripped0 = pyStripRef(s)
       val refWords =
         if (refStripped0.isEmpty) Seq.empty[String]
         else wsRun.split(refStripped0).filter(_.nonEmpty).toSeq
       val refAcr = pyStripRef(acronymRe.matcher(s).replaceAll(""))
+      val stripped = graft.expressions.TextKernels.pyStrip(
+        acronymRe.matcher(s).replaceAll(""))
       assert(words == refWords, s"words mismatch on '$s'")
       assert(stripped == refAcr, s"stripped mismatch on '$s'")
     }

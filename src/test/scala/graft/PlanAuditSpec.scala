@@ -123,9 +123,7 @@ class PlanAuditSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val p = formatted(
       Dedup.minhashBandRows(docs, "text", "doc_id", 64, 16, 3))
-    // the only exchange allowed is the small-input parallelism guard
-    // (round-robin repartition, a no-op at real scale when splits >=
-    // cores); a hash/range exchange here would shuffle corpus text
+    // a hash/range exchange here would shuffle corpus text
     assert(!p.contains("hashpartitioning"), p)
     assert(!p.contains("rangepartitioning"), p)
     // the signature projection runs the NATIVE kernels (one call per
@@ -150,6 +148,27 @@ class PlanAuditSpec extends SparkSpec {
        "round-robin repartition") {
     val p = formatted(q("q_text_quality"))
     assert(!p.contains("RoundRobinPartitioning"), p)
+  }
+
+  test("image near-dup, MinHash band and embedding sketch signature " +
+       "stages scan their one-split inputs without a round-robin " +
+       "repartition") {
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    // the band and sketch frames are what the q_minhash_pairs and
+    // q_embedding_neardup dumps write; the images are encoded over the
+    // one-file documents scan, not read from q_image_neardup's dump,
+    // which arrives as one split per file
+    val images = docs.select(col("doc_id"),
+      graft.expressions.ImageOps.synthPng(col("doc_id"), lit(6)).as("media"))
+    val repartitioned = Seq(
+        "imageDedup" -> Dedup.imageDedup(images),
+        "minhashBandRows" ->
+          Dedup.minhashBandRows(docs, "text", "doc_id", 64, 16, 3),
+        "embeddingSigRows" ->
+          Dedup.embeddingSigRows(emb, "embedding", "vec_id", 8))
+      .filter(f => formatted(f._2).contains("RoundRobinPartitioning"))
+    assert(repartitioned.isEmpty, repartitioned.map(_._1))
   }
 
   test("no accidental cartesian products in lazily-planned driver " +

@@ -1,6 +1,10 @@
 package graft
 
+import java.time.Instant
+import java.time.temporal.ChronoUnit
+
 import org.apache.spark.sql.functions._
+import graft.catalog.KpiRules
 import graft.engine.{Reports, Validator}
 import graft.sources.RecordTable
 
@@ -107,6 +111,40 @@ class ReportsSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Reports.selectKpi(validated, "nope")
     }
+  }
+
+  test("selectKpi: every KPI name keeps exactly its catalog test") {
+    val (_, rc) = Validator.withKernels(RecordTable.fixtures(spark))
+    val catalogIds = KpiRules.catalog(rc).map { r =>
+      r.name -> spark.range(1).select(r.id).as[String].head()
+    }.toMap
+    assert(catalogIds.keySet == Reports.KpiNames.toSet)
+    val records = validated.where(col("parse_ok")).count()
+    assert(records > 0)
+    for (name <- Reports.KpiNames) {
+      val kept = Reports.selectKpi(validated, name).where(col("parse_ok"))
+        .select(size(col("kpi_tests")), col("kpi_tests")(0)("id"))
+        .as[(Int, String)].collect()
+      assert(kept.length == records, name)
+      assert(kept.forall(_ == ((1, catalogIds(name)))), s"$name: ${kept.toSeq}")
+    }
+  }
+
+  test("wall-clock stamps are UTC with exactly 6 fractional digits") {
+    val cases = Seq(
+      Instant.parse("2026-10-19T15:38:38.123Z") ->
+        "2026-10-19T15:38:38.123000Z",             // micros end in 000
+      Instant.parse("2026-10-19T15:38:38Z") ->
+        "2026-10-19T15:38:38.000000Z",             // zero nanos
+      Instant.ofEpochSecond(1790000000L, 123456789) ->
+        "2026-09-21T14:13:20.123456Z")
+    for ((t, expected) <- cases) {
+      val s = Reports.stamp(t)
+      assert(s == expected)
+      assert(s.length == 27, s)
+      assert(Instant.parse(s) == t.truncatedTo(ChronoUnit.MICROS), s)
+    }
+    assert(Reports.stampNow().length == 27)
   }
 
   test("exit code = ETS FAILED count, like the reference CLI " +
