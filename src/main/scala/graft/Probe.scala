@@ -102,7 +102,10 @@ object Probe {
     val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     try run(spark, args.toSeq, sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       throw new IllegalArgumentException("set SPARK_GRAFT_SF_DIR")))
-    finally spark.stop()
+    finally {
+      spark.stop()
+      SparkEntry.OracleDump.delete()
+    }
   }
 
   private def names(args: Seq[String]): Seq[String] = {

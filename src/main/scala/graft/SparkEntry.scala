@@ -85,15 +85,26 @@ object SparkEntry {
               .exists(p => p == self ||
                 scala.util.Try(ProcessHandle.of(p).isPresent).getOrElse(true))
             if (!alive)
-              try {
-                java.nio.file.Files.walk(f.toPath)
-                  .sorted(java.util.Comparator.reverseOrder())
-                  .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-              } catch { case _: Exception => } // best-effort reaping
+              try deleteTree(f) catch { case _: Exception => } // best-effort
           }
         }
     }
     cleanStale()
+
+    private def deleteTree(f: java.io.File): Unit =
+      scala.util.Using.resource(java.nio.file.Files.walk(f.toPath)) {
+        _.sorted(java.util.Comparator.reverseOrder())
+          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
+      }
+
+    /** Delete this JVM's dumps now. For JVMs whose dumps no later reader
+      * needs (`graft.Probe`, the tests); `Verify` and `Bench` keep theirs
+      * for the DuckDB pass that runs after they exit. */
+    private[graft] def delete(): Unit = synchronized {
+      val d = new java.io.File(dir)
+      if (d.exists) deleteTree(d)
+      written.clear()
+    }
     /** the read_parquet glob the oracle SQL uses for table `name` */
     def glob(name: String): String = s"$dir/$name.parquet/*.parquet"
     private val written = scala.collection.mutable.Set[String]()
@@ -954,7 +965,7 @@ object SparkEntry {
     val esdArr = arrLit(Dims.earthSystemDisciplines)
     val core = "http://wis.wmo.int/spec/wcmp/2/conf/core"
     val kebab = "^[a-z0-9][a-z0-9-]*$"
-    // level-wise WIS2 channel walk (Dims.validTopicChannel; no published
+    // level-wise WIS2 channel walk (TopicChannelValid; no published
     // sub-discipline table in the verify environment -> levels 8+ are
     // charset grammar). `ch` is the channel string expression.
     def validChannel(ch: String): String = {
@@ -1229,7 +1240,7 @@ object SparkEntry {
     val w = "[\\p{L}\\p{N}_]"
     // the apostrophe inside the class is doubled for SQL string embedding
     val wordRe = s"$w[\\p{L}\\p{N}_'']*$w|$w"
-    // Python float() grammar, kept in sync with Wcmp2Functions.floatLike
+    // Python float() grammar, kept in sync with TextKernels.floatLikeToken
     val floatRe = {
       val d = "[0-9](?:_?[0-9])*"
       s"^[+-]?((?i:inf(?:inity)?|nan)|(?:$d(?:\\.(?:$d)?)?|\\.$d)(?:[eE][+-]?$d)?)$$$$"

@@ -167,8 +167,8 @@ object EtsRules {
 
   /** links (`ets.py:440-489`) — ordered first-failure per link, links in
     * document order. Channel topic validity = level-wise walk of the
-    * vendored hierarchy tables ([[Dims.validTopicChannel]]), the analog
-    * of pywis_topics' `th.validate`. */
+    * vendored hierarchy tables ([[graft.expressions.TopicChannelValid]]),
+    * the analog of pywis_topics' `th.validate`. */
   def links(r: RecordCols): EtsRule = {
     val links = r.rec.getField("links")
     val perLink = transform(links, l => {
@@ -183,8 +183,8 @@ object EtsRules {
            concat(lit("invalid link relation "), rel))
         .when(href.startsWith("mqtt") && channel.isNull,
               "missing channel for Pub/Sub link")
-        // native split-once walk; Dims.validTopicChannel is the
-        // declarative reference impl (parity: OptimizationParitySpec)
+        // native split-once walk; the tests' TopicReference holds the
+        // declarative reference (parity: OptimizationParitySpec)
         .when(href.startsWith("mqtt") &&
                 (channel.startsWith("origin/a/wis2") ||
                  channel.startsWith("cache/a/wis2")) &&

@@ -129,7 +129,7 @@ object KpiRules {
     * The title facts (words, all-alnum words, sentence case, acronym
     * count, bulletin header) are fields of the TitleWords kernel struct;
     * OptimizationParitySpec pins them to the declarative formulations in
-    * [[graft.functions.Wcmp2Functions]]. */
+    * the tests' `Wcmp2Reference`. */
   def title(r: RecordCols): KpiRule = {
     val t = prop(r, "title")
     val words = r.titleWords.getField("words")
@@ -249,39 +249,6 @@ object KpiRules {
         concat(lit("URL not accessible: "), l.getField("href")))))))
     KpiRule("graphic_overview",
       lit("Graphic overview for metadata records"), total, score, comments)
-  }
-
-  /** The pooled link set of kpi_links_health (`kpi.py:356-374`) of the
-    * parsed record `rec`: record links, then per theme its concept urls
-    * and scheme, then contact links — filtered to http(s). The declarative
-    * reference of the [[graft.expressions.LinkPoolExpr]] kernel the
-    * Validator materializes once per row (parity: OptimizationParitySpec),
-    * and the table-wide pool of
-    * [[graft.engine.DatasetRules.recordLinkUrls]]. */
-  def httpLinkPool(rec: Column): Column = {
-    val hrefType = (href: Column, t: Column) =>
-      struct(href.as("href"), t.as("type"))
-    val props = rec.getField("properties")
-    val recordLinks = transform(rec.getField("links"),
-      l => hrefType(l.getField("href"), l.getField("type")))
-    val themeLinks = flatten(transform(props.getField("themes"), t => concat(
-      transform(filter(t.getField("concepts"),
-                       c => c.getField("url").isNotNull),
-                c => hrefType(c.getField("url"), lit(null).cast(StringType))),
-      array(hrefType(t.getField("scheme"), lit(null).cast(StringType))))))
-    val emptyContactLinks = array()
-      .cast(ArrayType(graft.model.Wcmp2Schema.contactLink))
-    val contactLinks = flatten(transform(props.getField("contacts"), c =>
-      transform(coalesce(c.getField("links"), emptyContactLinks),
-                l => hrefType(l.getField("href"), lit(null).cast(StringType)))))
-    val emptyPool = array().cast(ArrayType(StructType(Seq(
-      StructField("href", StringType), StructField("type", StringType)))))
-    val pool = concat(
-      coalesce(recordLinks, emptyPool),
-      coalesce(themeLinks, emptyPool),
-      coalesce(contactLinks, emptyPool))
-    filter(pool, p =>
-      p.getField("href").isNotNull && p.getField("href").startsWith("http"))
   }
 
   /** kpi_links_health — total 2 per http(s) URL in the pooled link set

@@ -80,10 +80,9 @@ object Dims {
     * levels >= 8, rooted at the earth-system discipline): loaded from
     * `<dims-dir>/sub-discipline.csv` when the [[DimsDirProperty]] override
     * provides one (one `discipline/sub/path` per line), `None` otherwise —
-    * [[validTopicChannel]] then falls back to the charset grammar for
-    * those levels. The published trees are large and centre-managed; the
-    * override is the deployment hook, and [[vendoredSubDisciplines]]
-    * ships a starter snapshot. */
+    * [[graft.expressions.TopicChannelValid]] then falls back to the
+    * charset grammar for those levels. The published trees are large and
+    * centre-managed; the override is the deployment hook. */
   def subDisciplineTable(): Option[Set[String]] =
     sys.props.get(DimsDirProperty).flatMap { dir =>
       val f = new java.io.File(dir, "sub-discipline.csv")
@@ -95,88 +94,6 @@ object Dims {
         finally src.close()
       }
     }
-
-  /** Vendored PARTIAL snapshot of the published `weather` sub-discipline
-    * tree (public wmo-im/wis2-topic-hierarchy; partial — deployments drop
-    * the full published CSVs into the dims dir). Not wired by default:
-    * pass it (or a dims-dir file) explicitly to pin levels >= 8. */
-  lazy val vendoredSubDisciplines: Set[String] = {
-    val in = getClass.getResourceAsStream("/wis2-subtrees/sub-discipline.csv")
-    require(in != null, "missing vendored sub-discipline snapshot")
-    val src = Source.fromInputStream(in, "UTF-8")
-    try prefixClosure(src.getLines().map(_.trim)
-      .filter(l => l.nonEmpty && !l.startsWith("#")).toVector)
-    finally src.close()
-  }
-
-  /** Level-wise WIS2 topic-channel validation, the analog of
-    * `th.validate(channel)` (`ets.py:476`, pywis_topics): each hierarchy
-    * level is checked against that level's table, like pywis-topics
-    * walking its per-level CSVs — NOT a materialized cross-product (the
-    * real hierarchy has ~1e5 leaves; a level-wise check is O(depth) per
-    * row and needs only the small per-level dims).
-    *
-    *  - levels 1-3: literal `origin|cache / a / wis2`
-    *  - level 4: centre-id dim (`-test` centres allowed, as in the
-    *    identifier test, `ets.py:186`)
-    *  - level 5: notification type (`data|metadata|reports`)
-    *  - for `data`: level 6 data-policy dim, level 7 earth-system-
-    *    discipline dim; levels 8+ validated against the PUBLISHED
-    *    sub-discipline table when one is loaded (`subTable`, default
-    *    [[subDisciplineTable]] from the dims-dir override) and the
-    *    discipline is covered by it; lowercase-kebab charset grammar
-    *    otherwise (matches the published token grammar and correctly
-    *    rejects the fixture-invalid `landFixed`). The WIS2 THE reserved
-    *    token `experimental` opens a free-form (charset-only) subtree:
-    *    the path BEFORE it must still be published.
-    */
-  def validTopicChannel(channel: org.apache.spark.sql.Column,
-      subTable: Option[Set[String]] = subDisciplineTable())
-      : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
-    val t = split(channel, "/")
-    val lvl = size(t)
-    val kebab = "^[a-z0-9][a-z0-9-]*$"
-    val rootOk = get(t, lit(0)).isInCollection(Seq("origin", "cache")) &&
-      get(t, lit(1)) === "a" && get(t, lit(2)) === "wis2"
-    val centre = get(t, lit(3))
-    val centreOk =
-      centre.isInCollection(centreIds) || centre.endsWith("-test")
-    val charsetOk = forall(slice(t, lit(8), greatest(lvl - 7, lit(0))),
-      tok => tok.rlike(kebab))
-    val subOk = subTable match {
-      case None => charsetOk
-      case Some(closure) =>
-        // discipline-rooted sub path: [discipline, s1, s2, ...]
-        val disc = get(t, lit(6))
-        // empty closure (no roots) -> nothing is covered; lit(false)
-        // instead of an isInCollection over a fake sentinel element
-        val covered = closure.iterator.filter(!_.contains("/")).toSeq match {
-          case roots if roots.nonEmpty => disc.isInCollection(roots)
-          case _ => lit(false)
-        }
-        val sub = slice(t, lit(7), greatest(lvl - 6, lit(0)))
-        val expPos = array_position(sub, "experimental")
-        val joined = concat_ws("/", sub)
-        val beforeExp = concat_ws("/", slice(sub, lit(1), expPos - 1))
-        val published = when(expPos > 0,
-            // experimental subtree: the prefix before it must be
-            // published; everything below is charset-free-form
-            beforeExp.isInCollection(closure.toSeq))
-          .otherwise(joined.isInCollection(closure.toSeq))
-        // table validates covered disciplines; others keep the grammar
-        charsetOk && when(covered, published).otherwise(lit(true))
-    }
-    val typeOk = when(get(t, lit(4)) === "data",
-        lvl >= 7 &&
-        get(t, lit(5)).isInCollection(dataPolicies) &&
-        get(t, lit(6)).isInCollection(earthSystemDisciplines) && subOk)
-      .when(get(t, lit(4)).isInCollection(Seq("metadata", "reports")),
-        lvl >= 5 && forall(slice(t, lit(6), greatest(lvl - 5, lit(0))),
-          tok => tok.rlike(kebab)))
-      .otherwise(lit(false))
-    rootOk && centreOk && typeOk
-  }
 
   /** Pinned snapshot of `mimetypes.types_map` ∪ {bufr, grib, turtle}
     * (`/root/reference/pywcmp/wcmp2/kpi.py:347-352`); Python's map is

@@ -49,7 +49,7 @@ final class CompiledCatalog private[graft] (plan: LogicalPlan,
   import CompiledCatalog._
 
   /** `struct<parse_ok, gate, gate_errors, ets, kpi>` */
-  private[engine] val schema: StructType = StructType(plan.output.map(a =>
+  private[graft] val schema: StructType = StructType(plan.output.map(a =>
     StructField(a.name, a.dataType, a.nullable)))
 
   private val root: InternalRow => Iterator[InternalRow] = compile(plan)

@@ -184,39 +184,39 @@ object DatasetRules {
       .withColumn("drifted", col("psi") >= 0.2)
   }
 
+  /** One row `(repo, path, commit, p)` per link in each record's K5 pool
+    * (`p: struct<href, type>`, the http(s) URLs kpi_links_health scores:
+    * record links, theme concept urls and schemes, contact links,
+    * `kpi.py:356-374`): the validator's single parse and pool kernel
+    * ([[Validator.parsed]], [[Validator.httpLinkPool]]), exploded. */
+  private def pooledLinks(records: DataFrame): DataFrame =
+    Validator.parsed(records).select(col("repo"), col("path"), col("commit"),
+      explode(Validator.httpLinkPool).as("p"))
+
   /** The distinct probe-able URL pool of a records table — the SAME
-    * pooled link set kpi_links_health scores (record links ++ theme
-    * concept urls ++ theme schemes ++ contact links, http(s) only,
-    * `kpi.py:356-374`), extracted table-wide: parse once behind a
-    * Generate barrier, explode the pool, distinct. Feed the result to
-    * [[graft.sources.UrlSource.probeTable]] and the probed dim back into
-    * [[linkHealthJoin]] (table-scale) or
+    * pooled link set kpi_links_health scores, extracted table-wide. Feed
+    * the result to [[graft.sources.UrlSource.probeTable]] and the probed
+    * dim back into [[linkHealthJoin]] (table-scale) or
     * [[graft.catalog.MapLinkProbe.fromTable]] (in-plan seam) — the
     * production replacement for the reference's live per-record probing
     * (`pywcmp/util.py:149-200`). */
   def recordLinkUrls(records: DataFrame): org.apache.spark.sql.Dataset[String] = {
     import records.sparkSession.implicits._
-    records
-      .select(explode(array(from_json(col("content"),
-        graft.model.Wcmp2Schema.root))).as("rec"))
-      .select(explode(graft.catalog.KpiRules.httpLinkPool(col("rec")))
-        .as("p"))
-      .select(col("p.href")).where(col("href").isNotNull)
-      .distinct().as[String]
+    pooledLinks(records).select(col("p.href")).distinct().as[String]
   }
 
-  /** K4/K5 at scale with a REAL probe table: explode all links once, join
-    * the probe dimension on href (broadcast when small, SMJ otherwise),
-    * aggregate health per record. This is the production path that
-    * replaces [[graft.catalog.OfflineLinkProbe]]'s in-row stub. */
+  /** K4/K5 at scale with a REAL probe table: explode each record's K5
+    * pool once, join the probe dimension on href (broadcast when small,
+    * SMJ otherwise), aggregate health per record. For a probe table with
+    * one row per href, `2 * n_http_links` is K5's total and
+    * `n_accessible + n_valid_mime` its score under
+    * [[graft.catalog.MapLinkProbe]] of the same table. This is the
+    * production path that replaces [[graft.catalog.OfflineLinkProbe]]'s
+    * in-row stub. */
   def linkHealthJoin(records: DataFrame, probeTable: DataFrame): DataFrame = {
-    val links = records
+    val links = pooledLinks(records)
       .select(col("repo"), col("path"), col("commit"),
-        explode_outer(from_json(get_json_object(col("content"), "$.links"),
-          ArrayType(graft.model.Wcmp2Schema.link))).as("link"))
-      .select(col("repo"), col("path"), col("commit"),
-        col("link.href").as("href"), col("link.type").as("declared_type"))
-      .where(col("href").startsWith("http"))
+        col("p.href").as("href"), col("p.type").as("declared_type"))
     links.join(broadcast(probeTable), Seq("href"), "left")
       .groupBy("repo", "path", "commit")
       .agg(

@@ -29,6 +29,41 @@ object Validator {
     * [[validate]] builds on this frame; `graft.Probe rules` times each
     * rule over the same one, so it measures the production expressions. */
   private[graft] def withKernels(records: DataFrame): (DataFrame, RecordCols) = {
+    // second barrier: per-row kernels that multiple rule expressions
+    // reference (spellcheck x3 refs each, the K5 link pool x3, the K1
+    // title facts words/all_alnum/cap_ok/n_acronyms x2 each, K4 previews
+    // x3) — materialized ONCE each, and only the fields a rule reads.
+    val titleCol = col("_p.rec.properties.title")
+    val kernels = struct(
+      // native kernels (one JVM call each; the declarative formulations
+      // are the tests' reference impls, parity-tested in
+      // OptimizationParitySpec) — everything in this struct is evaluated
+      // interpreted inside the Generate barrier, so composite HOF/regex
+      // chains here are hot-path poison
+      graft.expressions.Misspelled.misspelled(titleCol).as("title_mis"),
+      graft.expressions.Misspelled.misspelled(
+        col("_p.rec.properties.description")).as("desc_mis"),
+      graft.expressions.TitleWords.titleWords(titleCol).as("title_kernel"),
+      httpLinkPool.as("http_links"),
+      graft.expressions.Previews.previews(col("_p.rec.links"))
+        .as("previews"))
+
+    val withParsed = parsed(records)
+      .select(col("*"), explode(array(kernels)).as("_k"))
+
+    val rc = RecordCols(col("content"), col("_p.rec"), col("_p.geom_raw"),
+      col("_p.geo_positions"), col("_p.props_keys"),
+      titleMisspelled = col("_k.title_mis"),
+      descMisspelled = col("_k.desc_mis"),
+      titleWords = col("_k.title_kernel"),
+      httpLinks = col("_k.http_links"),
+      previews = col("_k.previews"))
+    (withParsed, rc)
+  }
+
+  /** `records` with `_p`, the parse products of
+    * [[graft.expressions.JsonFacts]], behind the first Generate barrier. */
+  private[graft] def parsed(records: DataFrame): DataFrame = {
     // PLAN-SHAPE CRITICAL: the parse products are materialized behind an
     // `explode(array(struct(...)))` Generate barrier. CollapseProject
     // happily re-inlines expensive expressions into every downstream
@@ -45,44 +80,17 @@ object Validator {
     // array. (Previously the same text was tokenized up to five ways —
     // from_json, try_parse_json building a whole-document variant binary,
     // json_tuple, json_object_keys x2 — measured ~60% of hot-path CPU.)
-    val parsedStruct =
-      graft.expressions.JsonFacts.jsonFacts(col("content"))
-    // second barrier: per-row kernels that multiple rule expressions
-    // reference (spellcheck x3 refs each, the K5 link pool x3, the K1
-    // title facts words/all_alnum/cap_ok/n_acronyms x2 each, K4 previews
-    // x3) — materialized ONCE each, and only the fields a rule reads.
-    val titleCol = col("_p.rec.properties.title")
-    val kernels = struct(
-      // native kernels (one JVM call each; the declarative formulations
-      // in Wcmp2Functions / KpiRules.httpLinkPool are the documented
-      // reference impls, parity-tested in OptimizationParitySpec) —
-      // everything in this struct is evaluated interpreted inside the
-      // Generate barrier, so composite HOF/regex chains here are hot-path
-      // poison
-      graft.expressions.Misspelled.misspelled(titleCol).as("title_mis"),
-      graft.expressions.Misspelled.misspelled(
-        col("_p.rec.properties.description")).as("desc_mis"),
-      graft.expressions.TitleWords.titleWords(titleCol).as("title_kernel"),
-      graft.expressions.LinkPoolExpr.linkPool(
-        col("_p.rec.links"),
-        col("_p.rec.properties.themes"),
-        col("_p.rec.properties.contacts")).as("http_links"),
-      graft.expressions.Previews.previews(col("_p.rec.links"))
-        .as("previews"))
-
-    val withParsed = records
-      .select(col("*"), explode(array(parsedStruct)).as("_p"))
-      .select(col("*"), explode(array(kernels)).as("_k"))
-
-    val rc = RecordCols(col("content"), col("_p.rec"), col("_p.geom_raw"),
-      col("_p.geo_positions"), col("_p.props_keys"),
-      titleMisspelled = col("_k.title_mis"),
-      descMisspelled = col("_k.desc_mis"),
-      titleWords = col("_k.title_kernel"),
-      httpLinks = col("_k.http_links"),
-      previews = col("_k.previews"))
-    (withParsed, rc)
+    records.select(col("*"),
+      explode(array(graft.expressions.JsonFacts.jsonFacts(col("content"))))
+        .as("_p"))
   }
+
+  /** The K5 link pool over [[parsed]]'s `_p`: every http(s) URL the
+    * record carries — record links, theme concept urls and schemes,
+    * contact links — as `array<struct<href, type>>`. */
+  private[graft] val httpLinkPool: Column =
+    graft.expressions.LinkPoolExpr.linkPool(col("_p.rec.links"),
+      col("_p.rec.properties.themes"), col("_p.rec.properties.contacts"))
 
   /** Per-record evaluation: adds sha256, parse status, ETS results +
     * summary, KPI results + summary + grade. Pure narrow projection. */

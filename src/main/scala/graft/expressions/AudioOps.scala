@@ -252,37 +252,6 @@ object AudioOps {
     0, 0, 0, 0, 0x10, 0, 0x80.toByte, 0,
     0, 0xAA.toByte, 0, 0x38, 0x9B.toByte, 0x71)
 
-  /** Re-frame an [[encodeWav]]-family WAV as WAVE_FORMAT_EXTENSIBLE
-    * (0xFFFE, 40-byte fmt body, SubFormat GUID carrying the original
-    * code) — for asserting the unwrap path decodes identically. */
-  def wrapExtensible(wav: Array[Byte]): Array[Byte] = {
-    val fmtCode = (wav(20) & 0xFF) | ((wav(21) & 0xFF) << 8)
-    val bits = (wav(34) & 0xFF) | ((wav(35) & 0xFF) << 8)
-    val out = new Array[Byte](wav.length + 24)
-    System.arraycopy(wav, 0, out, 0, 36) // up to end of 16-byte fmt body
-    // grow RIFF size + fmt size, swap tag to extensible
-    def le32(i: Int, v: Int): Unit = {
-      out(i) = v.toByte; out(i + 1) = (v >>> 8).toByte
-      out(i + 2) = (v >>> 16).toByte; out(i + 3) = (v >>> 24).toByte
-    }
-    def le16(i: Int, v: Int): Unit = {
-      out(i) = v.toByte; out(i + 1) = (v >>> 8).toByte
-    }
-    val riffSize = ((wav(4) & 0xFF) | ((wav(5) & 0xFF) << 8) |
-      ((wav(6) & 0xFF) << 16) | ((wav(7) & 0xFF) << 24)) + 24
-    le32(4, riffSize)
-    le32(16, 40)
-    le16(20, 0xFFFE)
-    le16(36, 22) // cbSize
-    le16(38, bits) // wValidBitsPerSample = container depth
-    le32(40, 0) // dwChannelMask: unpositioned
-    le16(44, fmtCode)
-    System.arraycopy(ExtensibleGuidTail, 0, out, 46,
-      ExtensibleGuidTail.length)
-    System.arraycopy(wav, 36, out, 60, wav.length - 36)
-    out
-  }
-
   /** Deterministic test-signal WAV from `seed`: 16-bit mono 8000 Hz;
     * `s = seed mod 100` silent frames then `n - s` frames of a
     * period-8 square wave at amplitude `A = 32767` (exactly full scale)

@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types.BinaryType
 
 /** REAL pixel decode for uncompressed BMP (BITMAPINFOHEADER family,
   * `BI_RGB`) — like PNG ([[PngPixels]]), the format needs no codec
@@ -12,7 +10,7 @@ import org.apache.spark.sql.types.BinaryType
   * `(width, height, channels, pixels)` struct and raster layout as
   * [[PngPixels]] (top-down scanline-major, channel-interleaved RGB),
   * so every stage built on the raster — `ImageOps.grayResize`,
-  * `ImageOps.dhash64`, `Multimodal.featurizeImage` — is format-agnostic:
+  * `ImageOps.dhash64` — is format-agnostic:
   * the same image saved as PNG and as BMP hashes identically
   * (cross-format near-dup, ImageSpec).
   *
@@ -138,8 +136,4 @@ object BmpPixels {
     }
     out
   }
-
-  def bmpPixels(c: Column): Column =
-    Kernel.call(this, "pixels", PngPixels.pixType, Seq(c -> BinaryType),
-      nullable = true)
 }

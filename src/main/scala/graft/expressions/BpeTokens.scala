@@ -6,8 +6,7 @@ import java.util.regex.Pattern
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType}
+import org.apache.spark.sql.types.{IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Merges-based byte-level BPE tokenizer as native static kernels —
@@ -102,9 +101,6 @@ object Bpe {
 
   def count(text: UTF8String): Int = default.count(text.toString)
 
-  def ids(text: UTF8String): GenericArrayData =
-    new GenericArrayData(default.encode(text.toString))
-
   // ---- Column API ----
 
   /** exact subword token count under the vendored merges table */
@@ -112,10 +108,6 @@ object Bpe {
     Kernel.call(this, "count", IntegerType, Seq(text -> StringType),
       nullable = false)
 
-  /** token-id array (0..255 bytes, 256+i merge results) */
-  def bpeTokenIds(text: Column): Column =
-    Kernel.call(this, "ids", ArrayType(IntegerType, containsNull = false),
-      Seq(text -> StringType), nullable = false)
 }
 
 /** A loaded BPE merge table + the encode/decode/count kernels. Thread-safe;

@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types.BinaryType
 
 /** REAL pixel decode for GIF (87a/89a) — the third image format fully
   * decodable without a codec library: GIF's only compression is LZW
@@ -13,11 +11,11 @@ import org.apache.spark.sql.types.BinaryType
   * (frame 1 of an animation) through the global/local color table to
   * the same `(width, height, channels=3, pixels)` struct as
   * [[PngPixels]]/[[BmpPixels]], so the raster pipeline
-  * (`ImageOps.grayResize`, `ImageOps.dhash64`, `Multimodal.featurizeImage`)
-  * gains the format for free. Interlaced images are de-interlaced
-  * (the 8/8/4/2 row passes of the spec).
+  * (`ImageOps.grayResize`, `ImageOps.dhash64`) gains the format for
+  * free. Interlaced images are de-interlaced (the 8/8/4/2 row passes of
+  * the spec).
   *
-  * [[GifPixels.encodeGif]] is the test/synth seam: a spec-valid
+  * The tests' `MediaFixtures.encodeGif` is the matching seam: a spec-valid
   * encoder that emits LZW literal codes with a clear code before the
   * table would overflow — the classic "uncompressed GIF" construction,
   * so no compressor is needed and any ≤256-color raster round-trips
@@ -231,93 +229,4 @@ object GifPixels {
     }
     out
   }
-
-  /** Minimal spec-valid GIF89a encoder for rasters of ≤256 distinct
-    * colors (`raster` in the [[PngPixels]] RGB layout): global color
-    * table from the distinct colors in first-appearance order, single
-    * non-interlaced full-frame image, LZW stream of literal codes with
-    * a clear code every time the table is about to grow past the
-    * current code width ("uncompressed GIF" — valid LZW, no
-    * compressor needed). Throws on >256 colors (encoder seam, not an
-    * untrusted-input path). */
-  def encodeGif(raster: Array[Byte], w: Int, h: Int): Array[Byte] = {
-    require(w > 0 && h > 0 && raster.length == w * h * 3,
-      s"raster ${raster.length} != $w x $h x 3")
-    val colorIdx = new java.util.LinkedHashMap[Integer, Integer]()
-    val indices = new Array[Int](w * h)
-    var p = 0
-    while (p < w * h) {
-      val c = ((raster(p * 3) & 0xFF) << 16) | ((raster(p * 3 + 1) & 0xFF) << 8) |
-        (raster(p * 3 + 2) & 0xFF)
-      var idx = colorIdx.get(c)
-      if (idx == null) {
-        require(colorIdx.size < 256, "encodeGif: more than 256 colors")
-        idx = colorIdx.size
-        colorIdx.put(c, idx)
-      }
-      indices(p) = idx
-      p += 1
-    }
-    // color-table size: power of two >= max(2, colors)
-    var tableBits = 1
-    while ((1 << tableBits) < colorIdx.size) tableBits += 1
-    val entries = 1 << tableBits
-    val minCode = math.max(2, tableBits)
-    val clear = 1 << minCode
-
-    val out = new java.io.ByteArrayOutputStream()
-    out.write("GIF89a".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    def le16(v: Int): Unit = { out.write(v & 0xFF); out.write((v >> 8) & 0xFF) }
-    le16(w); le16(h)
-    out.write(0x80 | (tableBits - 1)) // global table, 2^tableBits entries
-    out.write(0); out.write(0)        // bg index, aspect
-    val it = colorIdx.keySet().iterator()
-    var written = 0
-    while (it.hasNext) {
-      val c = it.next().intValue()
-      out.write((c >> 16) & 0xFF); out.write((c >> 8) & 0xFF); out.write(c & 0xFF)
-      written += 1
-    }
-    while (written < entries) { out.write(0); out.write(0); out.write(0); written += 1 }
-    out.write(0x2C); le16(0); le16(0); le16(w); le16(h); out.write(0)
-    out.write(minCode)
-    // literal-code LZW with pre-overflow clears, packed LSB-first
-    val body = new java.io.ByteArrayOutputStream()
-    var bitBuf = 0L; var bitCnt = 0
-    val codeBits = minCode + 1
-    def put(code: Int): Unit = {
-      bitBuf |= code.toLong << bitCnt; bitCnt += codeBits
-      while (bitCnt >= 8) { body.write((bitBuf & 0xFF).toInt); bitBuf >>>= 8; bitCnt -= 8 }
-    }
-    put(clear)
-    // after a clear the decoder grows its table per literal; emit a
-    // clear again before table size would force a code-width bump
-    var sinceClear = 0
-    val budget = (1 << codeBits) - (clear + 2) - 1
-    var q = 0
-    while (q < indices.length) {
-      put(indices(q))
-      sinceClear += 1
-      if (sinceClear >= budget && q != indices.length - 1) {
-        put(clear); sinceClear = 0
-      }
-      q += 1
-    }
-    put(clear + 1) // end code
-    if (bitCnt > 0) body.write((bitBuf & 0xFF).toInt)
-    val bytes = body.toByteArray
-    var o = 0
-    while (o < bytes.length) {
-      val len = math.min(255, bytes.length - o)
-      out.write(len); out.write(bytes, o, len)
-      o += len
-    }
-    out.write(0)    // block terminator
-    out.write(0x3B) // trailer
-    out.toByteArray
-  }
-
-  def gifPixels(c: Column): Column =
-    Kernel.call(this, "pixels", PngPixels.pixType, Seq(c -> BinaryType),
-      nullable = true)
 }

@@ -3,7 +3,6 @@ package graft.expressions
 import java.util.zip.{CRC32, Deflater}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** Image feature extraction over REAL decoded pixels — the multimodal
@@ -18,7 +17,7 @@ import org.apache.spark.sql.types._
   *    seed — exactly the shape image dedup must be invariant to — and
   *    the test seam for crafting arbitrary rasters
   *    ([[ImageOps.encodePng]] is the public kernel).
-  *  - [[grayThumbnail]]: decode -> integer luma -> box-average pool to a
+  *  - [[grayResize]]: decode -> integer luma -> box-average pool to a
   *    fixed thumbnail. The real "resize" stage: deterministic integer
   *    arithmetic, no floating point, so hashes built on it are stable
   *    across platforms.
@@ -239,29 +238,12 @@ object ImageOps {
     bits
   }
 
-  /** (seed long, level int) -> PNG bytes; never null */
-  def synthPng(seed: Column, level: Column): Column =
-    synth("synthPng", seed, level)
-  /** (seed long, variant int) -> PNG or BMP bytes of the same seed-defined
-    * raster; never null */
-  def synthImage(seed: Column, variant: Column): Column =
-    synth("synthImage", seed, variant)
   /** (seed long, variant int) -> PNG/BMP (seeds < 80) or baseline JPEG
     * (seeds >= 80) bytes of a seed-defined raster; never null */
   def synthMedia(seed: Column, variant: Column): Column =
-    synth("synthMedia", seed, variant)
-  private def synth(function: String, seed: Column, variant: Column): Column =
-    Kernel.call(this, function, BinaryType,
+    Kernel.call(this, "synthMedia", BinaryType,
       Seq(seed -> LongType, variant -> IntegerType), nullable = false)
 
-  /** image bytes (PNG/BMP/GIF/JPEG) -> `w x h` grayscale thumbnail bytes,
-    * null on decode failure — the resize stage */
-  def grayThumbnail(media: Column, w: Int, h: Int): Column = {
-    require(w > 0 && h > 0)
-    Kernel.call(this, "grayResize", BinaryType,
-      Seq(media -> BinaryType, lit(w) -> IntegerType, lit(h) -> IntegerType),
-      nullable = true)
-  }
   /** image bytes -> 64-bit difference hash, null on decode failure */
   def imageDHash(media: Column): Column =
     Kernel.call(this, "dhash64", LongType, Seq(media -> BinaryType),

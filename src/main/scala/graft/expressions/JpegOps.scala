@@ -1,7 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType}
 
 /** Deterministic baseline-JPEG ENCODER ([[JpegOps.synthJpeg]]) — the
   * lossy-format member of the synthetic-media family
@@ -39,38 +37,9 @@ object JpegOps {
     z ^ (z >>> 31)
   }
 
-  /** the 48x32 grayscale raster [[synthJpeg]] encodes: constant per 8x8
-    * block, block value a pure function of (seed, block index) in
-    * [16, 240) — a different mixing constant than `ImageOps.synthRaster`
-    * so JPEG-group signatures cannot collide with lossless-group ones by
-    * construction sharing. */
-  def jpegRaster(seed: Long): Array[Byte] = {
-    val out = new Array[Byte](W * H)
-    val bw = W / 8
-    var by = 0
-    while (by < H / 8) {
-      var bx = 0
-      while (bx < bw) {
-        val v = 16 + (((mix(seed * 0x9E3779B1L + by * bw + bx) >>> 16)
-          & 0xFF).toInt * 224) / 256
-        var y = 0
-        while (y < 8) {
-          var x = 0
-          while (x < 8) {
-            out((by * 8 + y) * W + bx * 8 + x) = v.toByte
-            x += 1
-          }
-          y += 1
-        }
-        bx += 1
-      }
-      by += 1
-    }
-    out
-  }
-
   /** seed -> grayscale JPEG bytes whose decode is exactly
-    * [[jpegRaster]](seed). `variant mod 5` varies the BYTES only:
+    * the seed's block raster ([[jpegBlockValues]] per 8x8 block).
+    * `variant mod 5` varies the BYTES only:
     * 0 plain, 1 COM padding, 2 restart interval 2, 3 longer COM +
     * restart interval 3, 4 PROGRESSIVE (SOF2, DC scan + AC EOB scan,
     * restart interval 2 — same coefficients delivered through the
@@ -88,7 +57,7 @@ object JpegOps {
       progressive = v == 4)
   }
 
-  /** per-block constant values of [[jpegRaster]], block-row-major */
+  /** per-block constant values of the seed's raster, block-row-major */
   private def jpegBlockValues(seed: Long): Array[Int] = {
     val bw = W / 8; val bh = H / 8
     Array.tabulate(bw * bh)(i =>
@@ -241,10 +210,4 @@ object JpegOps {
     marker(0xD9) // EOI
     out.toByteArray
   }
-
-  /** (seed long, variant int) -> baseline grayscale JPEG bytes of the
-    * seed-defined block raster; never null */
-  def synthJpeg(seed: Column, variant: Column): Column =
-    Kernel.call(this, "synthJpeg", BinaryType,
-      Seq(seed -> LongType, variant -> IntegerType), nullable = false)
 }

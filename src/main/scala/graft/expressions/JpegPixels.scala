@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types.BinaryType
 
 /** REAL pixel decode for Huffman-coded JPEG (ITU-T T.81) — the
   * dominant web image format, previously the declared lossy-codec stub.
@@ -14,8 +12,8 @@ import org.apache.spark.sql.types.BinaryType
   * dequantization, zigzag reorder, 2-D separable IDCT, integer-factor
   * chroma upsampling (box), and JFIF YCbCr->RGB. Emits the SAME
   * `(width, height, channels, pixels)` struct and raster layout as the
-  * lossless decoders, so `ImageOps.grayResize` / `ImageOps.dhash64` /
-  * `Multimodal.featurizeImage` are format-blind across all four formats.
+  * lossless decoders, so `ImageOps.grayResize` / `ImageOps.dhash64` are
+  * format-blind across all four formats.
   *
   * Declared subset: baseline (SOF0), extended-sequential (SOF1) AND
   * progressive (SOF2) Huffman, 8-bit precision, 1 or 3 components,
@@ -760,8 +758,4 @@ object JpegPixels {
     }
   }
   // scalastyle:on method.length cyclomatic.complexity
-
-  def jpegPixels(media: Column): Column =
-    Kernel.call(this, "pixels", PngPixels.pixType, Seq(media -> BinaryType),
-      nullable = true)
 }

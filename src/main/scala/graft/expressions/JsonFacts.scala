@@ -139,10 +139,6 @@ object JsonFacts {
     new GenericInternalRow(a)
   }
 
-  private val GeomTypes = java.util.Set.of(
-    "Point", "LineString", "MultiPoint", "Polygon", "MultiLineString",
-    "MultiPolygon")
-
   private val Core = "http://wis.wmo.int/spec/wcmp/2/conf/core"
 
   // fixed gate diagnostics as preshared UTF8Strings (error rows are the
@@ -355,7 +351,6 @@ object JsonFacts {
   private val phoneFields = Map("value" -> 0)
   private val externalIdFields = Map("scheme" -> 0, "value" -> 1)
   private val contactLinkFields = Map("rel" -> 0, "type" -> 1, "href" -> 2)
-  private val conceptRecFields = Map("id" -> 0, "url" -> 1)
   private val securitySchemeFields = Map("description" -> 0)
 
   /** array<small-struct> FIELD: a non-null non-object ELEMENT fails the

@@ -8,7 +8,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native kernel for the stopword-profile language-ID heuristic.
   *
   * The declarative reference implementation
-  * ([[graft.operators.TextAnalysis.languageIdFromTokens]]: per language,
+  * (the tests' `TextAnalysisReference.languageIdFromTokens`: per language,
   * `size(filter(toks, isInCollection(words)))`, argmax via `array_max`
   * over (hits, lang) structs) evaluates INTERPRETED — higher-order
   * functions have no codegen — and probes a 15-element literal list per

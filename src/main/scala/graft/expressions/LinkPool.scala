@@ -16,9 +16,9 @@ import graft.model.Wcmp2Schema
   * `array<struct<href,type>>`, computed in one native walk over the
   * already-parsed [[graft.model.Wcmp2Schema]] struct arrays.
   *
-  * Replaces the interpreted transform/filter/flatten/concat chain of
-  * [[graft.catalog.KpiRules.httpLinkPool]] (kept as the documented
-  * declarative reference), with its exact semantics, including the quirks
+  * Replaces the interpreted transform/filter/flatten/concat chain of the
+  * declarative pool (the tests' `KpiReference.httpLinkPool`), with its
+  * exact semantics, including the quirks
   * the declarative version exhibits:
   *
   *  - only entries whose href is non-null and starts with "http" enter

@@ -14,8 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `array_distinct(transform(sequence(...), i => concat_ws(" ",
   * slice(tokens(text), i+1, n))))` over
   * `tokens = filter(split(lower(text), "\\s+"), _ =!= "")`
-  * ([[graft.operators.Dedup.shinglesFromTokens]], kept as the
-  * parity-pinned reference implementation).
+  * (the tests' `DedupReference.shinglesFromTokens`, the parity-pinned
+  * reference implementation).
   *
   * The declarative form needs two Generate barriers per consumer (tokens,
   * then shingles from the token attribute) and still evaluates the

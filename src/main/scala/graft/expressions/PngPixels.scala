@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types._
 
 /** REAL pixel decode for PNG — the JDK ships the only codec PNG needs
   * (`java.util.zip.Inflater` for the zlib/DEFLATE stream), so unlike the
@@ -48,12 +46,6 @@ import org.apache.spark.sql.types._
 object PngPixels {
   /** decompression-bomb cap on the decoded raster (bytes) */
   val MaxRaster: Long = 64L * 1024 * 1024
-
-  val pixType: StructType = StructType(Seq(
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("pixels", BinaryType, nullable = false)))
 
   private val Sig = Array[Int](0x89, 0x50, 0x4E, 0x47, 0x0D, 0x0A, 0x1A, 0x0A)
 
@@ -262,8 +254,4 @@ object PngPixels {
     }
     new GenericInternalRow(Array[Any](width, height, outCh, out))
   }
-
-  def pngPixels(c: Column): Column =
-    Kernel.call(this, "pixels", pixType, Seq(c -> BinaryType),
-      nullable = true)
 }

@@ -7,7 +7,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for 64-bit SimHash — the codegen'd
   * replacement for the higher-order-function formulation in
-  * [[graft.operators.Dedup.simhash64]] (HOFs are CodegenFallback in
+  * the tests' `DedupReference.simhash64` (HOFs are CodegenFallback in
   * Spark: the HOF version walks an interpreted expression tree 64 x
   * |tokens| times per row; this one is a single static call inside
   * whole-stage codegen).

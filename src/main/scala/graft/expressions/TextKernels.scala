@@ -18,20 +18,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * chains for the title words), together a measurable slice of hot-path
   * CPU. Each kernel is one static JVM call with precompiled patterns and
   * a prebuilt hash set; semantics are IDENTICAL to the declarative
-  * formulations in [[graft.functions.Wcmp2Functions]] (kept as the
-  * documented reference implementation), asserted token-for-token by
-  * OptimizationParitySpec.
+  * formulations in the tests' `Wcmp2Reference`, asserted
+  * token-for-token by OptimizationParitySpec.
   */
 object TextKernels {
-
-  /** float-parseable per Python `float()` — such tokens are never
-    * spell-checked (pyspellchecker `_check_if_should_check`). Shares the
-    * declarative impl's pattern (Python grammar: underscores only between
-    * digits; inf/infinity/nan literals). Retained as the slow-path oracle
-    * for [[floatLikeToken]]; the hot path never runs it (r6: regex
-    * machinery was ~2/3 of this kernel's samples). */
-  private val floatRe =
-    Pattern.compile(graft.functions.Wcmp2Functions.floatLike)
 
   private lazy val dictionary: java.util.HashSet[String] = {
     val s = new java.util.HashSet[String](16384)
@@ -57,7 +47,8 @@ object TextKernels {
     }
   }
 
-  /** Exact-match equivalent of [[graft.functions.Wcmp2Functions.floatLike]]
+  /** Exact-match equivalent of the Python `float()` grammar regex
+    * (`Wcmp2Reference.floatLike` in the tests)
     * RESTRICTED to tokenizer output: tokens contain only word chars and
     * apostrophes (never '+', '-' or '.'), and the text is lowercased, so
     * the only reachable float forms are `inf`, `infinity`, `nan` and
@@ -152,7 +143,7 @@ object TextKernels {
     if (a == 0 && b == s.length) s else s.substring(a, b)
   }
 
-  /** `^[\p{L}\p{N}]+$` ([[graft.functions.Wcmp2Functions.pyIsAlnum]])
+  /** `^[\p{L}\p{N}]+$` (`Wcmp2Reference.pyIsAlnum` in the tests)
     * without regex: non-empty, every codepoint gc L* or N*. matches()
     * semantics are safe here because the inputs are whitespace-split
     * words (no embedded line terminators, so rlike's find() with anchors

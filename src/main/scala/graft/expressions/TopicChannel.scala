@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native kernel for the level-wise WIS2 topic-channel walk
-  * ([[graft.dims.Dims.validTopicChannel]] is the declarative reference
-  * implementation, parity-pinned in OptimizationParitySpec).
+  * (the tests' `TopicReference.validTopicChannel` is the declarative
+  * reference implementation, parity-pinned in OptimizationParitySpec).
   *
   * Why a kernel: the declarative walk references `split(channel, "/")`
   * ~12 times across its level checks, and it executes INSIDE the links
@@ -99,15 +99,11 @@ object TopicChannelValid {
     true
   }
 
-  /** The walk of [[graft.dims.Dims.validTopicChannel]], split-once:
-    * levels 1-3 literal origin|cache/a/wis2, level 4 centre dim (-test
-    * allowed), level 5 notification type; `data` -> policy + discipline
-    * dims then sub-discipline table/charset; metadata|reports -> charset.
+  /** The level walk, split-once: levels 1-3 literal origin|cache/a/wis2,
+    * level 4 centre dim (-test allowed), level 5 notification type;
+    * `data` -> policy + discipline dims then sub-discipline table/charset;
+    * metadata|reports -> charset. `roots` are the table's disciplines.
     * Indices below are 0-based (the declarative slice()s are 1-based). */
-  def check(ch: String, subTable: Option[Set[String]]): Boolean =
-    check(ch, subTable,
-      subTable.map(_.filter(!_.contains("/"))).getOrElse(Set.empty))
-
   private[expressions] def check(ch: String, subTable: Option[Set[String]],
       roots: Set[String]): Boolean = {
     val t = ch.split("/", -1)

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** GeoJSON bounds without a UDF.
   *
@@ -10,37 +9,17 @@ import org.apache.spark.sql.types._
   * the 4 bounds against WGS84 ranges
   * (`/root/reference/pywcmp/wcmp2/ets.py:246-253`).
   *
-  * Coordinate nesting depth varies by geometry type (SURVEY.md §7.4-8), so
-  * the raw `$.geometry.coordinates` JSON is parsed against the 4 possible
-  * array depths with `from_json` (a wrong-depth parse yields null) and the
-  * matching depth is flattened to a position list by type. All downstream
-  * math is higher-order `transform`/`array_min`/`array_max` — codegen'd,
-  * no UDF, handles Point / MultiPoint / LineString / MultiLineString /
-  * Polygon / MultiPolygon (2-D and 3-D positions: only the first two
-  * ordinates participate in bounds, like shapely's xy bounds).
+  * The position list comes flattened from the parse
+  * ([[graft.expressions.JsonFacts]] `geo_positions`, every geometry type,
+  * 2-D and 3-D positions); the math here is higher-order
+  * `transform`/`array_min`/`array_max` over it — codegen'd, no UDF. Only
+  * the first two ordinates participate, like shapely's xy bounds.
   */
 object GeoFunctions {
 
-  private val d1 = ArrayType(DoubleType)
-  private val d2 = ArrayType(d1)
-  private val d3 = ArrayType(d2)
-  private val d4 = ArrayType(d3)
-
-  /** positions: array<array<double>> of [x, y(, z)] from a raw GeoJSON
-    * geometry string; null when geometry is null/unparseable. */
-  def positions(geomJson: Column): Column = {
-    val gtype  = get_json_object(geomJson, "$.type")
-    val coords = get_json_object(geomJson, "$.coordinates")
-    when(gtype === "Point", array(from_json(coords, d1)))
-      .when(gtype.isin("LineString", "MultiPoint"), from_json(coords, d2))
-      .when(gtype.isin("Polygon", "MultiLineString"),
-            flatten(from_json(coords, d3)))
-      .when(gtype === "MultiPolygon", flatten(flatten(from_json(coords, d4))))
-  }
-
-  /** struct(minx, miny, maxx, maxy) from a PRE-MATERIALIZED position list
-    * (see [[positions]]); referencing positions via an attribute keeps the
-    * coords parse single-evaluation. */
+  /** struct(minx, miny, maxx, maxy) — shapely `.bounds` equivalent — from a
+    * PRE-MATERIALIZED position list; referencing positions via an
+    * attribute keeps the coords parse single-evaluation. */
   def boundsFromPositions(pos: Column): Column = {
     val xs = transform(pos, p => get(p, lit(0)))
     val ys = transform(pos, p => get(p, lit(1)))
@@ -49,14 +28,7 @@ object GeoFunctions {
       array_max(xs).as("maxx"), array_max(ys).as("maxy"))
   }
 
-  /** struct(minx, miny, maxx, maxy) — shapely `.bounds` equivalent. */
-  def bounds(geomJson: Column): Column = boundsFromPositions(positions(geomJson))
-
   /** All 4 bounds within [-180,180] x [-90,90] (`ets.py:250-253`). */
-  def boundsInWgs84(geomJson: Column): Column =
-    positionsInWgs84(positions(geomJson))
-
-  /** Same range check over a pre-materialized position list. */
   def positionsInWgs84(pos: Column): Column = {
     val b = boundsFromPositions(pos)
     b.getField("minx").between(-180, 180) &&

@@ -2,8 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import graft.dims.Dims
 
 /** Scalar building blocks for the rule catalog. Everything here is built
   * from `org.apache.spark.sql.functions._` (codegen'd, whole-stage
@@ -12,26 +10,6 @@ import graft.dims.Dims
 object Wcmp2Functions {
 
   /** Python-exact semantics helpers -------------------------------------- */
-
-  /** `str.strip()` — Unicode whitespace both ends ( Spark `trim` strips
-    * only ASCII space, so use a regex). */
-  def pyStrip(c: Column): Column =
-    regexp_replace(regexp_replace(c, "^\\s+", ""), "\\s+$", "")
-
-  /** `str.split()` (no args): split on whitespace runs, no empty tokens.
-    * `''.split() == []`. */
-  def pySplitWs(c: Column): Column =
-    filter(split(pyStrip(c), "\\s+"), w => w =!= "")
-
-  /** `str.capitalize()`: first char upper, rest lower; '' -> ''. */
-  def pyCapitalize(c: Column): Column =
-    when(length(c) === 0, c)
-      .otherwise(concat(upper(substring(c, 1, 1)),
-                        lower(c.substr(lit(2), length(c)))))
-
-  /** `str.isalnum()` per Python: non-empty, all chars letter/number
-    * (Unicode categories L*, N*). */
-  def pyIsAlnum(c: Column): Column = c.rlike("^[\\p{L}\\p{N}]+$")
 
   /** `str.isascii()`. */
   def pyIsAscii(c: Column): Column = c.rlike("^[\\x00-\\x7F]*$")
@@ -53,33 +31,6 @@ object Wcmp2Functions {
         "(Z|\\.[0-9]{1,6}Z|[+-]([0-9]{4}|[0-9]{6}|" +
         "[0-9]{2}:[0-9]{2}(:[0-9]{2})?))$")
     calendarOk && structural
-  }
-
-  /** Spellcheck ----------------------------------------------------------
-    * Reference: pyspellchecker `SpellChecker.unknown(split_words(text))`
-    * (`/root/reference/pywcmp/util.py:45-59`), with the vendored
-    * deterministic dictionary ([[Dims.dictionary]]).
-    * Tokenizer: `\w[\w']*\w|\w` (Unicode), lowercased — pyspellchecker's
-    * `split_words`. Tokens that parse as a float are never spell-checked
-    * (pyspellchecker `_check_if_should_check`). */
-  def spellTokens(text: Column): Column =
-    regexp_extract_all(lower(text), lit("(?U)\\w[\\w']*\\w|\\w"), lit(0))
-
-  /** float-parseable per Python `float()` — checked with a REGEX, not
-    * `try_cast`: a cast failure raises (and swallows) a stack-filling JVM
-    * exception per token, which profiling showed dominating the hot path.
-    * Python's grammar: digit groups with underscores only BETWEEN digits,
-    * plus the case-insensitive inf/infinity/nan literals
-    * (float() also strips whitespace, but tokenizer output has none). */
-  private[graft] val floatLike = {
-    val d = "[0-9](?:_?[0-9])*"
-    s"^[+-]?((?i:inf(?:inity)?|nan)|(?:$d(?:\\.(?:$d)?)?|\\.$d)(?:[eE][+-]?$d)?)$$"
-  }
-
-  def misspelled(text: Column): Column = {
-    val toks = spellTokens(text)
-    filter(toks, t =>
-      !t.rlike(floatLike) && !t.isInCollection(Dims.dictionary))
   }
 
   /** First non-null element of an array (ANSI-safe; null if none). */

@@ -29,20 +29,6 @@ object Curation {
     if (t >= 4294967296L) "g" else f"$t%08x"
   }
 
-  /** Keep-decision for one row: first 8 hex chars of md5(key ":" seed)
-    * below the rate threshold. Narrow, codegen'd, pushdown-friendly —
-    * at 100 TB this is a scan-side filter, zero shuffle. Different seeds
-    * give independent samples (disjointness is NOT guaranteed — each seed
-    * re-hashes). */
-  def hashKeep(key: Column, rate: Double, seed: String = ""): Column =
-    substring(md5(concat(key.cast(StringType), lit(":" + seed))), 1, 8) <
-      lit(thresholdHex(rate))
-
-  /** Deterministic flat sample: filter by [[hashKeep]] on `keyCol`. */
-  def hashSample(df: DataFrame, keyCol: String, rate: Double,
-                 seed: String = ""): DataFrame =
-    df.where(hashKeep(col(keyCol), rate, seed))
-
   /** Deterministic stratified sample: per-stratum keep rates (e.g.
     * up-sample rare languages, down-sample English) with a default for
     * unlisted strata. Still one narrow filter — the per-stratum threshold
@@ -171,31 +157,6 @@ object Curation {
       .drop("_cum")
     below.unionByName(boundaryKept).drop("_h", "_b")
   }
-
-  /** The naive exact form of [[tokenBudgetSample]] — one running-sum
-    * window per stratum over the WHOLE corpus. Kept as the parity/oracle
-    * reference; use the bucketed form at scale. */
-  private[graft] def tokenBudgetSampleNaive(df: DataFrame, strataCol: String,
-      tokensCol: String, budgets: Map[String, Long], defaultBudget: Long,
-      keyCol: String, seed: String = ""): DataFrame = {
-    val h = substring(
-      md5(concat(col(keyCol).cast(StringType), lit(":" + seed))), 1, 8)
-    val budgetCol = budgets.toSeq.sortBy(_._1).foldLeft(lit(defaultBudget)) {
-      case (acc, (s, b)) => when(col(strataCol) === s, lit(b)).otherwise(acc)
-    }
-    val w = Window.partitionBy(col(strataCol)).orderBy(col("_h"), col(keyCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    df.withColumn("_h", h)
-      .withColumn("_cum", coalesce(sum(col(tokensCol).cast("long")).over(w),
-        lit(0L)))
-      .where(col("_cum") < budgetCol)
-      .drop("_h", "_cum")
-  }
-
-  /** Survivors of a sequential rule funnel: rows passing EVERY rule.
-    * One conjunctive narrow filter — rules push down to the scan. */
-  def applyFunnel(df: DataFrame, rules: Seq[(String, Column)]): DataFrame =
-    df.where(rules.map(_._2).reduce(_ && _))
 
   /** Filter-funnel accounting: for each rule, how many rows that survived
     * all EARLIER rules this rule drops (the standard corpus-cleaning

@@ -64,28 +64,6 @@ object Dedup {
     while (f != null) { f(); f = resultCaches.poll() }
   }
 
-  /** whitespace tokens, lowercased */
-  def tokens(text: Column): Column =
-    filter(split(lower(text), "\\s+"), t => t =!= "")
-
-  /** distinct word n-gram shingles from a MATERIALIZED token-array
-    * attribute. The lambda body references `toks` once per output shingle
-    * and higher-order functions evaluate interpreted (no codegen), so an
-    * inlined tokenizer expression would re-split the text per shingle —
-    * measured ~40x on the bench corpus. Production paths hoist the token
-    * array behind a Generate barrier first. */
-  def shinglesFromTokens(toks: Column, n: Int = 3): Column =
-    array_distinct(
-      when(size(toks) < n, array(concat_ws(" ", toks)))
-        .otherwise(transform(sequence(lit(0), size(toks) - n),
-          i => concat_ws(" ", slice(toks, i + 1, lit(n))))))
-
-  /** Convenience text->shingles form (tests / small frames): fine when the
-    * result is consumed once, pays the per-element tokenizer re-evaluation
-    * described on [[shinglesFromTokens]] otherwise. */
-  def shingles(text: Column, n: Int = 3): Column =
-    shinglesFromTokens(tokens(text), n)
-
   /** Exact dedup via hash-groupBy: one shuffle on the 256-bit content
     * hash; keeps the smallest id per duplicate group and a BOUNDED member
     * sample (first `memberCap` ids). An unbounded `collect_list` would
@@ -108,16 +86,6 @@ object Dedup {
           .as("member_sample"))
       .where(col("n_copies") > 1)
   }
-
-  /** MinHash signature from a MATERIALIZED shingle array column: k hash
-    * permutations approximated with seed-chained xxhash64
-    * (`xxhash64(seed_i, shingle)`). The shingle argument must be an
-    * attribute, not the shingles(...) expression — higher-order lambdas
-    * re-evaluate their argument subtree per outer element, so an inlined
-    * shingle expression would be recomputed k times per row. */
-  def minhashSignatureFromShingles(sh: Column, k: Int = 64): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(sh, s => xxhash64(i, s))))
 
   /** All unordered in-bucket pairs from a collected (sorted) members
     * array: for each element x at 0-based index i, pair it with every
@@ -160,7 +128,7 @@ object Dedup {
   /** Bucket-cap diagnostics row for a signature frame: total buckets,
     * kept (2..maxBucket), dropped (> maxBucket), and member rows inside
     * the dropped buckets. */
-  private[operators] def bucketStatsOf(rows: DataFrame, keys: Seq[String],
+  private[graft] def bucketStatsOf(rows: DataFrame, keys: Seq[String],
                             maxBucket: Int): DataFrame =
     rows.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n"))
       .agg(count(lit(1)).as("n_buckets"),
@@ -184,12 +152,12 @@ object Dedup {
     // native fused shingle kernel feeding the native signature kernel —
     // one call per row each, no Generate barriers needed (the kernel
     // output is referenced exactly once, so CollapseProject inlining is
-    // harmless); the declarative tokens->shinglesFromTokens chain stays
-    // as the parity-pinned reference implementation
+    // harmless); the declarative tokens->shinglesFromTokens chain is
+    // the tests' parity-pinned reference implementation
     df.select(col(idCol).as("id"),
         graft.expressions.Ngrams.shinglesCol(col(textCol), shingleN).as("sh"))
       // native codegen'd signature (bit-identical to
-      // minhashSignatureFromShingles, the HOF reference impl)
+      // the tests' minhashSignatureFromShingles, the HOF reference)
       .select(col("id"),
         graft.expressions.MinHashSig.minhashSig(col("sh"), k).as("sig"))
       .withColumn("band", explode(sequence(lit(0), lit(bands - 1))))
@@ -215,7 +183,8 @@ object Dedup {
     * generation quadratic. Buckets beyond `maxBucket` are dropped — mass
     * duplication is exact/prefix dedup's job ([[exact]]), LSH's job is the
     * long tail (standard practice in production MinHash-LSH). The drop is
-    * NOT silent: [[minhashBucketStats]] reports dropped buckets/rows. */
+    * NOT silent: [[minhashBucketStatsFromBands]] reports dropped
+    * buckets/rows. */
   def minhashLsh(df: DataFrame, textCol: String = "text",
                  idCol: String = "doc_id", k: Int = 64, bands: Int = 16,
                  threshold: Double = 0.7, shingleN: Int = 3,
@@ -271,37 +240,15 @@ object Dedup {
     } finally bandRows.unpersist()
   }
 
-  /** [[minhashLsh]]'s bucket-cap diagnostics (one row): how many buckets
-    * the `maxBucket` cap dropped and how many band rows they held. */
-  def minhashBucketStats(df: DataFrame, textCol: String = "text",
-                         idCol: String = "doc_id", k: Int = 64,
-                         bands: Int = 16, shingleN: Int = 3,
-                         maxBucket: Int = 200): DataFrame =
-    bucketStatsOf(minhashBandRows(df, textCol, idCol, k, bands, shingleN),
-      Seq("band", "band_hash"), maxBucket)
-
-  /** [[minhashBucketStats]] over an externally-supplied band-row frame —
-    * the dumped-table seam that lets `q_lsh_bucket_stats` describe the
-    * exact bucketing `q_minhash_pairs` ran with, against a DuckDB twin
-    * recomputing the same stats from the same parquet. */
+  /** [[minhashLsh]]'s bucket-cap diagnostics (one row: how many buckets
+    * the `maxBucket` cap dropped and how many band rows they held) over an
+    * externally-supplied band-row frame — the dumped-table seam that
+    * lets `q_lsh_bucket_stats` describe the exact bucketing
+    * `q_minhash_pairs` ran with, against a DuckDB twin recomputing the
+    * same stats from the same parquet. */
   private[graft] def minhashBucketStatsFromBands(bandRows: DataFrame,
                          maxBucket: Int): DataFrame =
     bucketStatsOf(bandRows, Seq("band", "band_hash"), maxBucket)
-
-  /** 64-bit SimHash over whitespace tokens: per bit, sum of +1/-1 across
-    * token hashes, sign gives the bit. Pure higher-order expressions —
-    * one LongType column, no UDF. */
-  def simhash64(text: Column): Column = {
-    val toks = tokens(text)
-    val hashes = transform(toks, t => xxhash64(t))
-    aggregate(sequence(lit(0), lit(63)), lit(0L), (acc, b) => {
-      val bitSum = aggregate(hashes, lit(0),
-        (s, h) => s + when(call_function("shiftrightunsigned", h, b)
-          .bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1))
-      acc.bitwiseOR(when(bitSum > 0, call_function("shiftleft", lit(1L), b))
-        .otherwise(lit(0L)))
-    })
-  }
 
   /** Hamming distance between two 64-bit simhashes. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -331,12 +278,13 @@ object Dedup {
 
   /** Chunk explode over a 64-bit signature frame `(id, sig)` — the
     * pigeonhole stage shared by every Hamming-space near-dup variant
-    * (text [[simhashDedup]], image [[imageDedup]]). Chunk count derives
-    * from the caller's maxHamming via [[hammingChunks]] (default 4 =
-    * the classic 4x16-bit split, recall-exact for Hamming <= 3); offsets
-    * and masks ride as literal arrays indexed by the exploded chunk id,
-    * so the whole stage stays codegen'd with zero joins. */
-  private def hammingChunkRows(sigRows: DataFrame,
+    * (text simhash via [[hammingDedup]], image [[imageDedup]]). Chunk
+    * count derives from the caller's maxHamming via [[hammingChunks]]
+    * (default 4 = the classic 4x16-bit split, recall-exact for Hamming
+    * <= 3); offsets and masks ride as literal arrays indexed by the
+    * exploded chunk id, so the whole stage stays codegen'd with zero
+    * joins. */
+  private[graft] def hammingChunkRows(sigRows: DataFrame,
                                chunks: Int = 4): DataFrame = {
     val bounds = chunkBounds(chunks)
     sigRows
@@ -428,26 +376,11 @@ object Dedup {
     } finally sigRows.unpersist()
   }
 
-  /** SimHash near-dup: docs are candidates when any of the
-    * maxHamming+1 pigeonhole chunks of their simhash match — full
-    * recall for any maxHamming <= 63 ([[hammingChunks]]); verified with
-    * exact Hamming. Same single-scan shape as [[minhashLsh]]: persist
-    * chunk rows, bound buckets, explode in-bucket pairs with the Hamming
-    * distance computed inside the pair lambda. Cap diagnostics:
-    * [[simhashBucketStats]] (pass the same maxHamming). */
-  def simhashDedup(df: DataFrame, textCol: String = "text",
-                   idCol: String = "doc_id",
-                   maxHamming: Int = 3, maxBucket: Int = 200): DataFrame =
-    hammingDedup(
-      df.select(col(idCol).as("id"),
-        graft.expressions.SimHash64.simhash64(col(textCol)).as("sig")),
-      maxHamming, maxBucket)
-
   /** Image near-dup over REAL decoded pixels: 64-bit difference hash
     * (decode -> gray 9x8 thumbnail -> per-row left<right bits,
     * [[graft.expressions.ImageOps]]) pushed through the same
-    * Hamming-pigeonhole pairing as [[simhashDedup]] — chunk count
-    * derives from maxHamming, so recall is exact for any
+    * Hamming-pigeonhole pairing ([[hammingDedup]]) as text simhash —
+    * chunk count derives from maxHamming, so recall is exact for any
     * maxHamming <= 63 ([[hammingChunks]]). Invariant to
     * re-encoding (compression level, scanline filter) and to the
     * container FORMAT (PNG and uncompressed BMP decode to the same
@@ -464,33 +397,6 @@ object Dedup {
         graft.expressions.ImageOps.imageDHash(col(mediaCol)).as("sig"))
         .where(col("sig").isNotNull),
       maxHamming, maxBucket)
-
-  /** [[imageDedup]]'s bucket-cap diagnostics (one row); pass the SAME
-    * maxHamming/maxBucket as the dedup call so the stats describe the
-    * exact bucketing the pairing ran with. */
-  def imageBucketStats(df: DataFrame, mediaCol: String = "media",
-                       idCol: String = "doc_id",
-                       maxHamming: Int = 0, maxBucket: Int = 200): DataFrame =
-    bucketStatsOf(hammingChunkRows(
-      df.select(
-          graft.expressions.ImageOps.imageDHash(col(mediaCol)).as("sig"))
-        .where(col("sig").isNotNull)
-        .distinct() // buckets hold DISTINCT sigs, like the pairing
-        .select(col("sig").as("id"), col("sig")),
-      hammingChunks(maxHamming)),
-      Seq("chunk", "chunk_val"), maxBucket)
-
-  /** [[simhashDedup]]'s bucket-cap diagnostics (one row); pass the SAME
-    * maxHamming/maxBucket as the dedup call. */
-  def simhashBucketStats(df: DataFrame, textCol: String = "text",
-                         idCol: String = "doc_id",
-                         maxHamming: Int = 3, maxBucket: Int = 200): DataFrame =
-    bucketStatsOf(hammingChunkRows(
-      df.select(graft.expressions.SimHash64.simhash64(col(textCol)).as("sig"))
-        .distinct() // buckets hold DISTINCT sigs, like the pairing
-        .select(col("sig").as("id"), col("sig")),
-      hammingChunks(maxHamming)),
-      Seq("chunk", "chunk_val"), maxBucket)
 
   /** Exact pairwise n-gram Jaccard for a (small) candidate pair table:
     * `pairs(id_a, id_b)` joined back to texts. The scale path generates
@@ -540,20 +446,6 @@ object Dedup {
         (size(array_intersect(col("sh_a"), col("sh_b"))).cast(DoubleType) /
           size(array_union(col("sh_a"), col("sh_b")))).as("jaccard"))
 
-  /** HOF reference implementation of the random-hyperplane sign sketch
-    * (parity-tested against the native codegen'd
-    * [[graft.expressions.VectorOps.signSketchCol]]). */
-  def signSketchHof(v: Column, planes: Int): Column =
-    aggregate(sequence(lit(0), lit(planes - 1)), lit(0L),
-      (acc, p) => {
-        val dot = aggregate(
-          zip_with(v, sequence(lit(0), size(v) - 1), (x, i) =>
-            x * ((pmod(xxhash64(p, i), lit(1000L)).cast(DoubleType) / 500.0) - 1.0)),
-          lit(0.0d), (s, x) => s + x)
-        acc.bitwiseOR(when(dot > 0, call_function("shiftleft", lit(1L), p))
-          .otherwise(lit(0L)))
-      })
-
   /** The embedding sign-sketch frame `(id, vec, norm, bucket)`: random-
     * hyperplane LSH (sign sketch of `planes` pseudo-random hyperplanes,
     * derived deterministically from xxhash64 — no RNG state to ship).
@@ -571,17 +463,7 @@ object Dedup {
     * cosine runs within buckets only, computed INSIDE the pair lambda so
     * the exploded intermediate holds scalar triples, never vector pairs.
     * Same single-scan persist/unpersist shape as [[minhashLsh]]. Member
-    * buffers hold up to `maxBucket` vectors — at production dims (~768)
-    * size maxBucket accordingly (more planes => smaller buckets).
-    * Cap diagnostics: [[embeddingBucketStats]]. */
-  def embeddingNearDup(df: DataFrame, vecCol: String = "embedding",
-                       idCol: String = "vec_id", planes: Int = 16,
-                       threshold: Double = 0.99,
-                       maxBucket: Int = 1000): DataFrame =
-    embeddingNearDupFromSigs(embeddingSigRows(df, vecCol, idCol, planes),
-      threshold, maxBucket)
-
-  /** [[embeddingNearDup]]'s bucketing + in-pair cosine over an
+    * buffers hold up to `maxBucket` vectors. Runs over an
     * externally-supplied `(id, vec, norm, bucket)` frame — the seam that
     * lets `q_embedding_neardup` run against a DUMPED sig table its
     * DuckDB oracle re-derives pairs from (same-rows contract as the
@@ -792,11 +674,4 @@ object Dedup {
       .withColumn("keep", col("duplicate_of").isNull)
       .drop("_sha", "_exact_canon", "_near_canon")
   }
-
-  /** [[embeddingNearDup]]'s bucket-cap diagnostics (one row). */
-  def embeddingBucketStats(df: DataFrame, vecCol: String = "embedding",
-                           idCol: String = "vec_id", planes: Int = 16,
-                           maxBucket: Int = 1000): DataFrame =
-    bucketStatsOf(embeddingSigRows(df, vecCol, idCol, planes),
-      Seq("bucket"), maxBucket)
 }

@@ -13,16 +13,17 @@ import org.apache.spark.sql.types._
   * images ([[decodeImage]]: PNG/GIF/BMP fixed layouts + JPEG SOF walk),
   * audio ([[decodeWav]]: RIFF chunk walk) and video ([[decodeMp4]]:
   * ISO-BMFF box walk). Pixel DATA is decoded for real across EVERY
-  * image format: PNG ([[decodePngPixels]]: JDK-zlib IDAT inflate +
+  * image format: PNG (`expressions.PngPixels`: JDK-zlib IDAT inflate +
   * filter reconstruction), uncompressed BMP (`expressions.BmpPixels`),
   * GIF (`expressions.GifPixels`: real LZW + de-interlace) and JPEG,
   * both baseline AND progressive (`expressions.JpegPixels`: Huffman
   * entropy decode + T.81 Annex G successive approximation + dequantize
   * + IDCT + chroma upsample) — all four feeding the same format-blind
-  * raster pipeline ([[featurizeImage]], dHash near-dup) — plus WAV
-  * samples ([[audioFeatures]]: RIFF walk + per-frame peak/rms/silence
-  * over integer PCM 8/16/24/32, IEEE-float 32/64, G.711 A-law/µ-law,
-  * IMA and MS ADPCM, plain or WAVE_FORMAT_EXTENSIBLE framing).
+  * raster pipeline (dHash near-dup) — plus WAV samples
+  * (`expressions.AudioOps.audioFeatures`: RIFF walk + per-frame
+  * peak/rms/silence over integer PCM 8/16/24/32, IEEE-float 32/64,
+  * G.711 A-law/µ-law, IMA and MS ADPCM, plain or WAVE_FORMAT_EXTENSIBLE
+  * framing).
   * What remains a STUB (`decodeStub`/[[featurizeStub]]) is TRANSFORM
   * AUDIO codecs (MP3/AAC/opus) and VIDEO-FRAME decode (and the
   * arithmetic-coded/hierarchical JPEG modes outside JpegPixels'
@@ -131,33 +132,11 @@ object Multimodal {
       .otherwise(lit(null).cast(mediaMetaType))
   }
 
-  /** REAL pixel decode for PNG (the one raster format whose only codec
-    * dependency — zlib inflate — ships in the JDK): IDAT inflate + full
-    * scanline filter reconstruction via the codegen'd
-    * [[graft.expressions.PngPixels]] kernel. Returns
-    * `(width, height, channels, pixels)` with the raw defiltered raster
-    * bytes, or null for non-PNG / unsupported PNG variants (see the
-    * kernel's declared subset) / decompression bombs. With this, the
-    * remaining multimodal stub is LOSSY codecs only (JPEG pixels, audio
-    * samples, video frames). */
-  def decodePngPixels(media: Column): Column =
-    graft.expressions.PngPixels.pngPixels(media)
-
   /** REAL audio-container decode: WAV/RIFF chunk walk (channels, sample
     * rate, bit depth, sample count, duration) via the codegen'd
     * [[graft.expressions.WavMeta]] kernel. Null for non-WAV. */
   def decodeWav(media: Column): Column =
     graft.expressions.WavMeta.wavMeta(media)
-
-  /** REAL audio SAMPLE decode: one pass over the WAV integer-PCM frames
-    * -> `(n_frames, duration_ms, peak, rms, silence_ratio)` — the audio
-    * QC signals a corpus pipeline filters on (dead air, clipping-adjacent
-    * peaks, loudness strata) — via the codegen'd
-    * [[graft.expressions.AudioOps.audioFeatures]] kernel. Null for
-    * non-PCM/undecodable payloads (compressed audio stays behind the
-    * stub). */
-  def audioFeatures(media: Column): Column =
-    graft.expressions.AudioOps.audioFeatures(media)
 
   /** REAL video-container decode: MP4/ISO-BMFF box walk (track pixel
     * dimensions, movie duration, track count) via the codegen'd
@@ -185,27 +164,6 @@ object Multimodal {
       u16(9).as("width"), u16(11).as("height"), u16(13).as("n_frames")))
       .otherwise(lit(null).cast(mediaMetaType))
   }
-
-  /** REAL image feature extraction for PNG/BMP/GIF payloads: the gray
-    * `w x h` thumbnail (format-blind decode -> luma -> box-average pool,
-    * all in the codegen'd [[graft.expressions.ImageOps]] kernels) scaled
-    * to [0,1] as a dense float vector — directly composable with the
-    * [[Similarity]] ANN / cosine operators. Null for payloads the raster
-    * decoders reject (the lossy-codec formats stay behind
-    * [[featurizeStub]]). The decode->resize kernel appears ONCE in the
-    * plan BY CONSTRUCTION: it rides through a single-element array into
-    * a lambda variable, so every reference inside the transform binds an
-    * already-evaluated value — no reliance on whole-stage subexpression
-    * elimination deduping a twice-written expression. */
-  def featurizeImage(media: Column, w: Int = 8, h: Int = 8): Column =
-    element_at(
-      transform(
-        array(hex(graft.expressions.ImageOps.grayThumbnail(media, w, h))),
-        hx => when(hx.isNotNull,
-          transform(sequence(lit(0), lit(w * h - 1)), i =>
-            (conv(hx.substr(i * 2 + 1, lit(2)), 16, 10) / lit(255.0))
-              .cast(FloatType)))),
-      1)
 
   /** STUB feature extraction: binary -> dense float vector, derived from
     * payload hash bytes (deterministic stand-in for an image/audio

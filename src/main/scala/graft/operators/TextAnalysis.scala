@@ -23,29 +23,13 @@ object TextAnalysis {
   /** Language ID: argmax over per-language stopword hit counts; 'und'
     * (undetermined) when nothing matches. Native codegen'd kernel — one
     * lowercase + whitespace scan with prebuilt hash sets
-    * ([[graft.expressions.LangId]]); [[languageIdFromTokens]] is the
-    * declarative reference implementation it is parity-pinned against
+    * ([[graft.expressions.LangId]]); the tests'
+    * `TextAnalysisReference.languageIdFromTokens` is the declarative
+    * reference implementation it is parity-pinned against
     * (the HOF chain evaluates interpreted: measured ~3.4 ms/doc on the
     * bench corpus vs ~30 us for the kernel). */
   def languageId(text: Column): Column =
     graft.expressions.LangId.languageId(text)
-
-  /** Declarative reference implementation of [[languageId]] over a
-    * MATERIALIZED token array attribute (higher-order lambdas re-evaluate
-    * inlined argument subtrees per element — see [[analyze]]'s Generate
-    * barrier). Parity with the kernel pinned in OptimizationParitySpec. */
-  def languageIdFromTokens(toks: Column): Column = {
-    val scored = langProfiles.toSeq.sortBy(_._1).map { case (lang, words) =>
-      struct(
-        size(filter(toks, t => t.isInCollection(words))).as("hits"),
-        lit(lang).as("lang"))
-    }
-    val best = array_max(array(scored: _*))
-    when(best.getField("hits") > 0, best.getField("lang")).otherwise("und")
-  }
-
-  /** Whitespace token count. */
-  def tokenCountWs(text: Column): Column = size(tokens(text))
 
   /** Pretokenizer-regex token count — the GPT-2-style pattern family
     * (contractions, letter runs, digit runs, punctuation runs) WITHOUT
@@ -65,17 +49,6 @@ object TextAnalysis {
     * q_token_bpe driver oracle. */
   def tokenCountBpe(text: Column): Column =
     graft.expressions.Bpe.bpeTokenCount(text)
-
-  /** BPE token-id array (base bytes 0..255, merge results 256+i). */
-  def bpeTokens(text: Column): Column =
-    graft.expressions.Bpe.bpeTokenIds(text)
-
-  /** Quality signals + composite score in [0,1]:
-    * length band, punctuation ratio, stopword ratio, mean word length,
-    * repetition (distinct/total tokens). The standard cheap pre-filter
-    * stack for web-scale corpus cleaning. */
-  def qualitySignals(text: Column): Column =
-    qualitySignalsFromTokens(text, tokens(text))
 
   /** qualitySignals over a materialized token array attribute. */
   def qualitySignalsFromTokens(text: Column, toks: Column): Column = {
@@ -176,7 +149,7 @@ object TextAnalysis {
     * broadcast-able), and the equi-join + per-doc distinct count are
     * hash-partitioned, map-side partial-aggregated, AQE-skew-splittable.
     * Docs shorter than n words contribute their whole text as one gram
-    * (same convention as [[Dedup.shinglesFromTokens]]). A 64-bit hash
+    * (same convention as [[graft.expressions.Ngrams]]). A 64-bit hash
     * collision can only OVER-flag a doc — the safe direction for
     * decontamination (expected collisions ~ grams^2 / 2^64). */
   def contamination(docs: DataFrame, benchmark: DataFrame,
@@ -185,7 +158,7 @@ object TextAnalysis {
     // native fused tokenize+shingle+hash kernel: ONE Generate per side
     // instead of two, no interpreted per-shingle lambdas (the declarative
     // twin — tokens explode, shinglesFromTokens, transform(xxhash64) —
-    // stays the parity-pinned reference in Dedup/OptimizationParitySpec)
+    // stays the parity-pinned reference in OptimizationParitySpec)
     def gramRows(df: DataFrame, idAs: String): DataFrame =
       df.select(col(idCol).as(idAs),
         explode(graft.expressions.Ngrams.ngramHashes(col(textCol), n))

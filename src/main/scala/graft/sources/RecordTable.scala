@@ -54,17 +54,11 @@ object RecordTable {
     }.toDF(columns: _*)
   }
 
-  /** Mutation buckets (i mod 20) — FIXTURES.md §5. Buckets 0-13 pass all 12
-    * ETS tests; 14-19 each fail exactly one known rule. `lang` is skewed
-    * 70/10/10/10 to exercise AQE/salting on the dataset-level aggs. */
-  val failingBucketRules: Map[Int, String] = Map(
-    14 -> "identifier",           // bad centre id
-    15 -> "identifier",           // space in local id
-    16 -> "record_created_datetime", // created = "None"
-    17 -> "extent_geospatial",    // lon out of range
-    18 -> "data_policy",          // wmo:dataPolicy key removed
-    19 -> "links")                // rel -> unknown 'download'
-
+  /** `n` records mutated from the passing fixture by bucket (i mod 20),
+    * FIXTURES.md §5: buckets 0-13 pass all 12 ETS tests; 14-19 each fail
+    * exactly one known rule (identifier twice, created datetime, extent,
+    * data policy, links). `lang` is skewed 70/10/10/10 to exercise
+    * AQE/salting on the dataset-level aggs. */
   def synthesize(spark: SparkSession, n: Long,
                  partitions: Int = 0): DataFrame = {
     val template = fixtureContent("wcmp2-passing.json")
@@ -157,9 +151,4 @@ object RecordTable {
       ("edge", s"gate-edges/$name.json", name, "en", content)
     }.toDF("repo", "path", "commit", "lang", "content")
   }
-
-  /** Expected ETS-failing rows for a synthesized table of n rows (6 of
-    * every 20 buckets fail exactly one test each). */
-  def expectedFailing(n: Long): Long = failingBucketRules.keys.toSeq
-    .map(b => n / 20 + (if (n % 20 > b) 1L else 0L)).sum
 }

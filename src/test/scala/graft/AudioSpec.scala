@@ -157,19 +157,19 @@ class AudioSpec extends SparkSpec {
       Array.tabulate(8)(i => (i * 37).toByte), ulaw = true, 1, 8000)
     for (plain <- Seq(plainInt, plainFloat, plainUlaw)) {
       val a = feat(plain)
-      val b = feat(AudioOps.wrapExtensible(plain))
+      val b = feat(MediaFixtures.wrapExtensible(plain))
       assert(a != null && b != null)
       assert(a.getLong(0) == b.getLong(0) && a.getDouble(2) == b.getDouble(2)
         && a.getDouble(3) == b.getDouble(3)
         && a.getDouble(4) == b.getDouble(4))
     }
     // corrupt the GUID tail: must be rejected, not misread as PCM
-    val wrapped = AudioOps.wrapExtensible(plainInt)
+    val wrapped = MediaFixtures.wrapExtensible(plainInt)
     wrapped(50) = 0x42
     assert(feat(wrapped) == null)
     // the JDK reads our extensible framing too (independent oracle)
     val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-      new java.io.ByteArrayInputStream(AudioOps.wrapExtensible(plainInt)))
+      new java.io.ByteArrayInputStream(MediaFixtures.wrapExtensible(plainInt)))
     assert(in.getFormat.getSampleSizeInBits == 16 &&
       in.getFormat.getChannels == 1)
   }

@@ -9,7 +9,7 @@ import graft.dims.Dims
 /** S6 bundle refresh: the `pywcmp bundle sync` analog driven end-to-end
   * against a loopback HTTP server (the production java.net transport —
   * zero egress), then loaded back through the dims-dir override. */
-class BundleSyncSpec extends AnyFunSuite {
+class BundleSyncSpec extends AnyFunSuite with TempDirs {
 
   private def zipBytes(entries: (String, String)*): Array[Byte] = {
     val baos = new java.io.ByteArrayOutputStream()
@@ -56,7 +56,7 @@ class BundleSyncSpec extends AnyFunSuite {
     serve("/missing.zip", Array.empty, 404)
     server.start()
     val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-    val dest = Files.createTempDirectory("bundle-sync").toFile
+    val dest = tempDir("bundle-sync").toFile
     try {
       val r = BundleSync.sync(dest, BundleSync.Sources(
         schemaUrl = s"$base/schema.json",
@@ -83,7 +83,7 @@ class BundleSyncSpec extends AnyFunSuite {
       } finally System.clearProperty(Dims.DimsDirProperty)
 
       // one dead source -> error recorded, everything else still synced
-      val dest2 = Files.createTempDirectory("bundle-sync2").toFile
+      val dest2 = tempDir("bundle-sync2").toFile
       val r2 = BundleSync.sync(dest2, BundleSync.Sources(
         schemaUrl = s"$base/schema.json",
         codelistsZipUrl = s"$base/missing.zip",
@@ -104,7 +104,7 @@ class BundleSyncSpec extends AnyFunSuite {
             x.close()
           }
         })
-      val dest3 = Files.createTempDirectory("bundle-sync3").toFile
+      val dest3 = tempDir("bundle-sync3").toFile
       val r3 = BundleSync.sync(dest3, BundleSync.Sources(
         schemaUrl = s"$base/moved",
         codelistsZipUrl = s"$base/codelists.zip",

@@ -83,7 +83,7 @@ class CompiledCatalogSpec extends SparkSpec {
     val want = Reports.answers(table, Dt, failOnEts = false).collect()
     assert(want.map(_.getAs[String]("content")).distinct.length == 406)
     assert(want.count(_.getAs[Int]("failed") > 0) >=
-      RecordTable.expectedFailing(400))
+      SynthExpect.expectedFailing(400))
     val gate = gates(table)
     assert(gate.values.exists(_._1 == "FAILED"))
     for ((w, i) <- want.zipWithIndex) {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Curation
 
@@ -21,20 +22,25 @@ class CurationSpec extends SparkSpec {
     intercept[IllegalArgumentException](Curation.thresholdHex(1.5))
   }
 
+  /** a flat sample: every stratum at `rate` */
+  private def hashSample(df: DataFrame, keyCol: String, rate: Double,
+                         seed: String = ""): DataFrame =
+    Curation.stratifiedSample(df, "lang", Map.empty, rate, keyCol, seed)
+
   test("hashSample is deterministic, rate-accurate, seed-sensitive") {
-    val a1 = Curation.hashSample(docs, "doc_id", 0.5, "s1")
+    val a1 = hashSample(docs, "doc_id", 0.5, "s1")
       .select("doc_id").as[Long].collect().toSet
-    val a2 = Curation.hashSample(docs, "doc_id", 0.5, "s1")
+    val a2 = hashSample(docs, "doc_id", 0.5, "s1")
       .select("doc_id").as[Long].collect().toSet
     assert(a1 == a2) // same seed = identical set
-    val b = Curation.hashSample(docs, "doc_id", 0.5, "s2")
+    val b = hashSample(docs, "doc_id", 0.5, "s2")
       .select("doc_id").as[Long].collect().toSet
     assert(a1 != b) // different seed = different sample
     // 400 rows at rate .5: binomial(400,.5) is within ±60 at ~10 sigma
     assert(math.abs(a1.size - 200) < 60)
     // rate 0 keeps nothing; rate 1 keeps everything
-    assert(Curation.hashSample(docs, "doc_id", 0.0).count() == 0)
-    assert(Curation.hashSample(docs, "doc_id", 1.0).count() == 400)
+    assert(hashSample(docs, "doc_id", 0.0).count() == 0)
+    assert(hashSample(docs, "doc_id", 1.0).count() == 400)
   }
 
   test("stratifiedSample applies the per-stratum threshold exactly") {
@@ -46,7 +52,7 @@ class CurationSpec extends SparkSpec {
     assert(byLang("en") == 100) // rate 1.0: all 100 en docs kept
     assert(!byLang.contains("de")) // rate 0.0: none
     // default strata: same rows as the flat sampler at the default rate
-    val flat = Curation.hashSample(
+    val flat = hashSample(
       docs.where(col("lang").isin("es", "zh")), "doc_id", 0.3, "x")
       .select("doc_id").as[Long].collect().toSet
     val strat = sampled.where(col("lang").isin("es", "zh"))
@@ -80,7 +86,7 @@ class CurationSpec extends SparkSpec {
       df.select("doc_id").as[Long].collect().toSet
     val bucketed = ids(Curation.tokenBudgetSample(
       withTok, "lang", "n_tok", budgets, 37L, "doc_id", "tb"))
-    val naive = ids(Curation.tokenBudgetSampleNaive(
+    val naive = ids(CurationReference.tokenBudgetSampleNaive(
       withTok, "lang", "n_tok", budgets, 37L, "doc_id", "tb"))
     assert(bucketed == naive)
     // per-stratum semantics: de budget huge -> all kept; es budget 0 ->
@@ -114,10 +120,9 @@ class CurationSpec extends SparkSpec {
       .as[(Int, String, Long, Long, Long)].collect()
     assert(funnel(0) == ((1, "text_ok", 4L, 2L, 2L)))
     assert(funnel(1) == ((2, "n_ok", 2L, 1L, 1L)))
-    // survivors match applyFunnel, and drops telescope to n_in - n_out
-    val kept = Curation.applyFunnel(d, Seq(
-      "text_ok" -> (col("text") === "keep"),
-      "n_ok" -> (col("n") >= 2))).count()
+    // survivors match the conjunctive filter, and drops telescope to
+    // n_in - n_out
+    val kept = d.where(col("text") === "keep" && col("n") >= 2).count()
     assert(kept == funnel.last._5)
     assert(funnel.map(_._4).sum == 4L - kept)
   }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.dims.Dims
-import graft.functions.{Wcmp2Functions => F}
 
 /** Widened-dims behavior on NON-fixture inputs: ordinary English prose
   * must not be flagged as misspelled (pyspellchecker parity in spirit,
@@ -12,11 +11,11 @@ import graft.functions.{Wcmp2Functions => F}
   * must cover common web rels. Fixture goldens are pinned separately in
   * EtsSpec / KpiSpec / FunctionsSpec.
   */
-class DimsSpec extends SparkSpec {
+class DimsSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private def misspelled(s: String): Seq[String] =
-    Seq(s).toDF("s").select(F.misspelled(col("s")))
+    Seq(s).toDF("s").select(Wcmp2Reference.misspelled(col("s")))
       .as[Seq[String]].head()
 
   test("ordinary English prose passes the widened lexicon") {
@@ -47,7 +46,7 @@ class DimsSpec extends SparkSpec {
   }
 
   private def topicOk(ch: String): Boolean =
-    Seq(ch).toDF("c").select(Dims.validTopicChannel(col("c")))
+    Seq(ch).toDF("c").select(TopicReference.validTopicChannel(col("c")))
       .as[Boolean].head()
 
   test("level-wise topic validation accepts arbitrary real channels") {
@@ -77,12 +76,12 @@ class DimsSpec extends SparkSpec {
   }
 
   private def topicOkWith(ch: String, table: Option[Set[String]]): Boolean =
-    Seq(ch).toDF("c").select(Dims.validTopicChannel(col("c"), table))
+    Seq(ch).toDF("c").select(TopicReference.validTopicChannel(col("c"), table))
       .as[Boolean].head()
 
   test("published sub-discipline table pins levels >= 8: charset-valid " +
        "but unpublished tokens fail WITH the table, pass without") {
-    val table = Some(Dims.vendoredSubDisciplines)
+    val table = Some(TopicReference.vendoredSubDisciplines)
     val unpublished = "origin/a/wis2/de-dwd/data/core/weather/" +
       "surface-based-observations/made-up-kebab-token"
     assert(topicOkWith(unpublished, None))     // charset fallback: passes
@@ -143,7 +142,7 @@ class DimsSpec extends SparkSpec {
   }
 
   test("sub-discipline table loads from the dims-dir override") {
-    val dir = java.nio.file.Files.createTempDirectory("dims").toFile
+    val dir = tempDir("dims").toFile
     java.nio.file.Files.writeString(
       new java.io.File(dir, "sub-discipline.csv").toPath,
       "# comment\nweather/aviation/metar\n")
@@ -157,7 +156,7 @@ class DimsSpec extends SparkSpec {
   }
 
   test("dims override directory replaces a vendored table (deploy hook)") {
-    val dir = java.nio.file.Files.createTempDirectory("dims").toFile
+    val dir = tempDir("dims").toFile
     val f = new java.io.File(dir, "data-policy.csv")
     java.nio.file.Files.writeString(f.toPath, "core\nrecommended\nspecial\n")
     System.setProperty(Dims.DimsDirProperty, dir.getAbsolutePath)

@@ -2,13 +2,16 @@ package graft
 
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.{DatasetRules, Validator}
 import graft.ledger.MetricsLedger
 import graft.sources.RecordTable
 
 /** Dataset-level rules, sha256 invariant, scale synthesis, resumability. */
-class EngineSpec extends SparkSpec {
+class EngineSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   test("sha256 invariant: engine output sha equals independently computed " +
@@ -36,7 +39,7 @@ class EngineSpec extends SparkSpec {
     val n = 4000L
     val v = Validator.validate(RecordTable.synthesize(spark, n))
     val failed = v.where(col("ets_summary.FAILED") > 0).count()
-    assert(failed == RecordTable.expectedFailing(n))
+    assert(failed == SynthExpect.expectedFailing(n))
     // each failing bucket fails exactly its designated rule
     val byRule = Validator.violations(v)
       .groupBy("rule_id").count().collect()
@@ -121,14 +124,61 @@ class EngineSpec extends SparkSpec {
       ("https://eccc-msc.github.io/open-data/msc-data/obs_station/readme_obs_insitu_swobdatamart_en", false, "text/html")
     ).toDF("href", "accessible", "mime")
     val h = DatasetRules.linkHealthJoin(records, probe).collect().head
-    assert(h.getLong(h.fieldIndex("n_http_links")) == 4)
+    // K5's pool: the 4 http record links, the 2 theme schemes and the
+    // contact link; only record links are probed accessible or declare
+    // a type
+    assert(h.getLong(h.fieldIndex("n_http_links")) == 7)
     assert(h.getLong(h.fieldIndex("n_accessible")) == 3)
     assert(h.getLong(h.fieldIndex("n_valid_mime")) == 4)
   }
 
+  test("link health join and recordLinkUrls count K5's pool: concept urls, " +
+       "theme schemes, contact links") {
+    // the passing fixture plus a theme concept url; it already carries two
+    // http theme schemes and an http contact link
+    val mapper = new ObjectMapper()
+    val doc = mapper.readTree(RecordTable.fixtureContent("wcmp2-passing.json"))
+    val props = doc.get("properties")
+    props.get("themes").get(0).get("concepts").get(0).asInstanceOf[ObjectNode]
+      .put("url", "https://codes.wmo.int/concept/weather")
+    val records = Seq(("r", "p", "c", "en", mapper.writeValueAsString(doc)))
+      .toDF("repo", "path", "commit", "lang", "content")
+    // the pool's hrefs read straight off the JSON
+    def hrefs(node: JsonNode, field: String) =
+      node.findValues(field).asScala.map(_.asText)
+    val pool = (hrefs(doc.get("links"), "href") ++
+        hrefs(props.get("themes"), "url") ++
+        hrefs(props.get("themes"), "scheme") ++
+        hrefs(props.get("contacts"), "href")).filter(_.startsWith("http")).toSeq
+    assert(pool.exists(_.endsWith("concept/weather")) &&
+      pool.exists(_.contains("earth-system-discipline")) &&
+      pool.contains("https://eccc-msc.github.io/open-data"))
+    assert(DatasetRules.recordLinkUrls(records).collect().toSet == pool.toSet)
+
+    // one probe row per pooled href: alternate accessibility, a valid and
+    // an invalid probed mime
+    val probe = pool.distinct.zipWithIndex.map { case (href, i) =>
+      (href, i % 2 == 0, if (i % 3 == 0) "text/html" else "x-unknown/x")
+    }.toDF("href", "accessible", "mime")
+    def k5(v: DataFrame) = {
+      val t = v.select(explode(col("kpi_tests")).as("t"))
+        .where(col("t.id").endsWith("links_health")).collect().head
+        .getStruct(0)
+      (t.getInt(t.fieldIndex("total")), t.getInt(t.fieldIndex("score")))
+    }
+    val (total, score) = k5(Validator.validate(records,
+      graft.catalog.MapLinkProbe.fromTable(probe)))
+    val h = DatasetRules.linkHealthJoin(records, probe).collect().head
+    def n(f: String) = h.getLong(h.fieldIndex(f))
+    assert(n("n_http_links") == pool.size)
+    assert(2 * n("n_http_links") == total)
+    assert(n("n_accessible") + n("n_valid_mime") == score)
+    assert(k5(Validator.validate(records))._1 == total)
+  }
+
   test("metrics ledger: atomic commit + resume skips verified partitions " +
        "(north rule resumability)") {
-    val dir = Files.createTempDirectory("ledger").toString
+    val dir = tempDir("ledger").toString
     val ledger = new MetricsLedger(dir)
     val records = RecordTable.synthesize(spark, 400)
     val verdicts = Validator.partitionVerdicts(Validator.validate(records))
@@ -152,7 +202,7 @@ class EngineSpec extends SparkSpec {
   test("metrics ledger: a lang with a quote and a backslash commits as " +
        "valid JSON and reads back field for field") {
     val ledger = new MetricsLedger(
-      Files.createTempDirectory("ledger").toString)
+      tempDir("ledger").toString)
     val lang = "x\"y\\z"
     ledger.commit(ledger.Entry(lang, 12L, 3L, -42L, "FAIL"))
     assert(ledger.committedLangs() == Set(lang))
@@ -167,7 +217,7 @@ class EngineSpec extends SparkSpec {
 
   test("metrics ledger: langs with path separators, dots, spaces and " +
        "non-ASCII letters round-trip and stay inside the ledger directory") {
-    val parent = Files.createTempDirectory("ledger-parent")
+    val parent = tempDir("ledger-parent")
     val root = parent.resolve("ledger")
     val ledger = new MetricsLedger(root.toString)
     val langs = Seq("a/b", "a/../../x", "x y", "\u00e9")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => ScTest}
 import graft.catalog.KpiRules
+import graft.expressions.JsonFacts
 import graft.functions.{GeoFunctions, Wcmp2Functions => F}
 
 /** Unit goldens from `/root/reference/tests/run_tests.py:230-272` plus
@@ -82,20 +83,29 @@ class FunctionsSpec extends SparkSpec {
 
   test("pyCapitalize matches Python str.capitalize semantics") {
     val got = Seq("surface weather", "Surface Weather", "ABC def", "")
-      .toDF("s").select(F.pyCapitalize(col("s"))).as[String].collect()
+      .toDF("s").select(Wcmp2Reference.pyCapitalize(col("s")))
+      .as[String].collect()
     assert(got.toSeq == Seq("Surface weather", "Surface weather",
       "Abc def", ""))
   }
 
   test("pySplitWs matches Python str.split() semantics") {
     val got = Seq("  a  b\tc ", "", "   ")
-      .toDF("s").select(F.pySplitWs(col("s"))).as[Seq[String]].collect()
+      .toDF("s").select(Wcmp2Reference.pySplitWs(col("s")))
+      .as[Seq[String]].collect()
     assert(got.toSeq == Seq(Seq("a", "b", "c"), Seq(), Seq()))
   }
 
+  /** geometry `g`'s position list as the catalog reads it: the
+    * `geo_positions` the JsonFacts parse flattens out of `$.geometry` */
+  private def positions(g: String) =
+    Seq(s"""{"geometry":$g}""").toDF("content")
+      .select(JsonFacts.jsonFacts(col("content")).getField("geo_positions")
+        .as("pos"))
+
   test("geojson bounds: all geometry types, shapely .bounds equivalence") {
     def b(g: String): (Double, Double, Double, Double) =
-      Seq(g).toDF("g").select(GeoFunctions.bounds(col("g")).as("b"))
+      positions(g).select(GeoFunctions.boundsFromPositions(col("pos")).as("b"))
         .select("b.minx", "b.miny", "b.maxx", "b.maxy")
         .as[(Double, Double, Double, Double)].head()
     assert(b("""{"type":"Point","coordinates":[10,20]}""") == (10, 20, 10, 20))
@@ -114,7 +124,7 @@ class FunctionsSpec extends SparkSpec {
 
   test("wgs84 bounds check (ets.py:250-253)") {
     def ok(g: String): Boolean =
-      Seq(g).toDF("g").select(GeoFunctions.boundsInWgs84(col("g")))
+      positions(g).select(GeoFunctions.positionsInWgs84(col("pos")))
         .as[Boolean].head()
     assert(ok("""{"type":"Point","coordinates":[-180,-90]}"""))
     assert(!ok("""{"type":"Point","coordinates":[-242,28]}"""))
@@ -124,7 +134,8 @@ class FunctionsSpec extends SparkSpec {
   test("spell tokens skip numerics and find vendored-dictionary misses") {
     val mis = Seq("Surface weather observations 30 days",
                   "Surface wether observations")
-      .toDF("s").select(F.misspelled(col("s"))).as[Seq[String]].collect()
+      .toDF("s").select(Wcmp2Reference.misspelled(col("s")))
+      .as[Seq[String]].collect()
     assert(mis(0) == Seq())
     assert(mis(1) == Seq("wether"))
   }

@@ -106,7 +106,7 @@ class FuzzSpec extends AnyFunSuite {
        "and JPEG — entropy-coded data is the adversarial surface)") {
     val validPng = graft.expressions.ImageOps.synthPng(11L, 5)
     val validBmp = graft.expressions.ImageOps.synthImage(11L, 10)
-    val validGif = graft.expressions.GifPixels.encodeGif(
+    val validGif = MediaFixtures.encodeGif(
       Array.tabulate(24 * 16)(i => ((i * 7) % 256).toByte)
         .flatMap(g => Array(g, g, g)), 24, 16)
     val validJpg = graft.expressions.JpegOps.synthJpeg(91L, 3)
@@ -158,7 +158,7 @@ class FuzzSpec extends AnyFunSuite {
       graft.expressions.AudioOps.synthWavCodec(18L),
       graft.expressions.AudioOps.synthWavCodec(19L),
       graft.expressions.AudioOps.synthWavCodec(20L),
-      graft.expressions.AudioOps.wrapExtensible(
+      MediaFixtures.wrapExtensible(
         graft.expressions.AudioOps.synthWavCodec(20L)),
       graft.expressions.AudioOps.synthWavAdpcm(20L), // IMA mono
       graft.expressions.AudioOps.synthWavAdpcm(21L), // IMA stereo

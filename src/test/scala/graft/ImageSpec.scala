@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.expressions.{ImageOps, PngPixels}
-import graft.operators.{Dedup, Multimodal}
+import graft.operators.Dedup
 
 /** The image pipeline over REAL pixels: PNG encode (ImageOps.encodePng),
   * decode (PngPixels), resize (GrayResize), perceptual hash (DHash64)
@@ -294,7 +294,7 @@ class ImageSpec extends SparkSpec {
     // a ≤256-color raster: gray gradient (so PNG-gray comparison works)
     val gray = Array.tabulate(w * h)(i => ((i * 7 + 3) % 256).toByte)
     val rgb = gray.flatMap(g => Array(g, g, g))
-    val gif = GifPixels.encodeGif(rgb, w, h)
+    val gif = MediaFixtures.encodeGif(rgb, w, h)
     val ours = GifPixels.pixels(gif)
     assert(ours != null && ours.getInt(0) == w && ours.getInt(2) == 3)
     assert(java.util.Arrays.equals(ours.getBinary(3), rgb))
@@ -361,26 +361,29 @@ class ImageSpec extends SparkSpec {
     assert(near.contains((1L, 2L)) && near.contains((1L, 3L)) &&
       near.contains((2L, 3L)) && !near.exists(p => p._1 == 4L || p._2 == 4L)
       && !near.exists(p => p._1 == 5L || p._2 == 5L))
-    val stats = Dedup.imageBucketStats(rows).collect().head
+    val stats = DedupReference.hammingBucketStats(
+      rows.select(col("doc_id").as("id"),
+          ImageOps.imageDHash(col("media")).as("sig"))
+        .where(col("sig").isNotNull),
+      maxHamming = 0).collect().head
     assert(stats.getLong(stats.fieldIndex("dropped_buckets")) == 0)
     Dedup.releaseCaches()
   }
 
   test("featurizeImage yields the thumbnail as a [0,1] float vector " +
        "consistent with the grayResize kernel") {
+    // the thumbnail as a dense vector: unsigned bytes scaled to [0,1]
+    def featurize(media: Array[Byte], w: Int = 8, h: Int = 8): Seq[Float] =
+      Option(ImageOps.grayResize(media, w, h))
+        .map(_.toSeq.map(b => ((b & 0xFF) / 255.0).toFloat)).orNull
     val png = ImageOps.synthPng(5L, 4)
-    val vec = Seq(Tuple1(png)).toDF("media")
-      .select(Multimodal.featurizeImage(col("media"), 8, 8).as("v"))
-      .collect().head.getSeq[Float](0)
+    val vec = featurize(png, 8, 8)
     val kernel = ImageOps.grayResize(png, 8, 8)
     assert(vec.length == 64)
     for (i <- 0 until 64)
       assert(math.abs(vec(i) - (kernel(i) & 0xFF) / 255.0f) < 1e-6)
-    // undecodable payload -> null vector (hex(null) is null)
-    val nul = Seq(Tuple1("nope".getBytes)).toDF("media")
-      .select(Multimodal.featurizeImage(col("media")).as("v"))
-      .collect().head
-    assert(nul.isNullAt(0))
+    // undecodable payload -> null vector
+    assert(featurize("nope".getBytes) == null)
   }
 
   test("SynthJpeg emits valid JPEG that decodes BIT-EXACTLY — " +
@@ -389,7 +392,7 @@ class ImageSpec extends SparkSpec {
        "and the SOF2 progressive two-scan encoding)") {
     import graft.expressions.{JpegOps, JpegPixels}
     for (seed <- Seq(80L, 85L, 93L, 99L)) {
-      val want = JpegOps.jpegRaster(seed)
+      val want = MediaFixtures.jpegRaster(seed)
       val bytesPerVariant = (0 until 5).map(v => JpegOps.synthJpeg(seed, v))
       // bytes genuinely differ per variant...
       assert(bytesPerVariant.map(_.toSeq).distinct.size == 5, s"seed=$seed")
@@ -501,7 +504,7 @@ class ImageSpec extends SparkSpec {
       rgb(p * 3) = c._1.toByte; rgb(p * 3 + 1) = c._2.toByte
       rgb(p * 3 + 2) = c._3.toByte
     }
-    val plain = GifPixels.encodeGif(rgb, w, h)
+    val plain = MediaFixtures.encodeGif(rgb, w, h)
     // splice: background index = 2 (blue) in the LSD, and a GCE marking
     // index 1 (green) transparent, inserted before the image descriptor
     val tableEnd = 13 + 3 * 4 // header+LSD + 4-entry global table
@@ -656,7 +659,7 @@ class ImageSpec extends SparkSpec {
   test("the synthetic-PNG dHash signature evaluates identically " +
        "interpreted and codegen'd") {
     val df = spark.range(0, 64).select(
-      ImageOps.synthPng(pmod(col("id"), lit(7L)),
+      ImageOps.synthMedia(pmod(col("id"), lit(7L)),
         pmod(col("id"), lit(9L)).cast("int")).as("media"))
     val viaExpr = df.select(ImageOps.imageDHash(col("media")).as("sig"))
       .collect().map(_.getLong(0)).toSeq

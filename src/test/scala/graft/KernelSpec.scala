@@ -46,7 +46,7 @@ class KernelSpec extends SparkSpec {
       85L, 4, BmpPixels.encodeBmp(raster, 4, 3), Seq(1.0, 2.0),
       Seq(1.0, 2.0, 3.0), Seq(0L, 0L, 1L), Seq("x", null)),
     Row("le la les de et un une du des est", 90L, 11,
-      GifPixels.encodeGif(raster, 4, 3), Seq(-3.0, 0.25, 0.0, 4.0),
+      MediaFixtures.encodeGif(raster, 4, 3), Seq(-3.0, 0.25, 0.0, 4.0),
       Seq(2.0, 2.0, 2.0, 2.0), Seq(5L, 6L, 1024L), Seq("le la", "la les")),
     Row("", 0L, 0, JpegOps.synthJpeg(90L, 2), Seq.empty[Double],
       Seq.empty[Double], Seq.empty[Long], Seq.empty[String]),
@@ -83,18 +83,9 @@ class KernelSpec extends SparkSpec {
       "dot" -> VectorOps.dotProduct(col("vec"), col("vec2")),
       "sign_sketch" -> VectorOps.signSketchCol(col("vec"), 16),
       "bpe_count" -> Bpe.bpeTokenCount(text),
-      "bpe_ids" -> Bpe.bpeTokenIds(text),
-      "synth_png" -> ImageOps.synthPng(seed, variant),
-      "synth_image" -> ImageOps.synthImage(seed, variant),
       "synth_media" -> ImageOps.synthMedia(seed, variant),
-      "thumbnail" -> ImageOps.grayThumbnail(media, 3, 2),
       "dhash" -> ImageOps.imageDHash(media),
-      "synth_jpeg" -> JpegOps.synthJpeg(seed, variant),
       "jpeg_dims" -> JpegDims.jpegDims(media),
-      "png_pixels" -> PngPixels.pngPixels(media),
-      "bmp_pixels" -> BmpPixels.bmpPixels(media),
-      "gif_pixels" -> GifPixels.gifPixels(media),
-      "jpeg_pixels" -> JpegPixels.jpegPixels(media),
       "wav_meta" -> WavMeta.wavMeta(media),
       "mp4_meta" -> Mp4Meta.mp4Meta(media),
       "audio_features" -> AudioOps.audioFeatures(media),

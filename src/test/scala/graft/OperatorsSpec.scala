@@ -1,10 +1,27 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.expressions.SimHash64
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 
 class OperatorsSpec extends SparkSpec {
   import spark.implicits._
+
+  // the stages the SparkEntry queries compose, at the operators' defaults:
+  // signature frames, then pairing or bucket-cap diagnostics
+  private def simhashSigs(df: DataFrame): DataFrame =
+    df.select(col("doc_id").as("id"),
+      SimHash64.simhash64(col("text")).as("sig"))
+  private def simhashDedup(df: DataFrame, maxHamming: Int): DataFrame =
+    Dedup.hammingDedup(simhashSigs(df), maxHamming, maxBucket = 200)
+  private def embeddingNearDup(df: DataFrame): DataFrame =
+    Dedup.embeddingNearDupFromSigs(
+      Dedup.embeddingSigRows(df, "embedding", "vec_id", planes = 16),
+      threshold = 0.99, maxBucket = 1000)
+  private def minhashBucketStats(df: DataFrame, maxBucket: Int): DataFrame =
+    Dedup.minhashBucketStatsFromBands(Dedup.minhashBandRows(df, "text",
+      "doc_id", k = 64, bands = 16, shingleN = 3), maxBucket)
 
   val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog near the river bank"),
@@ -89,8 +106,8 @@ class OperatorsSpec extends SparkSpec {
     val vecs = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(1.0f, 0.0f)))
       .toDF("vec_id", "embedding")
     Dedup.minhashLsh(docs, threshold = 0.5).count()
-    Dedup.simhashDedup(docs, maxHamming = 16).count()
-    Dedup.embeddingNearDup(vecs).count()
+    simhashDedup(docs, maxHamming = 16).count()
+    embeddingNearDup(vecs).count()
     Dedup.components(Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")).count()
     Dedup.dedupCorpus(docs, threshold = 0.5).count()
     Dedup.releaseCaches()
@@ -117,8 +134,8 @@ class OperatorsSpec extends SparkSpec {
   test("bucket-cap diagnostics: dropped buckets are counted, not silent") {
     // maxBucket=2 forces the 3-doc near-dup cluster {1,2,4} to be dropped
     // wherever all three share a band bucket; with a huge cap nothing is
-    val strict = Dedup.minhashBucketStats(docs, maxBucket = 2).collect().head
-    val loose = Dedup.minhashBucketStats(docs, maxBucket = 1000)
+    val strict = minhashBucketStats(docs, maxBucket = 2).collect().head
+    val loose = minhashBucketStats(docs, maxBucket = 1000)
       .collect().head
     def f(r: org.apache.spark.sql.Row, n: String) = r.getLong(r.fieldIndex(n))
     assert(f(loose, "dropped_buckets") == 0 && f(loose, "dropped_rows") == 0)
@@ -131,7 +148,8 @@ class OperatorsSpec extends SparkSpec {
     val capped = Dedup.minhashLsh(docs, threshold = 0.0, maxBucket = 2)
     assert(capped.count() <= Dedup.minhashLsh(docs, threshold = 0.0).count())
     // simhash + embedding variants expose the same diagnostics shape
-    assert(Dedup.simhashBucketStats(docs).columns.toSeq ==
+    assert(DedupReference.hammingBucketStats(simhashSigs(docs), 3)
+      .columns.toSeq ==
       Seq("n_buckets", "kept_buckets", "dropped_buckets", "dropped_rows"))
   }
 
@@ -165,7 +183,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("simhash: identical text -> hamming 0, near text -> small hamming") {
     val sigs = docs.select(col("doc_id"),
-      Dedup.simhash64(col("text")).as("sig")).collect()
+      DedupReference.simhash64(col("text")).as("sig")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sigs(1L) == sigs(4L))
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
@@ -175,9 +193,10 @@ class OperatorsSpec extends SparkSpec {
 
   test("native MinHashSig expression is bit-identical to the HOF " +
        "reference implementation") {
-    val sh = docs.select(Dedup.shingles(col("text")).as("sh"))
+    val sh = docs.select(DedupReference.shinglesFromTokens(
+      DedupReference.tokens(col("text"))).as("sh"))
     val mismatch = sh.select(
-        Dedup.minhashSignatureFromShingles(col("sh"), 64).as("hof"),
+        DedupReference.minhashSignatureFromShingles(col("sh"), 64).as("hof"),
         graft.expressions.MinHashSig.minhashSig(col("sh"), 64).as("native"))
       .where(to_json(col("hof")) =!= to_json(col("native"))).count()
     assert(mismatch == 0)
@@ -189,7 +208,7 @@ class OperatorsSpec extends SparkSpec {
       .unionAll(Seq("", "  ", "ONE", "Mixed   CASE\ttabs\nnewlines",
         "unicode Ä ö ü tokens repeated tokens").toDF("text"))
     val mismatch = texts.select(
-        Dedup.simhash64(col("text")).as("hof"),
+        DedupReference.simhash64(col("text")).as("hof"),
         graft.expressions.SimHash64.simhash64(col("text")).as("native"))
       .where(col("hof") =!= col("native")).count()
     assert(mismatch == 0)
@@ -208,12 +227,12 @@ class OperatorsSpec extends SparkSpec {
         col("b").cast(ArrayType(DoubleType)).as("b"))
     val dotMismatch = vecs.select(
         Similarity.dot(col("a"), col("b")).as("native"),
-        Similarity.dotHof(col("a"), col("b")).as("hof"))
+        SimilarityReference.dotHof(col("a"), col("b")).as("hof"))
       .where(!(col("native") <=> col("hof"))).count()
     assert(dotMismatch == 0)
     val sketchMismatch = vecs.select(
         graft.expressions.VectorOps.signSketchCol(col("a"), 16).as("native"),
-        Dedup.signSketchHof(col("a"), 16).as("hof"))
+        DedupReference.signSketchHof(col("a"), 16).as("hof"))
       .where(!(col("native") <=> col("hof"))).count()
     assert(sketchMismatch == 0)
     // length-mismatch and null-element propagation parity
@@ -223,12 +242,12 @@ class OperatorsSpec extends SparkSpec {
         col("b").cast(ArrayType(DoubleType)).as("b"))
     val e = edge.select(
       Similarity.dot(col("a"), col("b")).as("native"),
-      Similarity.dotHof(col("a"), col("b")).as("hof")).collect().head
+      SimilarityReference.dotHof(col("a"), col("b")).as("hof")).collect().head
     assert(e.isNullAt(0) && e.isNullAt(1))
   }
 
   test("simhash dedup pairs identical and near docs") {
-    val pairs = Dedup.simhashDedup(docs, maxHamming = 16)
+    val pairs = simhashDedup(docs, maxHamming = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 4L)))
   }
@@ -239,7 +258,7 @@ class OperatorsSpec extends SparkSpec {
       (2L, Array(1.0f, 0.0f, 0.0f, 0.5f)),
       (3L, Array(-1.0f, 0.2f, 0.9f, -0.5f))
     ).toDF("vec_id", "embedding")
-    val pairs = Dedup.embeddingNearDup(vecs)
+    val pairs = embeddingNearDup(vecs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(pairs.map(p => (p._1, p._2)).toSet == Set((1L, 2L)))
     assert(math.abs(pairs.head._3 - 1.0) < 1e-9)
@@ -355,9 +374,9 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("token counting: whitespace and pretokenizer regex") {
-    val r = Seq("Hello world, it's 2026!").toDF("text").select(
-      TextAnalysis.tokenCountWs(col("text")),
-      TextAnalysis.tokenCountPretok(col("text"))).as[(Int, Int)].head()
+    val r = TextAnalysis.analyze(Seq("Hello world, it's 2026!").toDF("text"))
+      .select(
+      col("n_tokens_ws"), col("n_tokens_pretok")).as[(Int, Int)].head()
     assert(r._1 == 4)
     // Hello | world | , | it | 's | 202 | 6 | !  (digit runs cap at 3,
     // cl100k-style)
@@ -365,11 +384,11 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("quality signals: clean english text scores higher than junk") {
-    val rows = Seq(
+    val texts = Seq(
       "The quick brown fox jumps over the lazy dog. " * 10,
       "@@@@ #### $$$$ %%%% ^^^^ &&&& **** (((( )))) !!!!").toDF("text")
-      .select(TextAnalysis.qualitySignals(col("text")).as("q"))
-      .select("q.quality_score").as[Double].collect()
+    val rows = TextAnalysis.analyze(texts)
+      .select("quality.quality_score").as[Double].collect()
     assert(rows(0) > rows(1))
     assert(rows(0) >= 0.8)
     assert(rows(1) <= 0.4)
@@ -632,20 +651,20 @@ class OperatorsSpec extends SparkSpec {
     val bomb = sig ++ bombIhdr ++ chunk("IDAT", deflate(Array[Byte](0))) ++
       chunk("IEND", Array.empty)
 
-    val rows = Seq(("crafted", crafted), ("imageio", imageioPng),
-        ("interlaced", interlaced), ("truncated", truncated),
-        ("bomb", bomb))
-      .toDF("name", "media")
-      .select(col("name"),
-        Multimodal.decodePngPixels(col("media")).as("p"))
-      .select(col("name"), col("p.width"), col("p.height"),
-        col("p.channels"), col("p.pixels"),
-        sha2(col("p.pixels"), 256).as("pix_sha"))
-      .collect().map(r => r.getString(0) -> r).toMap
-
     def sha256hex(b: Array[Byte]): String =
       java.security.MessageDigest.getInstance("SHA-256").digest(b)
         .map("%02x".format(_)).mkString
+
+    // decoded through the raster dispatch the dHash and resize kernels
+    // run: (name, width, height, channels, pixels, pixel sha)
+    val rows = Seq(("crafted", crafted), ("imageio", imageioPng),
+        ("interlaced", interlaced), ("truncated", truncated),
+        ("bomb", bomb)).map { case (name, media) =>
+      val p = graft.expressions.ImageOps.decodeRaster(media)
+      name -> (if (p == null) Row(name, null, null, null, null, null)
+        else Row(name, p.getInt(0), p.getInt(1), p.getInt(2),
+          p.getBinary(3), sha256hex(p.getBinary(3))))
+    }.toMap
 
     val c = rows("crafted")
     assert((c.getInt(1), c.getInt(2), c.getInt(3)) == ((3, 5, 3)))

@@ -4,7 +4,6 @@ import java.util.regex.Pattern
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import graft.functions.{Wcmp2Functions => F}
 import graft.sources.RecordTable
 
 /** Round-6 optimization parity pins: every hot-path rewrite is asserted
@@ -73,7 +72,7 @@ class OptimizationParitySpec extends SparkSpec {
       .select(graft.expressions.Misspelled.misspelled(col("s")))
       .as[Seq[String]].collect()
     val declarative = adversarial.toDF("s")
-      .select(F.misspelled(col("s"))).as[Seq[String]].collect()
+      .select(Wcmp2Reference.misspelled(col("s"))).as[Seq[String]].collect()
     adversarial.indices.foreach { i =>
       assert(kernel(i) == declarative(i),
         s"spellcheck mismatch on '${adversarial(i)}'")
@@ -98,7 +97,7 @@ class OptimizationParitySpec extends SparkSpec {
   }
 
   test("floatLikeToken matches the floatLike regex over token space") {
-    val re = Pattern.compile(F.floatLike)
+    val re = Pattern.compile(Wcmp2Reference.floatLike)
     // token space = lowercased \w/' runs; enumerate a dense adversarial set
     val toks = Seq("inf", "infinity", "nan", "in", "infinit", "nans",
       "0", "9", "007", "1_0", "1_000_000", "1_", "_1", "1__2", "1e5",
@@ -140,9 +139,12 @@ class OptimizationParitySpec extends SparkSpec {
       "trailing spaces   ", "   leading", "tab\tseparated\ttitle")
     val df = (titles.map(Option(_)) :+ None).toDF("t")
     val declarative = df.select(
-        forall(F.pySplitWs(col("t")), F.pyIsAlnum).as("alnum"),
-        (F.pyCapitalize(F.pyStrip(regexp_replace(col("t"), acronymRe, "")))
-          === F.pyStrip(regexp_replace(col("t"), acronymRe, ""))).as("cap"),
+        forall(Wcmp2Reference.pySplitWs(col("t")), Wcmp2Reference.pyIsAlnum)
+          .as("alnum"),
+        (Wcmp2Reference.pyCapitalize(Wcmp2Reference.pyStrip(
+            regexp_replace(col("t"), acronymRe, ""))) ===
+          Wcmp2Reference.pyStrip(regexp_replace(col("t"), acronymRe, "")))
+          .as("cap"),
         size(regexp_extract_all(col("t"), lit(acronymRe), lit(1))).as("nacr"),
         col("t").rlike(bulletinRe).as("bul"))
       .collect()
@@ -187,13 +189,13 @@ class OptimizationParitySpec extends SparkSpec {
       "origin/a/wis2/ca-eccc-msc/data/core/weather/synop/z1/z2/z3")
     val tables: Seq[Option[Set[String]]] = Seq(
       None,
-      Some(Dims.vendoredSubDisciplines),
+      Some(TopicReference.vendoredSubDisciplines),
       Some(Dims.prefixClosure(Seq("weather/surface-based-observations/synop",
         "climate/x"))),
       Some(Set.empty[String]))
     tables.foreach { table =>
       val declarative = channels.toDF("c")
-        .select(Dims.validTopicChannel(col("c"), table))
+        .select(TopicReference.validTopicChannel(col("c"), table))
         .as[Boolean].collect()
       val kernel = channels.toDF("c")
         .select(graft.expressions.TopicChannelValid
@@ -205,7 +207,7 @@ class OptimizationParitySpec extends SparkSpec {
       }
       // null input: the declarative composition lands in otherwise(false)
       val nullRes = Seq(Option.empty[String]).toDF("c")
-        .select(Dims.validTopicChannel(col("c"), table).as("d"),
+        .select(TopicReference.validTopicChannel(col("c"), table).as("d"),
           graft.expressions.TopicChannelValid
             .topicChannelValid(col("c"), table).as("k"))
         .as[(Boolean, Boolean)].head()
@@ -287,7 +289,7 @@ class OptimizationParitySpec extends SparkSpec {
     val kernel = df.select(TextAnalysis.languageId(col("s")))
       .as[String].collect()
     val declarative = df.select(
-      TextAnalysis.languageIdFromTokens(TextAnalysis.tokens(col("s"))))
+      TextAnalysisReference.languageIdFromTokens(TextAnalysis.tokens(col("s"))))
       .as[String].collect()
     texts.indices.foreach { i =>
       assert(kernel(i) == declarative(i),
@@ -307,13 +309,13 @@ class OptimizationParitySpec extends SparkSpec {
         graft.expressions.Ngrams.shinglesCol(col("s"), n)).as[Seq[String]]
         .collect()
       val declS = df.select(
-        Dedup.shinglesFromTokens(Dedup.tokens(col("s")), n))
+        DedupReference.shinglesFromTokens(DedupReference.tokens(col("s")), n))
         .as[Seq[String]].collect()
       val kernelH = df.select(
         graft.expressions.Ngrams.ngramHashes(col("s"), n)).as[Seq[Long]]
         .collect()
       val declH = df.select(transform(
-        Dedup.shinglesFromTokens(Dedup.tokens(col("s")), n),
+        DedupReference.shinglesFromTokens(DedupReference.tokens(col("s")), n),
         s => xxhash64(s))).as[Seq[Long]].collect()
       texts.indices.foreach { i =>
         assert(kernelS(i) == declS(i), s"shingles mismatch n=$n on '${texts(i)}'")
@@ -411,7 +413,7 @@ class OptimizationParitySpec extends SparkSpec {
     val out = linkRecs.select(col("rec.id"),
       graft.expressions.LinkPoolExpr.linkPool(col("rec.links"),
         col("rec.properties.themes"), col("rec.properties.contacts")),
-      graft.catalog.KpiRules.httpLinkPool(col("rec"))).collect()
+      KpiReference.httpLinkPool(col("rec"))).collect()
     assert(out.length == RecordTable.fixtureNames.size + 5)
     out.foreach { r =>
       assert(r.getSeq[Row](1) == r.getSeq[Row](2), s"id ${r.getString(0)}")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.GetJsonObject
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.ExplainMode
@@ -63,6 +64,19 @@ class PlanAuditSpec extends SparkSpec {
       val (facts, js) = countParseExprs(df)
       assert(facts == 1, s"expected exactly 1 JsonFacts, got $facts")
       assert(js == 0, s"expected 0 JsonToStructs, got $js")
+    }
+  }
+
+  test("link-probe path: one JsonFacts parse, no from_json or " +
+       "get_json_object over content") {
+    val records = RecordTable.fixtures(spark)
+    val probe = spark.range(1).select(lit("https://x").as("href"),
+      lit(true).as("accessible"), lit("text/html").as("mime"))
+    for (df <- Seq(graft.engine.DatasetRules.recordLinkUrls(records).toDF(),
+        graft.engine.DatasetRules.linkHealthJoin(records, probe))) {
+      assert(countParseExprs(df) == ((1, 0)))
+      val exprs = df.queryExecution.optimizedPlan.flatMap(_.expressions)
+      assert(!exprs.exists(_.exists(_.isInstanceOf[GetJsonObject])))
     }
   }
 
@@ -160,7 +174,8 @@ class PlanAuditSpec extends SparkSpec {
     // one-file documents scan, not read from q_image_neardup's dump,
     // which arrives as one split per file
     val images = docs.select(col("doc_id"),
-      graft.expressions.ImageOps.synthPng(col("doc_id"), lit(6)).as("media"))
+      graft.expressions.ImageOps.synthMedia(col("doc_id"), lit(6))
+        .as("media"))
     val repartitioned = Seq(
         "imageDedup" -> Dedup.imageDedup(images),
         "minhashBandRows" ->

@@ -10,7 +10,7 @@ import graft.sources.RecordTable
 /** `graft.Probe` at tiny scale on the shared session: every mode runs to
   * completion and prints its lines, `rules` times the production rule
   * expressions, and failures surface on stderr without aborting the run. */
-class ProbeSpec extends SparkSpec {
+class ProbeSpec extends SparkSpec with TempDirs {
 
   private val sf = "/root/testdata/sf0.001"
   private val queries = "q_agg_summary,q_broadcast_join"
@@ -48,7 +48,7 @@ class ProbeSpec extends SparkSpec {
   }
 
   test("plans: one formatted plan file per query") {
-    val dir = Files.createTempDirectory("probe-plans")
+    val dir = tempDir("probe-plans")
     val (out, err) = probe("plans", dir.toString, queries)()
     assert(!err.contains("FAILED"), err)
     for (q <- queries.split(',')) {
@@ -112,7 +112,7 @@ class ProbeSpec extends SparkSpec {
 
   test("suite over a missing sf dir reports every failing dump and query " +
        "on stderr and returns normally") {
-    val missing = Files.createTempDirectory("probe-missing")
+    val missing = tempDir("probe-missing")
       .resolve("sf").toString
     val (out, err) = probe("suite", s"$queries,q_image_neardup")(missing)
     assert(lines(out, "[suite]").isEmpty)

@@ -1,6 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{BeforeAndAfterAll, Suite}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM per `sbt test` fork). */
@@ -24,8 +28,31 @@ object TestSpark {
       .config("spark.executor.heartbeat.maxFailures", s"${Int.MaxValue}")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // the oracle dumps are read back only inside this JVM
+    sys.addShutdownHook(SparkEntry.OracleDump.delete())
     s
   }
+}
+
+/** Temporary directories a suite creates, deleted with everything in them
+  * after its last test. */
+trait TempDirs extends BeforeAndAfterAll { this: Suite =>
+  private val dirs = new ConcurrentLinkedQueue[Path]()
+
+  def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    dirs.add(d)
+    d
+  }
+
+  override def afterAll(): Unit =
+    try dirs.forEach { d =>
+      if (Files.exists(d))
+        scala.util.Using.resource(Files.walk(d)) {
+          _.sorted(java.util.Comparator.reverseOrder())
+            .forEach(p => { Files.deleteIfExists(p); () })
+        }
+    } finally super.afterAll()
 }
 
 abstract class SparkSpec extends AnyFunSuite {

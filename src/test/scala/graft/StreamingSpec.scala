@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.engine.Validator
@@ -10,7 +9,7 @@ import graft.streaming.StreamingValidator
 /** Streaming face: the batch catalog under readStream, windowed verdicts
   * behind a watermark, stateful failure streaks. Driven synchronously via
   * the memory sink + processAllAvailable. */
-class StreamingSpec extends SparkSpec {
+class StreamingSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   def writeInput(dir: String, n: Long, tsBase: String): Unit =
@@ -21,7 +20,7 @@ class StreamingSpec extends SparkSpec {
       .write.mode("append").parquet(dir)
 
   test("streaming validation: same verdicts as batch, incrementally") {
-    val dir = Files.createTempDirectory("stream-in").toString
+    val dir = tempDir("stream-in").toString
     writeInput(dir, 200, "2026-08-16 10:00:00")
 
     val validated = StreamingValidator.readRecordStream(spark, dir,
@@ -32,18 +31,18 @@ class StreamingSpec extends SparkSpec {
     try {
       q.processAllAvailable()
       val streamed = spark.table("violations_stream").count()
-      val batch = RecordTable.expectedFailing(200)
+      val batch = SynthExpect.expectedFailing(200)
       assert(streamed == batch)
       // late-arriving second batch is still processed
       writeInput(dir, 100, "2026-08-16 10:02:00")
       q.processAllAvailable()
       assert(spark.table("violations_stream").count() ==
-        batch + RecordTable.expectedFailing(100))
+        batch + SynthExpect.expectedFailing(100))
     } finally q.stop()
   }
 
   test("windowed verdicts: per-window per-lang counts under watermark") {
-    val dir = Files.createTempDirectory("stream-in2").toString
+    val dir = tempDir("stream-in2").toString
     writeInput(dir, 200, "2026-08-16 10:00:00")
     val q = StreamingValidator.windowedVerdicts(
         StreamingValidator.readRecordStream(spark, dir), "1 minute")
@@ -76,7 +75,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stateful failure streaks fire exactly at the threshold") {
-    val dir = Files.createTempDirectory("stream-in3").toString
+    val dir = tempDir("stream-in3").toString
     // repo r14: bucket 14 (i%20==14 -> i%1000==14 since n small) fails
     // every time; with n=200, repo rX gets i and i+... single rows. Use a
     // crafted input instead: one repo failing 4x, one alternating.
@@ -113,7 +112,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming exact dedup: first occurrence per content hash, " +
        "duplicates dropped across micro-batches within the watermark") {
     import graft.streaming.StreamingDedup
-    val dir = Files.createTempDirectory("stream-dedup").toString
+    val dir = tempDir("stream-dedup").toString
     def write(rows: Seq[(String, String)], ts: String): Unit =
       rows.zipWithIndex.map { case ((path, c), i) =>
         ("r", path, s"c$i", "en", c, java.sql.Timestamp.valueOf(ts))
@@ -146,7 +145,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.StreamingDedup
     import graft.operators.Dedup
     import org.apache.spark.sql.DataFrame
-    val dir = Files.createTempDirectory("stream-glue").toString
+    val dir = tempDir("stream-glue").toString
     val textA = "the quick brown fox jumps over the lazy dog near the " +
       "quiet river bank at dawn"
     val textA2 = textA + " today" // near-dup, high but non-1.0 jaccard
@@ -200,7 +199,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming near-dup candidates: stateful LSH buckets pair later " +
        "docs with the bucket owner across micro-batches") {
     import graft.streaming.StreamingDedup
-    val dir = Files.createTempDirectory("stream-neardup").toString
+    val dir = tempDir("stream-neardup").toString
     val textA = "the quick brown fox jumps over the lazy dog near the " +
       "quiet river bank at dawn"
     val textB = "completely different content about distributed query " +

@@ -9,11 +9,11 @@ import graft.sources.{RecordTable, UrlSource}
   * file:// URLs (same java.net code path as http://; this sandbox has no
   * egress). Fetched tables flow straight into the validator; fetch
   * failures become rows, not exceptions. */
-class UrlSourceSpec extends SparkSpec {
+class UrlSourceSpec extends SparkSpec with TempDirs {
 
   test("fetchTable: production fetcher over file:// URLs -> records " +
        "table -> full validation") {
-    val dir = Files.createTempDirectory("urlsrc")
+    val dir = tempDir("urlsrc")
     val names = Seq("wcmp2-passing.json", "wcmp2-failing.json")
     val urls = names.map { n =>
       val f = dir.resolve(n)
@@ -188,8 +188,11 @@ class UrlSourceSpec extends SparkSpec {
         "https://codes.wmo.int/earth-system-discipline"))
       val health = graft.engine.DatasetRules
         .linkHealthJoin(df, probeDf).collect().head
-      assert(health.getLong(health.fieldIndex("n_http_links")) == 3)
+      // the same K5 pool: 3 record links + the theme scheme, links_health
+      // total 8 = 2 x 4 and score 5 = 2 accessible + 3 valid mimes
+      assert(health.getLong(health.fieldIndex("n_http_links")) == 4)
       assert(health.getLong(health.fieldIndex("n_accessible")) == 2)
+      assert(health.getLong(health.fieldIndex("n_valid_mime")) == 3)
     } finally server.stop(0)
   }
 }
