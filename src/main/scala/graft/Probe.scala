@@ -1,7 +1,10 @@
 package graft
 
+import java.net.URI
+import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
 import scala.util.control.NonFatal
 
@@ -13,14 +16,16 @@ import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shims
 import graft.catalog.{EtsRules, KpiRules, OfflineLinkProbe}
-import graft.engine.{DatasetRules, Validator}
+import graft.engine.{CompiledCatalog, DatasetRules, Validator}
+import graft.service.Wcmp2Service
 import graft.sources.RecordTable
 
 /** The measurement main: `sbt "runMain graft.Probe MODE ARGS"`, MODE one
   * of `suite [q1,...]`, `plans OUT_DIR [q1,...]`, `validator ROWS PASSES`,
-  * `rules ROWS` or `skew ROWS` (README "Measuring" says what each
-  * prints). One [[StageListener]] serves every mode. `SPARK_GRAFT_CPUS`
-  * sets the local thread count (default 32); `suite` and `plans` read
+  * `rules ROWS`, `skew ROWS` or `service POSTS` (README
+  * "Measuring" says what each prints). One [[StageListener]] serves
+  * every mode. `SPARK_GRAFT_CPUS` sets the local thread count (default
+  * 32); `suite` and `plans` read
   * `SPARK_GRAFT_SF_DIR`. A step that throws non-fatally is reported on
   * stderr and the run goes on. Not driver contract: `Bench`, `Verify`
   * and `Scaling` stay the frozen instruments. */
@@ -92,9 +97,10 @@ object Probe {
         validator(spark, rows.toLong, passes.toInt)
       case Seq("rules", rows) => rules(spark, rows.toLong)
       case Seq("skew", rows) => skew(spark, stages, rows.toLong)
+      case Seq("service", posts) => service(spark, posts.toInt)
       case _ => throw new IllegalArgumentException("usage: graft.Probe " +
         "suite [q1,...] | plans OUT_DIR [q1,...] | validator ROWS PASSES " +
-        "| rules ROWS | skew ROWS")
+        "| rules ROWS | skew ROWS | service POSTS")
     } finally spark.sparkContext.removeSparkListener(stages)
   }
 
@@ -271,5 +277,84 @@ object Probe {
     println(s"""{"metric":"skew_resilience","rows":$rows,""" +
       s""""cpus":${spark.sparkContext.defaultParallelism},""" +
       s""""hot_lang_share":0.9,${parts.mkString(",")}}""")
+  }
+
+  /** `n` threads, each making `calls` calls `call(thread, i)` back to
+    * back: the sorted per-call ms, the wall seconds, and how many calls
+    * returned false or threw. */
+  private def closedLoop(n: Int, calls: Int)(call: (Int, Int) => Boolean)
+      : (Seq[Double], Double, Int) = {
+    val ns = Array.ofDim[Long](n, calls)
+    val bad = new AtomicInteger
+    val threads = (0 until n).map { t =>
+      new Thread(() => for (i <- 0 until calls) {
+        val t0 = System.nanoTime()
+        val ok = try call(t, i) catch { case NonFatal(_) => false }
+        ns(t)(i) = System.nanoTime() - t0
+        if (!ok) bad.incrementAndGet()
+      })
+    }
+    val (_, wall) = Bench.time {
+      threads.foreach(_.start())
+      threads.foreach(_.join())
+    }
+    (ns.flatten.sorted.toSeq.map(_ / 1e6), wall, bad.get)
+  }
+
+  /** The service under closed-loop load. Builds the catalog and starts
+    * [[Wcmp2Service]] on an ephemeral port. The requests cycle through
+    * ETS, ETS with `fail_on_schema_validation=false` and KPI over a
+    * passing and a failing record. After a warm-up (the 32-client level,
+    * unreported) it prints one line per load level: p50 and p99 ms, requests per second, and the calls that
+    * failed or answered other than the warm-up did.
+    *  - `direct threads=1|4`: `CompiledCatalog.run` called in process,
+    *    no HTTP; 4 is the server's pool size, so this is what the
+    *    evaluator lock lets the server reach.
+    *  - `http clients=1|8|32`: that many threads each send `posts` POSTs
+    *    back to back through one shared JDK `HttpClient` (HTTP/1.1: one
+    *    kept-alive connection per busy thread). */
+  private def service(spark: SparkSession, posts: Int): Unit = {
+    val runDatetime = "2026-01-01T00:00:00Z"
+    val catalog = CompiledCatalog.build(spark)
+    val server = Wcmp2Service.start(0, catalog, runDatetime)
+    def report(level: String, r: (Seq[Double], Double, Int)): Unit = {
+      val (ms, wall, bad) = r
+      println(f"[service] $level calls=${ms.length} " +
+        f"p50_ms=${ms(ms.length / 2)}%.2f " +
+        f"p99_ms=${ms(math.min(ms.length - 1, ms.length * 99 / 100))}%.2f " +
+        f"req_per_s=${ms.length / wall}%.0f bad=$bad")
+    }
+    try {
+      val base = s"http://localhost:${server.getAddress.getPort}/processes"
+      val records = Seq("wcmp2-passing.json", "wcmp2-failing.json")
+        .map(RecordTable.fixtureContent)
+      val requests = for {
+        record <- records
+        (id, extra) <- Seq(Wcmp2Service.EtsProcessId -> "",
+          Wcmp2Service.EtsProcessId -> ""","fail_on_schema_validation":false""",
+          Wcmp2Service.KpiProcessId -> "")
+      } yield HttpRequest.newBuilder(URI.create(s"$base/$id/execution"))
+        .header("Content-Type", "application/json")
+        .POST(HttpRequest.BodyPublishers.ofString(
+          s"""{"inputs":{"record":$record$extra}}""")).build()
+      val client = HttpClient.newBuilder()
+        .version(HttpClient.Version.HTTP_1_1).build()
+      def send(r: HttpRequest): (Int, String) = {
+        val resp = client.send(r, HttpResponse.BodyHandlers.ofString())
+        (resp.statusCode, resp.body)
+      }
+      val expected = requests.map(send)
+      def http(n: Int) = closedLoop(n, posts) { (t, i) =>
+        val k = (t + i) % requests.size
+        send(requests(k)) == expected(k)
+      }
+      // the JIT keeps speeding the evaluator up for thousands of requests
+      http(32)
+      for (n <- Seq(1, 4))
+        report(s"direct threads=$n", closedLoop(n, posts) { (t, i) =>
+          catalog.run(records((t + i) % records.size), runDatetime).parseOk
+        })
+      for (n <- Seq(1, 8, 32)) report(s"http clients=$n", http(n))
+    } finally server.stop(0)
   }
 }

@@ -56,14 +56,13 @@ object MapLinkProbe {
     * spelled out rather than OOMing mid-collect at 100 TB. */
   val MaxLiteralEntries: Int = 10000
 
-  /** Collect a probe dimension table (href, accessible, mime) into an
-    * in-plan probe. Only for literal-sized dims (<= [[MaxLiteralEntries]]
-    * rows, enforced via a limit-probe before the collect); larger probe
-    * dims must go through the join path,
-    * [[graft.engine.DatasetRules.linkHealthJoin]]. */
+  /** Collect a probe dimension table (href, accessible, mime), one entry
+    * per href ([[byHref]]), into an in-plan probe. Only for literal-sized
+    * dims (<= [[MaxLiteralEntries]] hrefs, enforced via a limit-probe
+    * before the collect); larger probe dims must go through the join
+    * path, [[graft.engine.DatasetRules.linkHealthJoin]]. */
   def fromTable(probeTable: org.apache.spark.sql.DataFrame): MapLinkProbe = {
-    val rows = probeTable.select("href", "accessible", "mime")
-      .limit(MaxLiteralEntries + 1).collect()
+    val rows = byHref(probeTable).limit(MaxLiteralEntries + 1).collect()
     require(rows.length <= MaxLiteralEntries,
       s"probe dim exceeds $MaxLiteralEntries entries - an in-plan literal " +
         "map would bloat the driver and generated code; join it instead " +
@@ -71,6 +70,18 @@ object MapLinkProbe {
     MapLinkProbe(rows
       .map(r => r.getString(0) -> (r.getBoolean(1), r.getString(2))).toMap)
   }
+
+  /** A probe dimension `(href, accessible, mime)` collapsed to one row per
+    * href, as both K5 paths read it ([[fromTable]] and
+    * [[graft.engine.DatasetRules.linkHealthJoin]]): a link is accessible
+    * when any of its rows says so, and its mime is the least non-null
+    * mime of its rows. Row order never matters, so a dimension merged
+    * from several probe passes scores the same on both paths. */
+  def byHref(probeTable: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    probeTable.groupBy("href").agg(
+      coalesce(max(col("accessible")), lit(false)).as("accessible"),
+      min(col("mime")).as("mime"))
 }
 
 /** One KPI compiled to Catalyst expressions: unlike ETS there is no early

@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.catalog.MapLinkProbe
 import graft.dims.Dims
 
 /** Dataset-level constraints (SURVEY.md §2.4 A6-A9) — the checks that only
@@ -206,18 +207,19 @@ object DatasetRules {
   }
 
   /** K4/K5 at scale with a REAL probe table: explode each record's K5
-    * pool once, join the probe dimension on href (broadcast when small,
-    * SMJ otherwise), aggregate health per record. For a probe table with
-    * one row per href, `2 * n_http_links` is K5's total and
-    * `n_accessible + n_valid_mime` its score under
-    * [[graft.catalog.MapLinkProbe]] of the same table. This is the
-    * production path that replaces [[graft.catalog.OfflineLinkProbe]]'s
-    * in-row stub. */
+    * pool once, join the probe dimension, collapsed to one row per href
+    * ([[graft.catalog.MapLinkProbe.byHref]]), on href (broadcast when
+    * small, SMJ otherwise), aggregate health per record. `2 *
+    * n_http_links` is K5's total and `n_accessible + n_valid_mime` its
+    * score under [[graft.catalog.MapLinkProbe.fromTable]] of the same
+    * table. This is the production path that replaces
+    * [[graft.catalog.OfflineLinkProbe]]'s in-row stub. */
   def linkHealthJoin(records: DataFrame, probeTable: DataFrame): DataFrame = {
     val links = pooledLinks(records)
       .select(col("repo"), col("path"), col("commit"),
         col("p.href").as("href"), col("p.type").as("declared_type"))
-    links.join(broadcast(probeTable), Seq("href"), "left")
+    links.join(broadcast(MapLinkProbe.byHref(probeTable)), Seq("href"),
+        "left")
       .groupBy("repo", "path", "commit")
       .agg(
         count(lit(1)).as("n_http_links"),

@@ -4,7 +4,6 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.Executors
 
 import org.apache.spark.sql.SparkSession
 
@@ -46,8 +45,9 @@ import graft.engine.{CompiledCatalog, Reports}
   * [[graft.engine.Validator]] table catalog, so answers are byte-identical
   * to [[graft.engine.Reports.validateOne]] and to batch answers at any
   * scale. The embedded server is the JDK's `com.sun.net.httpserver` on a
-  * 4-thread pool; requests parse and answer concurrently and hold the
-  * evaluator's lock only while evaluating.
+  * 4-thread pool with `TCP_NODELAY` on ([[HttpServers]]); requests parse
+  * and answer concurrently and hold the evaluator's lock only while
+  * evaluating.
   */
 object Wcmp2Service {
 
@@ -157,8 +157,7 @@ object Wcmp2Service {
     * responses fully deterministic (tests). */
   def start(port: Int, catalog: CompiledCatalog,
             runDatetime: String = ""): HttpServer = {
-    val server = HttpServer.create(new InetSocketAddress(port), 0)
-    server.setExecutor(Executors.newFixedThreadPool(4))
+    val server = HttpServers.create(new InetSocketAddress(port))
     server.createContext("/", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         val resp =

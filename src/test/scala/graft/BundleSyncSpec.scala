@@ -26,9 +26,9 @@ class BundleSyncSpec extends AnyFunSuite with TempDirs {
   test("sync fetches schema + codelist/topic zips + IANA csv into a dims " +
        "dir the engine loads via the override; per-artifact failures " +
        "don't void the rest") {
-    import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-    val server = HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    import com.sun.net.httpserver.{HttpExchange, HttpHandler}
+    val server = graft.service.HttpServers.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0))
     def serve(path: String, body: Array[Byte], status: Int = 200): Unit =
       server.createContext(path, new HttpHandler {
         def handle(x: HttpExchange): Unit = {

@@ -132,6 +132,14 @@ class EngineSpec extends SparkSpec with TempDirs {
     assert(h.getLong(h.fieldIndex("n_valid_mime")) == 4)
   }
 
+  /** K5's (total, score) in the one record of a validated frame */
+  private def k5(v: DataFrame): (Int, Int) = {
+    val t = v.select(explode(col("kpi_tests")).as("t"))
+      .where(col("t.id").endsWith("links_health")).collect().head
+      .getStruct(0)
+    (t.getInt(t.fieldIndex("total")), t.getInt(t.fieldIndex("score")))
+  }
+
   test("link health join and recordLinkUrls count K5's pool: concept urls, " +
        "theme schemes, contact links") {
     // the passing fixture plus a theme concept url; it already carries two
@@ -160,12 +168,6 @@ class EngineSpec extends SparkSpec with TempDirs {
     val probe = pool.distinct.zipWithIndex.map { case (href, i) =>
       (href, i % 2 == 0, if (i % 3 == 0) "text/html" else "x-unknown/x")
     }.toDF("href", "accessible", "mime")
-    def k5(v: DataFrame) = {
-      val t = v.select(explode(col("kpi_tests")).as("t"))
-        .where(col("t.id").endsWith("links_health")).collect().head
-        .getStruct(0)
-      (t.getInt(t.fieldIndex("total")), t.getInt(t.fieldIndex("score")))
-    }
     val (total, score) = k5(Validator.validate(records,
       graft.catalog.MapLinkProbe.fromTable(probe)))
     val h = DatasetRules.linkHealthJoin(records, probe).collect().head
@@ -174,6 +176,34 @@ class EngineSpec extends SparkSpec with TempDirs {
     assert(2 * n("n_http_links") == total)
     assert(n("n_accessible") + n("n_valid_mime") == score)
     assert(k5(Validator.validate(records))._1 == total)
+  }
+
+  test("a probe table with two rows for one href scores K5 the same by " +
+       "join and in plan, whatever the row order") {
+    val records = RecordTable.fixtures(spark)
+      .where(col("path").endsWith("wcmp2-passing.json"))
+    val pool = DatasetRules.recordLinkUrls(records).collect().sorted.toSeq
+    assert(pool.size >= 3)
+    // one row per href, then conflicting second rows for two of them:
+    // accessibility and mime disagree, and one first row has no mime
+    val rows = pool.zipWithIndex.map { case (href, i) =>
+      (href, i % 2 == 1, if (i == 0) null else "x-unknown/x")
+    } ++ Seq((pool(0), true, "text/html"), (pool(1), false, "text/csv"))
+    val accessible = pool.count(h => rows.exists(r => r._1 == h && r._2))
+    val answers = Seq(rows, rows.reverse).map { ordered =>
+      val probe = ordered.toDF("href", "accessible", "mime")
+      val h = DatasetRules.linkHealthJoin(records, probe).collect().head
+      def n(f: String) = h.getLong(h.fieldIndex(f))
+      val (total, score) =
+        k5(Validator.validate(records,
+          graft.catalog.MapLinkProbe.fromTable(probe)))
+      assert(n("n_http_links") == pool.size)
+      assert(n("n_accessible") == accessible)
+      assert(2 * n("n_http_links") == total)
+      assert(n("n_accessible") + n("n_valid_mime") == score)
+      (total, score)
+    }
+    assert(answers.distinct.size == 1, answers)
   }
 
   test("metrics ledger: atomic commit + resume skips verified partitions " +

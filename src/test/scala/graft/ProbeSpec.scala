@@ -110,6 +110,21 @@ class ProbeSpec extends SparkSpec with TempDirs {
     }
   }
 
+  test("service: p50, p99 and req/s calling the catalog directly and over " +
+       "HTTP at 1, 8 and 32 clients, every answer right") {
+    val (out, err) = probe("service", "3")()
+    assert(err.isEmpty, err)
+    val table = lines(out, "[service] ")
+    assert(table.map(_.split("\\s+").slice(1, 3).mkString(" ")) == Seq(
+      "direct threads=1", "direct threads=4", "http clients=1",
+      "http clients=8", "http clients=32"), out)
+    table.foreach { l =>
+      for (k <- Seq("p50_ms=", "p99_ms=", "req_per_s="))
+        assert(l.contains(k), l)
+      assert(l.endsWith(" bad=0"), l)
+    }
+  }
+
   test("suite over a missing sf dir reports every failing dump and query " +
        "on stderr and returns normally") {
     val missing = tempDir("probe-missing")

@@ -1,10 +1,12 @@
 package graft
 
 import java.net.{HttpURLConnection, URI}
+import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.time.Instant
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.HttpServer
@@ -13,7 +15,7 @@ import org.apache.spark.sql.execution.{LocalTableScanExec, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 
-import graft.service.Wcmp2Service
+import graft.service.{HttpServers, Wcmp2Service}
 import graft.sources.RecordTable
 
 /** End-to-end drive of the OGC API - Processes-shaped service
@@ -194,6 +196,41 @@ class ServiceSpec extends SparkSpec with BeforeAndAfterAll {
     threads.foreach(_.start())
     threads.foreach(_.join())
     assert(right.get == 4 * perClient)
+  }
+
+  test("back-to-back POSTs on one kept-alive connection answer without " +
+       "the ~40 ms Nagle/delayed-ACK stall") {
+    val client = HttpClient.newBuilder()
+      .version(HttpClient.Version.HTTP_1_1).build()
+    val request = HttpRequest.newBuilder(URI.create(base + EtsPath))
+      .header("Content-Type", "application/json")
+      .POST(HttpRequest.BodyPublishers.ofString(
+        execBody("wcmp2-passing.json"))).build()
+    def post(): Long = {
+      val t0 = System.nanoTime()
+      val r = client.send(request, HttpResponse.BodyHandlers.ofString())
+      val ns = System.nanoTime() - t0
+      assert(r.statusCode == 200 && r.body.contains("\"PASSED\":12"))
+      ns
+    }
+    (0 until 10).foreach(_ => post()) // warm, open the connection
+    val ms = Vector.fill(60)(post() / 1e6).sorted
+    // a stalled response waits for the client's delayed ACK (>= 40 ms);
+    // a warm evaluation takes a few ms
+    assert(ms(ms.size / 2) < 20.0, s"sorted POST ms: $ms")
+  }
+
+  test("the server's pool threads are named daemons, so a stopped " +
+       "server's idle pool keeps no JVM alive") {
+    val s = Wcmp2Service.start(port = 0, TestCatalog.compiled,
+      "2026-08-16T00:00:00Z")
+    try assert(http("GET", "/processes",
+      at = s"http://localhost:${s.getAddress.getPort}")._1 == 200)
+    finally s.stop(0)
+    val pool = Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(_.getName.startsWith(HttpServers.ThreadPrefix))
+    assert(pool.nonEmpty)
+    assert(pool.forall(_.isDaemon), pool.filterNot(_.isDaemon).map(_.getName))
   }
 
   test("each POST is exactly one SQL execution, planned to a local table " +

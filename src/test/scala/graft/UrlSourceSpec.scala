@@ -55,9 +55,9 @@ class UrlSourceSpec extends SparkSpec with TempDirs {
 
   test("probe parity with check_url: HEAD-hostile servers fall back to " +
        "GET; redirects are judged on the FINAL response's status < 300") {
-    import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-    val server = HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    import com.sun.net.httpserver.{HttpExchange, HttpHandler}
+    val server = graft.service.HttpServers.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0))
     def ctx(path: String)(f: HttpExchange => Unit): Unit =
       server.createContext(path, new HttpHandler {
         def handle(x: HttpExchange): Unit = { f(x); x.close() }
@@ -115,11 +115,11 @@ class UrlSourceSpec extends SparkSpec with TempDirs {
   test("production link probe: real HTTP HEAD fetches (loopback server) " +
        "build the probe dim; MapLinkProbe drives K4/K5 scores end-to-end") {
     import spark.implicits._
-    import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+    import com.sun.net.httpserver.{HttpExchange, HttpHandler}
     // loopback HTTP server — the probe runs the PRODUCTION java.net
     // HTTP(S) code path, zero egress
-    val server = HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val server = graft.service.HttpServers.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0))
     def serve(path: String, status: Int, ctype: String): Unit =
       server.createContext(path, new HttpHandler {
         def handle(x: HttpExchange): Unit = {
