@@ -29,10 +29,14 @@ object DatasetRules {
     * One wide `agg` = one shuffle-free partial-aggregate pass + a 1-row
     * final reduce. Returns one row per tracked column (long form).
     * Quantiles are emitted as SCALAR q50/q95/q99 columns (flat, orderable,
-    * oracle-comparable) rather than an array column. */
+    * oracle-comparable) rather than an array column. The content length
+    * is projected once per row below the aggregate; its five aggregates
+    * read that attribute (null exactly where `content` is null). */
   def columnStats(records: DataFrame): DataFrame = {
-    val len = length(col("content")).cast(DoubleType)
-    val wide = records.agg(
+    val len = col("content_len")
+    val wide = records.select(col("repo"), col("path"), col("commit"),
+        col("lang"), length(col("content")).cast(DoubleType).as("content_len"))
+      .agg(
       count(lit(1)).as("n_rows"),
       // string key columns: null counts + approx distinct (HLL++)
       sum(when(col("repo").isNull, 1).otherwise(0)).as("repo_nulls"),
@@ -44,7 +48,7 @@ object DatasetRules {
       sum(when(col("lang").isNull, 1).otherwise(0)).as("lang_nulls"),
       approx_count_distinct(col("lang")).as("lang_distinct"),
       // content length: full numeric profile incl. quantile sketch
-      sum(when(col("content").isNull, 1).otherwise(0)).as("content_nulls"),
+      sum(when(len.isNull, 1).otherwise(0)).as("content_nulls"),
       min(len).as("content_len_min"),
       max(len).as("content_len_max"),
       avg(len).as("content_len_avg"),
@@ -122,12 +126,15 @@ object DatasetRules {
   /** A9: referential-integrity violations via broadcast LEFT ANTI joins
     * against the vendored dims: the centre-id embedded in the record id
     * must exist in the centre dim (the dataset-scale version of ETS J1).
-    * Emits violation rows in the engine's standard shape. */
-  def referentialViolations(records: DataFrame): DataFrame = {
+    * Emits violation rows in the engine's standard shape. `id` is the
+    * record id; pass [[Validator.validate]]'s `metadata_id` to reuse its
+    * extraction. */
+  def referentialViolations(records: DataFrame,
+      id: Column = get_json_object(col("content"), "$.id")): DataFrame = {
     val spark = records.sparkSession
     val centres = broadcast(Dims.dimDf(spark, "centre", Dims.centreIds))
     val withCentre = records.withColumn("centre_id",
-      get(split(get_json_object(col("content"), "$.id"), ":"), lit(3)))
+      get(split(id, ":"), lit(3)))
     withCentre
       .where(col("centre_id").isNotNull &&
         !col("centre_id").endsWith("-test"))

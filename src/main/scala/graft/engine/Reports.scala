@@ -41,7 +41,8 @@ object Reports {
       substring(col("sha256"), 13, 4), lit("-"),
       substring(col("sha256"), 17, 12))
 
-  /** ETS report JSON column per validated record (`ets.py:78-114`). */
+  /** ETS report JSON column per validated record (`ets.py:78-114`). Reads
+    * [[Validator.validate]]'s columns, `metadata_id` among them. */
   def etsReportJson(runDatetime: String): Column =
     etsReportJson(lit(runDatetime))
 
@@ -54,7 +55,7 @@ object Reports {
       col("ets_summary").as("summary"),
       col("ets_tests").as("tests"),
       runDatetime.as("datetime"),
-      get_json_object(col("content"), "$.id").as("metadata_id"),
+      col("metadata_id"),
       lit(GeneratedBy).as("generated_by")), Map("ignoreNullFields" -> "true"))
 
   /** KPI report JSON column per validated record (`kpi.py:521-557`). */
@@ -66,7 +67,7 @@ object Reports {
     to_json(struct(
       reportId("kpi").as("id"),
       lit("kpi").as("report_type"),
-      get_json_object(col("content"), "$.id").as("metadata_id"),
+      col("metadata_id"),
       runDatetime.as("datetime"),
       lit(GeneratedBy).as("generated_by"),
       col("kpi_tests").as("tests"),

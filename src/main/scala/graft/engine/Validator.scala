@@ -93,7 +93,9 @@ object Validator {
       col("_p.rec.properties.themes"), col("_p.rec.properties.contacts"))
 
   /** Per-record evaluation: adds sha256, parse status, ETS results +
-    * summary, KPI results + summary + grade. Pure narrow projection. */
+    * summary, KPI results + summary + grade, and `metadata_id`, the
+    * record's `$.id` as `get_json_object` returns it. Pure narrow
+    * projection. */
   def validate(records: DataFrame,
                probe: LinkProbe = OfflineLinkProbe): DataFrame = {
     val (withParsed, rc) =
@@ -142,6 +144,9 @@ object Validator {
       // comments-clobber quirk (kpi.py:573-576) — see KpiRules.summaryOf
       .withColumn("kpi_summary",
         when(col("parse_ok"), KpiRules.summaryOf(col("kpi_tests"))))
+      // the one `$.id` extraction per row: both reports and the
+      // referential rule read this attribute
+      .withColumn("metadata_id", get_json_object(col("content"), "$.id"))
   }
 
   /** Violation rows `(repo, path, commit, lang, rule_id, severity,

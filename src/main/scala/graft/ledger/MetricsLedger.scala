@@ -86,6 +86,16 @@ class MetricsLedger(dir: String) {
     else records.where(!col("lang").isInCollection(done.toSeq))
   }
 
+  /** The `lang` partitions [[pendingOnly]] keeps of a table read by
+    * [[graft.sources.RecordTable.readParquet]], decided from its file
+    * listing and the committed entries, with no Spark job; `None` unless
+    * `records` is one parquet table partitioned by `lang`. */
+  def pendingLangs(records: DataFrame): Option[Set[String]] =
+    graft.sources.RecordTable.langPartitions(records).map { listed =>
+      val done = committedLangs()
+      if (done.isEmpty) listed else listed.filter(l => l != null && !done(l))
+    }
+
   /** Commit every partition verdict row (driver-side: |langs| rows). */
   def commitVerdicts(verdicts: DataFrame): Unit =
     commitVerdicts(verdicts.select("lang", "records", "failed_records",

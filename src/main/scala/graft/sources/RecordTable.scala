@@ -1,8 +1,16 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import scala.io.Source
+import scala.util.Using
 
 /** The engine's input table `(repo, path, commit, lang, content)`
   * (BASELINE.json input_hint; FIXTURES.md §1).
@@ -21,6 +29,58 @@ import scala.io.Source
 object RecordTable {
 
   val columns = Seq("repo", "path", "commit", "lang", "content")
+
+  /** [[columns]], all strings: the schema a records table is read with. */
+  val schema: StructType = StructType(columns.map(StructField(_, StringType)))
+
+  /** A parquet records table read with [[schema]], so Spark runs no
+    * schema-inference job. A supplied schema reads a column the files lack
+    * as nulls, so this reads the footer of the first listed file on the
+    * driver and throws unless it stores every column of [[schema]] that is
+    * not a partition column of the directory layout as a string. */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val records = spark.read.schema(schema).parquet(path)
+    listing(records).foreach { fs =>
+      fs.location.inputFiles.headOption.foreach { file =>
+        val conf = spark.sparkContext.hadoopConfiguration
+        val stored = new ParquetToSparkSchemaConverter(SQLConf.get).convert(
+          Using.resource(ParquetFileReader.open(
+            HadoopInputFile.fromPath(new Path(file), conf)))(_.getFooter)
+            .getFileMetaData.getSchema)
+        val bad = columns
+          .filterNot(c => fs.partitionSchema.exists(_.name == c))
+          .filterNot(c => stored.exists(f =>
+            f.name.equalsIgnoreCase(c) && f.dataType == StringType))
+        require(bad.isEmpty, s"records table $path: $file does not store " +
+          s"${bad.mkString(", ")} as string (it stores ${stored.simpleString})")
+      }
+    }
+    records
+  }
+
+  /** The `lang` values of the partition directories listed for a records
+    * table read by [[readParquet]]: read off the listing Spark made when
+    * the table was read, with no job. `None` unless `records` is exactly
+    * one file relation partitioned by a string `lang`. A partition counts
+    * once it lists a file, even a file without rows. */
+  def langPartitions(records: DataFrame): Option[Set[String]] =
+    listing(records).flatMap { fs =>
+      val i = fs.partitionSchema.fieldNames.indexOf("lang")
+      if (i < 0 || fs.partitionSchema(i).dataType != StringType) None
+      else Some(fs.location.listFiles(Nil, Nil).filter(_.files.nonEmpty)
+        .map(d => Option(d.values.getUTF8String(i)).map(_.toString).orNull)
+        .toSet)
+    }
+
+  /** The file relation `records` is, if it is exactly one. */
+  private def listing(records: DataFrame): Option[HadoopFsRelation] =
+    records.queryExecution.analyzed match {
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation => Some(fs)
+        case _ => None
+      }
+      case _ => None
+    }
 
   val fixtureNames: Seq[String] = Seq(
     "wcmp2-passing.json",

@@ -1,11 +1,15 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.GetJsonObject
+import org.apache.spark.sql.catalyst.expressions.{Expression, GetJsonObject,
+  Length}
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.ExplainMode
-import graft.engine.Validator
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import graft.cli.Main
+import graft.engine.{DatasetRules, Reports, Validator}
 import graft.expressions.JsonFacts
 import graft.operators.Dedup
 import graft.sources.RecordTable
@@ -226,5 +230,51 @@ class PlanAuditSpec extends SparkSpec {
     // the pinned partitioning.
     assert(shuffleCount(members) == 2, p)
     assert(p.contains("BroadcastHashJoin"), p)
+  }
+
+  private def count(df: DataFrame)(p: Expression => Boolean): Int =
+    df.queryExecution.optimizedPlan.flatMap(_.expressions)
+      .map(_.collect { case e if p(e) => e }.size).sum
+
+  /** The CLI's five outputs over its cached validator result. */
+  private def cliOutputs(records: DataFrame, cached: DataFrame): Seq[DataFrame] =
+    Seq(Main.violations(cached),
+      Reports.reports(cached, "2026-01-01T00:00:00Z"),
+      DatasetRules.columnStats(records), DatasetRules.langDrift(records),
+      Validator.partitionVerdicts(cached))
+
+  test("CLI pass: one get_json_object across the validated plan and its " +
+       "five output plans") {
+    val records = RecordTable.synthesize(spark, 100)
+    // counted before the cache exists, which would replace this plan
+    val validatedIds = count(Main.validated(records, failOnEts = true))(
+      _.isInstanceOf[GetJsonObject])
+    val cached = Main.validated(records, failOnEts = true).cache()
+    try assert(validatedIds + cliOutputs(records, cached)
+      .map(count(_)(_.isInstanceOf[GetJsonObject])).sum == 1)
+    finally cached.unpersist()
+  }
+
+  test("CLI pass: the cached relation the outputs read holds no content") {
+    val records = RecordTable.synthesize(spark, 100)
+    val cached = Main.validated(records, failOnEts = true).cache()
+    try {
+      val relations = cliOutputs(records, cached)
+        .flatMap(_.queryExecution.optimizedPlan.collect {
+          case r: InMemoryRelation => r
+        })
+      assert(relations.size == 5)
+      relations.foreach(r => assert(!r.output.exists(_.name == "content")))
+    } finally cached.unpersist()
+  }
+
+  test("column stats: one length(content), projected below the aggregate") {
+    val stats = DatasetRules.columnStats(RecordTable.synthesize(spark, 100))
+    assert(count(stats)(_.isInstanceOf[Length]) == 1)
+    stats.queryExecution.optimizedPlan.foreach {
+      case a: Aggregate =>
+        assert(!a.aggregateExpressions.exists(_.exists(_.isInstanceOf[Length])))
+      case _ =>
+    }
   }
 }
