@@ -5,19 +5,20 @@ import org.apache.spark.sql.functions._
 import graft.dims.Dims
 import graft.functions.{GeoFunctions, Wcmp2Functions => F}
 
-/** Columns every row-local rule is built from. `rec` is the payload parsed
-  * once by the [[graft.expressions.JsonFacts]] kernel and materialized
-  * behind a Generate barrier (see [[graft.engine.Validator.withKernels]]) so
-  * the optimizer can never re-inline the parse per reference; `geometry` is
-  * the raw `$.geometry` JSON (variable nesting depth, see [[GeoFunctions]]);
-  * `geoPositions` its pre-flattened coordinate list; `propsKeys` are the
-  * top-level keys of the raw `$.properties` object — the presence-vs-null
-  * channel that `from_json` cannot provide (SURVEY.md §7.4-1). The last
+/** Columns every row-local rule is built from, all read off the one
+  * [[graft.expressions.JsonFacts]] parse materialized behind a Generate
+  * barrier (see [[graft.engine.Validator.withKernels]]) so the optimizer
+  * can never re-inline the parse per reference. `rec` is the typed
+  * payload; `geometryPresent` is true when `$.geometry` is present and
+  * not JSON null; `geoPositions` is its flattened coordinate list
+  * (variable nesting depth, see [[GeoFunctions]]); `propsKeys` are the
+  * top-level keys of the `$.properties` object — the presence-vs-null
+  * channel that a typed struct cannot provide (SURVEY.md §7.4-1). The last
   * five are per-row kernels that several rules share, materialized once
   * behind a second barrier: the misspelled title and description tokens,
   * the [[graft.expressions.TitleWords]] struct, the K5 http link pool and
   * the K4 preview links. */
-case class RecordCols(content: Column, rec: Column, geometry: Column,
+case class RecordCols(rec: Column, geometryPresent: Column,
                       geoPositions: Column, propsKeys: Column,
                       titleMisspelled: Column, descMisspelled: Column,
                       titleWords: Column, httpLinks: Column,
@@ -92,7 +93,7 @@ object EtsRules {
   /** extent_geospatial (`ets.py:235-258`). Note the reference's `messsage`
     * typo means FAILED rows carry no message — reproduced here. */
   def extentGeospatial(r: RecordCols): EtsRule = {
-    val fail = r.geometry.isNotNull &&
+    val fail = r.geometryPresent &&
       !GeoFunctions.positionsInWgs84(r.geoPositions)
     EtsRule("extent_geospatial", "extent_geospatial", fail, lit(null))
   }
@@ -147,8 +148,8 @@ object EtsRules {
   }
 
   /** data_policy (`ets.py:406-438`) — guarded on `properties.type ==
-    * 'dataset'`; key presence via raw `json_object_keys` (missing != null,
-    * `ets.py:418`). */
+    * 'dataset'`; key presence via the parse's `$.properties` key list
+    * (missing != null, `ets.py:418`). */
   def dataPolicy(r: RecordCols): EtsRule = {
     val policy = prop(r, "wmo:dataPolicy")
     val present =

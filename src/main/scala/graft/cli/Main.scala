@@ -43,12 +43,10 @@ import graft.sources.RecordTable
   * exits with the record's ETS FAILED count.
   */
 object Main {
-  private val FlagNames = Set("--no-fail-on-ets")
-
-  private def options(args: Array[String]): Map[String, String] =
-    args.filterNot(FlagNames).grouped(2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
+  private[graft] def options(args: Array[String]): Map[String, String] =
+    Options.parse(args, flags = Set("no-fail-on-ets"), valued = Set(
+      "input", "output", "ledger", "run-datetime", "one", "kpi",
+      "bundle-sync", "schema-url", "codelists-url", "topics-url", "iana-url"))
 
   def main(args: Array[String]): Unit = sys.exit {
     val opts = options(args)
@@ -91,7 +89,7 @@ object Main {
   def run(spark: SparkSession, args: Array[String]): Int = {
     val opts = options(args)
     val runDt = opts.getOrElse("run-datetime", Reports.stampNow())
-    val failOnEts = !args.contains("--no-fail-on-ets")
+    val failOnEts = !opts.contains("no-fail-on-ets")
 
     opts.get("one") match {
       case Some(path) =>

@@ -103,7 +103,11 @@ object CompiledCatalog {
   /** Plan and compile the catalog, and plan the request query in `spark`
     * (seconds: this is the whole per-request planning cost of the
     * DataFrame path, paid once). */
-  def build(spark: SparkSession): CompiledCatalog = {
+  def build(spark: SparkSession): CompiledCatalog =
+    new CompiledCatalog(optimizedPlan(spark), spark)
+
+  /** The optimized catalog plan [[build]] compiles. */
+  private[graft] def optimizedPlan(spark: SparkSession): LogicalPlan = {
     val leaf = shims.internalDf(spark,
       spark.sparkContext.emptyRDD[InternalRow], InputSchema)
     val dt = col("run_datetime")
@@ -113,7 +117,7 @@ object CompiledCatalog {
       concat_ws(", ", col("validation.errors")).as("gate_errors"),
       Reports.etsReportJson(dt).as("ets"),
       Reports.kpiReportJson(dt).as("kpi"))
-    new CompiledCatalog(selected.queryExecution.optimizedPlan, spark)
+    selected.queryExecution.optimizedPlan
   }
 
   private def compile(plan: LogicalPlan): InternalRow => Iterator[InternalRow] =

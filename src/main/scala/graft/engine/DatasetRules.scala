@@ -127,8 +127,9 @@ object DatasetRules {
     * against the vendored dims: the centre-id embedded in the record id
     * must exist in the centre dim (the dataset-scale version of ETS J1).
     * Emits violation rows in the engine's standard shape. `id` is the
-    * record id; pass [[Validator.validate]]'s `metadata_id` to reuse its
-    * extraction. */
+    * record id: over [[Validator.validate]]'s output pass its
+    * `metadata_id`, the id the ETS identifier test judges; the default
+    * extracts `$.id` from raw records' `content`. */
   def referentialViolations(records: DataFrame,
       id: Column = get_json_object(col("content"), "$.id")): DataFrame = {
     val spark = records.sparkSession

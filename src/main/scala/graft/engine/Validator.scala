@@ -51,7 +51,7 @@ object Validator {
     val withParsed = parsed(records)
       .select(col("*"), explode(array(kernels)).as("_k"))
 
-    val rc = RecordCols(col("content"), col("_p.rec"), col("_p.geom_raw"),
+    val rc = RecordCols(col("_p.rec"), col("_p.geom_present"),
       col("_p.geo_positions"), col("_p.props_keys"),
       titleMisspelled = col("_k.title_mis"),
       descMisspelled = col("_k.desc_mis"),
@@ -75,9 +75,9 @@ object Validator {
     // EXACTLY ONE parse of `content` per row: the
     // [[graft.expressions.JsonFacts]] kernel — one streaming tokenize
     // producing the from_json-parity `rec` struct, parse_ok (json.loads
-    // strictness), the missing-vs-null key channels, the raw geometry
-    // slice + flattened positions, and the complete schema-gate error
-    // array. (Previously the same text was tokenized up to five ways —
+    // strictness), the missing-vs-null key channels, geometry presence
+    // + flattened positions, and the complete schema-gate error array.
+    // (Previously the same text was tokenized up to five ways —
     // from_json, try_parse_json building a whole-document variant binary,
     // json_tuple, json_object_keys x2 — measured ~60% of hot-path CPU.)
     records.select(col("*"),
@@ -94,8 +94,9 @@ object Validator {
 
   /** Per-record evaluation: adds sha256, parse status, ETS results +
     * summary, KPI results + summary + grade, and `metadata_id`, the
-    * record's `$.id` as `get_json_object` returns it. Pure narrow
-    * projection. */
+    * record's `$.id` as the one parse reads it (`rec.id`, the id the ETS
+    * identifier test judges; null when the record is not valid JSON).
+    * Pure narrow projection. */
   def validate(records: DataFrame,
                probe: LinkProbe = OfflineLinkProbe): DataFrame = {
     val (withParsed, rc) =
@@ -130,6 +131,7 @@ object Validator {
       .withColumn("ets_tests", when(parseOk, etsTests))
       .withColumn("validation", when(parseOk, validation))
       .withColumn("kpi_tests", when(parseOk, kpiTests))
+      .withColumn("_id", col("_p.rec.id"))
       .drop("_p", "_k")
 
     def countCode(codeVal: String): Column =
@@ -144,9 +146,10 @@ object Validator {
       // comments-clobber quirk (kpi.py:573-576) — see KpiRules.summaryOf
       .withColumn("kpi_summary",
         when(col("parse_ok"), KpiRules.summaryOf(col("kpi_tests"))))
-      // the one `$.id` extraction per row: both reports and the
-      // referential rule read this attribute
-      .withColumn("metadata_id", get_json_object(col("content"), "$.id"))
+      // both reports and the referential rule read this attribute; it
+      // stays the last column
+      .withColumn("metadata_id", col("_id"))
+      .drop("_id")
   }
 
   /** Violation rows `(repo, path, commit, lang, rule_id, severity,

@@ -36,8 +36,8 @@ import graft.model.Wcmp2Schema
   *                     object) — the missing-vs-null presence channel a
   *                     typed struct cannot provide (E11 data policy, K7
   *                     externalIds).
-  *  - `geom_raw`     — the raw `$.geometry` value substring (null for
-  *                     missing OR explicit JSON null, like `json_tuple`).
+  *  - `geom_present` — `$.geometry` is present and not JSON null (the
+  *                     E4 guard; any type counts, the gate judges it).
   *  - `geo_positions`— the flattened coordinate list (shapely-equivalent
   *                     position list for all six GeoJSON geometry types),
   *                     collected during the same walk.
@@ -93,7 +93,7 @@ object JsonFacts {
     StructField("rec", Wcmp2Schema.root),
     StructField("parse_ok", BooleanType, nullable = false),
     StructField("props_keys", ArrayType(StringType, containsNull = false)),
-    StructField("geom_raw", StringType),
+    StructField("geom_present", BooleanType, nullable = false),
     StructField("geo_positions",
       ArrayType(ArrayType(DoubleType, containsNull = true),
         containsNull = true)),
@@ -136,6 +136,7 @@ object JsonFacts {
     val a = new Array[Any](6)
     a(0) = EMPTY_REC
     a(1) = java.lang.Boolean.FALSE
+    a(3) = java.lang.Boolean.FALSE
     new GenericInternalRow(a)
   }
 
@@ -189,53 +190,6 @@ object JsonFacts {
   private def skipValue(p: JsonParser, t: JsonToken): Unit =
     if (t == JsonToken.START_OBJECT || t == JsonToken.START_ARRAY)
       p.skipChildren()
-
-  /** Parser + raw-slice source abstraction: the walk is identical over
-    * Jackson's byte-based (UTF8StreamJsonParser) and reader-based parsers;
-    * only parser construction, the offset accessors (byte vs char) and
-    * the raw-slice materialization differ. The byte source is the hot
-    * path (no String decode of the whole document, raw slices are
-    * zero-decode fromBytes); the char source is the exact pre-r6
-    * behavior, kept for inputs that are not valid UTF-8 (where the
-    * replacement-char decode of toString can make a byte-level-broken
-    * document parseable — byte parsing would throw instead). */
-  private abstract class RawSrc {
-    def createParser(f: JsonFactory): JsonParser
-    def tokenStart(p: JsonParser): Int
-    def cur(p: JsonParser): Int
-    def slice(start: Int, end: Int): UTF8String
-    def len: Int
-  }
-  private final class ByteSrc(bytes: Array[Byte]) extends RawSrc {
-    def createParser(f: JsonFactory): JsonParser =
-      f.createParser(bytes, 0, bytes.length)
-    def tokenStart(p: JsonParser): Int =
-      p.currentTokenLocation().getByteOffset.toInt
-    def cur(p: JsonParser): Int = p.currentLocation().getByteOffset.toInt
-    def slice(start: Int, end: Int): UTF8String =
-      UTF8String.fromBytes(bytes, start, end - start)
-    def len: Int = bytes.length
-  }
-  private final class CharSrc(s: String) extends RawSrc {
-    def createParser(f: JsonFactory): JsonParser = f.createParser(s)
-    def tokenStart(p: JsonParser): Int =
-      p.currentTokenLocation().getCharOffset.toInt
-    def cur(p: JsonParser): Int = p.currentLocation().getCharOffset.toInt
-    def slice(start: Int, end: Int): UTF8String =
-      UTF8String.fromString(s.substring(start, end))
-    def len: Int = s.length
-  }
-
-  /** Raw value slice by token offsets; SQL NULL for JSON null
-    * (the `json_tuple` convention its consumers rely on). */
-  private def rawValue(p: JsonParser, src: RawSrc, t: JsonToken): UTF8String = {
-    if (t == JsonToken.VALUE_NULL) { return null }
-    val start = src.tokenStart(p)
-    skipValue(p, t)
-    val end = src.cur(p)
-    if (start < 0 || end <= start || end > src.len) null
-    else src.slice(start, end)
-  }
 
   // ---- from_json-parity leaf/struct builders --------------------------
 
@@ -435,8 +389,7 @@ object JsonFacts {
     var confState = 0; var confHasCore = false
     var typeState = 0; var typeText: String = null
     var timeState = 0 // 0 missing, 1 object, 2 mistyped, 3 JSON null
-    var geomState = 0
-    var geomRaw: UTF8String = null
+    var geomState = 0 // 0 missing, 1 object, 2 mistyped, 3 JSON null
     var geomType: String = null
     var geomPositions: ArrayBuffer[Any] = null
     var posDepth = -1
@@ -896,12 +849,6 @@ object JsonFacts {
     new GenericArrayData(out.toArray)
   }
 
-  /** Static kernel shared by interpreted eval and generated code.
-    * Valid-UTF-8 input (the overwhelmingly common case) parses the BYTES
-    * directly — no whole-document String decode, zero-decode raw slices;
-    * anything else takes the exact pre-r6 char path (toString's
-    * replacement-char decode), so behavior on malformed UTF-8 is
-    * unchanged. */
   /** word-at-a-time all-ASCII probe: ASCII is trivially valid UTF-8 and
     * is the overwhelming case for WCMP JSON (every fixture byte is
     * ASCII), but `UTF8String.isValid` walks a per-byte validation state
@@ -926,21 +873,27 @@ object JsonFacts {
     true
   }
 
-  def facts(content: UTF8String): InternalRow =
-    factsImpl(
-      if (isAsciiFast(content) || content.isValid)
-        new ByteSrc(content.getBytes)
-      else new CharSrc(content.toString))
+  /** Static kernel shared by interpreted eval and generated code. */
+  def facts(content: UTF8String): InternalRow = factsImpl(content, char = false)
 
   /** test seam: force the char path (the pre-r6 behavior) so parity of
     * the byte fast path is assertable input-for-input */
   private[graft] def factsForcedChar(content: UTF8String): InternalRow =
-    factsImpl(new CharSrc(content.toString))
+    factsImpl(content, char = true)
 
-  private def factsImpl(src: RawSrc): InternalRow = {
+  private def factsImpl(content: UTF8String, char: Boolean): InternalRow = {
     val w = new Walk
     try {
-      val p = src.createParser(factory)
+      // Valid UTF-8 (the overwhelmingly common case) parses the BYTES
+      // directly, with no whole-document String decode. Anything else
+      // parses toString's replacement-char decode, which can make a
+      // byte-level-broken document parseable where byte parsing would
+      // throw. Created inside the try: byte-encoding detection can throw.
+      val p =
+        if (!char && (isAsciiFast(content) || content.isValid)) {
+          val bytes = content.getBytes
+          factory.createParser(bytes, 0, bytes.length)
+        } else factory.createParser(content.toString)
       try {
         val t0 = p.nextToken()
         if (t0 == null) return FAILED
@@ -989,16 +942,10 @@ object JsonFacts {
                 w.geomState =
                   if (vt == JsonToken.START_OBJECT) 1
                   else if (vt == JsonToken.VALUE_NULL) 3 else 2
-                if (vt != JsonToken.START_OBJECT) {
+                if (vt == JsonToken.START_OBJECT) walkGeometry(p, w)
+                else {
                   w.geomType = null; w.geomPositions = null
-                  w.geomRaw = rawValue(p, src, vt)
-                } else {
-                  val start = src.tokenStart(p)
-                  walkGeometry(p, w)
-                  val end = src.cur(p)
-                  w.geomRaw =
-                    if (start < 0 || end <= start || end > src.len) null
-                    else src.slice(start, end)
+                  skipValue(p, vt)
                 }
               case "properties" =>
                 if (vt != JsonToken.START_OBJECT) {
@@ -1054,7 +1001,7 @@ object JsonFacts {
     a(2) =
       if (w.propsKeys == null) null
       else new GenericArrayData(w.propsKeys.toArray)
-    a(3) = w.geomRaw
+    a(3) = java.lang.Boolean.valueOf(w.geomState == 1 || w.geomState == 2)
     a(4) =
       if (w.geomPositions == null) null
       else new GenericArrayData(w.geomPositions.toArray)

@@ -10,16 +10,17 @@ import org.apache.spark.sql.types._
   *
   * Design notes (SURVEY.md §1.2):
   *  - `geometry` is intentionally NOT in this struct: its nesting depth
-  *    varies by geometry type, so it is extracted raw via
-  *    `get_json_object(content, '$.geometry')` and parsed per-type
+  *    varies by geometry type, so the [[graft.expressions.JsonFacts]]
+  *    walk reports its presence and flattens its positions per type
   *    (see [[graft.functions.GeoFunctions]]).
   *  - datetimes stay `StringType`; the reference validates format with
   *    3 explicit strptime patterns (`util.py:241-250`), it never converts.
   *  - interval endpoints stay strings: the reference compares them
   *    lexicographically (`kpi.py:260`), which Spark string `<=` matches.
   *  - presence-sensitive keys (`wmo:dataPolicy`, `externalIds`) are ALSO
-  *    checked via `json_object_keys` on the raw text because `from_json`
-  *    conflates missing and null (SURVEY.md §7.4-1).
+  *    checked against the `$.properties` key list the same JsonFacts walk
+  *    collects, because a typed struct conflates missing and null
+  *    (SURVEY.md §7.4-1).
   */
 object Wcmp2Schema {
 

@@ -122,6 +122,8 @@ object Wcmp2Service {
     * compiled catalog answers either process. */
   private def execute(catalog: CompiledCatalog, processId: String,
                       body: String, runDatetime: String): Response = {
+    if (!describe.contains(processId))
+      return error(404, "NoSuchProcess", s"No such process: $processId")
     val root =
       try mapper.readTree(body)
       catch { case _: Exception =>
@@ -130,8 +132,6 @@ object Wcmp2Service {
     val inputs = root.path("inputs")
     recordInput(inputs) match {
       case None => error(400, "MissingParameterValue", "Missing record")
-      case Some(_) if !describe.contains(processId) =>
-        error(404, "NoSuchProcess", s"No such process: $processId")
       case Some(record) =>
         val r = catalog.run(record, runDatetime)
         if (!r.parseOk)
@@ -202,12 +202,12 @@ object Wcmp2Service {
     }
   }
 
+  private[graft] def options(args: Array[String]): Map[String, String] =
+    graft.cli.Options.parse(args, valued = Set("port"))
+
   /** `java -cp ... graft.service.Wcmp2Service [--port 5001]` */
   def main(args: Array[String]): Unit = {
-    val opts = args.grouped(2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
-    val port = opts.getOrElse("port", "5001").toInt
+    val port = options(args).getOrElse("port", "5001").toInt
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
       .appName("graft-wcmp2-service")

@@ -140,4 +140,37 @@ class CliSpec extends SparkSpec with TempDirs {
       assert(Outputs.forall(o => !Files.exists(out.resolve(o))), name)
     }
   }
+
+  test("an unknown option, an option without its value or a stray value " +
+       "fails before anything runs, naming the argument") {
+    val out = tempDir("cli-args")
+    val record = out.resolve("record.json")
+    Files.writeString(record,
+      RecordTable.fixtureContent("wcmp2-passing.json"))
+    for ((bad, named) <- Seq(
+        args(input, out).patch(2, Seq("--bogus"), 0) -> "'--bogus'",
+        (args(input, out) :+ "stray") -> "'stray'",
+        Array("--input", "--output", out.toString) -> "'--input'",
+        Array("--one", record.toString, "--kpi") -> "'--kpi'")) {
+      val e = intercept[IllegalArgumentException](run(bad))
+      assert(e.getMessage.contains(named), e.getMessage)
+      assert(e.getMessage.contains("--no-fail-on-ets"), e.getMessage)
+      assert(Outputs.forall(o => !Files.exists(out.resolve(o))), named)
+    }
+    assert(Main.options(args(input, out) :+ "--no-fail-on-ets") ==
+      Map("input" -> input, "output" -> out.toString, "run-datetime" -> RunDt,
+        "no-fail-on-ets" -> ""))
+  }
+
+  test("the service's options go through the same check") {
+    for ((bad, named) <- Seq(Array("--port") -> "'--port'",
+        Array("--prt", "5001") -> "'--prt'", Array("5001") -> "'5001'")) {
+      val e = intercept[IllegalArgumentException](
+        graft.service.Wcmp2Service.options(bad))
+      assert(e.getMessage.contains(named), e.getMessage)
+      assert(e.getMessage.contains("accepted options: --port"), e.getMessage)
+    }
+    assert(graft.service.Wcmp2Service.options(Array("--port", "0")) ==
+      Map("port" -> "0"))
+  }
 }

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Expression, GetJsonObject,
-  Length}
-import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+  JsonToStructs, Length}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.ExplainMode
@@ -41,21 +41,21 @@ class PlanAuditSpec extends SparkSpec {
   private def formatted(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
-  private def countParseExprs(df: DataFrame): (Int, Int) = {
-    var facts = 0; var js = 0
-    df.queryExecution.optimizedPlan.foreach { node =>
-      node.expressions.foreach { e =>
-        facts += e.collect {
-          case f: StaticInvoke if f.staticObject == JsonFacts.getClass &&
-              f.functionName == "facts" => f
-        }.size
-        js += e.collect {
-          case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs => j
-        }.size
-      }
-    }
-    (facts, js)
+  private def count(plan: LogicalPlan)(p: Expression => Boolean): Int =
+    plan.flatMap(_.expressions).map(_.collect { case e if p(e) => e }.size).sum
+  private def count(df: DataFrame)(p: Expression => Boolean): Int =
+    count(df.queryExecution.optimizedPlan)(p)
+
+  private val isFacts: Expression => Boolean = {
+    case f: StaticInvoke =>
+      f.staticObject == JsonFacts.getClass && f.functionName == "facts"
+    case _ => false
   }
+  private val isJsonObject: Expression => Boolean =
+    _.isInstanceOf[GetJsonObject]
+
+  private def countParseExprs(df: DataFrame): (Int, Int) =
+    (count(df)(isFacts), count(df)(_.isInstanceOf[JsonToStructs]))
 
   test("single-parse invariant: one JsonFacts, zero JsonToStructs on " +
        "every validator output path") {
@@ -71,6 +71,17 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("validator + reports and the compiled catalog: one JsonFacts, no " +
+       "get_json_object") {
+    val reports = Reports.reports(
+      Validator.validate(RecordTable.fixtures(spark)), "2026-01-01T00:00:00Z")
+    assert(countParseExprs(reports) == ((1, 0)))
+    assert(count(reports)(isJsonObject) == 0)
+    val catalog = graft.engine.CompiledCatalog.optimizedPlan(spark)
+    assert(count(catalog)(isFacts) == 1)
+    assert(count(catalog)(isJsonObject) == 0)
+  }
+
   test("link-probe path: one JsonFacts parse, no from_json or " +
        "get_json_object over content") {
     val records = RecordTable.fixtures(spark)
@@ -79,8 +90,7 @@ class PlanAuditSpec extends SparkSpec {
     for (df <- Seq(graft.engine.DatasetRules.recordLinkUrls(records).toDF(),
         graft.engine.DatasetRules.linkHealthJoin(records, probe))) {
       assert(countParseExprs(df) == ((1, 0)))
-      val exprs = df.queryExecution.optimizedPlan.flatMap(_.expressions)
-      assert(!exprs.exists(_.exists(_.isInstanceOf[GetJsonObject])))
+      assert(count(df)(isJsonObject) == 0)
     }
   }
 
@@ -232,10 +242,6 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), p)
   }
 
-  private def count(df: DataFrame)(p: Expression => Boolean): Int =
-    df.queryExecution.optimizedPlan.flatMap(_.expressions)
-      .map(_.collect { case e if p(e) => e }.size).sum
-
   /** The CLI's five outputs over its cached validator result. */
   private def cliOutputs(records: DataFrame, cached: DataFrame): Seq[DataFrame] =
     Seq(Main.violations(cached),
@@ -243,16 +249,18 @@ class PlanAuditSpec extends SparkSpec {
       DatasetRules.columnStats(records), DatasetRules.langDrift(records),
       Validator.partitionVerdicts(cached))
 
-  test("CLI pass: one get_json_object across the validated plan and its " +
-       "five output plans") {
+  test("CLI pass: no get_json_object and one JsonFacts across the " +
+       "validated plan and its five output plans") {
     val records = RecordTable.synthesize(spark, 100)
     // counted before the cache exists, which would replace this plan
-    val validatedIds = count(Main.validated(records, failOnEts = true))(
-      _.isInstanceOf[GetJsonObject])
+    val validated = Main.validated(records, failOnEts = true)
+    val before = Seq(count(validated)(isFacts), count(validated)(isJsonObject))
     val cached = Main.validated(records, failOnEts = true).cache()
-    try assert(validatedIds + cliOutputs(records, cached)
-      .map(count(_)(_.isInstanceOf[GetJsonObject])).sum == 1)
-    finally cached.unpersist()
+    try {
+      val outputs = cliOutputs(records, cached)
+      assert(before(0) + outputs.map(count(_)(isFacts)).sum == 1)
+      assert(before(1) + outputs.map(count(_)(isJsonObject)).sum == 0)
+    } finally cached.unpersist()
   }
 
   test("CLI pass: the cached relation the outputs read holds no content") {

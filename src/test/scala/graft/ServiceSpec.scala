@@ -134,8 +134,12 @@ class ServiceSpec extends SparkSpec with BeforeAndAfterAll {
     assert(http("POST", "/processes/pywcmp-wis2-wcmp2-ets/execution",
       "not json")._1 == 400)
 
-    assert(http("POST", "/processes/nope/execution",
-      """{"inputs":{"record":{}}}""")._1 == 404)
+    // the process id is looked up before the body is read
+    for (body <- Seq("""{"inputs":{"record":{}}}""", "not json",
+        """{"inputs":{}}""")) {
+      val (nc, nb) = http("POST", "/processes/nope/execution", body)
+      assert(nc == 404 && nb.contains("No such process: nope"), body)
+    }
 
     val (ec, eb) = http("POST", "/processes/pywcmp-wis2-wcmp2-kpi/execution",
       """{"inputs":{"record":"definitely not json"}}""")
