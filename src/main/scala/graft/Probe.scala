@@ -305,11 +305,17 @@ object Probe {
     * [[Wcmp2Service]] on an ephemeral port. The requests cycle through
     * ETS, ETS with `fail_on_schema_validation=false` and KPI over a
     * passing and a failing record. After a warm-up (the 32-client level,
-    * unreported) it prints one line per load level: p50 and p99 ms, requests per second, and the calls that
-    * failed or answered other than the warm-up did.
+    * unreported) it prints one line per load level: p50 and p99 ms,
+    * requests per second, and the calls that failed or answered other
+    * than the warm-up did.
     *  - `direct threads=1|4`: `CompiledCatalog.run` called in process,
     *    no HTTP; 4 is the server's pool size, so this is what the
     *    evaluator lock lets the server reach.
+    *  - `direct idle=200ms`: up to 50 calls of `run`, and as many of the
+    *    bare evaluator, one at a time after a 200 ms idle gap each (an
+    *    open-loop request at a low rate). It prints both p50s: their
+    *    difference is the cost of the request's SQL execution span.
+    *    `bad` counts calls whose two answers differ.
     *  - `http clients=1|8|32`: that many threads each send `posts` POSTs
     *    back to back through one shared JDK `HttpClient` (HTTP/1.1: one
     *    kept-alive connection per busy thread). */
@@ -354,6 +360,23 @@ object Probe {
         report(s"direct threads=$n", closedLoop(n, posts) { (t, i) =>
           catalog.run(records((t + i) % records.size), runDatetime).parseOk
         })
+      def afterGap[T](f: => T): (T, Double) = {
+        Thread.sleep(200)
+        val t0 = System.nanoTime()
+        val r = f
+        (r, (System.nanoTime() - t0) / 1e6)
+      }
+      val idle = (0 until math.min(posts, 50)).map { i =>
+        val record = records(i % records.size)
+        val (ran, runMs) = afterGap(catalog.run(record, runDatetime))
+        val (bare, evalMs) = afterGap(catalog.evaluate(record, runDatetime))
+        (runMs, evalMs, ran == bare)
+      }
+      def p50(ms: Seq[Double]): Double = ms.sorted.apply(ms.length / 2)
+      println(f"[service] direct idle=200ms calls=${idle.length} " +
+        f"run_p50_ms=${p50(idle.map(_._1))}%.2f " +
+        f"evaluate_p50_ms=${p50(idle.map(_._2))}%.2f " +
+        s"bad=${idle.count(!_._3)}")
       for (n <- Seq(1, 8, 32)) report(s"http clients=$n", http(n))
     } finally server.stop(0)
   }

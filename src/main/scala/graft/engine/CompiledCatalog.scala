@@ -6,10 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.{BindReferences, JoinedRow,
   UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan,
   Project}
-import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution,
-  SQLExecution}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.shims
+import org.apache.spark.sql.graft.{ExecutionSpan, shims}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -29,11 +28,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[run]] calls the evaluator directly on an `InternalRow` of
   * `UTF8String`s: no per-request DataFrame, analysis, optimization or Row
   * encoding. The call is still one SQL execution, visible to every Spark
-  * listener and the UI's SQL tab: it runs inside
-  * `SQLExecution.withNewExecutionId` over one tiny request query (an empty
-  * local relation of the output schema, planned to a `LocalTableScanExec`
-  * by [[CompiledCatalog.build]] in the session it was given and reused by
-  * every request), so no Spark job runs.
+  * listener and the UI's SQL tab, named `compiled_catalog`: an
+  * [[ExecutionSpan]] over one tiny request query (an empty local relation
+  * of the output schema, planned to a `LocalTableScanExec` by
+  * [[CompiledCatalog.build]] in the session it was given). The span's
+  * listener payload (explain string, plan info, modified configs) is
+  * computed with it, once; a request only draws an execution id and posts
+  * the Start and End events. No Spark job runs.
   *
   * The placeholder is a `LogicalRDD`, not an empty `LocalRelation`:
   * `PropagateEmptyRelation` would fold an empty local leaf (and the whole
@@ -54,30 +55,27 @@ final class CompiledCatalog private[graft] (plan: LogicalPlan,
 
   private val root: InternalRow => Iterator[InternalRow] = compile(plan)
 
-  /** Evaluate one input row `(repo, path, commit, lang, content,
-    * run_datetime)` to its output struct (a fresh copy). */
-  private[engine] def evaluate(input: InternalRow): InternalRow =
-    synchronized(root(input).next().copy())
-
-  /** The request query, planned once at build. */
-  private val request: QueryExecution = {
-    val qe = spark.createDataFrame(java.util.List.of[Row](), schema)
-      .queryExecution
-    qe.executedPlan
-    qe
-  }
-
-  /** One record through one SQL execution, under the same ad-hoc record
-    * identity as [[Reports.validateOne]]. */
-  def run(content: String, runDatetime: String): Result = {
+  /** One record through the evaluator alone, outside any SQL execution
+    * ([[run]] is this inside its span). */
+  private[graft] def evaluate(content: String, runDatetime: String): Result = {
     val input = InternalRow.fromSeq(AdhocIdentity ++ Seq(
       UTF8String.fromString(content), UTF8String.fromString(runDatetime)))
-    val r = SQLExecution.withNewExecutionId(request,
-      Some("compiled_catalog"))(evaluate(input))
+    val r = synchronized(root(input).next().copy())
     def string(i: Int): String =
       if (r.isNullAt(i)) null else r.getUTF8String(i).toString
     Result(r.getBoolean(0), string(1), string(2), string(3), string(4))
   }
+
+  /** The request query, planned once at build, as the span every [[run]]
+    * is posted from. */
+  private val span = new ExecutionSpan(
+    spark.createDataFrame(java.util.List.of[Row](), schema).queryExecution,
+    "compiled_catalog", "graft.engine.CompiledCatalog.run")
+
+  /** One record through one SQL execution, under the same ad-hoc record
+    * identity as [[Reports.validateOne]]. */
+  def run(content: String, runDatetime: String): Result =
+    span(evaluate(content, runDatetime))
 
   override def toString: String = s"CompiledCatalog(${schema.simpleString})"
 }

@@ -39,9 +39,12 @@ import graft.engine.{CompiledCatalog, Reports}
   * client can observe comes from the reference.
   *
   * Execution evaluates a [[CompiledCatalog]], planned and compiled once
-  * when the service starts: each POST calls its evaluator directly inside
-  * one SQL execution of a reused, already planned request query (no Spark
-  * job, no per-request DataFrame or planning). The catalog is the exact
+  * when the service starts: each POST that carries a record calls its
+  * evaluator directly inside one SQL execution named `compiled_catalog`,
+  * whose listener payload was computed with the catalog, so a request only
+  * draws an execution id and posts its Start and End events (no Spark job,
+  * no per-request DataFrame, planning or explain string). GETs and
+  * rejected POSTs post no execution. The catalog is the exact
   * [[graft.engine.Validator]] table catalog, so answers are byte-identical
   * to [[graft.engine.Reports.validateOne]] and to batch answers at any
   * scale. The embedded server is the JDK's `com.sun.net.httpserver` on a

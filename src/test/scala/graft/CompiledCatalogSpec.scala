@@ -2,12 +2,22 @@ package graft
 
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
+  SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{Ended, shims}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.engine.{CompiledCatalog, Reports, Validator}
 import graft.service.Wcmp2Service
@@ -141,5 +151,117 @@ class CompiledCatalogSpec extends SparkSpec {
       assert(post(Wcmp2Service.EtsProcessId) == ((200, ets)))
       assert(post(Wcmp2Service.KpiProcessId) == ((200, kpi.get)))
     } finally server.stop(0)
+  }
+
+  // ------------------------------------------------ the request's SQL span
+
+  private val Span = "compiled_catalog"
+  private def passing = RecordTable.fixtureContent("wcmp2-passing.json")
+
+  /** The SQL execution Start and End events posted while `body` runs, read
+    * after the listener bus has delivered all of them. */
+  private def sqlEvents(body: => Unit)
+      : (Seq[SparkListenerSQLExecutionStart], Seq[Ended]) = {
+    val events = new ConcurrentLinkedQueue[SparkListenerEvent]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart | _: SparkListenerSQLExecutionEnd =>
+          events.add(e)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      shims.drainListeners(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val all = events.asScala.toSeq
+    (all.collect { case e: SparkListenerSQLExecutionStart => e },
+      all.collect { case e: SparkListenerSQLExecutionEnd => Ended(e) })
+  }
+
+  private def idProps: (String, String) = {
+    val sc = spark.sparkContext
+    (sc.getLocalProperty(SQLExecution.EXECUTION_ID_KEY),
+      sc.getLocalProperty(SQLExecution.EXECUTION_ROOT_ID_KEY))
+  }
+
+  test("n runs interleaved with DataFrame actions post n Start/End pairs " +
+       "named compiled_catalog, under ids no DataFrame execution shares") {
+    val n = 5
+    val (starts, ends) = sqlEvents {
+      for (_ <- 0 until n) {
+        assert(catalog.run(passing, Dt).parseOk)
+        assert(spark.range(1).count() == 1)
+      }
+    }
+    assert(starts.map(_.executionId).sorted == ends.map(_.executionId).sorted)
+    val (spans, others) = ends.partition(_.name.contains(Span))
+    val ids = spans.map(_.executionId)
+    assert(ids.distinct.size == n)
+    assert(others.count(_.name.contains("count")) == n)
+    assert(ids.intersect(others.map(_.executionId)).isEmpty)
+    spans.foreach { e =>
+      assert(e.errorMessage.contains("") && e.failure.isEmpty)
+      assert(e.qe.executedPlan.nodeName == "LocalTableScan")
+    }
+    starts.filter(s => ids.contains(s.executionId)).foreach { s =>
+      assert(s.rootExecutionId.contains(s.executionId))
+    }
+  }
+
+  test("a run restores both execution-id properties, at top level and " +
+       "inside an enclosing execution, and a DataFrame action follows it") {
+    assert(idProps == ((null, null)))
+    catalog.run(passing, Dt)
+    assert(idProps == ((null, null)))
+    assert(spark.range(3).count() == 3)
+
+    val (starts, _) = sqlEvents {
+      SQLExecution.withNewExecutionId(spark.range(1).queryExecution,
+          Some("outer")) {
+        val outer = idProps
+        assert(outer._1 != null && outer._1 == outer._2)
+        catalog.run(passing, Dt)
+        assert(idProps == outer)
+      }
+    }
+    assert(idProps == ((null, null)))
+    assert(spark.range(3).count() == 3)
+    val (roots, inner) = starts.partition(s =>
+      s.rootExecutionId.contains(s.executionId))
+    assert(roots.size == 1 && inner.size == 1)
+    assert(inner.head.rootExecutionId.contains(roots.head.executionId))
+  }
+
+  test("a run whose evaluation throws posts End with the error, fires " +
+       "QueryExecutionListener.onFailure, and rethrows") {
+    val placeholder = shims.internalDf(spark,
+      spark.sparkContext.emptyRDD[InternalRow], StructType(
+        Seq("repo", "path", "commit", "lang", "content", "run_datetime")
+          .map(StructField(_, StringType))))
+    val throwing = new CompiledCatalog(placeholder
+      .select(raise_error(concat(lit("no report for "), col("content")))
+        .as("parse_ok"))
+      .queryExecution.optimizedPlan, spark)
+    val failures = new ConcurrentLinkedQueue[(String, Exception)]
+    val qeListener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = ()
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        failures.add(f -> e)
+    }
+    spark.listenerManager.register(qeListener)
+    var thrown: Exception = null
+    val (_, ends) =
+      try sqlEvents {
+        thrown = intercept[Exception](throwing.run("record-7", Dt))
+      } finally spark.listenerManager.unregister(qeListener)
+    assert(thrown.getMessage.contains("no report for record-7"))
+    assert(idProps == ((null, null)))
+    val end = ends.filter(_.name.contains(Span))
+    assert(end.size == 1)
+    assert(end.head.failure.contains(thrown))
+    assert(end.head.errorMessage.exists(_.contains("no report for record-7")))
+    assert(failures.asScala.toSeq == Seq(Span -> thrown))
   }
 }

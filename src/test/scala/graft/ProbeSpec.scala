@@ -116,13 +116,18 @@ class ProbeSpec extends SparkSpec with TempDirs {
     assert(err.isEmpty, err)
     val table = lines(out, "[service] ")
     assert(table.map(_.split("\\s+").slice(1, 3).mkString(" ")) == Seq(
-      "direct threads=1", "direct threads=4", "http clients=1",
-      "http clients=8", "http clients=32"), out)
-    table.foreach { l =>
+      "direct threads=1", "direct threads=4", "direct idle=200ms",
+      "http clients=1", "http clients=8", "http clients=32"), out)
+    val (idle, loaded) = table.partition(_.contains(" idle="))
+    loaded.foreach { l =>
       for (k <- Seq("p50_ms=", "p99_ms=", "req_per_s="))
         assert(l.contains(k), l)
-      assert(l.endsWith(" bad=0"), l)
     }
+    idle.foreach { l =>
+      for (k <- Seq("calls=3 ", "run_p50_ms=", "evaluate_p50_ms="))
+        assert(l.contains(k), l)
+    }
+    table.foreach(l => assert(l.endsWith(" bad=0"), l))
   }
 
   test("suite over a missing sf dir reports every failing dump and query " +

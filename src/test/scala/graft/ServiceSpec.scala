@@ -10,8 +10,11 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.HttpServer
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
 import org.apache.spark.sql.execution.{LocalTableScanExec, QueryExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.graft.shims
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 
@@ -274,5 +277,36 @@ class ServiceSpec extends SparkSpec with BeforeAndAfterAll {
       spark.listenerManager.unregister(qeListener)
       spark.sparkContext.removeSparkListener(jobListener)
     }
+  }
+
+  test("GET requests and POSTs that carry no record post no SQL execution") {
+    server // started (and its catalog built) before listening
+    val starts = new AtomicInteger
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => starts.incrementAndGet()
+        case _ =>
+      }
+    }
+    def posted(): Int = {
+      shims.drainListeners(spark.sparkContext)
+      starts.get
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for (p <- Seq("/", "/processes", s"/processes/${Wcmp2Service.EtsProcessId}",
+          "/processes/nope"))
+        http("GET", p)
+      assert(http("POST", EtsPath, """{"inputs":{}}""")._1 == 400)
+      assert(http("POST", KpiPath, """{"inputs":{"record":null}}""")._1 == 400)
+      assert(http("POST", EtsPath, "not json")._1 == 400)
+      assert(http("POST", "/processes/nope/execution",
+        execBody("wcmp2-passing.json"))._1 == 404)
+      assert(http("POST", "/nowhere", execBody("wcmp2-passing.json"))._1 == 404)
+      assert(posted() == 0)
+      // a POST that carries a record is one execution
+      assert(http("POST", EtsPath, execBody("wcmp2-passing.json"))._1 == 200)
+      assert(posted() == 1)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
