@@ -15,7 +15,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shims
-import graft.catalog.{EtsRules, KpiRules, OfflineLinkProbe}
+import graft.catalog.{EtsRules, KpiRules}
 import graft.engine.{CompiledCatalog, DatasetRules, Validator}
 import graft.service.Wcmp2Service
 import graft.sources.RecordTable
@@ -183,7 +183,8 @@ object Probe {
   }
 
   private def nodes(e: Expression): Int = 1 + e.children.map(nodes).sum
-  private def planNodes(p: LogicalPlan): Int =
+  /** expression nodes of every operator of `p` */
+  private[graft] def planNodes(p: LogicalPlan): Int =
     p.collect { case n => n.expressions.map(nodes).sum }.sum
 
   private def validator(spark: SparkSession, rows: Long, passes: Int): Unit = {
@@ -205,6 +206,8 @@ object Probe {
       println(s"[tree] $name analyzed=${planNodes(df.queryExecution.analyzed)}" +
         s" optimized=${planNodes(df.queryExecution.optimizedPlan)}")
     }
+    println("[tree] compiled_catalog optimized=" +
+      planNodes(graft.engine.CompiledCatalog.optimizedPlan(spark)))
     Validator.validate(records).queryExecution.optimizedPlan.foreach {
       _.expressions.foreach { e =>
         val n = nodes(e)
@@ -228,12 +231,13 @@ object Probe {
 
   /** The frame and columns `rules` times: every catalog rule's result
     * over the validator's own barriers, in `ets_tests` then `kpi_tests`
-    * element order. */
+    * element order. The rule walks run in the frame's third barrier, so
+    * they count in its BASE line. */
   private[graft] def ruleColumns(records: DataFrame)
       : (DataFrame, Seq[(String, Column)]) = {
     val (base, rc) = Validator.withKernels(records)
     (base, EtsRules.catalog(rc).map(r => s"ets:${r.name}" -> r.result) ++
-      KpiRules.catalog(rc, OfflineLinkProbe)
+      KpiRules.catalog(rc)
         .map(r => s"kpi:${r.name}" -> r.result))
   }
 

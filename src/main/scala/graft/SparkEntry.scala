@@ -965,7 +965,7 @@ object SparkEntry {
     val esdArr = arrLit(Dims.earthSystemDisciplines)
     val core = "http://wis.wmo.int/spec/wcmp/2/conf/core"
     val kebab = "^[a-z0-9][a-z0-9-]*$"
-    // level-wise WIS2 channel walk (TopicChannelValid; no published
+    // level-wise WIS2 channel walk (TopicChannel.valid; no published
     // sub-discipline table in the verify environment -> levels 8+ are
     // charset grammar). `ch` is the channel string expression.
     def validChannel(ch: String): String = {

@@ -3,7 +3,8 @@ package graft.catalog
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.dims.Dims
-import graft.functions.{GeoFunctions, Wcmp2Functions => F}
+import graft.expressions.{EtsWalks, GeoBounds}
+import graft.functions.{Wcmp2Functions => F}
 
 /** Columns every row-local rule is built from, all read off the one
   * [[graft.expressions.JsonFacts]] parse materialized behind a Generate
@@ -11,18 +12,20 @@ import graft.functions.{GeoFunctions, Wcmp2Functions => F}
   * can never re-inline the parse per reference. `rec` is the typed
   * payload; `geometryPresent` is true when `$.geometry` is present and
   * not JSON null; `geoPositions` is its flattened coordinate list
-  * (variable nesting depth, see [[GeoFunctions]]); `propsKeys` are the
-  * top-level keys of the `$.properties` object — the presence-vs-null
-  * channel that a typed struct cannot provide (SURVEY.md §7.4-1). The last
-  * five are per-row kernels that several rules share, materialized once
+  * (variable nesting depth, see [[graft.expressions.GeoBounds]]);
+  * `propsKeys` are the top-level keys of the `$.properties` object — the
+  * presence-vs-null channel that a typed struct cannot provide (SURVEY.md
+  * §7.4-1). The next five are per-row kernels that several rules share, materialized once
   * behind a second barrier: the misspelled title and description tokens,
   * the [[graft.expressions.TitleWords]] struct, the K5 http link pool and
-  * the K4 preview links. */
+  * the K4 preview links. `walks` is the struct of the rule walks
+  * ([[EtsRules.walks]], [[KpiRules.walks]]) behind a third barrier: each
+  * walk runs once per record however often its rule reads it. */
 case class RecordCols(rec: Column, geometryPresent: Column,
                       geoPositions: Column, propsKeys: Column,
                       titleMisspelled: Column, descMisspelled: Column,
                       titleWords: Column, httpLinks: Column,
-                      previews: Column)
+                      previews: Column, walks: Column)
 
 /** One ETS conformance test compiled to Catalyst predicates.
   *
@@ -90,53 +93,40 @@ object EtsRules {
     EtsRule("type", "type", fail, concat(lit("Invalid type: "), t))
   }
 
+  /** All 4 bounds of a [[graft.expressions.GeoBounds]] struct within
+    * [-180,180] x [-90,90] (`ets.py:250-253`); null when a bound is null
+    * and none is out of range. */
+  def boundsInWgs84(b: Column): Column =
+    b.getField("minx").between(-180, 180) &&
+      b.getField("miny").between(-90, 90) &&
+      b.getField("maxx").between(-180, 180) &&
+      b.getField("maxy").between(-90, 90)
+
   /** extent_geospatial (`ets.py:235-258`). Note the reference's `messsage`
     * typo means FAILED rows carry no message — reproduced here. */
   def extentGeospatial(r: RecordCols): EtsRule = {
-    val fail = r.geometryPresent &&
-      !GeoFunctions.positionsInWgs84(r.geoPositions)
+    val fail =
+      r.geometryPresent && !boundsInWgs84(r.walks.getField("ets_bounds"))
     EtsRule("extent_geospatial", "extent_geospatial", fail, lit(null))
   }
 
   /** themes (`ets.py:299-363`) — ordered first-failure across themes, then
     * across concepts within a theme; the closing earth-system-discipline
     * existence check only fires when no theme-level failure did, which is
-    * exactly the Python early-return behavior (no theme after a failing one
-    * is ever visited there — but if none fails, all were visited). */
+    * exactly the Python early-return behavior. One native walk,
+    * [[graft.expressions.EtsWalks.themes]]. */
   def themes(r: RecordCols): EtsRule = {
-    val themes = prop(r, "themes")
-    val perTheme = transform(themes, t => {
-      val conceptMsg = F.firstNonNull(transform(t.getField("concepts"), c =>
-        when(c.getField("id").isNull, "Missing concept id")
-          .when(t.getField("scheme").endsWith("earth-system-discipline") &&
-                  !c.getField("id").isInCollection(Dims.earthSystemDisciplines),
-                concat(lit("Invalid Earth system discipline "),
-                       c.getField("id")))))
-      when(size(t.getField("concepts")) < 1, "Missing at least one concept")
-        .when(t.getField("scheme").isNull, "Missing scheme")
-        .otherwise(conceptMsg)
-    })
-    val esdFound = exists(themes, t =>
-      coalesce(t.getField("scheme").contains("earth-system-discipline"),
-               lit(false)))
-    val msg =
-      when(size(themes) < 1, "Missing at least one theme")
-        .otherwise(coalesce(F.firstNonNull(perTheme),
-          when(!esdFound, "No Earth system discipline based theme found")))
+    val msg = r.walks.getField("ets_themes")
     EtsRule("themes", "themes", msg.isNotNull, msg)
   }
 
   /** contacts (`ets.py:365-386`) — the Python `break` exits only the inner
     * role loop, so the surviving message is the FIRST invalid role of the
-    * LAST contact that has any invalid role. Reproduced bit-for-bit. */
+    * LAST contact that has any invalid role
+    * ([[graft.expressions.EtsWalks.contacts]]). */
   def contacts(r: RecordCols): EtsRule = {
-    val contacts = prop(r, "contacts")
-    val firstBadPerContact = transform(contacts, c =>
-      F.firstNonNull(transform(c.getField("roles"), role =>
-        when(!role.isInCollection(Dims.contactRoles), role))))
-    val lastBad = F.lastNonNull(firstBadPerContact)
-    EtsRule("contacts", "contacts", lastBad.isNotNull,
-      concat(lit("Invalid role "), lastBad))
+    val msg = r.walks.getField("ets_contacts")
+    EtsRule("contacts", "contacts", msg.isNotNull, msg)
   }
 
   /** created_datetime (`ets.py:388-404`; note the test id is
@@ -154,9 +144,7 @@ object EtsRules {
     val policy = prop(r, "wmo:dataPolicy")
     val present =
       coalesce(array_contains(r.propsKeys, "wmo:dataPolicy"), lit(false))
-    val hasLicense = coalesce(
-      exists(r.rec.getField("links"), l => l.getField("rel") === "license"),
-      lit(false))
+    val hasLicense = r.walks.getField("ets_license")
     val msg = when(prop(r, "type") === "dataset",
       when(!present, "Missing data policy")
         .when(!policy.isInCollection(Dims.dataPolicies),
@@ -167,38 +155,30 @@ object EtsRules {
   }
 
   /** links (`ets.py:440-489`) — ordered first-failure per link, links in
-    * document order. Channel topic validity = level-wise walk of the
-    * vendored hierarchy tables ([[graft.expressions.TopicChannelValid]]),
-    * the analog of pywis_topics' `th.validate`. */
+    * document order ([[graft.expressions.EtsWalks.links]]). Channel topic
+    * validity is the level-wise walk of the hierarchy tables
+    * ([[graft.expressions.TopicChannel]]), the analog of pywis_topics'
+    * `th.validate`. */
   def links(r: RecordCols): EtsRule = {
-    val links = r.rec.getField("links")
-    val perLink = transform(links, l => {
-      val rel     = l.getField("rel")
-      val href    = l.getField("href")
-      val channel = l.getField("channel")
-      val badSecurityKey = F.firstNonNull(transform(
-        map_keys(l.getField("security")), k =>
-          when(element_at(l.getField("security"), k)
-                 .getField("description").isNull, k)))
-      when(!rel.isInCollection(Dims.linkRelations),
-           concat(lit("invalid link relation "), rel))
-        .when(href.startsWith("mqtt") && channel.isNull,
-              "missing channel for Pub/Sub link")
-        // native split-once walk; the tests' TopicReference holds the
-        // declarative reference (parity: OptimizationParitySpec)
-        .when(href.startsWith("mqtt") &&
-                (channel.startsWith("origin/a/wis2") ||
-                 channel.startsWith("cache/a/wis2")) &&
-                !graft.expressions.TopicChannelValid
-                  .topicChannelValid(channel),
-              "Invalid WIS2 topic for Pub/Sub link channel")
-        .when(badSecurityKey.isNotNull,
-              concat(lit("missing security description for "), badSecurityKey))
-    })
-    val msg = when(size(links) < 1, "missing at least one link")
-      .otherwise(F.firstNonNull(perLink))
+    val msg = r.walks.getField("ets_links")
     EtsRule("links", "links", msg.isNotNull, msg)
   }
+
+  /** The ETS rule walks, one native kernel call each, named as the rules
+    * read them from [[RecordCols.walks]]. Their codelists, the
+    * sub-discipline table of the dims-dir override included, are read
+    * here, on the driver, and travel in the plan as literals. */
+  def walks(r: RecordCols): Seq[Column] = Seq(
+    EtsWalks.themesMessage(prop(r, "themes"), Dims.earthSystemDisciplines)
+      .as("ets_themes"),
+    EtsWalks.contactsMessage(prop(r, "contacts"), Dims.contactRoles)
+      .as("ets_contacts"),
+    EtsWalks.linksMessage(r.rec.getField("links"), Dims.linkRelations,
+      Dims.centreIds, Dims.dataPolicies, Dims.earthSystemDisciplines,
+      Dims.subDisciplineTable().getOrElse(Set.empty)).as("ets_links"),
+    EtsWalks.hasRelColumn(r.rec.getField("links"), "license")
+      .as("ets_license"),
+    GeoBounds.boundsColumn(r.geoPositions).as("ets_bounds"))
 
   // The gating schema-validation test lives in [[SchemaGate]]: the
   // WCMP2 schema's required/type/enum/minItems constraints compiled over

@@ -4,33 +4,36 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.dims.Dims
-import graft.functions.{Wcmp2Functions => F}
+import graft.expressions.{KpiWalks, Summaries}
 
-/** Offline deterministic link probe (SURVEY.md §7.4-5).
+/** A link probe, as data (SURVEY.md §7.4-5).
   *
   * The reference probes every URL live with a 30 s timeout inside rule
   * evaluation (`/root/reference/pywcmp/util.py:149-200`, called from
   * `kpi.py:313,386`) — an anti-pattern at any scale. Our engine makes the
-  * probe a pluggable dimension: this default is the zero-egress stub (every
-  * URL accessible; MIME = declared type, else `text/html`), which
-  * reproduces the reference's 32/32 fixture golden. A real deployment
-  * swaps in a probe table joined on href (see
-  * [[graft.engine.DatasetRules.linkHealthJoin]]).
+  * probe a pluggable dimension that the K4/K5 kernels read as literal
+  * arguments ([[graft.expressions.KpiWalks.probeArgs]]), so the plan
+  * carries it wherever the rules run.
   */
-trait LinkProbe {
-  def accessible(href: Column): Column
-  def mime(href: Column, declaredType: Column): Column
-}
-object OfflineLinkProbe extends LinkProbe {
-  def accessible(href: Column): Column = lit(true)
-  def mime(href: Column, declaredType: Column): Column =
-    coalesce(declaredType, lit("text/html"))
+sealed trait LinkProbe {
+  /** the probe as the trailing arguments of the K4/K5 kernels */
+  private[graft] def args: Seq[(Column, DataType)]
 }
 
-/** Row-local probe seam backed by a MATERIALIZED probe dimension — the
+/** Offline deterministic probe: the zero-egress stub (every URL
+  * accessible; MIME = declared type, else `text/html`), which reproduces
+  * the reference's 32/32 fixture golden. A real deployment swaps in a
+  * probe table ([[MapLinkProbe]], or the join of
+  * [[graft.engine.DatasetRules.linkHealthJoin]]). */
+object OfflineLinkProbe extends LinkProbe {
+  private[graft] def args: Seq[(Column, DataType)] =
+    KpiWalks.probeArgs(Map.empty, offline = true)
+}
+
+/** Row-local probe backed by a MATERIALIZED probe dimension — the
   * production path: `(href, accessible, mime)` rows from
-  * [[graft.sources.UrlSource.probeTable]] compiled into the plan as two
-  * literal maps (K4/K5 then evaluate with zero joins and zero network).
+  * [[graft.sources.UrlSource.probeTable]] compiled into the plan as
+  * literal arrays (K4/K5 then evaluate with zero joins and zero network).
   * Reference mime semantics kept: declared `type` first, probed
   * Content-Type as fallback (`/root/reference/pywcmp/wcmp2/kpi.py:
   * 347-352`). URLs the probe pass never reached count INACCESSIBLE — a
@@ -38,21 +41,13 @@ object OfflineLinkProbe extends LinkProbe {
   * ship in-plan, use [[graft.engine.DatasetRules.linkHealthJoin]]. */
 case class MapLinkProbe(entries: Map[String, (Boolean, String)])
     extends LinkProbe {
-  private val acc: Map[String, Boolean] =
-    entries.map { case (k, (a, _)) => k -> a }
-  private val mimes: Map[String, String] =
-    entries.collect { case (k, (_, m)) if m != null => k -> m }
-  def accessible(href: Column): Column =
-    if (acc.isEmpty) lit(false)
-    else coalesce(element_at(typedlit(acc), href), lit(false))
-  def mime(href: Column, declaredType: Column): Column =
-    if (mimes.isEmpty) declaredType
-    else coalesce(declaredType, element_at(typedlit(mimes), href))
+  private[graft] def args: Seq[(Column, DataType)] =
+    KpiWalks.probeArgs(entries, offline = false)
 }
 object MapLinkProbe {
-  /** Hard ceiling on in-plan probe entries: beyond this a literal map is
-    * a driver-memory + codegen-constant bomb (every task ships and
-    * compiles the whole map). The guard fails FAST with the scale path
+  /** Hard ceiling on in-plan probe entries: beyond this the literal
+    * arrays are a driver-memory and task-size bomb (every task ships the
+    * whole probe). The guard fails FAST with the scale path
     * spelled out rather than OOMing mid-collect at 100 TB. */
   val MaxLiteralEntries: Int = 10000
 
@@ -159,7 +154,7 @@ object KpiRules {
     // bulletin header: +1 if absent, −1 (not 0) if present (kpi.py:147-153)
     val p7 = when(hasBulletin, -1).otherwise(1)
     val p8 = point(size(misspelled) === 0)
-    val comments = array_compact(array(
+    val comments = Summaries.compactColumn(array(
       commentIf(size(words) < 3, lit("Title has less than 3 words")),
       commentIf(length(t) > 150, lit("Title has more than 150 characters")),
       commentIf(!allAlnum, lit("Title contains non-printable characters")),
@@ -187,7 +182,7 @@ object KpiRules {
     val hasBulletin = coalesce(d.rlike(bulletinRe), lit(false))
     val score = point(lenOk) + point(!hasHtml) + point(!hasBulletin) +
       point(size(misspelled) === 0)
-    val comments = array_compact(array(
+    val comments = Summaries.compactColumn(array(
       commentIf(d.isNull, lit("Description is null")),
       commentIf(!lenOk,
         lit("Description is not between 16 and 2048 characters")),
@@ -200,162 +195,89 @@ object KpiRules {
       lit(": Good quality description"), lit(4), score, comments)
   }
 
-  /** kpi_time_intervals — total 3 per gathered interval (`kpi.py:218-277`).
-    * Interval endpoints compare lexicographically as strings, exactly like
-    * the reference (`kpi.py:260`). */
-  def timeIntervals(r: RecordCols): KpiRule = {
-    val time = r.rec.getField("time")
-    val additional =
-      r.rec.getField("additionalExtents").getField("temporal")
-    val intervals = filter(array(time, additional),
-      x => x.isNotNull && x.getField("interval").isNotNull)
-    def perInterval(ti: Column): Column = {
-      val iv = ti.getField("interval")
-      val begin = get(iv, lit(0))
-      val end   = get(iv, lit(1))
-      val orderOk = (!array_contains(iv, "..") && begin <= end) ||
-        (end === "..")
-      val notFullyOpen = !(begin === ".." && end === "..")
-      point(orderOk) + point(notFullyOpen) +
-        point(ti.getField("resolution").isNotNull)
-    }
-    val timeIsNull = time.isNull
-    val total = when(timeIsNull, 0).otherwise(size(intervals) * 3)
-    val score = when(timeIsNull, 0).otherwise(
-      aggregate(intervals, lit(0), (acc, ti) => acc + perInterval(ti)))
-    // comments in the reference's per-interval, per-check order
-    val comments = when(timeIsNull, array(lit("time is null; no KPI check")))
-      .otherwise(array_compact(flatten(transform(intervals, ti => {
-        val iv = ti.getField("interval")
-        val orderOk = (!array_contains(iv, "..") &&
-          get(iv, lit(0)) <= get(iv, lit(1))) || (get(iv, lit(1)) === "..")
-        array(
-          commentIf(!orderOk,
-            lit("Begin must be less than or equal to the end or open")),
-          commentIf(get(iv, lit(0)) === ".." && get(iv, lit(1)) === "..",
-            lit("Temporal interval cannot be fully open")),
-          commentIf(ti.getField("resolution").isNull,
-            lit("No temporal resolution found")))
-      }))))
-    KpiRule("time_intervals", lit("Time intervals"), total, score, comments)
+  /** A KPI from its walk's `(total, score, comments)` struct, read from
+    * [[RecordCols.walks]] under the KPI's name. */
+  private def walked(r: RecordCols, name: String, title: Column): KpiRule = {
+    val result = r.walks.getField(s"kpi_$name")
+    KpiRule(name, title, result.getField("total"), result.getField("score"),
+      result.getField("comments"))
   }
+
+  /** kpi_time_intervals — total 3 per gathered interval (`kpi.py:218-277`,
+    * [[graft.expressions.KpiWalks.timeIntervals]]). Interval endpoints
+    * compare lexicographically as strings, exactly like the reference
+    * (`kpi.py:260`). */
+  def timeIntervals(r: RecordCols): KpiRule =
+    walked(r, "time_intervals", lit("Time intervals"))
 
   /** kpi_graphic_overview — total 3 per `rel == 'preview'` link
-    * (`kpi.py:279-328`). */
-  def graphicOverview(r: RecordCols, probe: LinkProbe): KpiRule = {
-    val previews = r.previews
-    def mimeOk(l: Column): Column = {
-      val declared = coalesce(l.getField("type"), lit(""))
-      declared.isInCollection(Dims.webImageMimes) &&
-        probe.mime(l.getField("href"), l.getField("type"))
-          .isInCollection(Dims.webImageMimes)
-    }
-    val total = size(previews) * 3
-    val score = aggregate(previews, lit(0), (acc, l) =>
-      acc + 1 + point(mimeOk(l)) + point(probe.accessible(l.getField("href"))))
-    val comments = array_compact(flatten(transform(previews, l => array(
-      commentIf(!mimeOk(l), concat(lit("MIME type "),
-        coalesce(l.getField("type"), lit("")), lit(" not a web image"))),
-      commentIf(!probe.accessible(l.getField("href")),
-        concat(lit("URL not accessible: "), l.getField("href")))))))
-    KpiRule("graphic_overview",
-      lit("Graphic overview for metadata records"), total, score, comments)
-  }
+    * (`kpi.py:279-328`, [[graft.expressions.KpiWalks.graphicOverview]]). */
+  def graphicOverview(r: RecordCols): KpiRule =
+    walked(r, "graphic_overview", lit("Graphic overview for metadata records"))
 
   /** kpi_links_health — total 2 per http(s) URL in the pooled link set
-    * (`kpi.py:330-405`): record links, then per theme its concept `url`s
-    * and its scheme, then contact links. */
-  def linksHealth(r: RecordCols, probe: LinkProbe): KpiRule = {
-    val httpLinks = r.httpLinks
-    def typeOk(p: Column): Column =
-      probe.mime(p.getField("href"), p.getField("type"))
-        .isInCollection(Dims.validMimes)
-    val total = size(httpLinks) * 2
-    val score = aggregate(httpLinks, lit(0), (acc, p) =>
-      acc + point(probe.accessible(p.getField("href"))) + point(typeOk(p)))
-    val comments = array_compact(flatten(transform(httpLinks, p => array(
-      commentIf(!probe.accessible(p.getField("href")),
-        concat(lit("URL not accessible: "), p.getField("href"))),
-      commentIf(!typeOk(p), concat(lit("invalid link type "),
-        coalesce(probe.mime(p.getField("href"), p.getField("type")),
-                 lit("None"))))))))
-    KpiRule("links_health", lit("Links health"), total, score, comments)
-  }
+    * (`kpi.py:330-405`, [[graft.expressions.KpiWalks.linksHealth]]):
+    * record links, then per theme its concept `url`s and its scheme, then
+    * contact links. */
+  def linksHealth(r: RecordCols): KpiRule =
+    walked(r, "links_health", lit("Links health"))
 
-  /** kpi_contacts — total 3 (`kpi.py:407-451`). Reference bug reproduced:
+  /** kpi_contacts — total 3 (`kpi.py:407-451`,
+    * [[graft.expressions.KpiWalks.contacts]]). Reference bug reproduced:
     * the email loop reads `contact` — the LAST contact of the first loop —
     * not `host_contact` (`kpi.py:441`). */
-  def contacts(r: RecordCols): KpiRule = {
-    val cs = prop(r, "contacts")
-    val hosts = filter(cs,
-      c => coalesce(array_contains(c.getField("roles"), "host"), lit(false)))
-    val host = F.lastElem(hosts)
-    val lastContact = F.lastElem(cs)
-    val hostFound = host.isNotNull
-    val instructionsOk = host.getField("contactInstructions").isNotNull
-    val emailFound = coalesce(
-      exists(lastContact.getField("emails"),
-             e => e.getField("value").isNotNull), lit(false))
-    val score = point(hostFound) +
-      point(hostFound && instructionsOk) + point(hostFound && emailFound)
-    val comments = array_compact(array(
-      commentIf(!hostFound, lit("No host contact found")),
-      commentIf(hostFound && !instructionsOk,
-                lit("No host contact instructions found")),
-      commentIf(hostFound && !emailFound,
-                lit("No host contact email found"))))
-    KpiRule("contacts", lit("Contacts"), lit(3), score, comments)
-  }
+  def contacts(r: RecordCols): KpiRule =
+    walked(r, "contacts", lit("Contacts"))
 
-  /** kpi_pids — Persistent identifiers (`kpi.py:453-490`). `externalIds`
-    * key presence via raw JSON keys; reference quirk kept: the cite-as
-    * point is scored even when total == 0, so score may exceed total. */
-  def pids(r: RecordCols): KpiRule = {
-    val present =
-      coalesce(array_contains(r.propsKeys, "externalIds"), lit(false))
-    val schemeOk = coalesce(exists(prop(r, "externalIds"),
-      e => e.getField("scheme").isin("doi", "ark", "hdl")), lit(false))
-    val citeAs = coalesce(exists(r.rec.getField("links"),
-      l => l.getField("rel") === "cite-as"), lit(false))
-    val total = when(present, 3).otherwise(0)
-    val score = when(present, lit(1) + point(schemeOk)).otherwise(0) +
-      point(citeAs)
-    val comments = array_compact(array(
-      commentIf(present && !schemeOk, lit("No DOI/ARK/HDL schema found"))))
-    KpiRule("pids", lit("Persistent identifiers"), total, score, comments)
-  }
+  /** kpi_pids — Persistent identifiers (`kpi.py:453-490`,
+    * [[graft.expressions.KpiWalks.pids]]). `externalIds` key presence via
+    * raw JSON keys; reference quirk kept: the cite-as point is scored even
+    * when total == 0, so score may exceed total. */
+  def pids(r: RecordCols): KpiRule =
+    walked(r, "pids", lit("Persistent identifiers"))
+
+  /** The KPI walks, one native kernel call each, named `kpi_<name>` as
+    * [[walked]] reads them from [[RecordCols.walks]]. The probe and the
+    * MIME codelists travel in the plan as literals. */
+  def walks(r: RecordCols, probe: LinkProbe): Seq[Column] = Seq(
+    KpiWalks.timeIntervalsResult(r.rec.getField("time"),
+      r.rec.getField("additionalExtents").getField("temporal"))
+      .as("kpi_time_intervals"),
+    KpiWalks.graphicOverviewResult(r.previews, Dims.webImageMimes, probe.args)
+      .as("kpi_graphic_overview"),
+    KpiWalks.linksHealthResult(r.httpLinks, Dims.validMimes, probe.args)
+      .as("kpi_links_health"),
+    KpiWalks.contactsResult(prop(r, "contacts")).as("kpi_contacts"),
+    KpiWalks.pidsResult(r.propsKeys, prop(r, "externalIds"),
+      r.rec.getField("links")).as("kpi_pids"))
 
   /** All 7 KPIs in the reference's alphabetical execution order
-    * (`kpi.py:503-508`). */
-  def catalog(r: RecordCols,
-              probe: LinkProbe = OfflineLinkProbe): Seq[KpiRule] = Seq(
+    * (`kpi.py:503-508`), over the walks of [[walks]]. */
+  def catalog(r: RecordCols): Seq[KpiRule] = Seq(
     contacts(r),
     description(r),
-    graphicOverview(r, probe),
-    linksHealth(r, probe),
+    graphicOverview(r),
+    linksHealth(r),
     pids(r),
     timeIntervals(r),
     title(r))
 
   /** KPI summary struct `(total, score, percentage, grade, comments)`
-    * from a kpi-tests array ATTRIBUTE (`kpi.py:559-589`), shared by the
-    * full-catalog path ([[graft.engine.Validator.validate]]) and the
-    * `--kpi` single-selection path ([[graft.engine.Reports.selectKpi]]).
-    * Reproduces the summary comments-clobber bug (`kpi.py:573-576`): the
-    * dict ends up holding ALL fields of the LAST test that had comments. */
-  def summaryOf(tests: Column): Column = {
-    val total = aggregate(tests, lit(0), (acc, t) => acc + t.getField("total"))
-    val score = aggregate(tests, lit(0), (acc, t) => acc + t.getField("score"))
+    * (`kpi.py:559-589`) from `sums`, the
+    * [[graft.expressions.Summaries.kpiSummary]] struct of a kpi-tests array,
+    * materialized as an attribute: `percentage` and `grade` read its fields
+    * many times ([[graft.engine.Validator.withKpiSummary]], shared by the
+    * full-catalog path and the `--kpi` single-selection path). Reproduces
+    * the summary comments-clobber bug (`kpi.py:573-576`): the dict ends up
+    * holding ALL fields of the LAST test that had comments. */
+  def summary(sums: Column): Column = {
+    val total = sums.getField("total")
     val pct = when(total === 0, lit(null).cast(DoubleType))
-      .otherwise(bround(score.cast(DoubleType) / total * 100, 3))
-    val lastCommented = {
-      val flagged = transform(tests,
-        t => when(size(t.getField("comments")) > 0, t))
-      val compacted = array_compact(flagged)
-      get(compacted, size(compacted) - 1)
-    }
-    struct(total.as("total"), score.as("score"), pct.as("percentage"),
-      grade(pct).as("grade"), lastCommented.as("comments"))
+      .otherwise(bround(sums.getField("score").cast(DoubleType) / total * 100,
+        3))
+    struct(total.as("total"), sums.getField("score").as("score"),
+      pct.as("percentage"), grade(pct).as("grade"),
+      sums.getField("comments").as("comments"))
   }
 
   /** Letter grade (`kpi.py:593-619`): A≥80, B≥65, C≥50, D≥35, E≥20, else

@@ -80,7 +80,7 @@ object Dims {
     * levels >= 8, rooted at the earth-system discipline): loaded from
     * `<dims-dir>/sub-discipline.csv` when the [[DimsDirProperty]] override
     * provides one (one `discipline/sub/path` per line), `None` otherwise —
-    * [[graft.expressions.TopicChannelValid]] then falls back to the
+    * [[graft.expressions.TopicChannel]] then falls back to the
     * charset grammar for those levels. The published trees are large and
     * centre-managed; the override is the deployment hook. */
   def subDisciplineTable(): Option[Set[String]] =

@@ -171,12 +171,15 @@ object DatasetRules {
     // relation is the cheapest barrier: no cached blocks left behind, no
     // second scan, and the PSI/KL reduce below runs over KB-sized input.
     val spark = records.sparkSession
+    val histRows = histPlan.collect()
     val hist = spark.createDataFrame(
-      java.util.Arrays.asList(histPlan.collect(): _*), histPlan.schema)
+      java.util.Arrays.asList(histRows: _*), histPlan.schema)
+    // the corpus total is the one-row sum of the collected histogram, a
+    // literal: an unpartitioned window would gather every row on one task
+    val gtotal = histRows.map(_.getAs[Long]("cnt")).sum
     val global = hist.groupBy("bucket")
       .agg(sum("cnt").as("gcnt"))
-      .withColumn("gtotal", sum("gcnt").over())
-      .withColumn("p_global", col("gcnt") / col("gtotal"))
+      .withColumn("p_global", col("gcnt") / lit(gtotal))
       .select("bucket", "p_global")
     val perLang = hist
       .withColumn("ltotal",

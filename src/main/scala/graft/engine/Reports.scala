@@ -109,13 +109,10 @@ object Reports {
       throw new IllegalArgumentException(
         s"Invalid KPI number: kpi_$kpi is not in " +
           KpiNames.map("kpi_" + _).mkString("[", ", ", "]"))
-    import graft.catalog.KpiRules
-    val targetId = KpiRules.idOf(kpi)
-    validated
-      .withColumn("kpi_tests",
-        filter(col("kpi_tests"), t => t.getField("id") === targetId))
-      .withColumn("kpi_summary",
-        when(col("parse_ok"), KpiRules.summaryOf(col("kpi_tests"))))
+    val targetId = graft.catalog.KpiRules.idOf(kpi)
+    Validator.withKpiSummary(validated
+      .withColumn("kpi_tests", graft.expressions.Summaries
+        .selectByIdColumn(col("kpi_tests"), targetId)))
   }
 
   /** The record identity a single-record call validates under (the report

@@ -23,23 +23,24 @@ import graft.catalog.{EtsRules, KpiRules, LinkProbe, OfflineLinkProbe, RecordCol
   */
 object Validator {
 
-  /** The two Generate barriers every row-local rule reads through, and
+  /** The three Generate barriers every row-local rule reads through, and
     * the [[RecordCols]] that point the catalog at them: `_p`, the parse
-    * products, and `_k`, the per-row kernels several rules share.
+    * products, `_k`, the per-row kernels several rules share, and `_w`,
+    * the rule walks (the K4/K5 ones scored with `probe`).
     * [[validate]] builds on this frame; `graft.Probe rules` times each
     * rule over the same one, so it measures the production expressions. */
-  private[graft] def withKernels(records: DataFrame): (DataFrame, RecordCols) = {
-    // second barrier: per-row kernels that multiple rule expressions
-    // reference (spellcheck x3 refs each, the K5 link pool x3, the K1
-    // title facts words/all_alnum/cap_ok/n_acronyms x2 each, K4 previews
-    // x3) — materialized ONCE each, and only the fields a rule reads.
+  private[graft] def withKernels(records: DataFrame,
+      probe: LinkProbe = OfflineLinkProbe): (DataFrame, RecordCols) = {
+    // second barrier: per-row kernels that several rule expressions
+    // reference (spellcheck x3 refs each, the K1 title facts
+    // words/all_alnum/cap_ok/n_acronyms x2 each; the K5 link pool and the
+    // K4 previews feed one rule kernel each) — materialized ONCE each, and
+    // only the fields a rule reads.
     val titleCol = col("_p.rec.properties.title")
     val kernels = struct(
       // native kernels (one JVM call each; the declarative formulations
       // are the tests' reference impls, parity-tested in
-      // OptimizationParitySpec) — everything in this struct is evaluated
-      // interpreted inside the Generate barrier, so composite HOF/regex
-      // chains here are hot-path poison
+      // OptimizationParitySpec)
       graft.expressions.Misspelled.misspelled(titleCol).as("title_mis"),
       graft.expressions.Misspelled.misspelled(
         col("_p.rec.properties.description")).as("desc_mis"),
@@ -48,17 +49,23 @@ object Validator {
       graft.expressions.Previews.previews(col("_p.rec.links"))
         .as("previews"))
 
-    val withParsed = parsed(records)
-      .select(col("*"), explode(array(kernels)).as("_k"))
-
     val rc = RecordCols(col("_p.rec"), col("_p.geom_present"),
       col("_p.geo_positions"), col("_p.props_keys"),
       titleMisspelled = col("_k.title_mis"),
       descMisspelled = col("_k.desc_mis"),
       titleWords = col("_k.title_kernel"),
       httpLinks = col("_k.http_links"),
-      previews = col("_k.previews"))
-    (withParsed, rc)
+      previews = col("_k.previews"),
+      walks = col("_w"))
+    // third barrier: the rule walks, one kernel call each. A rule reads its
+    // walk's result two to six times, and everything below sits inside
+    // `when(parse_ok, ...)` branches that subexpression elimination does
+    // not enter, so an inlined walk would run once per reference.
+    val walks = struct(EtsRules.walks(rc) ++ KpiRules.walks(rc, probe): _*)
+    val withWalks = parsed(records)
+      .select(col("*"), explode(array(kernels)).as("_k"))
+      .select(col("*"), explode(array(walks)).as("_w"))
+    (withWalks, rc)
   }
 
   /** `records` with `_p`, the parse products of
@@ -99,8 +106,8 @@ object Validator {
     * Pure narrow projection. */
   def validate(records: DataFrame,
                probe: LinkProbe = OfflineLinkProbe): DataFrame = {
-    val (withParsed, rc) =
-      withKernels(records.withColumn("sha256", sha2(col("content"), 256)))
+    val (withParsed, rc) = withKernels(
+      records.withColumn("sha256", sha2(col("content"), 256)), probe)
 
     // `json.loads` failure => RuntimeError in the reference
     // (`/root/reference/pywcmp/util.py:203-219`); here: a parse_error row.
@@ -118,7 +125,7 @@ object Validator {
     val validation = graft.catalog.SchemaGate.result(
       graft.catalog.SchemaGate.errors(col("_p")))
 
-    val kpis = KpiRules.catalog(rc, probe)
+    val kpis = KpiRules.catalog(rc)
     val kpiTests = array(kpis.map(_.result): _*)
 
     // PLAN-SHAPE CRITICAL: every downstream expression references the
@@ -132,25 +139,30 @@ object Validator {
       .withColumn("validation", when(parseOk, validation))
       .withColumn("kpi_tests", when(parseOk, kpiTests))
       .withColumn("_id", col("_p.rec.id"))
-      .drop("_p", "_k")
+      .drop("_p", "_k", "_w")
 
-    def countCode(codeVal: String): Column =
-      size(filter(col("ets_tests"), t => t.getField("code") === codeVal))
-
-    stage1
-      .withColumn("ets_summary", when(col("parse_ok"), struct(
-        countCode("PASSED").as("PASSED"),
-        countCode("FAILED").as("FAILED"),
-        countCode("SKIPPED").as("SKIPPED"))))
-      // summary over the materialized kpi_tests attribute, incl. the
-      // comments-clobber quirk (kpi.py:573-576) — see KpiRules.summaryOf
-      .withColumn("kpi_summary",
-        when(col("parse_ok"), KpiRules.summaryOf(col("kpi_tests"))))
+    withKpiSummary(stage1
+      // PASSED/FAILED/SKIPPED counts of the codes, in one native walk
+      .withColumn("ets_summary", when(col("parse_ok"),
+        graft.expressions.Summaries.etsCountsColumn(col("ets_tests")))))
       // both reports and the referential rule read this attribute; it
       // stays the last column
       .withColumn("metadata_id", col("_id"))
       .drop("_id")
   }
+
+  /** `df` with `kpi_summary` ([[KpiRules.summary]]) over its `kpi_tests`,
+    * null where `parse_ok` is false, incl. the comments-clobber quirk
+    * (kpi.py:573-576). The summary walk is one column of its own: the
+    * summary reads its fields many times, and the optimizer keeps a
+    * projection that defines a non-trivial column several references
+    * read. */
+  private[graft] def withKpiSummary(df: DataFrame): DataFrame =
+    df.withColumn("_kpi_sums",
+        graft.expressions.Summaries.kpiSummaryColumn(col("kpi_tests")))
+      .withColumn("kpi_summary",
+        when(col("parse_ok"), KpiRules.summary(col("_kpi_sums"))))
+      .drop("_kpi_sums")
 
   /** Violation rows `(repo, path, commit, lang, rule_id, severity,
     * diagnostic)` — the north-rule output shape. Severity is ERROR for all
@@ -175,10 +187,7 @@ object Validator {
         concat(col("validation.message"), lit(": "),
           concat_ws("; ", col("validation.errors"))).as("diagnostic"))))
       .otherwise(empty)
-    val etsV = transform(
-      filter(col("ets_tests"), t => t.getField("code") === "FAILED"),
-      t => struct(t.getField("id").as("rule_id"),
-        t.getField("message").as("diagnostic")))
+    val etsV = graft.expressions.Summaries.failedTestsColumn(col("ets_tests"))
     val perRow = when(!col("parse_ok"), parseV)
       .otherwise(concat(schemaV, etsV))
     validated

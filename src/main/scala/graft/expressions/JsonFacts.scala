@@ -629,8 +629,7 @@ object JsonFacts {
   /** `$.geometry` object walk: type + the flattened position list
     * (shapely-equivalent: Point/LineString/MultiPoint/Polygon/
     * MultiLineString/MultiPolygon flatten to a list of [x,y(,z)]
-    * positions; an unrecognized `type` yields null positions like the
-    * declarative per-type CaseWhen in GeoFunctions). Positions are
+    * positions; an unrecognized `type` yields null positions). Positions are
     * DEPTH-GATED per type (Point positions live at coordinate depth 1,
     * LineString/MultiPoint at 2, Polygon/MultiLineString at 3,
     * MultiPolygon at 4): depth-mismatched coordinates yield NULL

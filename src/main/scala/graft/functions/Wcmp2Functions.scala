@@ -3,9 +3,11 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Scalar building blocks for the rule catalog. Everything here is built
-  * from `org.apache.spark.sql.functions._` (codegen'd, whole-stage
-  * compatible) — no Scala UDFs in the hot path.
+/** Scalar building blocks for the rule catalog, built from
+  * `org.apache.spark.sql.functions._` with no Scala UDF and no
+  * higher-order function: each is a plain expression that whole-stage
+  * codegen compiles. The array walks are kernels
+  * (`graft.expressions.EtsWalks`, `KpiWalks`, `Summaries`).
   */
 object Wcmp2Functions {
 
@@ -31,15 +33,6 @@ object Wcmp2Functions {
         "(Z|\\.[0-9]{1,6}Z|[+-]([0-9]{4}|[0-9]{6}|" +
         "[0-9]{2}:[0-9]{2}(:[0-9]{2})?))$")
     calendarOk && structural
-  }
-
-  /** First non-null element of an array (ANSI-safe; null if none). */
-  def firstNonNull(arr: Column): Column = get(array_compact(arr), lit(0))
-
-  /** Last non-null element of an array (ANSI-safe; null if none). */
-  def lastNonNull(arr: Column): Column = {
-    val compacted = array_compact(arr)
-    get(compacted, size(compacted) - 1)
   }
 
   /** Last element of an array (ANSI-safe; null if empty). */

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   *  - `geometry` is intentionally NOT in this struct: its nesting depth
   *    varies by geometry type, so the [[graft.expressions.JsonFacts]]
   *    walk reports its presence and flattens its positions per type
-  *    (see [[graft.functions.GeoFunctions]]).
+  *    (see [[graft.expressions.GeoBounds]]).
   *  - datetimes stay `StringType`; the reference validates format with
   *    3 explicit strptime patterns (`util.py:241-250`), it never converts.
   *  - interval endpoints stay strings: the reference compares them

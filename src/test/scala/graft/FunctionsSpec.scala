@@ -4,7 +4,9 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => ScTest}
 import graft.catalog.KpiRules
 import graft.expressions.JsonFacts
-import graft.functions.{GeoFunctions, Wcmp2Functions => F}
+import graft.catalog.EtsRules
+import graft.expressions.GeoBounds
+import graft.functions.{Wcmp2Functions => F}
 
 /** Unit goldens from `/root/reference/tests/run_tests.py:230-272` plus
   * property tests for the pure kernels. */
@@ -105,7 +107,7 @@ class FunctionsSpec extends SparkSpec {
 
   test("geojson bounds: all geometry types, shapely .bounds equivalence") {
     def b(g: String): (Double, Double, Double, Double) =
-      positions(g).select(GeoFunctions.boundsFromPositions(col("pos")).as("b"))
+      positions(g).select(GeoBounds.boundsColumn(col("pos")).as("b"))
         .select("b.minx", "b.miny", "b.maxx", "b.maxy")
         .as[(Double, Double, Double, Double)].head()
     assert(b("""{"type":"Point","coordinates":[10,20]}""") == (10, 20, 10, 20))
@@ -124,7 +126,8 @@ class FunctionsSpec extends SparkSpec {
 
   test("wgs84 bounds check (ets.py:250-253)") {
     def ok(g: String): Boolean =
-      positions(g).select(GeoFunctions.positionsInWgs84(col("pos")))
+      positions(g).select(EtsRules.boundsInWgs84(
+          GeoBounds.boundsColumn(col("pos"))))
         .as[Boolean].head()
     assert(ok("""{"type":"Point","coordinates":[-180,-90]}"""))
     assert(!ok("""{"type":"Point","coordinates":[-242,28]}"""))

@@ -3,7 +3,7 @@ package graft
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.US_ASCII
 
-import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -94,33 +94,40 @@ class KernelSpec extends SparkSpec {
       "synth_wav_adpcm" -> AudioOps.synthWavAdpcm(seed))
   }
 
-  /** (schema, rows, ran inside whole-stage codegen) of the kernel columns
-    * under the given SQL confs, restored afterwards. */
-  private def evaluate(conf: (String, String)*)
+  private val codegenOnly = Seq(
+    "spark.sql.codegen.wholeStage" -> "true",
+    "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+    "spark.sql.codegen.fallback" -> "false")
+  private val interpreted = Seq(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
+  /** (schema, rows, ran inside whole-stage codegen) of the frame `df`
+    * builds under the given SQL confs, restored afterwards. */
+  private def evaluate(conf: Seq[(String, String)])(df: => DataFrame)
       : (StructType, Seq[Row], Boolean) = {
     val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
     conf.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
-        schema).select(kernels.map { case (n, c) => c.as(n) }: _*)
-      val codegen = df.queryExecution.executedPlan
+      val frame = df
+      val codegen = frame.queryExecution.executedPlan
         .exists(_.isInstanceOf[WholeStageCodegenExec])
-      (df.schema, df.collect().toSeq, codegen)
+      (frame.schema, frame.collect().toSeq, codegen)
     } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
   }
 
+  /** the kernel columns over [[rows]] */
+  private def kernelFrame: DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+      .select(kernels.map { case (n, c) => c.as(n) }: _*)
+
   test("every kernel factory gives equal results, types and nullability " +
        "under whole-stage codegen and interpreted evaluation") {
-    val (genSchema, genRows, genCodegen) = evaluate(
-      "spark.sql.codegen.wholeStage" -> "true",
-      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
-      "spark.sql.codegen.fallback" -> "false")
-    val (intSchema, intRows, intCodegen) = evaluate(
-      "spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val (genSchema, genRows, genCodegen) = evaluate(codegenOnly)(kernelFrame)
+    val (intSchema, intRows, intCodegen) = evaluate(interpreted)(kernelFrame)
     assert(genCodegen && !intCodegen)
     assert(genSchema == intSchema)
     assert(genSchema.fieldNames.toSeq == kernels.map(_._1))
@@ -146,5 +153,32 @@ class KernelSpec extends SparkSpec {
     val linkPool = kernels.indexWhere(_._1 == "link_pool")
     assert(genRows.head.getSeq[Row](linkPool).nonEmpty)
     assert(!genSchema(linkPool).nullable)
+  }
+
+  test("the rule-walk kernels give equal results, types and nullability " +
+       "under whole-stage codegen and interpreted evaluation, and equal " +
+       "their declarative references") {
+    def walks: DataFrame = {
+      val (base, rc) =
+        engine.Validator.withKernels(RuleWalkCases.records(spark))
+      base.select(RuleWalkCases.columns(rc).map { case (n, k, _) => k.as(n) }: _*)
+    }
+    val (genSchema, genRows, genCodegen) = evaluate(codegenOnly)(walks)
+    val (intSchema, intRows, intCodegen) = evaluate(interpreted)(walks)
+    assert(genCodegen && !intCodegen)
+    assert(genSchema == intSchema)
+    assert(genRows == intRows)
+    val (base, rc) = engine.Validator.withKernels(RuleWalkCases.records(spark))
+    val cases = RuleWalkCases.columns(rc)
+    val reference = base.select(cases.map { case (n, _, d) => d.as(n) }: _*)
+      .collect().toSeq
+    assert(genRows.size == reference.size)
+    genRows.zip(reference).zipWithIndex.foreach { case ((k, d), n) =>
+      cases.indices.foreach { c =>
+        assert(k.get(c) == d.get(c),
+          s"${cases(c)._1} differs on row $n:\nkernel      ${k.get(c)}\n" +
+            s"declarative ${d.get(c)}")
+      }
+    }
   }
 }

@@ -197,22 +197,60 @@ class OptimizationParitySpec extends SparkSpec {
       val declarative = channels.toDF("c")
         .select(TopicReference.validTopicChannel(col("c"), table))
         .as[Boolean].collect()
-      val kernel = channels.toDF("c")
-        .select(graft.expressions.TopicChannelValid
-          .topicChannelValid(col("c"), table))
-        .as[Boolean].collect()
+      // the tables as the links kernel receives them: literals of the plan
+      val lists = Seq(Dims.centreIds, Dims.dataPolicies,
+          Dims.earthSystemDisciplines, table.getOrElse(Set.empty[String]))
+        .map(l => spark.range(1).select(graft.expressions.Codelist.literal(l))
+          .queryExecution.executedPlan.executeCollect().head.getArray(0))
       channels.indices.foreach { i =>
-        assert(kernel(i) == declarative(i),
+        assert(graft.expressions.TopicChannel.valid(channels(i), lists(0),
+            lists(1), lists(2), lists(3)) == declarative(i),
           s"channel parity mismatch on '${channels(i)}' (table=$table)")
       }
-      // null input: the declarative composition lands in otherwise(false)
+      // null input: the declarative composition lands in otherwise(false),
+      // where the links kernel never calls the check
       val nullRes = Seq(Option.empty[String]).toDF("c")
-        .select(TopicReference.validTopicChannel(col("c"), table).as("d"),
-          graft.expressions.TopicChannelValid
-            .topicChannelValid(col("c"), table).as("k"))
-        .as[(Boolean, Boolean)].head()
-      assert(nullRes == ((false, false)), s"null parity (table=$table)")
+        .select(TopicReference.validTopicChannel(col("c"), table))
+        .as[Boolean].head()
+      assert(!nullRes, s"null channel (table=$table)")
     }
+  }
+
+  test("rule-walk kernels: parity with their declarative references over " +
+       "the fixtures, 400 synthesized records and the edge records") {
+    val (base, rc) = engine.Validator.withKernels(RuleWalkCases.records(spark))
+    val cases = RuleWalkCases.columns(rc)
+    val rows = base.select((col("_p.rec.id").as("id") +: cases.flatMap {
+      case (name, k, d) => Seq(k.as(s"k:$name"), d.as(s"d:$name"))
+    }): _*).collect()
+    assert(rows.length == RecordTable.fixtureNames.size + 400 +
+      RuleWalkCases.edges.size)
+    val mismatches = for {
+      r <- rows.toSeq
+      ((name, _, _), c) <- cases.zipWithIndex
+      if r.get(1 + 2 * c) != r.get(2 + 2 * c)
+    } yield s"$name on ${r.getString(0)}: kernel=${r.get(1 + 2 * c)} " +
+      s"declarative=${r.get(2 + 2 * c)}"
+    assert(mismatches.isEmpty, mismatches.take(20).mkString("\n"))
+    // the edge records reach the failing branches
+    val byId = rows.map(r => r.getString(0) -> r).toMap
+    def ets(id: String, rule: String): String = {
+      val c = cases.indexWhere(_._1 == s"ets:$rule")
+      byId(id).getStruct(1 + 2 * c).getString(2)
+    }
+    assert(ets("e-null-arrays", "themes") == null)
+    assert(ets("e-empty-arrays", "themes") == "Missing at least one theme")
+    assert(ets("e-null-elements", "themes") == "Missing scheme")
+    assert(ets("e-concepts", "themes") == "Missing concept id")
+    assert(ets("e-concepts", "contacts") == "Invalid role alsobad")
+    // `a`'s first entry has a description; `b` has no value
+    assert(ets("e-security-dup-first-ok", "links") ==
+      "missing security description for b")
+    assert(ets("e-security-dup-first-bad", "links") ==
+      "missing security description for a")
+    assert(ets("e-mqtt", "links") ==
+      "Invalid WIS2 topic for Pub/Sub link channel")
+    assert(ets("e-empty-arrays", "links") == "missing at least one link")
   }
 
   test("json facts: byte-parser fast path matches the char path") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Expression, GetJsonObject,
-  JsonToStructs, Length}
+  HigherOrderFunction, JsonToStructs, Length}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
@@ -284,5 +284,35 @@ class PlanAuditSpec extends SparkSpec {
         assert(!a.aggregateExpressions.exists(_.exists(_.isInstanceOf[Length])))
       case _ =>
     }
+  }
+
+  private val isHof: Expression => Boolean =
+    _.isInstanceOf[HigherOrderFunction]
+
+  test("native rule walks: no higher-order function in the validator, " +
+       "CLI, --kpi and compiled catalog plans") {
+    val records = RecordTable.synthesize(spark, 100)
+    val validated = Main.validated(records, failOnEts = true)
+    val plans = Seq(
+      "Validator.validate" -> Validator.validate(RecordTable.fixtures(spark))
+        .queryExecution.optimizedPlan,
+      "Main.validated" -> validated.queryExecution.optimizedPlan,
+      "Main.violations" -> Main.violations(validated)
+        .queryExecution.optimizedPlan,
+      "Reports.selectKpi" -> Reports.selectKpi(validated, "contacts")
+        .queryExecution.optimizedPlan,
+      "CompiledCatalog.optimizedPlan" ->
+        graft.engine.CompiledCatalog.optimizedPlan(spark))
+    val hofs = plans.map { case (n, p) => n -> count(p)(isHof) }
+    assert(hofs.forall(_._2 == 0), s"higher-order functions: $hofs")
+  }
+
+  test("the compiled catalog plan stays within its expression-node " +
+       "ceiling") {
+    // `graft.Probe validator` prints this count as
+    // `[tree] compiled_catalog optimized=N`: 1,684 with the native rule
+    // walks, 3,763 with the higher-order ones
+    val nodes = Probe.planNodes(graft.engine.CompiledCatalog.optimizedPlan(spark))
+    assert(nodes <= 1800, s"$nodes expression nodes")
   }
 }

@@ -62,7 +62,8 @@ class ProbeSpec extends SparkSpec with TempDirs {
     val (out, err) = probe("validator", "200", "1")()
     assert(!err.contains("FAILED"), err)
     Seq("[plan] first", "[tree] validate", "[tree] violations",
-        "[tree] verdicts", "[validator] rows=200", "[plan] warm",
+        "[tree] verdicts", "[tree] compiled_catalog optimized=",
+        "[validator] rows=200", "[plan] warm",
         "[ruletime]").foreach(p => assert(lines(out, p).nonEmpty, p))
     assert(lines(out, "[ruletime]").size == 20)
   }

@@ -68,7 +68,7 @@ object Wcmp2Reference {
 }
 
 /** The declarative WIS2 topic-channel check, the reference of
-  * [[graft.expressions.TopicChannelValid]], and the vendored starter
+  * [[graft.expressions.TopicChannel.valid]], and the vendored starter
   * sub-discipline table the tests pin it with. */
 object TopicReference {
 
@@ -152,6 +152,328 @@ object TopicReference {
       .otherwise(lit(false))
     rootOk && centreOk && typeOk
   }
+}
+
+/** The declarative ETS rule walks: the references of
+  * [[graft.expressions.EtsWalks]] and [[graft.expressions.GeoBounds]], as
+  * the catalog computed them with higher-order functions. */
+object EtsRulesReference {
+  import graft.catalog.{EtsRule, EtsRules, RecordCols}
+
+  /** First non-null element of an array (ANSI-safe; null if none). */
+  def firstNonNull(arr: Column): Column = get(array_compact(arr), lit(0))
+
+  /** Last non-null element of an array (ANSI-safe; null if none). */
+  def lastNonNull(arr: Column): Column = {
+    val compacted = array_compact(arr)
+    get(compacted, size(compacted) - 1)
+  }
+
+  private def prop(r: RecordCols, field: String): Column =
+    r.rec.getField("properties").getField(field)
+
+  /** struct(minx, miny, maxx, maxy) over the first two ordinates */
+  def bounds(pos: Column): Column = {
+    val xs = transform(pos, p => get(p, lit(0)))
+    val ys = transform(pos, p => get(p, lit(1)))
+    struct(
+      array_min(xs).as("minx"), array_min(ys).as("miny"),
+      array_max(xs).as("maxx"), array_max(ys).as("maxy"))
+  }
+
+  def extentGeospatial(r: RecordCols): EtsRule = {
+    val b = bounds(r.geoPositions)
+    val inWgs84 = b.getField("minx").between(-180, 180) &&
+      b.getField("miny").between(-90, 90) &&
+      b.getField("maxx").between(-180, 180) &&
+      b.getField("maxy").between(-90, 90)
+    EtsRule("extent_geospatial", "extent_geospatial",
+      r.geometryPresent && !inWgs84, lit(null))
+  }
+
+  def themes(r: RecordCols): EtsRule = {
+    val themes = prop(r, "themes")
+    val perTheme = transform(themes, t => {
+      val conceptMsg = firstNonNull(transform(t.getField("concepts"), c =>
+        when(c.getField("id").isNull, "Missing concept id")
+          .when(t.getField("scheme").endsWith("earth-system-discipline") &&
+                  !c.getField("id").isInCollection(Dims.earthSystemDisciplines),
+                concat(lit("Invalid Earth system discipline "),
+                       c.getField("id")))))
+      when(size(t.getField("concepts")) < 1, "Missing at least one concept")
+        .when(t.getField("scheme").isNull, "Missing scheme")
+        .otherwise(conceptMsg)
+    })
+    val esdFound = exists(themes, t =>
+      coalesce(t.getField("scheme").contains("earth-system-discipline"),
+               lit(false)))
+    val msg =
+      when(size(themes) < 1, "Missing at least one theme")
+        .otherwise(coalesce(firstNonNull(perTheme),
+          when(!esdFound, "No Earth system discipline based theme found")))
+    EtsRule("themes", "themes", msg.isNotNull, msg)
+  }
+
+  def contacts(r: RecordCols): EtsRule = {
+    val contacts = prop(r, "contacts")
+    val firstBadPerContact = transform(contacts, c =>
+      firstNonNull(transform(c.getField("roles"), role =>
+        when(!role.isInCollection(Dims.contactRoles), role))))
+    val lastBad = lastNonNull(firstBadPerContact)
+    EtsRule("contacts", "contacts", lastBad.isNotNull,
+      concat(lit("Invalid role "), lastBad))
+  }
+
+  def dataPolicy(r: RecordCols): EtsRule = {
+    val policy = prop(r, "wmo:dataPolicy")
+    val present =
+      coalesce(array_contains(r.propsKeys, "wmo:dataPolicy"), lit(false))
+    val hasLicense = coalesce(
+      exists(r.rec.getField("links"), l => l.getField("rel") === "license"),
+      lit(false))
+    val msg = when(prop(r, "type") === "dataset",
+      when(!present, "Missing data policy")
+        .when(!policy.isInCollection(Dims.dataPolicies),
+              concat(lit("Invalid data policy "), policy))
+        .when(policy === "recommended" && !hasLicense,
+              "missing recommended conditions"))
+    EtsRule("data_policy", "data_policy", msg.isNotNull, msg)
+  }
+
+  def links(r: RecordCols): EtsRule = {
+    val links = r.rec.getField("links")
+    val perLink = transform(links, l => {
+      val rel     = l.getField("rel")
+      val href    = l.getField("href")
+      val channel = l.getField("channel")
+      val badSecurityKey = firstNonNull(transform(
+        map_keys(l.getField("security")), k =>
+          when(element_at(l.getField("security"), k)
+                 .getField("description").isNull, k)))
+      when(!rel.isInCollection(Dims.linkRelations),
+           concat(lit("invalid link relation "), rel))
+        .when(href.startsWith("mqtt") && channel.isNull,
+              "missing channel for Pub/Sub link")
+        .when(href.startsWith("mqtt") &&
+                (channel.startsWith("origin/a/wis2") ||
+                 channel.startsWith("cache/a/wis2")) &&
+                !TopicReference.validTopicChannel(channel),
+              "Invalid WIS2 topic for Pub/Sub link channel")
+        .when(badSecurityKey.isNotNull,
+              concat(lit("missing security description for "), badSecurityKey))
+    })
+    val msg = when(size(links) < 1, "missing at least one link")
+      .otherwise(firstNonNull(perLink))
+    EtsRule("links", "links", msg.isNotNull, msg)
+  }
+
+  /** the 12 counted tests, the walked ones in their declarative form */
+  def catalog(r: RecordCols): Seq[EtsRule] = EtsRules.catalog(r).map { t =>
+    t.name match {
+      case "contacts" => contacts(r)
+      case "data_policy" => dataPolicy(r)
+      case "extent_geospatial" => extentGeospatial(r)
+      case "links" => links(r)
+      case "themes" => themes(r)
+      case _ => t
+    }
+  }
+}
+
+/** The declarative KPI rule walks: the references of
+  * [[graft.expressions.KpiWalks]], as the catalog computed them with
+  * higher-order functions, and the probe as the columns it was. */
+object KpiRulesReference {
+  import graft.catalog.{KpiRule, KpiRules, LinkProbe, MapLinkProbe,
+    OfflineLinkProbe, RecordCols}
+
+  def accessible(probe: LinkProbe, href: Column): Column = probe match {
+    case OfflineLinkProbe => lit(true)
+    case MapLinkProbe(entries) =>
+      val acc = entries.map { case (k, (a, _)) => k -> a }
+      if (acc.isEmpty) lit(false)
+      else coalesce(element_at(typedlit(acc), href), lit(false))
+  }
+
+  def mime(probe: LinkProbe, href: Column, declaredType: Column): Column =
+    probe match {
+      case OfflineLinkProbe => coalesce(declaredType, lit("text/html"))
+      case MapLinkProbe(entries) =>
+        val mimes = entries.collect { case (k, (_, m)) if m != null => k -> m }
+        if (mimes.isEmpty) declaredType
+        else coalesce(declaredType, element_at(typedlit(mimes), href))
+    }
+
+  private def prop(r: RecordCols, field: String): Column =
+    r.rec.getField("properties").getField(field)
+  private def point(cond: Column): Column =
+    when(coalesce(cond, lit(false)), 1).otherwise(0)
+  private def commentIf(bad: Column, msg: Column): Column =
+    when(coalesce(bad, lit(false)), msg)
+
+  def timeIntervals(r: RecordCols): KpiRule = {
+    val time = r.rec.getField("time")
+    val additional =
+      r.rec.getField("additionalExtents").getField("temporal")
+    val intervals = filter(array(time, additional),
+      x => x.isNotNull && x.getField("interval").isNotNull)
+    def perInterval(ti: Column): Column = {
+      val iv = ti.getField("interval")
+      val begin = get(iv, lit(0))
+      val end   = get(iv, lit(1))
+      val orderOk = (!array_contains(iv, "..") && begin <= end) ||
+        (end === "..")
+      val notFullyOpen = !(begin === ".." && end === "..")
+      point(orderOk) + point(notFullyOpen) +
+        point(ti.getField("resolution").isNotNull)
+    }
+    val timeIsNull = time.isNull
+    val total = when(timeIsNull, 0).otherwise(size(intervals) * 3)
+    val score = when(timeIsNull, 0).otherwise(
+      aggregate(intervals, lit(0), (acc, ti) => acc + perInterval(ti)))
+    val comments = when(timeIsNull, array(lit("time is null; no KPI check")))
+      .otherwise(array_compact(flatten(transform(intervals, ti => {
+        val iv = ti.getField("interval")
+        val orderOk = (!array_contains(iv, "..") &&
+          get(iv, lit(0)) <= get(iv, lit(1))) || (get(iv, lit(1)) === "..")
+        array(
+          commentIf(!orderOk,
+            lit("Begin must be less than or equal to the end or open")),
+          commentIf(get(iv, lit(0)) === ".." && get(iv, lit(1)) === "..",
+            lit("Temporal interval cannot be fully open")),
+          commentIf(ti.getField("resolution").isNull,
+            lit("No temporal resolution found")))
+      }))))
+    KpiRule("time_intervals", lit("Time intervals"), total, score, comments)
+  }
+
+  def graphicOverview(r: RecordCols, probe: LinkProbe): KpiRule = {
+    val previews = r.previews
+    def mimeOk(l: Column): Column = {
+      val declared = coalesce(l.getField("type"), lit(""))
+      declared.isInCollection(Dims.webImageMimes) &&
+        mime(probe, l.getField("href"), l.getField("type"))
+          .isInCollection(Dims.webImageMimes)
+    }
+    val total = size(previews) * 3
+    val score = aggregate(previews, lit(0), (acc, l) =>
+      acc + 1 + point(mimeOk(l)) + point(accessible(probe, l.getField("href"))))
+    val comments = array_compact(flatten(transform(previews, l => array(
+      commentIf(!mimeOk(l), concat(lit("MIME type "),
+        coalesce(l.getField("type"), lit("")), lit(" not a web image"))),
+      commentIf(!accessible(probe, l.getField("href")),
+        concat(lit("URL not accessible: "), l.getField("href")))))))
+    KpiRule("graphic_overview",
+      lit("Graphic overview for metadata records"), total, score, comments)
+  }
+
+  def linksHealth(r: RecordCols, probe: LinkProbe): KpiRule = {
+    val httpLinks = r.httpLinks
+    def typeOk(p: Column): Column =
+      mime(probe, p.getField("href"), p.getField("type"))
+        .isInCollection(Dims.validMimes)
+    val total = size(httpLinks) * 2
+    val score = aggregate(httpLinks, lit(0), (acc, p) =>
+      acc + point(accessible(probe, p.getField("href"))) + point(typeOk(p)))
+    val comments = array_compact(flatten(transform(httpLinks, p => array(
+      commentIf(!accessible(probe, p.getField("href")),
+        concat(lit("URL not accessible: "), p.getField("href"))),
+      commentIf(!typeOk(p), concat(lit("invalid link type "),
+        coalesce(mime(probe, p.getField("href"), p.getField("type")),
+                 lit("None"))))))))
+    KpiRule("links_health", lit("Links health"), total, score, comments)
+  }
+
+  def contacts(r: RecordCols): KpiRule = {
+    val cs = prop(r, "contacts")
+    val hosts = filter(cs,
+      c => coalesce(array_contains(c.getField("roles"), "host"), lit(false)))
+    val host = graft.functions.Wcmp2Functions.lastElem(hosts)
+    val lastContact = graft.functions.Wcmp2Functions.lastElem(cs)
+    val hostFound = host.isNotNull
+    val instructionsOk = host.getField("contactInstructions").isNotNull
+    val emailFound = coalesce(
+      exists(lastContact.getField("emails"),
+             e => e.getField("value").isNotNull), lit(false))
+    val score = point(hostFound) +
+      point(hostFound && instructionsOk) + point(hostFound && emailFound)
+    val comments = array_compact(array(
+      commentIf(!hostFound, lit("No host contact found")),
+      commentIf(hostFound && !instructionsOk,
+                lit("No host contact instructions found")),
+      commentIf(hostFound && !emailFound,
+                lit("No host contact email found"))))
+    KpiRule("contacts", lit("Contacts"), lit(3), score, comments)
+  }
+
+  def pids(r: RecordCols): KpiRule = {
+    val present =
+      coalesce(array_contains(r.propsKeys, "externalIds"), lit(false))
+    val schemeOk = coalesce(exists(prop(r, "externalIds"),
+      e => e.getField("scheme").isin("doi", "ark", "hdl")), lit(false))
+    val citeAs = coalesce(exists(r.rec.getField("links"),
+      l => l.getField("rel") === "cite-as"), lit(false))
+    val total = when(present, 3).otherwise(0)
+    val score = when(present, lit(1) + point(schemeOk)).otherwise(0) +
+      point(citeAs)
+    val comments = array_compact(array(
+      commentIf(present && !schemeOk, lit("No DOI/ARK/HDL schema found"))))
+    KpiRule("pids", lit("Persistent identifiers"), total, score, comments)
+  }
+
+  /** the 7 KPIs, the walked ones in their declarative form (`title` and
+    * `description` walk nothing but their `array_compact`) */
+  def catalog(r: RecordCols, probe: LinkProbe): Seq[KpiRule] =
+    KpiRules.catalog(r).map { k =>
+      k.name match {
+        case "contacts" => contacts(r)
+        case "graphic_overview" => graphicOverview(r, probe)
+        case "links_health" => linksHealth(r, probe)
+        case "pids" => pids(r)
+        case "time_intervals" => timeIntervals(r)
+        case _ => k
+      }
+    }
+}
+
+/** The declarative walks over the report arrays: the references of
+  * [[graft.expressions.Summaries]]. */
+object SummariesReference {
+
+  /** `ets_summary` of an `ets_tests` array */
+  def etsCounts(tests: Column): Column = {
+    def countCode(codeVal: String): Column =
+      size(filter(tests, t => t.getField("code") === codeVal))
+    struct(countCode("PASSED").as("PASSED"), countCode("FAILED").as("FAILED"),
+      countCode("SKIPPED").as("SKIPPED"))
+  }
+
+  /** the violation rows of the FAILED tests of an `ets_tests` array */
+  def failedTests(tests: Column): Column =
+    transform(filter(tests, t => t.getField("code") === "FAILED"),
+      t => struct(t.getField("id").as("rule_id"),
+        t.getField("message").as("diagnostic")))
+
+  /** `kpi_summary` of a `kpi_tests` array, comments-clobber included */
+  def kpiSummary(tests: Column): Column = {
+    import graft.catalog.KpiRules.grade
+    val total = aggregate(tests, lit(0), (acc, t) => acc + t.getField("total"))
+    val score = aggregate(tests, lit(0), (acc, t) => acc + t.getField("score"))
+    val pct = when(total === 0, lit(null).cast(DoubleType))
+      .otherwise(bround(score.cast(DoubleType) / total * 100, 3))
+    val lastCommented = {
+      val flagged = transform(tests,
+        t => when(size(t.getField("comments")) > 0, t))
+      val compacted = array_compact(flagged)
+      get(compacted, size(compacted) - 1)
+    }
+    struct(total.as("total"), score.as("score"), pct.as("percentage"),
+      grade(pct).as("grade"), lastCommented.as("comments"))
+  }
+
+  /** the tests of a `kpi_tests` array with id `id` (`Reports.selectKpi`) */
+  def selectById(tests: Column, id: String): Column =
+    filter(tests, t => t.getField("id") === id)
 }
 
 object KpiReference {
@@ -481,4 +803,142 @@ object SynthExpect {
     * every 20 buckets fail exactly one test each). */
   def expectedFailing(n: Long): Long = failingBucketRules.keys.toSeq
     .map(b => n / 20 + (if (n % 20 > b) 1L else 0L)).sum
+}
+
+/** The records and column pairs the rule-walk kernels are pinned on:
+  * each kernel-backed catalog column beside its declarative reference
+  * (OptimizationParitySpec compares them, KernelSpec also across
+  * evaluation modes). */
+object RuleWalkCases {
+  import graft.catalog.{EtsRules, KpiRules, LinkProbe, MapLinkProbe,
+    OfflineLinkProbe, RecordCols}
+  import graft.expressions.Summaries
+
+  /** Edge records: null and empty arrays, null elements and fields, a
+    * null theme and concepts without an id, duplicate security keys,
+    * positions with missing ordinates, Pub/Sub channels and odd
+    * intervals. */
+  val edges: Seq[String] = Seq(
+    """{"id":"e-null-arrays","links":null,"time":null,
+      |"geometry":{"type":"Point","coordinates":[]},
+      |"properties":{"type":"dataset","themes":null,"contacts":null,
+      |"externalIds":null}}""",
+    """{"id":"e-empty-arrays","links":[],"time":{"interval":[]},
+      |"geometry":{"type":"MultiPoint","coordinates":[[1],[2,3],[],[200]]},
+      |"properties":{"themes":[],"contacts":[],"externalIds":[]}}""",
+    """{"id":"e-null-elements","links":[null,{"rel":null},{"href":null}],
+      |"time":{"interval":[null,"2020"]},
+      |"additionalExtents":{"temporal":{"interval":["..",".."],
+      |"resolution":"P1D"}},
+      |"geometry":{"type":"LineString","coordinates":[[null,5],[7,null]]},
+      |"properties":{"type":"dataset","wmo:dataPolicy":"recommended",
+      |"themes":[null],
+      |"contacts":[null,{"roles":null},{"roles":[null,"host","bogus"],
+      |"emails":[null,{"value":null}]},{"roles":[null]}],
+      |"externalIds":[null,{"scheme":null},{"scheme":"doi"}]}}""",
+    """{"id":"e-concepts","links":[{"rel":"license","href":"https://l"},
+      |{"rel":"cite-as","href":"https://c"}],
+      |"time":{"interval":["2021","2020"]},
+      |"properties":{"type":"dataset","wmo:dataPolicy":"recommended",
+      |"themes":[{"concepts":[{"url":"https://u"}],
+      |"scheme":"https://x/earth-system-discipline"}],
+      |"contacts":[{"roles":["host"],"contactInstructions":"call"},
+      |{"roles":["bogus","worse"]},{"roles":["host","alsobad"]}]}}""",
+    """{"id":"e-null-theme-last","links":[{"rel":"self","href":"https://s"}],
+      |"time":{"interval":["2020",".."]},
+      |"properties":{"themes":[{"concepts":[{"id":"weather"}],
+      |"scheme":"https://x/earth-system-discipline"},null],
+      |"contacts":[{"roles":["host"],"emails":[{"value":"a@b"}]}]}}""",
+    """{"id":"e-theme-no-concepts","links":[{"rel":"self","href":"ftp://s"}],
+      |"time":{"interval":["..","2020"]},
+      |"properties":{"themes":[{"scheme":"https://x/earth-system-discipline"},
+      |{"concepts":[{"id":"bad-discipline"}],
+      |"scheme":"https://x/earth-system-discipline"}]}}""",
+    """{"id":"e-security-dup-first-ok","links":[{"rel":"self",
+      |"href":"https://s","security":{"a":{"description":"d"},"a":{},
+      |"b":null}}],"properties":{"themes":[{"concepts":[],"scheme":"s"}]}}""",
+    """{"id":"e-security-dup-first-bad","links":[{"rel":"self",
+      |"href":"https://s","security":{"a":{},"a":{"description":"d"}}}]}""",
+    """{"id":"e-mqtt","links":[{"rel":"items","href":"mqtts://broker",
+      |"channel":"origin/a/wis2/ca-eccc-msc/data/core/weather/x"},
+      |{"rel":"items","href":"mqtts://broker",
+      |"channel":"cache/a/wis2/ca-eccc-msc/data/core/weather/landFixed"}]}""",
+    """{"id":"e-mqtt-no-channel","links":[{"rel":"items",
+      |"href":"mqtts://broker"}],"time":{"resolution":"P1D"}}""",
+    """{"id":"e-mqtt-other-channel","links":[{"rel":"items",
+      |"href":"mqtts://broker","channel":"elsewhere/x"},
+      |{"rel":"no-such-relation","href":"https://p"},
+      |{"rel":"preview","href":"https://img","type":"image/png"},
+      |{"rel":"preview","href":"https://doc"},{"rel":"preview"},
+      |{"rel":"preview","href":"http://unprobed","type":"text/plain"}]}""",
+    """{"id":"e-wrong-types","links":"x","time":"y",
+      |"properties":{"themes":{"a":1},"contacts":7,"externalIds":"z"}}""")
+    .map(_.stripMargin.replace("\n", ""))
+
+  /** `content` of the fixtures, 400 synthesized records and [[edges]] */
+  def records(spark: org.apache.spark.sql.SparkSession): DataFrame = {
+    import spark.implicits._
+    graft.sources.RecordTable.fixtures(spark).select("content")
+      .union(graft.sources.RecordTable.synthesize(spark, 400).select("content"))
+      .union(edges.toDF("content"))
+  }
+
+  /** probes with accessible, inaccessible, mime-less and unprobed URLs */
+  val probes: Seq[(String, LinkProbe)] = Seq(
+    "offline" -> OfflineLinkProbe,
+    "mapped" -> MapLinkProbe(Map(
+      "https://img" -> (true, "image/png"),
+      "https://doc" -> (false, null),
+      "https://s" -> (true, "text/html"),
+      "https://l" -> (false, "application/x-nope"),
+      "https://c" -> (true, null))),
+    "empty" -> MapLinkProbe(Map.empty))
+
+  /** `(name, kernel column, declarative column)` over the frame of
+    * `graft.engine.Validator.withKernels` (offline probe) that `rc` points
+    * at; the KPI walks of the other probes are compared as kernel calls */
+  def columns(rc: RecordCols): Seq[(String, Column, Column)] = {
+    val ets = EtsRules.catalog(rc)
+    val etsRef = EtsRulesReference.catalog(rc)
+    val etsTests = array(ets.map(_.result): _*)
+    val kpiTests = array(KpiRules.catalog(rc).map(_.result): _*)
+    def summary(tests: Column) =
+      KpiRules.summary(Summaries.kpiSummaryColumn(tests))
+    def gated(tests: Column) =
+      when(!rc.rec.getField("id").startsWith("e-"), tests)
+    val mixed = array(rc.rec.getField("id"), lit(null).cast(StringType),
+      rc.rec.getField("properties").getField("title"),
+      rc.rec.getField("properties").getField("type"))
+    ets.zip(etsRef).map { case (k, d) => (s"ets:${k.name}", k.result, d.result) } ++
+      KpiRules.catalog(rc).zip(KpiRulesReference.catalog(rc, OfflineLinkProbe))
+        .map { case (k, d) => (s"kpi:${k.name}", k.result, d.result) } ++
+      probes.flatMap { case (pn, probe) =>
+        val walks = struct(KpiRules.walks(rc, probe): _*)
+        KpiRulesReference.catalog(rc, probe)
+          .filter(k => !Set("title", "description")(k.name)).map { d =>
+            val k = walks.getField(s"kpi_${d.name}")
+            (s"walk:$pn:${d.name}", struct(k.getField("total"),
+              k.getField("score"), k.getField("comments")),
+              struct(d.total.cast(IntegerType), d.score.cast(IntegerType),
+                d.comments))
+          }
+      } ++ Seq(
+        ("geo_bounds", graft.expressions.GeoBounds.boundsColumn(rc.geoPositions),
+          EtsRulesReference.bounds(rc.geoPositions)),
+        ("compact", Summaries.compactColumn(mixed), array_compact(mixed)),
+        ("ets_counts", Summaries.etsCountsColumn(etsTests),
+          SummariesReference.etsCounts(etsTests)),
+        ("failed_tests", Summaries.failedTestsColumn(etsTests),
+          SummariesReference.failedTests(etsTests)),
+        ("kpi_summary", summary(kpiTests),
+          SummariesReference.kpiSummary(kpiTests)),
+        // a null array, as the ETS gate leaves it
+        ("kpi_summary_gated", summary(gated(kpiTests)),
+          SummariesReference.kpiSummary(gated(kpiTests)))) ++
+      KpiRules.Ids.map(_._1).map { name =>
+        (s"select:$name", Summaries.selectByIdColumn(kpiTests,
+          KpiRules.idOf(name)),
+          SummariesReference.selectById(kpiTests, KpiRules.idOf(name)))
+      }
+  }
 }
