@@ -2,15 +2,14 @@ package graft.engine
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BindReferences, Explode,
-  JoinedRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, JoinedRow,
+  UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan,
   Project}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{ExecutionSpan, shims}
-import org.apache.spark.sql.types.{ArrayType, StringType, StructField,
-  StructType}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The row-local catalog planned ONCE: [[Validator.validate]] plus the
@@ -19,13 +18,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * placeholder leaf and compiled node by node into one evaluator:
   *
   *   - `Project`  -> [[UnsafeProjection]]
-  *   - `Generate` (not outer) -> the generator's rows joined to its
-  *     required child output (what `GenerateExec` does); an `explode`'s
-  *     array is an [[UnsafeProjection]] too
+  *   - `Generate` (not outer) -> the bound generator joined to its
+  *     required child output (what `GenerateExec` does)
   *
   * The optimized catalog is exactly these: projections around the three
-  * parse/kernel/walk generators over the placeholder leaf. Any other node is a
-  * build-time error, never a per-request one.
+  * parse/kernel/walk generators over the placeholder leaf. Any other node
+  * is a build-time error, never a per-request one.
   *
   * [[run]] calls the evaluator directly on an `InternalRow` of
   * `UTF8String`s: no per-request DataFrame, analysis, optimization or Row
@@ -134,41 +132,18 @@ object CompiledCatalog {
         row => below(row).map(proj)
 
       case g: Generate if !g.outer =>
+        val gen = BindReferences.bindReference(g.generator, g.child.output)
         val keep = UnsafeProjection.create(g.requiredChildOutput,
           g.child.output)
-        val generated = generator(g)
         val joined = new JoinedRow
         val below = compile(g.child)
         row => below(row).flatMap { in =>
           val left = keep(in)
-          generated(in).map(joined(left, _))
+          gen.eval(in).iterator.map(joined(left, _))
         }
 
       case other =>
         throw new IllegalStateException(
           s"compiled catalog: no evaluator for plan node ${other.nodeName}")
-    }
-
-  /** The rows `g`'s generator yields for one input row. The barriers'
-    * `explode(array(...))` evaluates its array as a generated projection,
-    * so the kernels behind it are direct calls, not reflective ones. */
-  private def generator(g: Generate): InternalRow => Iterator[InternalRow] =
-    g.generator match {
-      case e: Explode =>
-        val array = UnsafeProjection.create(Seq(e.child), g.child.output)
-        array.initialize(0)
-        val element = e.child.dataType.asInstanceOf[ArrayType].elementType
-        in => {
-          val out = array(in)
-          if (out.isNullAt(0)) Iterator.empty
-          else {
-            val a = out.getArray(0)
-            Iterator.tabulate(a.numElements())(i =>
-              InternalRow(a.get(i, element)))
-          }
-        }
-      case other =>
-        val gen = BindReferences.bindReference(other, g.child.output)
-        in => gen.eval(in).iterator
     }
 }
